@@ -38,10 +38,20 @@ object Bench {
     // Warm the JVM/codegen/scheduler paths once so the first timed
     // query isn't charged for session warmup (it was ~4s of skew).
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    val results = SparkEntry.queries.map { case (name, fn) =>
+    // a query that throws is still timed (its wall is part of the run)
+    // but is NAMED in `failed` and fails the process: a fast failure
+    // must never pass for a fast query
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def timed(name: String)(run: => Any): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      name -> (System.nanoTime() - t0) / 1e9
+      try run catch { case e: Throwable =>
+        failed += name
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      }
+      (System.nanoTime() - t0) / 1e9
+    }
+    val results = SparkEntry.queries.map { case (name, fn) =>
+      name -> timed(name)(fn(spark, sfDir).count())
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -101,17 +111,16 @@ object Bench {
     // can escape steady-state evidence (r16's q_readability hole).
     val loadMid = loadavg(); val tsMid = epochSec()
     val retimes = results.toSeq.sortBy(-_._2).take(20).map { case (name, _) =>
-      val t0 = System.nanoTime()
-      try { SparkEntry.queries(name)(spark, sfDir).count() }
-      catch { case _: Throwable => () }
-      name -> (System.nanoTime() - t0) / 1e9
+      name -> timed(name)(SparkEntry.queries(name)(spark, sfDir).count())
     }.map { case (k, v) => s"\"" + k + "\":" + math.round(v * 100) / 100.0 }
       .mkString("{", ",", "}")
     val loadEnd = loadavg(); val tsEnd = epochSec()
     val weather = s"""{"start":{"ts":$tsStart,"loadavg":$loadStart},""" +
       s""""pre_retime":{"ts":$tsMid,"loadavg":$loadMid},""" +
       s""""end":{"ts":$tsEnd,"loadavg":$loadEnd}}"""
-    println(s"""{"metric":"total_compact","unit":"sec","sf":"$sfDir","n_queries":${results.size},"slowest20":$slowest,"temp_builds":$builds,"temp_reads":$reads,"retimes":$retimes,"weather":$weather,"value":$total}""")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    println(s"""{"metric":"total_compact","unit":"sec","sf":"$sfDir","n_queries":${results.size},"slowest20":$slowest,"temp_builds":$builds,"temp_reads":$reads,"retimes":$retimes,"weather":$weather,"failed":$failedJson,"value":$total}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

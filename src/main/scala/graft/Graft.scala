@@ -132,12 +132,6 @@ object Graft {
   def matchCount(a: Column, b: Column): Column =
     functions.ArrayMatchCount.matchCount(a, b)
 
-  /** Native codegen'd sliding-window token n-grams (array<string> →
-    * array<string>, duplicates kept — the shingle kernel of the
-    * n-gram/bigram/repetition operators). */
-  def tokenNGrams(tokens: Column, n: Int): Column =
-    functions.TokenNGrams.ngrams(tokens, n)
-
   /** Deterministic ~`keepPermille`/1000 sample decision on a stable
     * long id: engine-, run- and parallelism-independent (q_sample_det's
     * overflow-safe multiplicative hash — the id is reduced mod 1e9+7
@@ -162,28 +156,15 @@ object Graft {
     * matrices without re-joining the corpus.
     * Profiles are ≤ topK·|languages| rows — a broadcast — so scoring
     * is one map-side join at any corpus size. ONE tokenize+count
-    * definition feeds both profile building and scoring, but the two
-    * consumers are separate plan subtrees (the profile self-join
-    * re-ids attributes, so neither ReuseExchange nor AQE stage reuse
-    * dedups them — verified at runtime) and the engine executes the
-    * tokenize per consumer. At 100 TB, materialize the (doc, lang,
-    * token, cnt) table once upstream and feed it to both stages —
-    * the same "write the shared intermediate" shape as the cached
-    * near-dup pair graph. */
+    * table ([[langTokenCounts]], shared) feeds both profile building
+    * and scoring: the two consumers are separate plan subtrees (the
+    * profile self-join re-ids attributes, so neither ReuseExchange nor
+    * AQE stage reuse dedups them), so the table is written once and
+    * both read it. */
   def languageId(docs: DataFrame, id: Column, text: Column, lang: Column,
-                 topK: Int = 10,
-                 tokenCounts: Option[DataFrame] = None): DataFrame = {
+                 topK: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // `tokenCounts` (round 17): a PRE-MATERIALIZED [[langTokenCounts]]
-    // table — the "materialize the (doc, lang, token, cnt) table once
-    // upstream" posture this scaladoc has always prescribed at 100 TB,
-    // now takeable at any scale. Without it the two consumers below
-    // each re-run the corpus tokenize per action.
-    val tokC = tokenCounts.getOrElse(langTokenCounts(docs, id, text, lang))
-    require(tokC.columns.sorted.sameElements(Array("cnt", "doc_id", "lang", "token")),
-      s"tokenCounts must be EXACTLY a langTokenCounts table (doc_id, lang, token, cnt) — " +
-        s"got ${tokC.columns.mkString(",")}; extra or missing columns mean the table " +
-        "came from a different builder (round-17 ADVICE exact-shape rule)")
+    val tokC = langTokenCounts(docs, id, text, lang)
     val wTop = Window.partitionBy("lang").orderBy(col("cnt").desc, col("token").asc)
     val profiles = tokC.groupBy("lang", "token").agg(sum("cnt").as("cnt"))
       .select(col("lang").as("profile_lang"), col("token"),
@@ -209,15 +190,14 @@ object Graft {
   }
 
   /** The per-(doc, lang, token) count table [[languageId]] consumes —
-    * one tokenize+count pass over the labeled corpus. Public so a
-    * pipeline can compute it ONCE, persist it, and hand it to every
-    * [[languageId]] call via `tokenCounts` (the facade's documented
-    * 100 TB posture made concrete). */
+    * one tokenize+count pass over the labeled corpus, a
+    * [[TempTables.shared]] table. */
   def langTokenCounts(docs: DataFrame, id: Column, text: Column,
                       lang: Column): DataFrame =
-    docs.select(id.cast("long").as("doc_id"), lang.as("lang"),
-        explode(split(text, " ")).as("token"))
-      .groupBy("doc_id", "lang", "token").agg(count(lit(1)).as("cnt"))
+    TempTables.shared("lang_token_counts",
+      docs.select(id.cast("long").as("doc_id"), lang.as("lang"),
+          explode(split(text, " ")).as("token"))
+        .groupBy("doc_id", "lang", "token").agg(count(lit(1)).as("cnt")))()
 
   /** Quality-scoring signals for a whitespace-token text column with a
     * known char count: (n_tokens, avg_len_centi, stop_permille,
@@ -1284,7 +1264,7 @@ object Graft {
     // the (w, f) table feeds the seed aggregate + every EM pass — one
     // temp-parquet round trip instead of 1 + 2·emIters corpus scans
     // (vocab-scale parquet with real stats, the src_tok_counts shape)
-    val words = TempTables.materialize(unigramWordFreqs(docs, text), "unigram_words")
+    val words = TempTables.shared("unigram_words", unigramWordFreqs(docs, text))()
     // seed: top multi-char substrings by mass + ALL single code points
     val massTable = unigramSubstringMass(words, maxPieceLen)
     val multis = massTable.filter(length(col("piece")) >= 2)
@@ -1411,10 +1391,9 @@ object Graft {
     require(l2 >= 0, s"l2 must be >= 0, got $l2")
     val k = features.size
     val fp = UnigramFp // 2^24 — the same fixed-point discipline
-    val proj = TempTables.materialize(
+    val proj = TempTables.shared("logit_features",
       df.select((label.cast("double").as("y") +:
-        features.zipWithIndex.map { case (f, i) => f.cast("double").as(s"x$i") }): _*),
-      "logit_features")
+        features.zipWithIndex.map { case (f, i) => f.cast("double").as(s"x$i") }): _*))()
     // one stats pass: n, Σx, Σx² per feature (fixed-point decimals)
     val statAggs = count(lit(1)).as("n") +:
       (0 until k).flatMap { i =>
@@ -2544,27 +2523,22 @@ object Graft {
     *
     * Output: (doc_id, n_grams, novel_grams, novelty_permille =
     * 1000·novel div n — pure integer floor-div, rule F) per doc with
-    * ≥ 1 n-gram. `gramDf`: the shared [[gramDocFreq]] table for the
-    * SAME (docs, n) — when passed (PipelineOps hands it the cached
-    * per-sfDir parquet table) the corpus-wide df aggregate is a
-    * vocab-scale file read and the join broadcasts off real stats.
+    * ≥ 1 n-gram. The corpus-wide df is the shared [[gramDocFreq]]
+    * table — a vocab-scale file read whose join broadcasts off real
+    * stats.
     *
     * Scale shape: row-local distinct-gram explode with row-local
     * sizes ([[sizedGrams]] uncapped — no per-doc aggregate), one join
     * against the vocab-scale df table, one per-doc rollup. Never
     * all-pairs; the only corpus-scale shuffle is the per-doc rollup
     * on the doc id. */
-  def ngramNovelty(docs: DataFrame, id: Column, text: Column, n: Int = 3,
-                   gramDf: Option[DataFrame] = None,
-                   docGrams: Option[DataFrame] = None): DataFrame = {
+  def ngramNovelty(docs: DataFrame, id: Column, text: Column, n: Int = 3): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
-    val grams = sizedGrams(docs, id, text, n, Int.MaxValue, None, docGrams)
+    val grams = sizedGrams(docs, id, text, n, Int.MaxValue)
     // the df side joins by int64 fingerprint like every other
-    // inverted-index consumer (round 13) — the broadcast table
-    // shrinks and the probe hashes a long, not a ~25-byte string
-    val df = gramDf.map(validGramDf(_, n))
-      .getOrElse(gramDocFreq(docs, id, text, n, docGrams))
-      .select(gramFp(col("gram")).as("gf"), col("gdf"))
+    // inverted-index consumer — the broadcast table shrinks and the
+    // probe hashes a long, not a ~25-byte string
+    val df = gramFpDocFreq(docs, id, text, n)
     grams.join(df, "gf")
       .groupBy("doc_id", "n_grams")
       .agg(sum(when(col("gdf") === 1, 1L).otherwise(0L)).as("novel_grams"))
@@ -2657,10 +2631,6 @@ object Graft {
     * Partial buffers merge element-wise-min — combiner-safe. */
   def minhashSignature(token: Column): Column = udaf(MinHash.agg).apply(token)
 
-  /** TF-weighted 64-bit SimHash of (token, tf) rows of one group. */
-  def simhashSignature(token: Column, tf: Column): Column =
-    udaf(SimHash.agg).apply(token, tf)
-
   /** Exact content fingerprint for dedup grouping: the sorted token
     * multiset of a whitespace-token text column. */
   def contentFingerprint(text: Column): Column =
@@ -2692,20 +2662,19 @@ object Graft {
     * still cannot serialize a task; closure is one equi-join of the
     * id-normalized wedge pairs against the canonical edge list. The
     * canonical edge list is materialized ONCE as temp parquet
-    * ([[TempTables.materialize]]) — it feeds degrees, orientation,
+    * ([[TempTables.shared]]) — it feeds degrees, orientation,
     * and the closure semi-join, and those joins' broadcast decisions
     * need file-size stats, which an RDD-backed checkpoint cannot
     * supply (PlanGuardSpec's stats-loss guard). At real cluster
     * scale the same write targets the warehouse. */
   def triangleStats(edges: DataFrame, maxBucket: Int = 4096): DataFrame = {
-    val e = TempTables.materialize(
+    val e = TempTables.shared("tri_edges",
       edges
         .select(col(edges.columns(0)).cast("long").as("a"),
                 col(edges.columns(1)).cast("long").as("b"))
         .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
         .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-        .distinct(),
-      "tri_edges")
+        .distinct())()
     val deg = e.select(explode(array(col("a"), col("b"))).as("v"))
       .groupBy("v").agg(count(lit(1)).as("deg"))
     val oriented = e
@@ -3268,26 +3237,20 @@ object Graft {
     * it. Semantics CHANGE when it fires — an opt-in, never a silent
     * default (BASELINE.md "Round-7 skew bench").
     *
-    * `gramDf` (a shared [[gramDocFreq]] table for the same (docs, n))
-    * serves BOTH faces: capped, it is the stop-gram hot list; uncapped
-    * it is the skew guard's per-bucket SIZE table (gdf = the gram
-    * bucket's exact row count, since each doc contributes its distinct
-    * grams once), replacing the hot-bucket count pass with a
-    * vocab-scale parquet read — decomposition-only, so a stale df
-    * table degrades balance, never the pair set. */
+    * The shared [[gramDocFreq]] table serves BOTH faces: capped, it is
+    * the stop-gram hot list; uncapped it is the skew guard's
+    * per-bucket SIZE table (gdf = the gram bucket's exact row count,
+    * since each doc contributes its distinct grams once), replacing
+    * the hot-bucket count pass with a vocab-scale parquet read. */
   def nearDupPairsNgram(docs: DataFrame, id: Column, text: Column,
                         thresholdPermille: Int = 800, n: Int = 3,
                         maxBucket: Int = 1024,
-                        maxGramDocFreq: Int = Int.MaxValue,
-                        gramDf: Option[DataFrame] = None,
-                        docGrams: Option[DataFrame] = None,
-                        cappedSizes: Option[DataFrame] = None): DataFrame = {
+                        maxGramDocFreq: Int = Int.MaxValue): DataFrame = {
     require(thresholdPermille > 0 && thresholdPermille <= 1000,
       s"thresholdPermille must be in (0, 1000], got $thresholdPermille")
     require(n >= 1, s"n must be >= 1, got $n")
     require(maxGramDocFreq >= 1, s"maxGramDocFreq must be >= 1, got $maxGramDocFreq")
-    ngramCandidatePairs(docs, id, text, thresholdPermille, n, maxBucket,
-        maxGramDocFreq, gramDf, docGrams, cappedSizes)
+    ngramCandidatePairs(docs, id, text, thresholdPermille, n, maxBucket, maxGramDocFreq)
       .select(col("doc_a"), col("doc_b"),
               round(col("common") / (col("na") + col("nb") - col("common")), 3).as("jaccard"))
   }
@@ -3304,27 +3267,10 @@ object Graft {
     * pair count, pinned in PipelineSpec). */
   private def ngramCandidatePairs(docs: DataFrame, id: Column, text: Column,
                                   p: Int, n: Int, maxBucket: Int,
-                                  maxGramDocFreq: Int = Int.MaxValue,
-                                  gramDf: Option[DataFrame] = None,
-                                  docGrams: Option[DataFrame] = None,
-                                  cappedSizes: Option[DataFrame] = None): DataFrame = {
-    val sized = sizedGrams(docs, id, text, n, maxGramDocFreq, gramDf, docGrams,
-                           cappedSizes)
-    // UNCAPPED, a shared (gram, gdf) table doubles as the self-join's
-    // per-bucket size source: each doc contributes its DISTINCT grams,
-    // so rows-per-gram in `sized` IS the gram's document frequency —
-    // the hot-bucket count pass (one full corpus-scale aggregate, the
-    // round-11 driver-bench bulk of the pair-graph build) collapses to
-    // a vocab-scale parquet read. Capped, the post-drop stream has
-    // recounted sizes and every survivor's gdf ≤ cap « maxBucket, so
-    // no bucket can be hot and the inline pass is the cheap one.
-    val sizesForBlocks =
-      if (maxGramDocFreq == Int.MaxValue)
-        gramDf.map(validGramDf(_, n)
-          .select(gramFp(col("gram")).as("gf"), col("gdf")))
-      else None
+                                  maxGramDocFreq: Int = Int.MaxValue): DataFrame = {
+    val sized = sizedGrams(docs, id, text, n, maxGramDocFreq)
     operators.SkewJoin.blockedSelfPairs(sized, Seq("gf"), "doc_id", maxBucket,
-                                        sizesForBlocks)
+        Option.when(maxGramDocFreq == Int.MaxValue)(gramFpDocFreq(docs, id, text, n)))
       .select(col("doc_id_a").as("doc_a"), col("n_grams_a").as("na"),
               col("doc_id_b").as("doc_b"), col("n_grams_b").as("nb"))
       .filter(col("na") * 1000 >= col("nb") * p && col("nb") * 1000 >= col("na") * p)
@@ -3362,9 +3308,7 @@ object Graft {
     * row metadata rollup. */
   def nearDupBands(docs: DataFrame, id: Column, text: Column,
                    lowPermille: Int = 700, bandPermille: Int = 50,
-                   n: Int = 3, maxBucket: Int = 1024,
-                   gramDf: Option[DataFrame] = None,
-                   docGrams: Option[DataFrame] = None): DataFrame = {
+                   n: Int = 3, maxBucket: Int = 1024): DataFrame = {
     require(lowPermille > 0 && lowPermille <= 1000,
       s"lowPermille must be in (0, 1000], got $lowPermille")
     require(bandPermille >= 1 && bandPermille <= 1000,
@@ -3376,8 +3320,7 @@ object Graft {
     require(lowPermille % bandPermille == 0,
       s"lowPermille must be a multiple of bandPermille, got $lowPermille % $bandPermille")
     require(n >= 1, s"n must be >= 1, got $n")
-    ngramCandidatePairs(docs, id, text, lowPermille, n, maxBucket,
-        gramDf = gramDf, docGrams = docGrams)
+    ngramCandidatePairs(docs, id, text, lowPermille, n, maxBucket)
       .select(expr("common * 1000 div (na + nb - common)").as("jp"))
       .select((col("jp") - (col("jp") % bandPermille)).as("band_lo"))
       .groupBy("band_lo")
@@ -3415,160 +3358,98 @@ object Graft {
     * shape group-by-counted the exploded grams and broadcast-joined a
     * one-row-per-doc table back — a per-doc-scale broadcast that
     * could not fit at 100 TB). With the lossy stop-gram cap engaged
-    * the post-drop sizes genuinely require a recount; that recount
-    * round-trips through [[TempTables.materialize]] so the planner
-    * sees FILE stats and broadcasts it only when it truly is small.
-    * `gramDf`: optional precomputed (gram, gdf) document-frequency
-    * table for the SAME (docs, n) — the write-once warehouse sharing
-    * shape (PipelineOps caches one per sf dir); when absent and the
-    * cap is engaged, the df pass runs inline. */
+    * the post-drop sizes genuinely require a recount — the shared
+    * [[cappedGramSizes]] table — and the hot list is the shared
+    * [[gramDocFreq]] table above the cap. */
   private def sizedGrams(docs: DataFrame, id: Column, text: Column, n: Int,
-                         maxGramDocFreq: Int,
-                         gramDf: Option[DataFrame],
-                         docGrams: Option[DataFrame] = None,
-                         cappedSizes: Option[DataFrame] = None): DataFrame = {
-    val allGrams = docGrams.map(validDocGrams(_, n))
-      .getOrElse(docGramArrays(docs, id, text, n))
-      .select(col("doc_id"), col("na").as("n_grams"),
-              explode(col("ga")).as("gram"))
-      .select(col("doc_id"), col("n_grams"), gramFp(col("gram")).as("gf"))
-    if (maxGramDocFreq == Int.MaxValue) allGrams
-    else {
-      val hot = gramDf.map(validGramDf(_, n))
-        .map(_.filter(col("gdf") > maxGramDocFreq)
-          .select(gramFp(col("gram")).as("gf")))
-        .getOrElse(allGrams.groupBy("gf").agg(count(lit(1)).as("__df"))
-          .filter(col("__df") > maxGramDocFreq).select("gf"))
-      val kept = allGrams.drop("n_grams").join(broadcast(hot), Seq("gf"), "left_anti")
-      // `cappedSizes` (round 18 — the gramDf/docGrams precedent): a
-      // PRE-MATERIALIZED [[cappedGramSizes]] table for the SAME
-      // (docs, n, cap), so repeat invocations skip the per-call
-      // recount write; must come from the same inputs or sizes are
-      // garbage (exact-shape validated).
-      val sizes = cappedSizes.map(validCappedSizes)
-        .getOrElse(TempTables.materialize(
-          kept.groupBy("doc_id").agg(count(lit(1)).as("n_grams")), "ngram_sizes"))
-      kept.join(sizes, "doc_id").select("doc_id", "n_grams", "gf")
-    }
+                         maxGramDocFreq: Int): DataFrame =
+    if (maxGramDocFreq == Int.MaxValue)
+      docGramArrays(docs, id, text, n)
+        .select(col("doc_id"), col("na").as("n_grams"), explode(col("ga")).as("gram"))
+        .select(col("doc_id"), col("n_grams"), gramFp(col("gram")).as("gf"))
+    else
+      cappedGrams(docs, id, text, n, maxGramDocFreq)
+        .join(cappedGramSizes(docs, id, text, n, maxGramDocFreq), "doc_id")
+        .select("doc_id", "n_grams", "gf")
+
+  /** (doc_id, gf) of every distinct gram whose corpus document
+    * frequency is at most `maxGramDocFreq` — the gram universe of the
+    * LOSSY stop-gram path: the shared [[gramDocFreq]] rows above the
+    * cap leave through a broadcast anti-join. */
+  private def cappedGrams(docs: DataFrame, id: Column, text: Column, n: Int,
+                          maxGramDocFreq: Int): DataFrame = {
+    val hot = gramDocFreq(docs, id, text, n)
+      .filter(col("gdf") > maxGramDocFreq)
+      .select(gramFp(col("gram")).as("gf"))
+    docGramArrays(docs, id, text, n)
+      .select(col("doc_id"), explode(col("ga")).as("gram"))
+      .select(col("doc_id"), gramFp(col("gram")).as("gf"))
+      .join(broadcast(hot), Seq("gf"), "left_anti")
   }
+
+  /** The shared [[gramDocFreq]] table keyed by [[gramFp]]: (gf, gdf).
+    * It is also the skew guard's per-bucket size table for an UNCAPPED
+    * gram self-join: each doc contributes its DISTINCT grams, so
+    * rows-per-gram IS the gram's document frequency, and the
+    * hot-bucket count pass (one full corpus-scale aggregate) collapses
+    * to a vocab-scale parquet read — decomposition-only, so the pair
+    * set never depends on it. Capped, every survivor's gdf ≤ cap «
+    * maxBucket, so no bucket can be hot and the inline count pass is
+    * the cheap one. */
+  private def gramFpDocFreq(docs: DataFrame, id: Column, text: Column, n: Int): DataFrame =
+    gramDocFreq(docs, id, text, n).select(gramFp(col("gram")).as("gf"), col("gdf"))
 
   /** The post-cap per-doc distinct-gram recount (doc_id, n_grams) the
     * LOSSY stop-gram path joins back — a deterministic function of
-    * (docs, n, maxGramDocFreq). Public so a pipeline computes it ONCE
-    * per (corpus, cap), persists it, and hands it to every capped
-    * facade call via `cappedSizes` (the gramDf/docGrams warehouse
-    * shape); ad-hoc calls keep the per-call materialize. */
+    * (docs, n, maxGramDocFreq), shared per input like the tables it
+    * is counted from. */
   def cappedGramSizes(docs: DataFrame, id: Column, text: Column, n: Int,
-                      maxGramDocFreq: Int,
-                      gramDf: Option[DataFrame] = None,
-                      docGrams: Option[DataFrame] = None): DataFrame = {
+                      maxGramDocFreq: Int): DataFrame = {
     require(maxGramDocFreq != Int.MaxValue,
       "cappedGramSizes is the lossy-cap recount — with the cap off, sizes are row-local")
-    val allGrams = docGrams.map(validDocGrams(_, n))
-      .getOrElse(docGramArrays(docs, id, text, n))
-      .select(col("doc_id"), explode(col("ga")).as("gram"))
-      .select(col("doc_id"), gramFp(col("gram")).as("gf"))
-    val hot = gramDf.map(validGramDf(_, n))
-      .map(_.filter(col("gdf") > maxGramDocFreq)
-        .select(gramFp(col("gram")).as("gf")))
-      .getOrElse(allGrams.groupBy("gf").agg(count(lit(1)).as("__df"))
-        .filter(col("__df") > maxGramDocFreq).select("gf"))
-    allGrams.join(broadcast(hot), Seq("gf"), "left_anti")
-      .groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
-  }
-
-  private def validCappedSizes(sz: DataFrame): DataFrame = {
-    require(sz.columns.sorted.sameElements(Array("doc_id", "n_grams")),
-      s"cappedSizes must be EXACTLY a cappedGramSizes table (doc_id, n_grams) — " +
-        s"got ${sz.columns.mkString(",")} (round-17 ADVICE exact-shape rule)")
-    sz
+    TempTables.shared("capped_gram_sizes",
+      cappedGrams(docs, id, text, n, maxGramDocFreq)
+        .groupBy("doc_id").agg(count(lit(1)).as("n_grams")))()
   }
 
   /** The per-document distinct word-n-gram ARRAY table
     * (doc_id, na = |set|, ga = the distinct n-grams) — the ONE
     * tokenize→n-gram→distinct pass the whole gram family derives
-    * from. Public so a pipeline computes it ONCE, writes it to the
-    * warehouse, and hands it to every `docGrams`-accepting facade
-    * ([[nearDupPairsNgram]], [[containmentPairsNgram]],
-    * [[jaccardJoinPrefix]], [[gramDocFreq]], [[ngramNovelty]]):
-    * before round 11 a cold session re-ran this corpus-scale pass
-    * once PER consumer family (pair graph, df table, prefix index —
-    * three full explodes; the measured bulk of the gram family's
-    * first-touch cost), now it runs once and every consumer reads a
-    * parquet column. Docs shorter than n tokens carry no row — the
-    * shared contract ("no n-gram → never pairs / never counted"). */
+    * from, a [[TempTables.shared]] table: every gram-family facade
+    * over the same (docs, n) — [[gramDocFreq]], [[rarityGramArrays]],
+    * the pair, containment and novelty facades — explodes this one
+    * parquet column instead of re-running the corpus-scale pass. Docs
+    * shorter than n tokens carry no row — the shared contract ("no
+    * n-gram → never pairs / never counted"). */
   def docGramArrays(docs: DataFrame, id: Column, text: Column, n: Int = 3): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
     val t = split(text, " ")
-    docs.select(id.cast("long").as("doc_id"), t.as("t"))
-      .filter(size(col("t")) >= n)
-      .select(col("doc_id"),
-              array_distinct(functions.TokenNGrams.ngrams(col("t"), n)).as("ga"))
-      .select(col("doc_id"), size(col("ga")).cast("long").as("na"),
-              col("ga").as("ga", nMeta(n)))
-  }
-
-  /** The gram size n, stamped as column METADATA on every shared gram
-    * table ([[docGramArrays]]'s `ga`, [[gramDocFreq]]'s `gram`) —
-    * survives the temp-parquet round trip (Spark stores field
-    * metadata in the parquet footer schema), so the handed-table
-    * validators can reject a table built for a DIFFERENT n at plan
-    * time instead of silently computing wrong pairs/df (review catch:
-    * the name-only schema gate could not see this). */
-  private def nMeta(n: Int): org.apache.spark.sql.types.Metadata =
-    new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("graft.ngram.n", n.toLong).build()
-
-  /** Fail-fast schema gates for the two handed-table sharing params —
-    * a table built for a different (docs, n) or with renamed columns
-    * would otherwise silently drop grams via an inner join or
-    * mis-price rarity (round-10 ADVICE): the scaladoc contract alone
-    * is easy to violate, a plan-time error is not. Column NAMES catch
-    * a foreign table; the [[nMeta]] stamp catches the subtler hazard
-    * (review catch) of the RIGHT table built for the WRONG n — a
-    * 4-gram table handed to a 3-gram consumer passes any name check
-    * and silently shifts every Jaccard/df it feeds. */
-  private def validGramDf(df: DataFrame, n: Int): DataFrame =
-    requireN(requireCols(df, Seq("gram", "gdf"), "gramDf"), "gram", n, "gramDf")
-  private def validDocGrams(df: DataFrame, n: Int): DataFrame =
-    requireN(requireCols(df, Seq("doc_id", "na", "ga"), "docGrams"), "ga", n, "docGrams")
-  private def requireCols(df: DataFrame, need: Seq[String], what: String): DataFrame = {
-    val missing = need.filterNot(df.columns.contains)
-    require(missing.isEmpty,
-      s"handed $what table lacks column(s) ${missing.mkString(", ")} " +
-        s"(has: ${df.columns.mkString(", ")}) — was it built by the matching facade?")
-    df
-  }
-  private def requireN(df: DataFrame, field: String, n: Int, what: String): DataFrame = {
-    val md = df.schema(df.schema.fieldIndex(field)).metadata
-    val stamped =
-      if (md.contains("graft.ngram.n")) md.getLong("graft.ngram.n").toString
-      else "<unstamped — not built by the matching facade?>"
-    require(md.contains("graft.ngram.n") && md.getLong("graft.ngram.n") == n.toLong,
-      s"handed $what table was built for n=$stamped but this consumer needs n=$n " +
-        "— hand the table built by the matching facade at the same n")
-    df
+    TempTables.shared("doc_gram_arrays",
+      docs.select(id.cast("long").as("doc_id"), t.as("t"))
+        .filter(size(col("t")) >= n)
+        .select(col("doc_id"),
+                array_distinct(functions.TokenNGrams.ngrams(col("t"), n)).as("ga"))
+        .select(col("doc_id"), size(col("ga")).cast("long").as("na"), col("ga")))()
   }
 
   /** Per-gram document frequency (gram, gdf) over the distinct
     * word-n-grams of a corpus — the table the whole n-gram family
     * prices candidates with ([[jaccardJoinPrefix]]'s rarity order,
-    * the stop-gram hot list of the capped facades). Public so a
-    * pipeline can compute it ONCE, write it to the warehouse, and
-    * hand it to every consumer (PipelineOps does exactly that via
-    * TempTables.cached per sf dir). One map-side-combinable groupBy;
-    * output is vocab-scale metadata. */
-  def gramDocFreq(docs: DataFrame, id: Column, text: Column, n: Int = 3,
-                  docGrams: Option[DataFrame] = None): DataFrame = {
+    * the stop-gram hot list of the capped facades, the skew guard's
+    * bucket sizes). A [[TempTables.shared]] table aggregated from the
+    * shared [[docGramArrays]]; output is vocab-scale metadata. */
+  def gramDocFreq(docs: DataFrame, id: Column, text: Column, n: Int = 3): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
-    // `docGrams`: the shared [[docGramArrays]] table for the SAME
-    // (docs, n) — the df aggregate then explodes one parquet array
-    // column instead of re-running the corpus tokenize+n-gram pass
-    docGrams.map(validDocGrams(_, n)).getOrElse(docGramArrays(docs, id, text, n))
-      .select(explode(col("ga")).as("gram"))
-      .groupBy("gram").agg(count(lit(1)).as("gdf"))
-      .select(col("gram").as("gram", nMeta(n)), col("gdf"))
+    TempTables.shared("gram_doc_freq", gramCounts(docGramArrays(docs, id, text, n)))()
   }
+
+  /** (gram, gdf) over the `ga` arrays of a [[docGramArrays]] table or
+    * any row subset of it — the one df aggregate [[gramDocFreq]] and
+    * per-slice callers (q_gramdf_merge) share. One
+    * map-side-combinable groupBy. */
+  private[graft] def gramCounts(docGrams: DataFrame): DataFrame =
+    docGrams.select(explode(col("ga")).as("gram"))
+      .groupBy("gram").agg(count(lit(1)).as("gdf"))
 
   /** The span-cutting expression shared by [[duplicatedSpanStats]]
     * and PipelineOps.q_span_drop — ONE definition of what a "span"
@@ -3614,86 +3495,71 @@ object Graft {
   def containmentPairsNgram(docs: DataFrame, id: Column, text: Column,
                             thresholdPermille: Int = 800, n: Int = 3,
                             maxBucket: Int = 1024,
-                            maxGramDocFreq: Int = Int.MaxValue,
-                            gramDf: Option[DataFrame] = None,
-                            docGrams: Option[DataFrame] = None,
-                            sortedGrams: Option[DataFrame] = None): DataFrame = {
+                            maxGramDocFreq: Int = Int.MaxValue): DataFrame = {
     require(thresholdPermille > 0 && thresholdPermille <= 1000,
       s"thresholdPermille must be in (0, 1000], got $thresholdPermille")
     require(n >= 1, s"n must be >= 1, got $n")
     require(maxGramDocFreq >= 1, s"maxGramDocFreq must be >= 1, got $maxGramDocFreq")
     val p = thresholdPermille
-    // uncapped, the shared gram-df table is also the skew guard's
-    // bucket-size source — the same hot-count-pass elimination as
-    // [[nearDupPairsNgram]] (round 12; decomposition-only, so a stale
-    // table degrades balance, never the pair set)
-    val sizesForBlocks =
-      if (maxGramDocFreq == Int.MaxValue)
-        gramDf.map(validGramDf(_, n)
-          .select(gramFp(col("gram")).as("gf"), col("gdf")))
-      else None
-    sortedGrams match {
-      case Some(sd0) =>
-        // POSITIONAL path (round-12 verdict #6): containment admits
-        // no two-sided PREFIX (a doc's required overlap ⌈p·min/1000⌉
-        // can be as low as 1 against a tiny partner, so every gram
-        // must stay indexed) — but it DOES admit the per-collision
-        // positional bound: with both docs sorted by the one shared
-        // rarity order of a handed [[rarityGramArrays]] table, all
-        // common grams of a pair sit at ranks ≥ (i, j) of its FIRST
-        // collision, so common ≤ min(na−i, nb−j)+1 — a collision
-        // whose bound cannot reach ⌈p·min(na,nb)/1000⌉ is dropped
-        // BEFORE the candidate distinct, and exactness holds because
-        // the first collision of every qualifying pair passes (its
-        // bound ≥ common ≥ the requirement — EXISTS semantics).
-        // Measured at sf0.1, t = 0.8: 1,265,779 collisions → 152,982
-        // post-filter → 148,647 pairs to verify (an 8.3× cut in what
-        // the distinct exchange carries).
-        // Survivors verify exactly via array_intersect on the same
-        // handed table. Exact-only: the lossy stop-gram cap changes
-        // the gram universe and must use the counting path below.
-        require(maxGramDocFreq == Int.MaxValue,
-          "sortedGrams is the exact path — maxGramDocFreq needs the counting path")
-        val sd = validSortedGrams(sd0, n)
-        val pos = sd.select(col("doc_id"), col("na").cast("long").as("n_grams"),
-            posexplode(col("gs")).as(Seq("pos", "gf")))
-          .select(col("doc_id"), col("n_grams"),
-                  (col("pos") + 1).as("pos"), col("gf"))
-        operators.SkewJoin.blockedSelfPairs(pos, Seq("gf"), "doc_id", maxBucket,
-                                            sizesForBlocks)
-          .select(col("doc_id_a").as("doc_a"), col("n_grams_a").as("na"), col("pos_a"),
-                  col("doc_id_b").as("doc_b"), col("n_grams_b").as("nb"), col("pos_b"))
-          .filter((least(col("na") - col("pos_a"), col("nb") - col("pos_b")) + 1) * 1000
-                    >= least(col("na"), col("nb")) * p)
-          .select(col("doc_a"), col("na"), col("doc_b"), col("nb"))
-          .distinct()
-          .join(sd.select(col("doc_id").as("doc_a"), col("gs").as("ga")), "doc_a")
-          .join(sd.select(col("doc_id").as("doc_b"), col("gs").as("gb")), "doc_b")
-          .withColumn("common", size(array_intersect(col("ga"), col("gb"))).cast("long"))
-          .filter(col("common") * 1000 >= least(col("na"), col("nb")) * p)
-          .select(col("doc_a"), col("doc_b"), col("na"), col("nb"), col("common"),
-                  expr("common * 1000L div least(na, nb)").as("containment_permille"))
-      case None =>
-        val sized = sizedGrams(docs, id, text, n, maxGramDocFreq, gramDf, docGrams)
-        operators.SkewJoin.blockedSelfPairs(sized, Seq("gf"), "doc_id", maxBucket,
-                                            sizesForBlocks)
-          .select(col("doc_id_a").as("doc_a"), col("n_grams_a").as("na"),
-                  col("doc_id_b").as("doc_b"), col("n_grams_b").as("nb"))
-          .groupBy("doc_a", "doc_b", "na", "nb")
-          .agg(count(lit(1)).as("common"))
-          .filter(col("common") * 1000 >= least(col("na"), col("nb")) * p)
-          .select(col("doc_a"), col("doc_b"), col("na"), col("nb"), col("common"),
-                  expr("common * 1000L div least(na, nb)").as("containment_permille"))
+    if (maxGramDocFreq == Int.MaxValue) {
+      // POSITIONAL path: containment admits no two-sided PREFIX (a
+      // doc's required overlap ⌈p·min/1000⌉ can be as low as 1
+      // against a tiny partner, so every gram must stay indexed) —
+      // but it DOES admit the per-collision positional bound: with
+      // both docs sorted by the one shared rarity order of the
+      // [[rarityGramArrays]] table, all common grams of a pair sit
+      // at ranks ≥ (i, j) of its FIRST collision, so
+      // common ≤ min(na−i, nb−j)+1 — a collision whose bound cannot
+      // reach ⌈p·min(na,nb)/1000⌉ is dropped BEFORE the candidate
+      // distinct, and exactness holds because the first collision
+      // of every qualifying pair passes (its bound ≥ common ≥ the
+      // requirement — EXISTS semantics). Measured at sf0.1, t = 0.8:
+      // 1,265,779 collisions → 152,982 post-filter → 148,647 pairs
+      // to verify (an 8.3× cut in what the distinct exchange
+      // carries). Survivors verify exactly via array_intersect on
+      // the same table. Exact-only: the lossy stop-gram cap changes
+      // the gram universe and takes the counting path below. The
+      // shared gram-df table is also the skew guard's bucket-size
+      // source, as in [[nearDupPairsNgram]].
+      val sd = rarityGramArrays(docs, id, text, n)
+      val pos = sd.select(col("doc_id"), col("na").cast("long").as("n_grams"),
+          posexplode(col("gs")).as(Seq("pos", "gf")))
+        .select(col("doc_id"), col("n_grams"),
+                (col("pos") + 1).as("pos"), col("gf"))
+      operators.SkewJoin.blockedSelfPairs(pos, Seq("gf"), "doc_id", maxBucket,
+                                          Some(gramFpDocFreq(docs, id, text, n)))
+        .select(col("doc_id_a").as("doc_a"), col("n_grams_a").as("na"), col("pos_a"),
+                col("doc_id_b").as("doc_b"), col("n_grams_b").as("nb"), col("pos_b"))
+        .filter((least(col("na") - col("pos_a"), col("nb") - col("pos_b")) + 1) * 1000
+                  >= least(col("na"), col("nb")) * p)
+        .select(col("doc_a"), col("na"), col("doc_b"), col("nb"))
+        .distinct()
+        .join(sd.select(col("doc_id").as("doc_a"), col("gs").as("ga")), "doc_a")
+        .join(sd.select(col("doc_id").as("doc_b"), col("gs").as("gb")), "doc_b")
+        .withColumn("common", size(array_intersect(col("ga"), col("gb"))).cast("long"))
+        .filter(col("common") * 1000 >= least(col("na"), col("nb")) * p)
+        .select(col("doc_a"), col("doc_b"), col("na"), col("nb"), col("common"),
+                expr("common * 1000L div least(na, nb)").as("containment_permille"))
+    } else {
+      val sized = sizedGrams(docs, id, text, n, maxGramDocFreq)
+      operators.SkewJoin.blockedSelfPairs(sized, Seq("gf"), "doc_id", maxBucket)
+        .select(col("doc_id_a").as("doc_a"), col("n_grams_a").as("na"),
+                col("doc_id_b").as("doc_b"), col("n_grams_b").as("nb"))
+        .groupBy("doc_a", "doc_b", "na", "nb")
+        .agg(count(lit(1)).as("common"))
+        .filter(col("common") * 1000 >= least(col("na"), col("nb")) * p)
+        .select(col("doc_a"), col("doc_b"), col("na"), col("nb"), col("common"),
+                expr("common * 1000L div least(na, nb)").as("containment_permille"))
     }
   }
 
   /** The ranked+tokenized projection [[sortedNeighborPairs]]
     * self-joins: per doc (__id, __ts = distinct tokens, __r = exact
     * 1-based rank under (sortKey ASC, id ASC) via the two-pass
-    * distributed [[globalRankDesc]]). Public so a pipeline can
-    * compute it ONCE per corpus, persist it, and hand it to every
-    * [[sortedNeighborPairs]] call via `sorted` — the
-    * fuzzyCanonProjection warehouse shape. */
+    * distributed [[globalRankDesc]]) — a [[TempTables.shared]] table:
+    * both sides of the neighbor join read it, so the corpus tokenize
+    * (split + distinct) and the rank join run once per input, not once
+    * per side per call. */
   def sortedNeighborProjection(docs: DataFrame, id: Column, text: Column,
                                sortKey: Column): DataFrame = {
     val base = docs.select(id.cast("long").as("__id"), sortKey.as("__k"),
@@ -3702,7 +3568,7 @@ object Graft {
     val ranked = globalRankDesc(base.select(col("__id"), col("__k")),
                                 negate(col("__k").cast("double")), col("__id"))
       .select(col("tie").as("__id"), col("rank").as("__r"))
-    base.drop("__k").join(ranked, "__id")
+    TempTables.shared("sorted_neighbor_projection", base.drop("__k").join(ranked, "__id"))()
   }
 
   /** Sorted-neighborhood near-dup pairs (Hernández–Stolfo SNM) — the
@@ -3726,29 +3592,12 @@ object Graft {
     * doc_b in key order. */
   def sortedNeighborPairs(docs: DataFrame, id: Column, text: Column,
                           sortKey: Column, w: Int = 8,
-                          thresholdPermille: Int = 800,
-                          sorted: Option[DataFrame] = None): DataFrame = {
+                          thresholdPermille: Int = 800): DataFrame = {
     require(w >= 2, s"w must be >= 2, got $w")
     require(thresholdPermille > 0 && thresholdPermille <= 1000,
       s"thresholdPermille must be in (0, 1000], got $thresholdPermille")
     val p = thresholdPermille
-    // MATERIALIZED once (round-13 verdict #3 — q_dedup_sorted was a
-    // standing driver-excursion row with nothing on the build
-    // ledger): the ranked+tokenized projection is consumed by BOTH
-    // sides of the neighbor join, so the lazy form re-ran the corpus
-    // tokenize (split + distinct) and the rank join twice per call.
-    // One temp-parquet round trip makes it a write + two column
-    // reads — the fuzzy_canon warehouse shape: write the blocked
-    // projection next to the corpus, then self-join the table.
-    // `sorted` (round 17 — the canon/sortedGrams precedent): a
-    // PRE-MATERIALIZED [[sortedNeighborProjection]] table for callers
-    // that persist the projection once per corpus.
-    val sortedT = sorted.getOrElse(TempTables.materialize(
-      sortedNeighborProjection(docs, id, text, sortKey), "snm_sorted"))
-    require(sortedT.columns.sorted.sameElements(Array("__id", "__r", "__ts")),
-      s"sorted must be EXACTLY a sortedNeighborProjection table (__id, __ts, __r) — " +
-        s"got ${sortedT.columns.mkString(",")}; extra or missing columns mean the " +
-        "projection came from a different builder (round-17 ADVICE exact-shape rule)")
+    val sortedT = sortedNeighborProjection(docs, id, text, sortKey)
     val probes = sortedT
       .select(col("__id").as("doc_a"), col("__ts").as("__ta"), col("__r"),
               explode(sequence(lit(1), lit(w - 1))).as("__d"))
@@ -3819,8 +3668,8 @@ object Graft {
           .filter(col("__df") > maxGramDocFreq).select("gf")
         def recount(df: DataFrame, idName: String, szName: String) = {
           val kept = df.drop(szName).join(broadcast(hot), Seq("gf"), "left_anti")
-          val sizes = TempTables.materialize(
-            kept.groupBy(idName).agg(count(lit(1)).as(szName)), "ngram_sizes")
+          val sizes = TempTables.shared("capped_gram_sizes",
+            kept.groupBy(idName).agg(count(lit(1)).as(szName)))()
           kept.join(sizes, idName).select(idName, szName, "gf")
         }
         (recount(cg0, "doc_a", "na"), recount(ng0, "doc_b", "nb"))
@@ -3862,26 +3711,15 @@ object Graft {
     * have no n-gram and never pair. */
   def jaccardJoinPrefix(docs: DataFrame, id: Column, text: Column,
                         thresholdPermille: Int = 800, n: Int = 3,
-                        maxBucket: Int = 1024,
-                        gramDf: Option[DataFrame] = None,
-                        docGrams: Option[DataFrame] = None,
-                        sortedGrams: Option[DataFrame] = None): DataFrame = {
+                        maxBucket: Int = 1024): DataFrame = {
     require(thresholdPermille > 0 && thresholdPermille <= 1000,
       s"thresholdPermille must be in (0, 1000], got $thresholdPermille")
     require(n >= 1, s"n must be >= 1, got $n")
     val p = thresholdPermille
-    // `sortedGrams` (round 13): the shared [[rarityGramArrays]] table
-    // for the SAME (docs, n) — when the caller has written it once
-    // (PipelineOps caches one per sf dir; the bipartite ingest probe
-    // reads slices of the very same table) this facade does ZERO
-    // corpus passes and no per-call materialize: the index and both
-    // verify joins read the handed parquet table directly. When
-    // absent, the table is built inline and materialized per call as
-    // before (see [[rarityGramArrays]] for why parquet, not
-    // localCheckpoint).
-    val sortedDocs = sortedGrams.map(validSortedGrams(_, n))
-      .getOrElse(TempTables.materialize(
-        rarityGramArrays(docs, id, text, n, gramDf, docGrams), "jacc_grams"))
+    // the index and both verify joins read the shared
+    // [[rarityGramArrays]] table — zero corpus passes per call once
+    // (docs, n) has been seen
+    val sortedDocs = rarityGramArrays(docs, id, text, n)
       .withColumn("prefix", slice(col("gs"), lit(1), prefixLen(p)))
     // posexplode: `pos`+1 is the gram's 1-based rank in the doc's
     // rarity order — the payload of the POSITIONAL filter below
@@ -3919,12 +3757,8 @@ object Graft {
     * (doc_id, gs = int64 [[gramFp]] fingerprints sorted by (gdf asc,
     * fp asc), na = |set|) — the ONE table the whole prefix-filter
     * family reads: [[jaccardJoinPrefix]]'s index and verify joins,
-    * and [[jaccardPrefixAgainst]]'s both sides. Public so a pipeline
-    * computes it ONCE per (corpus, n), writes it to the warehouse,
-    * and hands it back via their `sortedGrams` params (PipelineOps
-    * caches one per sf dir) — before round 13 the subtree was
-    * materialized per CALL inside the self-join facade and the
-    * ingest probe had no prefix index at all.
+    * [[containmentPairsNgram]]'s positional path, and
+    * [[jaccardPrefixAgainst]]'s both sides (slices of this one table).
     *
     * The struct sort on (gdf, gf) is ONE total order every document
     * agrees on — prefix-filter exactness needs SOME consistent total
@@ -3932,39 +3766,29 @@ object Graft {
     * make the write and the verify intersections ~3× narrower than
     * gram strings. The table carries only (doc_id, gs, na): a
     * threshold-dependent prefix is a row-local slice of gs, cheaper
-    * to re-derive on read than to bake one t into the table. Parquet
-    * (via the caller's TempTables wrapper) rather than
-    * localCheckpoint because THREE joins consume it and an
-    * RDD-backed scan's defaultSizeInBytes would cost them their
-    * broadcast option (q_jaccard_prefix ran 2.7–2.9× over its median
-    * for two rounds on exactly that stats loss). One corpus-scale
-    * groupBy; docs shorter than n tokens carry no row. */
+    * to re-derive on read than to bake one t into the table. A
+    * [[TempTables.shared]] parquet table rather than localCheckpoint
+    * because THREE joins consume it and an RDD-backed scan's
+    * defaultSizeInBytes would cost them their broadcast option
+    * (q_jaccard_prefix ran 2.7–2.9× over its median for two rounds on
+    * exactly that stats loss). The rarity order is the shared
+    * [[gramDocFreq]] table; one corpus-scale groupBy over the shared
+    * [[docGramArrays]]; docs shorter than n tokens carry no row. */
   def rarityGramArrays(docs: DataFrame, id: Column, text: Column,
-                       n: Int = 3,
-                       gramDf: Option[DataFrame] = None,
-                       docGrams: Option[DataFrame] = None): DataFrame = {
+                       n: Int = 3): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
-    val grams = docGrams.map(validDocGrams(_, n))
-      .getOrElse(docGramArrays(docs, id, text, n))
+    val grams = docGramArrays(docs, id, text, n)
       .select(col("doc_id"), explode(col("ga")).as("gram"))
       .select(col("doc_id"), gramFp(col("gram")).as("gf"))
-    // `gramDf`: the shared [[gramDocFreq]] table for the SAME
-    // (docs, n) hands the rarity order for free; when absent the df
-    // pass runs inline over the same exploded stream
-    val rarity = gramDf.map(validGramDf(_, n)
-        .select(gramFp(col("gram")).as("gf"), col("gdf")))
-      .getOrElse(grams.groupBy("gf").agg(count(lit(1)).as("gdf")))
-    grams.join(rarity, "gf")
-      .groupBy("doc_id")
-      .agg(array_sort(collect_list(struct(col("gdf"), col("gf")))).as("sg"))
-      .select(col("doc_id"),
-              transform(col("sg"), s => s.getField("gf")).as("gs", nMeta(n)),
-              size(col("sg")).as("na"))
+    val rarity = gramFpDocFreq(docs, id, text, n)
+    TempTables.shared("rarity_gram_arrays",
+      grams.join(rarity, "gf")
+        .groupBy("doc_id")
+        .agg(array_sort(collect_list(struct(col("gdf"), col("gf")))).as("sg"))
+        .select(col("doc_id"),
+                transform(col("sg"), s => s.getField("gf")).as("gs"),
+                size(col("sg")).as("na")))()
   }
-
-  private def validSortedGrams(df: DataFrame, n: Int): DataFrame =
-    requireN(requireCols(df, Seq("doc_id", "gs", "na"), "sortedGrams"),
-             "gs", n, "sortedGrams")
 
   /** ONE definition of the AllPairs prefix length over a
     * [[rarityGramArrays]] row — na − ceil(p·na/1000) + 1, as an
@@ -3992,12 +3816,10 @@ object Graft {
     * positional filter → 6,393 pairs — a 10× collision cut and a 31×
     * verify cut).
     *
-    * PRECONDITIONS (fail-fast where checkable): both sides must be
-    * slices of ONE [[rarityGramArrays]] table — same n (stamp-
-    * checked) and, critically, the same global rarity order (not
-    * checkable from schemas; two independently-built tables rank by
-    * their own dfs and the prefix theorem silently breaks — the
-    * scaladoc contract, same stance as every handed-table param).
+    * PRECONDITION: both sides must be slices of ONE
+    * [[rarityGramArrays]] table — the same global rarity order (two
+    * independently-built tables rank by their own dfs and the prefix
+    * theorem silently breaks).
     * Overlapping doc ids emit self-pairs (doc_a = doc_b, J = 1.0);
     * hand DISJOINT slices, as an ingest pipeline naturally does.
     *
@@ -4014,26 +3836,23 @@ object Graft {
     * The PPJoin positional filter then bounds overlap per collision
     * (≤ min(na−i, nb−j)+1, both sides sorted by the one shared
     * order) before the distinct; survivors verify exactly via
-    * array_intersect on the two handed tables. The candidate join is
+    * array_intersect on the two slices. The candidate join is
     * [[operators.SkewJoin.blockedBipartiteJoin]] — a hot prefix
     * bucket's corpus rows are block-decomposed and the batch rows
     * replicated, so per-task input stays bounded. */
   def jaccardPrefixAgainst(corpusSorted: DataFrame, batchSorted: DataFrame,
-                           thresholdPermille: Int = 800, n: Int = 3,
+                           thresholdPermille: Int = 800,
                            maxBucket: Int = 1024): DataFrame = {
     require(thresholdPermille > 0 && thresholdPermille <= 1000,
       s"thresholdPermille must be in (0, 1000], got $thresholdPermille")
-    require(n >= 1, s"n must be >= 1, got $n")
     val p = thresholdPermille
-    val corpus = validSortedGrams(corpusSorted, n)
-    val batch = validSortedGrams(batchSorted, n)
     def prefixOf(side: DataFrame, idName: String, szName: String,
                  posName: String): DataFrame =
       side.select(col("doc_id").as(idName), col("na").as(szName),
           posexplode(slice(col("gs"), lit(1), prefixLen(p))).as(Seq(posName, "gf")))
         .select(col(idName), col(szName), (col(posName) + 1).as(posName), col("gf"))
-    val cPrefix = prefixOf(corpus, "doc_a", "na", "pos_a")
-    val bPrefix = prefixOf(batch, "doc_b", "nb", "pos_b")
+    val cPrefix = prefixOf(corpusSorted, "doc_a", "na", "pos_a")
+    val bPrefix = prefixOf(batchSorted, "doc_b", "nb", "pos_b")
     operators.SkewJoin.blockedBipartiteJoin(cPrefix, "doc_a", bPrefix,
                                             Seq("gf"), maxBucket)
       .filter(col("na") * 1000 >= col("nb") * p && col("nb") * 1000 >= col("na") * p)
@@ -4044,8 +3863,8 @@ object Graft {
                 * (1000 + p) >= (col("na") + col("nb")) * p)
       .select(col("doc_a"), col("na"), col("doc_b"), col("nb"))
       .distinct()
-      .join(corpus.select(col("doc_id").as("doc_a"), col("gs").as("ga")), "doc_a")
-      .join(batch.select(col("doc_id").as("doc_b"), col("gs").as("gb")), "doc_b")
+      .join(corpusSorted.select(col("doc_id").as("doc_a"), col("gs").as("ga")), "doc_a")
+      .join(batchSorted.select(col("doc_id").as("doc_b"), col("gs").as("gb")), "doc_b")
       .withColumn("common", size(array_intersect(col("ga"), col("gb"))).cast("long"))
       .filter(col("common") * (1000 + p) >= (col("na") + col("nb")) * p)
       .select(col("doc_a"), col("doc_b"),
@@ -4073,21 +3892,23 @@ object Graft {
     * self-joins: per doc the fixed-name working set (fz_p0.. =
     * `partitionBy` values, doc_id, fz_s = sorted distinct tokens
     * joined by one space, fz_tok0 = first canon token, fz_n =
-    * distinct-token count), empty-canon rows dropped. Public so a
-    * pipeline can compute it ONCE per corpus, persist it, and hand
-    * it to every [[fuzzyDupPairs]] call via `canon` — the
-    * write-the-projection-next-to-the-corpus warehouse shape. */
+    * distinct-token count), empty-canon rows dropped — a
+    * [[TempTables.shared]] table: the canon is a full tokenize + sort +
+    * distinct per document, and the blocked self-join evaluates its
+    * input THREE times (the hot-bucket count pass and both join
+    * sides), so it is written once per input and read three times. */
   def fuzzyCanonProjection(docs: DataFrame, id: Column, text: Column,
                            partitionBy: Seq[Column] = Nil): DataFrame = {
     // the fresh projection carries ONLY these fixed names, so caller
     // column names cannot collide with the working set
     val canon = array_join(array_sort(array_distinct(split(text, " "))), " ")
     val parts = partitionBy.zipWithIndex.map { case (c, i) => c.as(s"fz_p$i") }
-    docs
-      .select(parts :+ id.cast("long").as("doc_id") :+ canon.as("fz_s"): _*)
-      .filter(length(col("fz_s")) > 0)
-      .withColumn("fz_tok0", substring_index(col("fz_s"), " ", 1))
-      .withColumn("fz_n", size(split(col("fz_s"), " ")))
+    TempTables.shared("fuzzy_canon_projection",
+      docs
+        .select(parts :+ id.cast("long").as("doc_id") :+ canon.as("fz_s"): _*)
+        .filter(length(col("fz_s")) > 0)
+        .withColumn("fz_tok0", substring_index(col("fz_s"), " ", 1))
+        .withColumn("fz_n", size(split(col("fz_s"), " "))))()
   }
 
   /** Edit-distance near-dup pairs over ANY (id, text) DataFrame:
@@ -4118,38 +3939,10 @@ object Graft {
   def fuzzyDupPairs(docs: DataFrame, id: Column, text: Column,
                     partitionBy: Seq[Column] = Nil,
                     maxDist: Int = 8,
-                    maxBucket: Int = 1024,
-                    canon: Option[DataFrame] = None): DataFrame = {
+                    maxBucket: Int = 1024): DataFrame = {
     require(maxDist >= 0, s"maxDist must be >= 0, got $maxDist")
-    // MATERIALIZED once (round-12: the unattributed q_dedup_fuzzy
-    // driver excursion): the canon projection is a full tokenize +
-    // sort + distinct per document, and the blocked self-join below
-    // evaluates its input THREE times (the hot-bucket count pass and
-    // both join sides) — 3× the corpus-scale canon work on every call.
-    // One temp-parquet round trip makes it a write + three column
-    // reads, puts the cost on the build ledger (`fuzzy_canon`), and is
-    // the warehouse shape at 100 TB: write the canonicalized
-    // projection next to the corpus, then self-join the table.
-    // `canon` (round 17 — the sortedGrams/gramDf precedent): a
-    // PRE-MATERIALIZED [[fuzzyCanonProjection]] table, for callers
-    // that persist the projection once per corpus instead of paying
-    // the per-call write; must come from the same (docs, id, text,
-    // partitionBy) or pairs are garbage.
-    val base = canon.getOrElse(TempTables.materialize(
-      fuzzyCanonProjection(docs, id, text, partitionBy), "fuzzy_canon"))
+    val base = fuzzyCanonProjection(docs, id, text, partitionBy)
     val bucketCols = partitionBy.indices.map(i => s"fz_p$i") ++ Seq("fz_tok0", "fz_n")
-    require(bucketCols.forall(base.columns.contains) &&
-        base.columns.contains("doc_id") && base.columns.contains("fz_s"),
-      s"canon must be a fuzzyCanonProjection table, got ${base.columns.mkString(",")}")
-    // EXACT fz_p* arity (round-17 ADVICE): a canon built with a LONGER
-    // partitionBy would pass the exists check while the bucket key
-    // silently ignored its extra fz_pN partitions — producing a
-    // DIFFERENT pair set than the projection's builder intended; a
-    // mismatched projection must fail loudly instead
-    require(base.columns.count(_.startsWith("fz_p")) == partitionBy.size,
-      s"canon carries ${base.columns.count(_.startsWith("fz_p"))} fz_p* partition " +
-        s"columns but partitionBy has ${partitionBy.size} — the projection was " +
-        "built with a different partitionBy")
     operators.SkewJoin.blockedSelfPairs(base, bucketCols, "doc_id", maxBucket)
       .withColumn("edit_dist", levenshtein(col("fz_s_a"), col("fz_s_b"), maxDist))
       .filter(col("edit_dist") >= 0)
@@ -4165,11 +3958,16 @@ object Graft {
     * hashed ROW-LOCALLY — the canonical text itself never shuffles;
     * identical sets produce identical signatures by construction, so
     * `first(sig)` per group is deterministic. fanOutForCompute before
-    * the 64-permutation signature stage (round 17, guide §2.5): the
-    * sig is ~NumPerms hashes per token and otherwise serializes on a
-    * single-split local scan. Public so a pipeline computes it ONCE
-    * per corpus, persists it, and hands it back via `groups` — the
-    * rarityGramArrays/fuzzyCanonProjection warehouse shape. */
+    * the 64-permutation signature stage (guide §2.5): the sig is
+    * ~NumPerms hashes per token and otherwise serializes on a
+    * single-split local scan. A [[TempTables.shared]] table: five plan
+    * branches of [[nearDupPairsMinhash]] consume it (banding, both sig
+    * re-attach joins, both member-expansion joins), and the inline
+    * form re-ran the corpus scan + signature pass + set-collapse
+    * shuffle once PER BRANCH (measured ~5.5 s steady at
+    * sf0.1/local[32]). It is distinct-set-scale, so the parquet round
+    * trip is metadata-sized and its file stats keep every downstream
+    * join broadcast-able. */
   def minhashGroups(docs: DataFrame, id: Column, text: Column): DataFrame = {
     val base = fanOutForCompute(
         docs.filter(text.isNotNull)
@@ -4177,18 +3975,11 @@ object Graft {
             array_sort(array_distinct(split(text, " "))).as("toks")))
       .select(Seq(col("doc_id"), functions.MinHashSig.sig(col("toks")).as("sig")) ++
               spanHash(array_join(col("toks"), " ")): _*)
-    base.groupBy("h1", "h2")
-      .agg(min("doc_id").as("rep"), collect_list("doc_id").as("members"),
-           first("sig").as("sig"))
-      .select("rep", "members", "sig")
-  }
-
-  private def validMinhashGroups(g: DataFrame): DataFrame = {
-    require(g.columns.sorted.sameElements(Array("members", "rep", "sig")),
-      s"groups must be EXACTLY a minhashGroups table (rep, members, sig) — " +
-        s"got ${g.columns.mkString(",")}; extra or missing columns mean the table " +
-        "came from a different builder (round-17 ADVICE exact-shape rule)")
-    g
+    TempTables.shared("minhash_groups",
+      base.groupBy("h1", "h2")
+        .agg(min("doc_id").as("rep"), collect_list("doc_id").as("members"),
+             first("sig").as("sig"))
+        .select("rep", "members", "sig"))()
   }
 
   /** MinHash/LSH near-dup pairs over ANY (id, text) DataFrame:
@@ -4233,25 +4024,11 @@ object Graft {
   def nearDupPairsMinhash(docs: DataFrame, id: Column, text: Column,
                           estPermille: Int = 900,
                           maxBucket: Int = 1024,
-                          maxBandDocFreq: Int = Int.MaxValue,
-                          groups: Option[DataFrame] = None): DataFrame = {
+                          maxBandDocFreq: Int = Int.MaxValue): DataFrame = {
     require(estPermille > 0 && estPermille <= 1000,
       s"estPermille must be in (0, 1000], got $estPermille")
     require(maxBandDocFreq >= 1, s"maxBandDocFreq must be >= 1, got $maxBandDocFreq")
-    // MATERIALIZED once per call — or handed in via `groups` (round
-    // 18, the sortedGrams/canon precedent): the set-collapse aggregate
-    // is referenced by FIVE plan branches below (banding, both sig
-    // re-attach joins, both member-expansion joins), and the inline
-    // form re-ran the corpus scan + 64-permutation signature pass +
-    // set-collapse shuffle once PER BRANCH — six graft_minhash_sig
-    // passes and 18 document scans in one executed plan, measured
-    // ~5.5 s steady at sf0.1/local[32]. The groups table is
-    // distinct-set-scale (one row per distinct token set), so the
-    // parquet round trip is metadata-sized and its file stats keep
-    // every downstream join broadcast-able.
-    val g = groups.map(validMinhashGroups)
-      .getOrElse(TempTables.materialize(
-        minhashGroups(docs, id, text), "minhash_groups"))
+    val g = minhashGroups(docs, id, text)
     val sigs = g.select(col("rep"), col("sig"))
     val bandedAll = sigs.select(col("rep"),
         posexplode(transform(sequence(lit(0), lit(MinHash.NumBands - 1)),
@@ -4727,11 +4504,11 @@ object Graft {
       s"tauPermille must be in [0, 1000], got $tauPermille")
     val e = vecs.select(id.cast("long").as("doc_id"), vec.as("v"),
                         quality.cast("long").as("q"))
-    // `centroids` = a STANDING pre-trained quantizer (the
-    // ivfModelCache / "persist the model table once" posture —
-    // nobody re-runs Lloyd per query at 100 TB; train once via
-    // [[ivfTrain]], persist, pass it to every consumer). None keeps
-    // the self-contained train-then-pair behavior for ad-hoc calls.
+    // `centroids` = a STANDING pre-trained quantizer (the "persist
+    // the model table once" posture — nobody re-runs Lloyd per query
+    // at 100 TB; train once via [[ivfTrain]], persist, pass it to
+    // every consumer). None keeps the self-contained train-then-pair
+    // behavior for ad-hoc calls.
     val cents = centroids.getOrElse(
       ivfTrain(e, col("doc_id"), col("v"), k, iters, sampleFraction))
     val cells = ivfAssign(cents, e.select(col("doc_id"), col("v")), col("v"))
@@ -4767,8 +4544,8 @@ object Graft {
     * STANDING corpus under a STANDING trained quantizer, without
     * re-running Lloyd or re-pairing the corpus against itself. Both
     * sides take their cell from the same broadcast `centroids` model
-    * ([[ivfTrain]] output — the ivfModelCache / "persist the model
-    * table once" posture), candidates meet ONLY within a cell via
+    * ([[ivfTrain]] output — the "persist the model table once"
+    * posture), candidates meet ONLY within a cell via
     * [[operators.SkewJoin.blockedBipartiteJoin]] (corpus = large
     * side: the standing corpus is where a dense cell accumulates, and
     * a hot cell splits into id-hash blocks with batch rows replicated
@@ -5604,16 +5381,17 @@ object Graft {
 
   /** Corpus bigram counts (bigram, c12) over adjacent whitespace
     * tokens — the shared input of [[knBigramScores]]'s four model
-    * branches, public so a caller (PipelineOps does) can materialize
-    * it ONCE and hand it back rather than pay one corpus explode per
-    * branch. One codegen'd [[functions.TokenNGrams]] explode → one
-    * map-side-combinable count; docs shorter than 2 tokens have no
-    * bigram and are dropped. */
+    * branches, a [[TempTables.shared]] table so the corpus pays one
+    * explode, not one per branch. One codegen'd
+    * [[functions.TokenNGrams]] explode → one map-side-combinable
+    * count; docs shorter than 2 tokens have no bigram and are
+    * dropped. */
   def bigramCounts(docs: DataFrame, text: Column): DataFrame = {
     val t = split(text, " ")
-    docs.filter(size(t) >= 2)
-      .select(explode(functions.TokenNGrams.ngrams(t, 2)).as("bigram"))
-      .groupBy("bigram").agg(count(lit(1)).as("c12"))
+    TempTables.shared("bigram_counts",
+      docs.filter(size(t) >= 2)
+        .select(explode(functions.TokenNGrams.ngrams(t, 2)).as("bigram"))
+        .groupBy("bigram").agg(count(lit(1)).as("c12")))()
   }
 
   /** Interpolated Kneser–Ney bigram model table (Kneser & Ney 1995;
@@ -5650,20 +5428,14 @@ object Graft {
     * first count, and every aggregate combines map-side. Returns
     * (bigram, c12, kn_micro), one row per distinct bigram.
     *
-    * `bigramCounts`: a pre-built [[bigramCounts]] table for the SAME
-    * (docs, text). The model derives FOUR branches from the count
-    * table (fol/pre/types/scores), and without materialization the
-    * planner re-runs the corpus explode once per branch (the pushed
-    * isnotnull filters differ per join key, so exchange reuse cannot
-    * dedup them — measured: 4 full document scans in one plan).
-    * Handing the table (PipelineOps caches one temp-parquet per sf
-    * dir) makes the corpus pay ONE explode at build time; absent, the
-    * inline build keeps the facade self-contained for ad-hoc use. */
-  def knBigramScores(docs: DataFrame, text: Column,
-                     bigramCounts: Option[DataFrame] = None): DataFrame = {
-    val bg = bigramCounts
-      .map(requireCols(_, Seq("bigram", "c12"), "bigramCounts"))
-      .getOrElse(this.bigramCounts(docs, text))
+    * The model derives FOUR branches from the count table
+    * (fol/pre/types/scores); inline, the planner re-runs the corpus
+    * explode once per branch (the pushed isnotnull filters differ per
+    * join key, so exchange reuse cannot dedup them — measured: 4 full
+    * document scans in one plan), so it reads the shared
+    * [[bigramCounts]] table. */
+  def knBigramScores(docs: DataFrame, text: Column): DataFrame = {
+    val bg = bigramCounts(docs, text)
       .select(col("bigram"), col("c12"),
               split(col("bigram"), " ").getItem(0).as("w1"),
               split(col("bigram"), " ").getItem(1).as("w2"))

@@ -35,6 +35,9 @@ object Probe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    // a throwing rep is still timed but named here and fails the
+    // process, so a fast failure never reads as a fast query
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     val summaries = names.map { name =>
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query: $name (${SparkEntry.queries.size} known)"))
@@ -55,7 +58,10 @@ object Probe {
       val times = (1 to reps).map { i =>
         spark.sparkContext.setJobDescription(s"$name rep $i")
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).count() catch { case _: Throwable => -1L }
+        try fn(spark, sfDir).count() catch { case e: Throwable =>
+          failed += name
+          System.err.println(s"[probe] $name rep $i failed: ${e.getMessage}")
+        }
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"[probe] $name%-28s rep $i%2d  $dt%8.3f s")
         dt
@@ -63,7 +69,10 @@ object Probe {
       spark.sparkContext.setJobDescription(s"$name noop")
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case e: Throwable =>
+        failed += name
+        System.err.println(s"[probe] $name noop failed: ${e.getMessage}")
+      }
       val noop = (System.nanoTime() - t0) / 1e9
       println(f"[probe] $name%-28s noop    $noop%8.3f s")
       val sorted = times.sorted
@@ -73,6 +82,8 @@ object Probe {
     summaries.foreach { case (n, med, first, noop) =>
       println(f"[probe] $n%-28s med $med%8.3f  first $first%8.3f  noop $noop%8.3f")
     }
+    println(s"[probe] failed: ${failed.mkString("[", ", ", "]")}")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -1,14 +1,28 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.types.StructType
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicBoolean
 import scala.collection.concurrent.TrieMap
 import scala.util.Using
 
-/** Temp-parquet materialization for shared or repeatedly-consumed
-  * subtrees — the project's ONE sanctioned "cache a DataFrame" tool
-  * for anything a downstream JOIN consumes.
+/** Build-once temp-parquet tables for intermediates that several
+  * consumers share — the project's ONE sanctioned "cache a DataFrame"
+  * tool for anything a downstream JOIN consumes.
+  *
+  * The key rule: a table is identified by WHAT it is built from, never
+  * by a hand-written name. [[shared]] keys on (session, builder name,
+  * the canonicalized analyzed plan of the key DataFrame, the path, size
+  * and mtime of every file that plan reads). Two separate reads of the
+  * same corpus put through the same facade produce equal keys and
+  * share one build; a different n, threshold or input produces a
+  * different plan and its own build; an input rewritten in place keeps
+  * its plan but changes its file fingerprint, so it rebuilds instead of
+  * serving a table derived from the older files.
   *
   * Why parquet and not localCheckpoint/persist: a downstream join's
   * broadcast decision needs relation STATS. An RDD-backed checkpoint
@@ -25,39 +39,39 @@ import scala.util.Using
   * iterative-loop lineage truncation (pageRank/kcore/BFS/CC), where
   * the checkpointed side is metadata-scale and re-planned each round.
   *
-  * Eviction discipline (round-7 ADVICE): sweeps remove ONLY entries
-  * keyed by STOPPED sessions — a live session may still hold a lazy
-  * reader over the path, and deleting under it surfaces later as
-  * FileNotFoundException. Entry count is bounded in practice by
-  * |live sessions| × |sf dirs|; a JVM shutdown hook sweeps whatever
-  * remains so repeated runs don't accumulate tmp dirs.
+  * Eviction discipline: sweeps remove ONLY entries of STOPPED sessions
+  * — a live session may still hold a lazy reader over the path, and
+  * deleting under it surfaces later as FileNotFoundException. A JVM
+  * shutdown hook sweeps whatever remains so repeated runs don't
+  * accumulate tmp dirs.
   */
 object TempTables {
 
-  private val cache = TrieMap.empty[(SparkSession, String), String]
-  private val anon = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private final case class Key(session: SparkSession, name: String, plan: LogicalPlan,
+                               files: Seq[(String, Long, Long)])
 
-  /** Every build this JVM has paid: key (or materialize tag) →
-    * (cumulative build seconds, cumulative bytes written, build
-    * COUNT). Round-11: the gram-family driver-bench inflation was
-    * localized to in-query first-touch builds, but the cost was an
-    * INFERENCE from query-time deltas — this ledger makes it a
-    * measurement Bench can print (`"temp_builds"` in the compact
-    * line). The count matters for attribution (review catch,
-    * round 11): `cached` keys build once per (session, sfDir) —
-    * n = first-touch count — but `materialize` tags rebuild on EVERY
-    * invocation of their query, so their seconds are N builds
-    * summed, not a first-touch figure; n says which reading you are
-    * looking at.
+  /** One built table and the schema its first read inferred — later
+    * reads declare it, so a hit runs no schema-inference job. `warmed`
+    * flips on the first post-build access. */
+  private final class Table(val path: String, val schema: StructType) {
+    val warmed = new AtomicBoolean(false)
+  }
+
+  private val tables = TrieMap.empty[Key, Table]
+  // dirs being built and not yet owned by a map entry — swept at
+  // shutdown, so a crash mid-build cannot leak them
+  private val building = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Every build this JVM has paid: builder name → (cumulative build
+    * seconds, cumulative bytes written, build COUNT). A shared table
+    * builds once per distinct key, so n counts distinct inputs — n > 1
+    * for one name means that many different inputs (sessions, corpora,
+    * parameters) were put through the same builder.
     *
-    * Seconds are SELF time (round-12 review of the r12 triple): a
-    * build closure that first-touches ANOTHER shared table runs that
-    * child build inside its own timer — ngram_pairs' reading carried
-    * the whole gram_df + doc_grams3 builds on top of their own ledger
-    * rows, so the family's first-touch total double-counted and the
-    * pair graph's own cost was unreadable. A per-thread nesting stack
-    * subtracts each child's wall time from its parent, so ledger rows
-    * now ADD UP across a run. */
+    * Seconds are SELF time: a build closure that first-touches ANOTHER
+    * shared table runs that child build inside its own timer, so a
+    * per-thread nesting stack subtracts each child's wall time from its
+    * parent and ledger rows ADD UP across a run. */
   private val costs = TrieMap.empty[String, (Double, Long, Long)]
 
   /** Wall seconds of completed CHILD builds at each open nesting
@@ -67,9 +81,9 @@ object TempTables {
     () => new java.util.ArrayDeque[java.lang.Double]())
 
   /** Times `body`, records its SELF seconds (wall minus nested child
-    * builds) against `key`, and charges its WALL seconds to the
+    * builds) against `name`, and charges its WALL seconds to the
     * enclosing build, if any. */
-  private def timedBuild[A](key: String, path: => String)(body: => A): A = {
+  private def timedBuild[A](name: String, path: => String)(body: => A): A = {
     val stack = openBuilds.get()
     stack.push(0.0)
     val t0 = System.nanoTime()
@@ -78,15 +92,14 @@ object TempTables {
       val wall = (System.nanoTime() - t0) / 1e9
       val children: Double = stack.pop()
       if (!stack.isEmpty) stack.push(stack.pop() + wall)
-      recordBuild(key, math.max(0.0, wall - children), path)
+      recordBuild(name, math.max(0.0, wall - children), path)
       out
     } catch {
       case e: Throwable =>
-        // charge the failed build's wall to the enclosing parent too
-        // (round-12 ADVICE): without it the parent's SELF row would
-        // silently absorb the thrown child's partial wall and the
-        // rows-add-up invariant breaks exactly when debugging most
-        // needs it
+        // charge the failed build's wall to the enclosing parent too:
+        // without it the parent's SELF row would silently absorb the
+        // thrown child's partial wall and the rows-add-up invariant
+        // breaks exactly when debugging most needs it
         val wall = (System.nanoTime() - t0) / 1e9
         stack.pop()
         if (!stack.isEmpty) stack.push(stack.pop() + wall)
@@ -94,39 +107,32 @@ object TempTables {
     }
   }
 
-  private def recordBuild(key: String, secs: Double, path: String): Unit = {
+  private def recordBuild(name: String, secs: Double, path: String): Unit = {
     val bytes =
       try Using.resource(Files.walk(Paths.get(path)))(
         _.filter(Files.isRegularFile(_)).mapToLong(Files.size).sum)
       catch { case scala.util.control.NonFatal(_) => 0L }
-    costs.updateWith(key) {
+    costs.updateWith(name) {
       case Some((s, b, n)) => Some((s + secs, b + bytes, n + 1))
       case None            => Some((secs, bytes, 1L))
     }
   }
 
-  /** Snapshot of the per-key build ledger (seconds, bytes, builds),
-    * keyed by the `cached` key's prefix before any ':' (the sf-dir
-    * suffix is per-run noise) or the `materialize` tag. */
+  /** Snapshot of the per-builder build ledger (seconds, bytes, builds). */
   def buildCosts: Map[String, (Double, Long, Long)] =
     costs.readOnlySnapshot().toMap
 
-  /** The build ledger's READ-side sibling (round-12 verdict #2): per
-    * cached key, the seconds one sequential byte-stream pass over the
-    * table's parquet files cost at the FIRST post-build access — a
-    * direct measurement of the cold-file-I/O component of a shared
-    * table's first consumer (the round-11 q_dedup_fuzzy-class
-    * excursions were unattributed precisely because consumer-side
-    * first-read cost was invisible). The pass doubles as a PREFETCH:
-    * it leaves the files page-cache-hot and turns the consumer's
-    * random column-chunk reads into one sequential scan — measurement
-    * and remedy in one move. Bounded: tables over
+  /** The build ledger's READ-side sibling: per builder name, the
+    * seconds one sequential byte-stream pass over a table's parquet
+    * files cost at its FIRST post-build access — a direct measurement
+    * of the cold-file-I/O component of a shared table's first consumer.
+    * The pass doubles as a PREFETCH: it leaves the files
+    * page-cache-hot and turns the consumer's random column-chunk reads
+    * into one sequential scan. Bounded: tables over
     * [[PrefetchBoundBytes]] are skipped (recorded with secs = -1), so
     * the local-mode shim can never decide to stream a warehouse-scale
     * table through the driver. */
   private val readCosts = TrieMap.empty[String, (Double, Long)]
-  private val warmedKeys =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String)]()
 
   /** Prefetch ceiling — broadcast-scale by design: every table
     * TempTables holds is pair/vocab/model-scale per its own contract,
@@ -134,29 +140,26 @@ object TempTables {
     * to amplify with driver-side streaming. */
   val PrefetchBoundBytes: Long = 64L * 1024 * 1024
 
-  /** Snapshot of the first-read ledger: key prefix → (seconds spent
+  /** Snapshot of the first-read ledger: builder name → (seconds spent
     * in the sequential warm pass, bytes streamed). secs = -1 marks a
     * table over the prefetch bound (measured size, skipped stream). */
   def firstReadCosts: Map[String, (Double, Long)] =
     readCosts.readOnlySnapshot().toMap
 
-  private def warmFiles(key: String, path: String): Unit = {
+  private def warmFiles(name: String, path: String): Unit = {
     try {
       val files = Using.resource(Files.walk(Paths.get(path))) { w =>
         import scala.jdk.CollectionConverters._
         w.filter(Files.isRegularFile(_)).iterator().asScala.toList
       }
       val total = files.map(Files.size).sum
-      // ACCUMULATE like recordBuild (round-12 ADVICE): warmedKeys
-      // fires once per (session, key) — i.e. once per sfDir — so in a
-      // multi-sfDir session later sfDirs' warm passes run and must be
-      // visible, not silently discarded by a putIfAbsent on the
-      // prefix key. secs = -1 is sticky: once any read of the key was
-      // skipped as over-bound, the row stays flagged (the unmeasured
-      // cold-I/O candidate the ledger exists to surface), bytes still
-      // accumulating.
+      // ACCUMULATE like recordBuild: one row per builder name sums the
+      // warm passes of all its tables. secs = -1 is sticky: once any
+      // read of the name was skipped as over-bound, the row stays
+      // flagged (the unmeasured cold-I/O candidate the ledger exists to
+      // surface), bytes still accumulating.
       if (total > PrefetchBoundBytes) {
-        readCosts.updateWith(key) {
+        readCosts.updateWith(name) {
           case Some((_, b)) => Some((-1.0, b + total))
           case None         => Some((-1.0, total))
         }
@@ -170,7 +173,7 @@ object TempTables {
         }
       }
       val secs = (System.nanoTime() - t0) / 1e9
-      readCosts.updateWith(key) {
+      readCosts.updateWith(name) {
         case Some((s, b)) if s < 0 => Some((s, b + total))
         case Some((s, b))          => Some((s + secs, b + total))
         case None                  => Some((secs, total))
@@ -187,79 +190,81 @@ object TempTables {
       }
   }
 
-  private def evict(key: (SparkSession, String)): Unit =
-    cache.remove(key).foreach(deleteRecursively)
+  private def evict(key: Key): Unit =
+    tables.remove(key).foreach(t => deleteRecursively(t.path))
 
   Runtime.getRuntime.addShutdownHook(new Thread(() => {
-    cache.keys.foreach(evict)
-    anon.forEach(p => deleteRecursively(p))
+    tables.keys.foreach(evict)
+    building.forEach(p => deleteRecursively(p))
   }))
 
-  /** Build-once keyed cache: the first call per (session, key) runs
-    * `build`, writes the result to a temp parquet dir, and every call
-    * (including the first) returns a fresh parquet-backed reader over
-    * it — file-size stats intact. The WRITE is eager (it runs a job
-    * at construction time, like the localCheckpoint it replaces);
-    * consumers stay lazy. */
-  def cached(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    cache.keys.filter(_._1.sparkContext.isStopped).foreach(evict)
-    // sweep warmedKeys with the same stopped-session rule (round-12
-    // review): entries key SparkSessions, and without eviction every
-    // stopped session stays strongly reachable for the JVM lifetime —
-    // the leak the cache map's sweep exists to prevent
-    warmedKeys.removeIf(_._1.sparkContext.isStopped)
-    val path = cache.get((s, key)) match {
-      case Some(p) =>
+  /** The input-contents half of the key: (path, size, mtime) of every
+    * file each file-based relation in `plan` lists. Plan equality alone
+    * compares a file index by its ROOT paths, so a directory rewritten
+    * in place would otherwise still match a table built from the old
+    * files. */
+  private def inputFiles(plan: LogicalPlan): Seq[(String, Long, Long)] =
+    plan.collectWithSubqueries { case r: LogicalRelation => r.relation }
+      .flatMap {
+        case fs: HadoopFsRelation => fs.location match {
+          case idx: PartitioningAwareFileIndex =>
+            idx.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+          case idx => idx.inputFiles.toSeq.map(p => (p, -1L, -1L))
+        }
+        case _ => Nil
+      }
+      .sorted
+
+  /** Build-once shared table. The first call per key (see the object
+    * scaladoc) runs `build`, writes the result to a temp parquet dir,
+    * and every call — the first included — returns a fresh
+    * parquet-backed reader over it, file-size stats intact. The WRITE
+    * is eager (it runs at construction time); consumers stay lazy.
+    *
+    * `key` is what the table is derived from. For a lazy subtree the
+    * build IS the key, so `build` defaults to it; an eager build (a
+    * trained model, a converged labeling) keys on its training input
+    * and passes the training call as `build`, which runs only on a
+    * miss. `name` labels the ledger rows and, being part of the key,
+    * separates different builders over one input — an eager builder
+    * whose output depends on parameters beyond its input must carry
+    * them in its name. */
+  def shared(name: String, key: DataFrame)(build: => DataFrame = key): DataFrame = {
+    tables.keys.filter(_.session.sparkContext.isStopped).foreach(evict)
+    val s = key.sparkSession
+    val plan = key.queryExecution.analyzed
+    val k = Key(s, name, plan.canonicalized, inputFiles(plan))
+    tables.get(k) match {
+      case Some(t) =>
         // first access AFTER the building call: one timed sequential
         // byte pass (ledger row + page-cache prefetch — see
         // firstReadCosts). Right after a build the files are still
         // page-hot and the pass reads in milliseconds — the ~0 row is
-        // itself the measurement ("reads were never cold here");
-        // under I/O pressure that evicts /tmp between first touch and
-        // first re-read (the driver-machine hypothesis), the same row
-        // reads in seconds and names the query that paid it.
-        if (warmedKeys.add((s, key))) warmFiles(key.takeWhile(_ != ':'), p)
-        p
+        // itself the measurement ("reads were never cold here"); under
+        // I/O pressure that evicts /tmp between first touch and first
+        // re-read, the same row reads in seconds and names the query
+        // that paid it.
+        if (t.warmed.compareAndSet(false, true)) warmFiles(name, t.path)
+        s.read.schema(t.schema).parquet(t.path)
       case None =>
         // build OUTSIDE any map lock (it runs Spark jobs); the candidate
-        // dir sits in `anon` while unowned so a racing loser — or a crash
-        // mid-build — still gets swept at shutdown instead of leaking
+        // dir sits in `building` while unowned so a racing loser — or a
+        // crash mid-build — still gets swept at shutdown instead of
+        // leaking
         val p = Files.createTempDirectory("graft_tt_").toString
-        anon.add(p)
-        timedBuild(key.takeWhile(_ != ':'), p) {
+        building.add(p)
+        timedBuild(name, p) {
           build.write.mode("overwrite").parquet(p)
         }
-        cache.putIfAbsent((s, key), p) match {
-          case None         => anon.remove(p); p
-          case Some(winner) => anon.remove(p); deleteRecursively(p); winner
+        val reader = s.read.parquet(p)
+        val owner = tables.putIfAbsent(k, new Table(p, reader.schema))
+        building.remove(p)
+        owner match {
+          case None         => reader
+          case Some(winner) =>
+            deleteRecursively(p)
+            s.read.schema(winner.schema).parquet(winner.path)
         }
     }
-    s.read.parquet(path)
-  }
-
-  /** Uncached per-call materialization, for facade-internal shared
-    * subtrees over ARBITRARY caller DataFrames (no stable cache key
-    * exists). Each call writes one temp dir, registered for the
-    * shutdown sweep — never deleted mid-JVM automatically, because
-    * the returned reader is lazy and may be consumed much later. A
-    * long-lived service JVM calling materialize-backed facades in a
-    * loop should call [[sweepAnon]] at its own quiescent points. */
-  def materialize(df: DataFrame, tag: String): DataFrame = {
-    val p = Files.createTempDirectory(s"graft_${tag}_").toString
-    anon.add(p)
-    timedBuild(tag, p) {
-      df.write.mode("overwrite").parquet(p)
-    }
-    df.sparkSession.read.parquet(p)
-  }
-
-  /** Deletes every [[materialize]]-created dir now instead of at JVM
-    * shutdown — the /tmp bound for long-lived JVMs. CALLER asserts
-    * quiescence: any still-lazy reader over a materialized facade
-    * result surfaces later as FileNotFoundException, exactly like
-    * dropping a warehouse temp table under a running reader. */
-  def sweepAnon(): Unit = {
-    val it = anon.iterator()
-    while (it.hasNext) { deleteRecursively(it.next()); it.remove() }
   }
 }

@@ -1,8 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (tools/preflight.py). Prints
+  * the queries that threw and exits non-zero when there are any. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -21,18 +22,25 @@ object Verify {
       .config("spark.sql.ui.retainedExecutions", "20")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    dump(spark, sfDir, outDir)
+    val failed = dump(spark, sfDir, outDir)
+    println(s"[verify] ${SparkEntry.queries.size - failed.size}/${SparkEntry.queries.size} " +
+      s"written; failed: ${failed.mkString("[", ", ", "]")}")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 
-  /** The dump body, callable from tests without stopping the session. */
-  def dump(spark: SparkSession, sfDir: String, outDir: String): Unit = {
+  /** The dump body, callable from tests without stopping the session.
+    * Returns the names of the queries that threw (their output dirs
+    * are missing). */
+  def dump(spark: SparkSession, sfDir: String, outDir: String): Seq[String] = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failed = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -50,5 +58,6 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    failed
   }
 }

@@ -6,27 +6,21 @@ import org.apache.spark.sql.functions._
 /** Distributed connected components over an edge list — the clustering
   * stage after pairwise near-dup detection (SURVEY.md §2.12).
   *
-  * Two interchangeable algorithms, both pure DataFrame ops whose driver
-  * loop reads only per-round convergence METADATA (a count/checksum
-  * row), never data:
+  * [[alternatingStar]]: the large-star/small-star algorithm (Kiveris
+  * et al., "Connected Components in MapReduce and Beyond"), a pure
+  * DataFrame loop whose driver reads only per-round convergence
+  * METADATA (a count/checksum row), never data. Large-star hooks every
+  * node's larger neighbors onto its minimum, small-star hooks the
+  * smaller ones; alternating rounds converge to a forest of stars
+  * centered at each component's minimum id in O(log n) rounds
+  * REGARDLESS of diameter — the 100 TB-safe shape. The loop is preceded
+  * by ONE min-label seed contraction (m(u) = min(N(u) ∪ {u}), iterate
+  * on (m(a), m(b))): near-clique dedup components collapse entirely in
+  * the seed pass, so the loop runs 1-2 rounds on the inter-clique
+  * residue instead of O(log n) rounds of ~6 shuffle stages each on the
+  * full graph.
   *
-  *  - [[minLabelPropagation]]: each round every node takes the min
-  *    label among itself and its neighbors. O(diameter) rounds — ideal
-  *    for near-clique dedup clusters (2-3 rounds), degenerate on long
-  *    chains.
-  *  - [[alternatingStar]]: the large-star/small-star algorithm
-  *    (Kiveris et al., "Connected Components in MapReduce and Beyond"):
-  *    large-star hooks every node's larger neighbors onto its minimum,
-  *    small-star hooks the smaller ones; alternating rounds converge to
-  *    a forest of stars centered at each component's minimum id in
-  *    O(log n) rounds REGARDLESS of diameter — the 100 TB-safe default.
-  *    Since round 15 the loop is preceded by ONE min-label seed
-  *    contraction (m(u) = min(N(u) ∪ {u}), iterate on (m(a), m(b))):
-  *    near-clique dedup components collapse entirely in the seed pass,
-  *    so the loop runs 1-2 rounds on the inter-clique residue instead
-  *    of O(log n) rounds of ~6 shuffle stages each on the full graph.
-  *
-  * Both fail loudly (require) instead of silently returning unconverged
+  * It fails loudly (require) instead of silently returning unconverged
   * labels when the round cap is hit. Per-round lineage is truncated
   * with localCheckpoint so plan depth stays O(1); at real cluster scale
   * swap for reliable `checkpoint` on a DFS — identical shape.
@@ -66,38 +60,6 @@ object ConnectedComponents {
     * do) pass this constant explicitly; the default is the
     * probe-free distributed loop. */
   val LocalMaxEdges: Int = 1 << 16
-
-  /** (node, label) via min-label propagation; O(diameter) rounds. */
-  def minLabelPropagation(edges: DataFrame, maxRounds: Int = 20): DataFrame =
-    minLabelWithRounds(edges, maxRounds)._1
-
-  private[graft] def minLabelWithRounds(edges: DataFrame, maxRounds: Int): (DataFrame, Int) = {
-    val cast = castLong(edges)
-    val e0 = dropSelfLoops(cast)
-    val dir = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-    // the label universe comes from the PRE-filter edge set, so a node
-    // appearing only in self-loop edges still gets (node, node)
-    var labels = nodeUniverse(cast)
-      .select(col("node"), col("node").as("label"))
-      .localCheckpoint()
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < maxRounds) {
-      rounds += 1
-      val prop = dir.join(labels, dir("b") === labels("node"))
-        .select(dir("a").as("node"), col("label"))
-      val next = labels.union(prop)
-        .groupBy("node").agg(min("label").as("label"))
-        .localCheckpoint()
-      converged = next.join(labels.withColumnRenamed("label", "old"), "node")
-        .filter(col("label") =!= col("old")).isEmpty
-      labels = next
-    }
-    require(converged,
-      s"connected components (min-label) did not converge in $maxRounds rounds — " +
-        "component diameter exceeds the cap; raise maxRounds or use alternatingStar")
-    (labels, rounds)
-  }
 
   /** (node, label) via alternating large-star/small-star; O(log n)
     * rounds on any graph shape. Edge sets at or below `localMaxEdges`

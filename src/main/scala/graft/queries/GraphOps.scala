@@ -29,16 +29,15 @@ object GraphOps {
     * exchange carrying the 4× pair fan-out through a join — measured
     * 2× slower at sf0.1 for the same 3,573 edges.
     *
-    * Built ONCE per (session, sfDir) and materialized AS A PARQUET
-    * TABLE via [[graft.TempTables.cached]] (round 9; shared utility
-    * since round 10) — five §2.14 queries consume the same edge list
+    * Built ONCE per input and materialized AS A PARQUET TABLE via
+    * [[graft.TempTables.shared]] — five §2.14 queries consume the same edge list
     * and the build subtree (~1.9 s at sf0.1) dominated each of them.
     * A table, not localCheckpoint/persist: the consumers' degree-join
     * broadcast decisions need relation STATS — see TempTables'
     * scaladoc for the measured evidence. At cluster scale this is
     * exactly "materialize the edge table once, read it five times". */
   private def coPurchaseEdges(s: SparkSession, d: String): DataFrame =
-    graft.TempTables.cached(s, s"copurchase_edges:$d") {
+    graft.TempTables.shared("copurchase_edges",
       Tables.lineitem(s, d)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .groupBy("ok").agg(collect_set(col("pk")).as("ps"))
@@ -53,8 +52,7 @@ object GraphOps {
         // pre-filter pair rows; repartition keeps the aggregate
         // parallel and pays one 3.6k-row exchange for the single-file
         // write (measured 1.42 → 1.13 s at sf0.1/local[32])
-        .repartition(1)
-    }
+        .repartition(1))()
 
   /** Exact triangle census of the co-purchase graph (added round 8):
     * ONE row — nodes, edges, wedges, triangles, global clustering

@@ -323,16 +323,16 @@ object MediaOps {
           gifSig.map(sig => (2 * docId + 1, sig))
       }
     }.toDF("asset_id", "sig")
-    val sigTable = graft.TempTables.cached(s, s"phash_sigs:$d")(sigs)
+    val sigTable = graft.TempTables.shared("phash_sigs", sigs)()
     // identical signatures collapse to one banding representative;
     // group mass re-expands arithmetically below. The group table is
     // its own cached artifact: four plan branches consume it (banding
     // reps, both pair-mass re-expansions, the within-group rollup),
     // and at corpus scale recomputing the signature aggregate per
     // branch is four shuffles where one table write does
-    val groups = graft.TempTables.cached(s, s"phash_groups:$d")(
+    val groups = graft.TempTables.shared("phash_groups",
       sigTable.groupBy("sig")
-        .agg(min(col("asset_id")).as("rep"), count(lit(1)).as("n")))
+        .agg(min(col("asset_id")).as("rep"), count(lit(1)).as("n")))()
     val pairs = graft.Graft.nearDupPairsHamming(
       groups, col("rep"), col("sig"), maxHamming = maxHamming)
     val cross = pairs
@@ -415,10 +415,10 @@ object MediaOps {
           Multimodal.audioFingerprint(twin).map(sig => (2 * docId + 1, sig))
       }
     }.toDF("asset_id", "sig")
-    val sigTable = graft.TempTables.cached(s, s"afp_sigs:$d")(sigs)
-    val groups = graft.TempTables.cached(s, s"afp_groups:$d")(
+    val sigTable = graft.TempTables.shared("afp_sigs", sigs)()
+    val groups = graft.TempTables.shared("afp_groups",
       sigTable.groupBy("sig")
-        .agg(min(col("asset_id")).as("rep"), count(lit(1)).as("n")))
+        .agg(min(col("asset_id")).as("rep"), count(lit(1)).as("n")))()
     val pairs = graft.Graft.nearDupPairsHamming(
       groups, col("rep"), col("sig"), maxHamming = maxHamming)
     val cross = pairs
@@ -515,7 +515,7 @@ object MediaOps {
     // fanOutForCompute: see q_media_decode — SIX GIF encodes + six
     // signature decodes per doc (three variants, one decode pass each)
     // on a single-split scan; measured 2.0 → 0.3 s at sf0.1/local[32]
-    val sigs = graft.TempTables.cached(s, s"videofp_sigs:$d")(
+    val sigs = graft.TempTables.shared("videofp_sigs",
       graft.Graft.fanOutForCompute(
         Tables.documents(s, d)
           .filter(length(col("text")) === octet_length(col("text")) &&
@@ -544,7 +544,7 @@ object MediaOps {
                 .map { case (ph, fhs) => (assetId, ph, fhs) }
             }
           }
-        }.toDF("asset_id", "phash", "fhashes"))
+        }.toDF("asset_id", "phash", "fhashes"))()
     val sized = sigs.select(col("asset_id"), size(col("fhashes")).cast("long").as("nf"))
     val frames = sigs.select(col("asset_id"),
         posexplode(col("fhashes")).as(Seq("pos", "fh")))

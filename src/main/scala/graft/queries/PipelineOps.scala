@@ -17,20 +17,18 @@ object PipelineOps {
 
   /** The word-3-gram Jaccard pair graph (doc_a, doc_b, jaccard) at
     * J ≥ 0.8 — the shared input of [[q_dedup_ngram]] (pair list) and
-    * [[q_dedup_cluster]] (components over it). Computed ONCE per
-    * (session, sfDir) via [[graft.TempTables.cached]] — temp PARQUET,
-    * not localCheckpoint: the CC loop and q_dedup_drop's anti-join
+    * [[q_dedup_cluster]] (components over it). Built ONCE per input
+    * via [[graft.TempTables.shared]] — temp PARQUET, not
+    * localCheckpoint: the CC loop and q_dedup_drop's anti-join
     * consume this table, and an RDD-backed scan would report
     * `defaultSizeInBytes` and cost them their broadcast plans (the
     * §2.14 edge-table lesson, TempTables scaladoc). At cluster scale
     * this is "write the pair graph to a table once, read it twice" —
     * identical shape.
     *
-    * Round 14 (the round-13 verdict's #1): the build runs the EXACT
-    * AllPairs/PPJoin prefix+positional path
-    * ([[graft.Graft.jaccardJoinPrefix]]) over the shared
-    * [[jaccSortedTable]] rarity table instead of the full
-    * inverted-index join — each doc indexes only its
+    * The build runs the EXACT AllPairs/PPJoin prefix+positional path
+    * ([[graft.Graft.jaccardJoinPrefix]]) over the shared rarity table
+    * instead of the full inverted-index join — each doc indexes only its
     * `na − ceil(0.8·na) + 1` rarest grams (~the rarest fifth), the
     * positional filter bounds overlap per collision BEFORE the
     * distinct, and survivors verify row-locally via array_intersect
@@ -42,78 +40,38 @@ object PipelineOps {
     * full-inverted-index path stays live as
     * [[graft.Graft.nearDupPairsNgram]] (q_dedup_ngram_capped's lossy
     * cap and [[graft.Graft.nearDupBands]]' sweep genuinely need the
-    * per-pair common COUNT over the whole gram universe). */
-  private def ngramPairGraph(s: SparkSession, d: String): DataFrame =
-    graft.TempTables.cached(s, s"ngram_pairs:$d")(
-      graft.Graft.jaccardJoinPrefix(Tables.documents(s, d),
-        col("doc_id"), col("text"), thresholdPermille = 800, n = 3,
-        sortedGrams = Some(jaccSortedTable(s, d))))
+    * per-pair common COUNT over the whole gram universe).
+    *
+    * Keyed by the documents read, with (t = 0.8, n = 3) fixed here:
+    * the pair graph's eight consumers run in every pass, and
+    * constructing the prefix-join plan just to compute a key costs
+    * about 0.2 s of driver-side analysis per call, which a hit must
+    * not pay. */
+  private def ngramPairGraph(s: SparkSession, d: String): DataFrame = {
+    val docs = Tables.documents(s, d)
+    graft.TempTables.shared("ngram_pairs", docs)(
+      graft.Graft.jaccardJoinPrefix(docs,
+        col("doc_id"), col("text"), thresholdPermille = 800, n = 3))
+  }
 
-  /** The per-document distinct word-3-gram ARRAY table (doc_id, na,
-    * ga) — [[graft.Graft.docGramArrays]] computed ONCE per (session,
-    * sfDir) and fed to EVERY gram-family build: the pair graph, the
-    * gram-df table, the capped variant's filtered recount, the prefix
-    * index, novelty, containment. Before round 11 each of those
-    * re-ran the corpus tokenize→n-gram→distinct pass on a cold
-    * session (three-plus full explodes — the measured bulk of the
-    * family's first-touch cost, the round-10 `weak` flags); now the
-    * cold path pays ONE pass plus one parquet write, and every
-    * consumer explodes a stored array column. The warehouse shape at
-    * 100 TB: the tokenized intermediate is written once next to the
-    * corpus, exactly like the pair graph and df tables it feeds. */
-  private def docGramsTable(s: SparkSession, d: String): DataFrame =
-    graft.TempTables.cached(s, s"doc_grams3:$d")(
-      graft.Graft.docGramArrays(Tables.documents(s, d),
-        col("doc_id"), col("text"), n = 3))
-
-  /** The word-3-gram document-frequency table (gram, gdf) over
-    * documents — [[graft.Graft.gramDocFreq]] computed ONCE per
-    * (session, sfDir) and shared by every n-gram-family consumer that
-    * prices grams by rarity: [[q_jaccard_prefix]]'s prefix order and
-    * [[q_dedup_ngram_capped]]'s stop-gram hot list both read this one
-    * vocab-scale parquet table instead of re-aggregating the full
-    * gram explode (the write-the-df-table-once warehouse shape; at
-    * sf0.1 it saved q_jaccard_prefix its second-most-expensive
-    * subtree). Temp parquet so the rarity join keeps file stats and
-    * broadcasts when small. */
-  private def gramDfTable(s: SparkSession, d: String): DataFrame =
-    graft.TempTables.cached(s, s"gram_df:$d")(
-      graft.Graft.gramDocFreq(Tables.documents(s, d),
-        col("doc_id"), col("text"), n = 3,
-        docGrams = Some(docGramsTable(s, d))))
-
-  /** The rarity-sorted per-doc gram-fingerprint table (doc_id, gs,
-    * na) — [[graft.Graft.rarityGramArrays]] at n = 3 over documents,
-    * computed ONCE per (session, sfDir) and shared by
-    * [[q_jaccard_prefix]] (index + both verify joins) and
-    * [[q_dedup_incremental]] (BOTH sides of the bipartite prefix
-    * probe are mod-2 slices of this one table, which is also what
-    * makes their rarity orders consistent by construction — the
-    * prefix theorem's one uncheckable precondition). Before round 13
-    * the self-join facade materialized this subtree per CALL and the
-    * ingest probe re-exploded the full inverted index per call. */
-  private def jaccSortedTable(s: SparkSession, d: String): DataFrame =
-    graft.TempTables.cached(s, s"jacc_sorted:$d")(
-      graft.Graft.rarityGramArrays(Tables.documents(s, d),
-        col("doc_id"), col("text"), n = 3,
-        gramDf = Some(gramDfTable(s, d)),
-        docGrams = Some(docGramsTable(s, d))))
-
-  /** Component labels over [[ngramPairGraph]], computed ONCE per
-    * (session, sfDir) and shared by [[q_dedup_cluster]] (membership
-    * accounting) and [[q_dedup_drop]] (removal) — the "write the
-    * labeling once, read it twice" shape of a real pipeline; without
-    * it each consumer re-runs the O(log n) components loop. Temp
+  /** Component labels over [[ngramPairGraph]], computed ONCE per pair
+    * graph and shared by [[q_dedup_cluster]] (membership accounting)
+    * and [[q_dedup_drop]] (removal) — the "write the labeling once,
+    * read it twice" shape of a real pipeline; without it each consumer
+    * re-runs the O(log n) components loop. Keyed by the pair graph it
+    * labels (the loop is eager, so it runs only on a miss). Temp
     * parquet for the same stats reason: q_dedup_drop joins documents
     * against these metadata-scale labels and should broadcast them. */
-  private def ngramCcLabels(s: SparkSession, d: String): DataFrame =
-    graft.TempTables.cached(s, s"ngram_cc:$d")(
+  private def ngramCcLabels(s: SparkSession, d: String): DataFrame = {
+    val pairs = ngramPairGraph(s, d).select(col("doc_a"), col("doc_b"))
+    graft.TempTables.shared("ngram_cc", pairs)(
       graft.operators.ConnectedComponents
-        // the probe fast path is opt-in (round-17 ADVICE) and safe
-        // here: the pair graph is a cached stats-bearing parquet
-        // table, so the gate probe costs one bounded file read
-        .alternatingStar(ngramPairGraph(s, d).select(col("doc_a"), col("doc_b")),
+        // the probe fast path is opt-in and safe here: the pair graph
+        // is a shared stats-bearing parquet table, so the gate probe
+        // costs one bounded file read
+        .alternatingStar(pairs,
           localMaxEdges = graft.operators.ConnectedComponents.LocalMaxEdges))
+  }
 
   /** Word-3-gram Jaccard near-dup pairs at ≥ 0.8, never all-pairs:
     * since round 14 the shared pair graph builds through the EXACT
@@ -140,18 +98,7 @@ object PipelineOps {
     * what the cap is), so the oracle applies the same cap in SQL. */
   def q_dedup_ngram_capped(s: SparkSession, d: String): DataFrame =
     graft.Graft.nearDupPairsNgram(Tables.documents(s, d),
-        col("doc_id"), col("text"), maxGramDocFreq = 5,
-        gramDf = Some(gramDfTable(s, d)),
-        docGrams = Some(docGramsTable(s, d)),
-        // post-cap recount cached per sfDir (round 18): the inline
-        // path re-materialized it on EVERY invocation — a per-call
-        // temp-parquet write for a table that is a deterministic
-        // function of (corpus, n, cap)
-        cappedSizes = Some(graft.TempTables.cached(s, s"ngram_sizes_cap5:$d")(
-          graft.Graft.cappedGramSizes(Tables.documents(s, d),
-            col("doc_id"), col("text"), n = 3, maxGramDocFreq = 5,
-            gramDf = Some(gramDfTable(s, d)),
-            docGrams = Some(docGramsTable(s, d))))))
+        col("doc_id"), col("text"), maxGramDocFreq = 5)
       .orderBy("doc_a", "doc_b")
 
   /** EXACT prefix-filtered Jaccard pairs (AllPairs/PPJoin prefix
@@ -168,8 +115,7 @@ object PipelineOps {
     * sort last in rarity order and never enter a prefix). */
   def q_jaccard_prefix(s: SparkSession, d: String): DataFrame =
     graft.Graft.jaccardJoinPrefix(Tables.documents(s, d),
-        col("doc_id"), col("text"), thresholdPermille = 700,
-        sortedGrams = Some(jaccSortedTable(s, d)))
+        col("doc_id"), col("text"), thresholdPermille = 700)
       .orderBy("doc_a", "doc_b")
 
   /** Sorted-neighborhood near-dup pairs (added round 8): order docs
@@ -185,15 +131,7 @@ object PipelineOps {
   def q_dedup_sorted(s: SparkSession, d: String): DataFrame =
     graft.Graft.sortedNeighborPairs(Tables.documents(s, d),
         col("doc_id"), col("text"), sortKey = col("n_chars"),
-        w = 8, thresholdPermille = 900,
-        // ranked projection cached per (session, sfDir) — round 17:
-        // the per-invocation snm_sorted materialize re-paid the
-        // corpus tokenize + two-pass rank + parquet write on every
-        // call (~1.9 s of this query's steady reading); build once,
-        // read thereafter (the jacc_sorted precedent)
-        sorted = Some(graft.TempTables.cached(s, s"snm_sorted:$d")(
-          graft.Graft.sortedNeighborProjection(Tables.documents(s, d),
-              col("doc_id"), col("text"), col("n_chars")))))
+        w = 8, thresholdPermille = 900)
       .orderBy("doc_a", "doc_b")
 
   /** Edit-distance near-dup pairs on the CANONICAL string (sorted
@@ -208,32 +146,22 @@ object PipelineOps {
   def q_dedup_fuzzy(s: SparkSession, d: String): DataFrame =
     graft.Graft.fuzzyDupPairs(Tables.documents(s, d),
         col("doc_id"), col("text"),
-        partitionBy = Seq(col("lang")), maxDist = 8,
-        // canon projection cached per (session, sfDir) — round 17:
-        // the per-invocation fuzzy_canon materialize re-paid the
-        // tokenize+sort+distinct canon pass + parquet write on every
-        // call; build once, read thereafter (the jacc_sorted
-        // precedent)
-        canon = Some(graft.TempTables.cached(s, s"fuzzy_canon:$d")(
-          graft.Graft.fuzzyCanonProjection(Tables.documents(s, d),
-              col("doc_id"), col("text"), Seq(col("lang"))))))
+        partitionBy = Seq(col("lang")), maxDist = 8)
       .select(col("doc_a"), col("doc_b"), col("edit_dist").cast("long").as("edit_dist"))
       .orderBy("doc_a", "doc_b")
 
   /** Per-document word-3-gram NOVELTY (round 10) — share of a doc's
     * distinct grams with corpus document frequency EXACTLY 1:
-    * [[graft.Graft.ngramNovelty]] on documents, fed the SHARED
-    * per-sfDir gram-df table ([[gramDfTable]] — third consumer after
-    * the prefix filter's rarity order and the stop-gram hot list), so
-    * the oracle verifies the public facade AND the sharing path. The
+    * [[graft.Graft.ngramNovelty]] on documents, which reads the SHARED
+    * gram-df table (third consumer after the prefix filter's rarity
+    * order and the stop-gram hot list), so the oracle verifies the
+    * public facade AND the sharing path. The
     * curation signal complementing dup-rate: a doc can be pair-clean
     * yet assembled entirely from corpus-common fragments (novelty ≈
     * 0). Integer floor-div permille (rule F). */
   def q_ngram_novelty(s: SparkSession, d: String): DataFrame =
     graft.Graft.ngramNovelty(Tables.documents(s, d),
-        col("doc_id"), col("text"), n = 3,
-        gramDf = Some(gramDfTable(s, d)),
-        docGrams = Some(docGramsTable(s, d)))
+        col("doc_id"), col("text"), n = 3)
       .orderBy("doc_id")
 
   /** The corpus stop-gram report (round 10): top-25 word-3-grams by
@@ -241,7 +169,7 @@ object PipelineOps {
     * order, rule O) with integer floor-div df permille — the table an
     * operator READS to pick `maxGramDocFreq` for the lossy capped
     * dedup variants, now a first-class oracle-checked query over the
-    * same shared [[gramDfTable]] parquet (fourth consumer). Plan:
+    * same shared gram-df parquet (fourth consumer). Plan:
     * vocab-scale file scan → TakeOrderedAndProject (per-partition
     * top-k heaps, ≤ 25 rows to the driver merge — no global sort);
     * the 1-row corpus count crosses via broadcast. */
@@ -249,7 +177,7 @@ object PipelineOps {
     val nDocs = Tables.documents(s, d)
       .filter(size(toks) >= 3)
       .agg(count(lit(1)).as("n_docs"))
-    gramDfTable(s, d)
+    graft.Graft.gramDocFreq(Tables.documents(s, d), col("doc_id"), col("text"), n = 3)
       .crossJoin(broadcast(nDocs))
       .select(col("gram"), col("gdf"),
               expr("gdf * 1000L div n_docs").as("df_permille"))
@@ -344,23 +272,24 @@ object PipelineOps {
     * row-local counts against pair-scale labels. */
   def q_stitch_repair(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    // cached per (session, sfDir), not per-invocation materialize
-    // (round 17): the pair detection join and the O(log n) CC loop
-    // are both deterministic functions of the corpus, and rebuilding
-    // them on every call re-paid the corpus-scale span-hash join plus
-    // the whole multi-job star loop each time (~2-3 s of this query's
-    // steady driver reading). The ngram_cc precedent exactly: build
-    // once per sfDir, price the build in temp_builds, every
-    // invocation reads the stats-bearing parquet tables.
-    val pairs = graft.TempTables.cached(s, s"stitch_pairs:$d")(
+    // shared per input, not rebuilt per invocation: the pair detection
+    // join and the O(log n) CC loop are both deterministic functions
+    // of the corpus, and rebuilding them on every call re-paid the
+    // corpus-scale span-hash join plus the whole multi-job star loop
+    // each time (~2-3 s of this query's steady driver reading). The
+    // ngram_cc precedent exactly: build once, price the build in
+    // temp_builds, every invocation reads the stats-bearing parquet
+    // tables.
+    val pairs = graft.TempTables.shared("stitch_pairs",
       graft.Graft.stitchPairs(docs, col("doc_id"), col("text"), boundaryTokens = 4)
-        .select(col("doc_a"), col("doc_b")))
+        .select(col("doc_a"), col("doc_b")))()
     // the CC loop's labeling is RDD-backed (localCheckpoint lineage
     // truncation) and TWO joins consume it — parquet round-trip keeps
-    // relation stats so both stay broadcast-able (the §2.14 lesson)
-    val labels = graft.TempTables.cached(s, s"stitch_cc:$d")(
-      // pairs is a cached parquet table — the opt-in probe fast path
-      // (round-17 ADVICE) costs one bounded file read here
+    // relation stats so both stay broadcast-able (the §2.14 lesson);
+    // keyed by the pairs it labels, so the loop runs only on a miss
+    val labels = graft.TempTables.shared("stitch_cc", pairs)(
+      // pairs is a shared parquet table — the opt-in probe fast path
+      // costs one bounded file read here
       graft.operators.ConnectedComponents.alternatingStar(pairs,
         localMaxEdges = graft.operators.ConnectedComponents.LocalMaxEdges))
     val sizes = docs.select(col("doc_id"), size(toks).cast("long").as("n_toks"))
@@ -865,9 +794,7 @@ object PipelineOps {
     * integers throughout (rule I). */
   def q_dedup_sweep(s: SparkSession, d: String): DataFrame =
     graft.Graft.nearDupBands(Tables.documents(s, d),
-        col("doc_id"), col("text"), lowPermille = 700, bandPermille = 50,
-        n = 3, gramDf = Some(gramDfTable(s, d)),
-        docGrams = Some(docGramsTable(s, d)))
+        col("doc_id"), col("text"), lowPermille = 700, bandPermille = 50, n = 3)
       .orderBy("band_lo")
 
   /** Gram document-frequency histogram (round 11) — the
@@ -884,7 +811,7 @@ object PipelineOps {
     * touched at all. Integers throughout (rule I); df_bucket unique
     * (rule O). */
   def q_gram_df_hist(s: SparkSession, d: String): DataFrame =
-    gramDfTable(s, d)
+    graft.Graft.gramDocFreq(Tables.documents(s, d), col("doc_id"), col("text"), n = 3)
       .select(graft.Graft.pow2Bucket(col("gdf")).as("df_bucket"), col("gdf"))
       .groupBy("df_bucket")
       .agg(count(lit(1)).as("n_grams"), sum("gdf").as("total_df"))
@@ -927,7 +854,7 @@ object PipelineOps {
     * neighbor count and the keep-best-quality drop verdict (dropped =
     * 1 iff a neighbor dominates under the q_dedup_rep_quality
     * (quality DESC, id ASC) total order). This query IS
-    * [[graft.Graft.semanticDupVerdicts]] over the SHARED per-sfDir
+    * [[graft.Graft.semanticDupVerdicts]] over the SHARED
     * tf-idf table ([[TextOps.tfidfTable]] — its second in-bench
     * consumer) with the row-local q_text_quality score, so the oracle
     * verifies the public facade AND the sharing path. The exact
@@ -942,7 +869,7 @@ object PipelineOps {
       .orderBy("doc_id")
 
   /** The (doc_id, vec, q) input table ALL THREE semantic-dedup faces
-    * consume, cached per (session, sfDir) (round 18): each face's
+    * consume, shared per input: each face's
     * plan references the tf-idf ⋈ quality join from several subtrees
     * (the blocked self/bipartite joins evaluate their input once per
     * side plus the hot-cell count pass, and the verdict stage joins
@@ -954,8 +881,8 @@ object PipelineOps {
     * score once, write it next to the corpus, hand it to every
     * curation consumer. */
   private def semVecQuality(s: SparkSession, d: String): DataFrame =
-    graft.TempTables.cached(s, s"semvec_quality:$d")(
-      TextOps.tfidfTable(s, d).join(docQuality(s, d), "doc_id"))
+    graft.TempTables.shared("semvec_quality",
+      TextOps.tfidfTable(s, d).join(docQuality(s, d), "doc_id"))()
 
   /** [[q_dedup_semantic]]'s 100 TB execution shape as its own
     * benchable surface (the q_ivf_build / q_sim_ivf division of
@@ -968,8 +895,8 @@ object PipelineOps {
     * pinned in SemanticDedupSpec. */
   def q_dedup_semantic_ivf(s: SparkSession, d: String): DataFrame = {
     val all = semVecQuality(s, d)
-    // standing FULL-corpus quantizer, trained once per (session,
-    // sfDir) and persisted (the semIvfModel / "persist the model
+    // standing FULL-corpus quantizer, trained once per training
+    // input and persisted ([[semIvfModel]], the "persist the model
     // table once" posture — round-15: the facade used to re-run
     // Lloyd per invocation, ~40% of its warm cost; temp_builds now
     // prices train separately from assign+pair+verdict, the
@@ -980,28 +907,25 @@ object PipelineOps {
     // training input made every Lloyd pass re-parse document text
     // through qualitySignals (round-16 verdict #1 — part of
     // semivf_model_full's 6.47 s SELF).
-    val model = graft.TempTables.cached(s, s"semivf_model_full:$d")(
-      graft.Graft.ivfTrain(TextOps.tfidfTable(s, d),
-        col("doc_id"), col("vec"), k = 16, iters = 3))
     graft.Graft.semanticDupVerdictsIvf(
         all, col("doc_id"), col("vec"), col("q"), tauPermille = 900,
-        k = 16, iters = 3, centroids = Some(model))
+        k = 16, iters = 3, centroids = Some(semIvfModel(TextOps.tfidfTable(s, d))))
       .orderBy("doc_id")
   }
 
-  /** Standing IVF quantizer for the INCREMENTAL semantic-dedup face,
-    * one per (session, sfDir) — trained ONCE on the STANDING corpus
-    * side (doc_id % 10 ≠ 0) and reused by every q_dedup_semantic_inc
-    * run: the ingest posture, where the model IS a persisted table
-    * the nightly batch probes, not something re-trained per batch.
-    * Persisted via [[graft.TempTables.cached]] (parquet — LITERALLY
-    * the "persist the model table once" shape, and the declared plan
-    * consumes a stats-bearing file scan rather than an RDD-backed
-    * checkpoint: the PlanGuardSpec stats-loss rule). */
-  private def semIvfModel(s: SparkSession, d: String,
-                          corpus: DataFrame): DataFrame =
-    graft.TempTables.cached(s, s"semivf_model:$d")(
-      graft.Graft.ivfTrain(corpus, col("doc_id"), col("vec"), k = 16, iters = 3))
+  /** The standing k = 16 IVF quantizer of a (doc_id, vec) training
+    * table — trained ONCE per training input and reused by every run
+    * of the semantic faces: the ingest posture, where the model IS a
+    * persisted table the nightly batch probes, not something
+    * re-trained per batch. Keyed by the training input's plan, so a
+    * hit never re-runs the Lloyd iterations; persisted via
+    * [[graft.TempTables.shared]] (parquet — LITERALLY the "persist the
+    * model table once" shape, and the declared plan consumes a
+    * stats-bearing file scan rather than an RDD-backed checkpoint: the
+    * PlanGuardSpec stats-loss rule). */
+  private def semIvfModel(train: DataFrame): DataFrame =
+    graft.TempTables.shared("semivf_model", train)(
+      graft.Graft.ivfTrain(train, col("doc_id"), col("vec"), k = 16, iters = 3))
 
   /** INCREMENTAL semantic dedup (round 13 — the verdict-#4 per-ingest
     * face, completing the family the way q_dedup_incremental
@@ -1009,8 +933,8 @@ object PipelineOps {
     * NEW BATCH, the rest the STANDING corpus, and the batch is
     * screened via [[graft.Graft.semanticDupVerdictsIvfAgainst]] —
     * both sides take cells from the STANDING quantizer
-    * ([[semIvfModel]]: trained once per (session, sfDir) on the
-    * corpus side only, never re-trained for a batch), candidates meet
+    * ([[semIvfModel]]: trained once on the corpus side only, never
+    * re-trained for a batch), candidates meet
     * within-cell through the skew-guarded bipartite join, and each
     * batch doc gets the ingest verdict: how many same-cell corpus
     * neighbors sit at rounded cosine ≥ 0.900, and whether one of them
@@ -1031,8 +955,7 @@ object PipelineOps {
     // membership-neutral — without re-running qualitySignals per
     // Lloyd pass)
     graft.Graft.semanticDupVerdictsIvfAgainst(
-        semIvfModel(s, d,
-          TextOps.tfidfTable(s, d).filter(col("doc_id") % 10 =!= 0)),
+        semIvfModel(TextOps.tfidfTable(s, d).filter(col("doc_id") % 10 =!= 0)),
         batch, col("doc_id"), col("vec"), col("q"),
         corpus, col("doc_id"), col("vec"), col("q"),
         tauPermille = 900)
@@ -1040,8 +963,8 @@ object PipelineOps {
   }
 
   /** The row-local q_text_quality integer score keyed by doc_id —
-    * the quality side of all three semantic-dedup faces. Cached as a
-    * per-(session, sfDir) temp-parquet table (round 17): the three
+    * the quality side of all three semantic-dedup faces. A shared
+    * temp-parquet table: the three
     * consumers' plans each reference their vec⋈quality join from
     * several subtrees (the blocked self/bipartite joins evaluate
     * their input once per side plus the hot-bucket count pass), and
@@ -1051,7 +974,7 @@ object PipelineOps {
     * shape: score once, write next to the corpus, hand to every
     * curation consumer — the tfidf_sparse64 stance. */
   private def docQuality(s: SparkSession, d: String): DataFrame =
-    graft.TempTables.cached(s, s"doc_quality:$d")(
+    graft.TempTables.shared("doc_quality",
       Tables.documents(s, d)
         .select(col("doc_id"),
                 graft.Graft.qualitySignals(col("text"), col("n_chars"))
@@ -1061,7 +984,7 @@ object PipelineOps {
         // qualitySignals parse stage to ONE task; repartition keeps
         // the corpus-scale parse parallel and only the 16-byte-row
         // write single-file
-        .repartition(1))
+        .repartition(1))()
 
   /** Top-k vocabulary coverage / OOV curve (round 10):
     * [[graft.Graft.vocabCoverage]] at k ∈ {4, 8, 16, 24, 32} (sized
@@ -1367,17 +1290,7 @@ object PipelineOps {
     * matrix — so the oracle verifies the public API. */
   def q_lang_id(s: SparkSession, d: String): DataFrame =
     graft.Graft.languageId(Tables.documents(s, d),
-        col("doc_id"), col("text"), col("lang"), topK = 10,
-        // the (doc, lang, token, cnt) table cached per (session,
-        // sfDir) — round 17, closing the facade scaladoc's own
-        // "at 100 TB, materialize it once upstream" stance (round-16
-        // verdict #6): profile building and scoring each re-ran the
-        // corpus tokenize per action, the documented
-        // tokenize-once-per-consumer floor of this query's recurring
-        // 2.0-2.3 s steady reading
-        tokenCounts = Some(graft.TempTables.cached(s, s"langid_tok:$d")(
-          graft.Graft.langTokenCounts(Tables.documents(s, d),
-              col("doc_id"), col("text"), col("lang")))))
+        col("doc_id"), col("text"), col("lang"), topK = 10)
       .groupBy("lang", "pred_lang")
       .agg(count(lit(1)).as("n_docs"))
       // nulls_last matches DuckDB's ASC default — a zero-overlap NULL
@@ -1437,7 +1350,7 @@ object PipelineOps {
     * ≥ 0.8. Since round 13 this query IS
     * [[graft.Graft.jaccardPrefixAgainst]] — the bipartite PREFIX
     * probe — so the oracle verifies the public API: both sides are
-    * mod-2 slices of the SHARED [[jaccSortedTable]] parquet (one
+    * mod-2 slices of the SHARED rarity-sorted parquet (one
     * rarity order by construction, disjoint ids by the split), each
     * side indexes only its (1−t) rarest-gram prefix, and the PPJoin
     * positional filter prunes per collision before the distinct —
@@ -1448,7 +1361,8 @@ object PipelineOps {
     * one-off probes with no standing sorted table; equivalence of
     * the two is pinned in PipelineSpec. */
   def q_dedup_incremental(s: SparkSession, d: String): DataFrame = {
-    val sorted = jaccSortedTable(s, d)
+    val sorted = graft.Graft.rarityGramArrays(Tables.documents(s, d),
+      col("doc_id"), col("text"), n = 3)
     graft.Graft.jaccardPrefixAgainst(
         sorted.filter(col("doc_id") % 2 === 0),
         sorted.filter(col("doc_id") % 2 === 1),
@@ -1653,16 +1567,14 @@ object PipelineOps {
     * the oracle verifies the public facade: same inverted-index
     * candidate join, deliberately NO size-ratio prune (those
     * asymmetric pairs are the positives here), all-integer output.
-    * Since round 13 it hands the shared [[jaccSortedTable]] — the
+    * The facade reads the shared rarity-sorted table — the
     * candidate join carries rank positions and the per-collision
     * positional bound prunes before the distinct (the PPJoin trick,
     * containment algebra), with survivors verified exactly against
     * the same parquet table. */
   def q_dedup_contain(s: SparkSession, d: String): DataFrame =
     graft.Graft.containmentPairsNgram(Tables.documents(s, d),
-        col("doc_id"), col("text"), thresholdPermille = 800, n = 3,
-        gramDf = Some(gramDfTable(s, d)),
-        sortedGrams = Some(jaccSortedTable(s, d)))
+        col("doc_id"), col("text"), thresholdPermille = 800, n = 3)
       .orderBy("doc_a", "doc_b")
 
   /** CCNet-style perplexity bucketing: every document scored by the
@@ -1688,10 +1600,10 @@ object PipelineOps {
     // whole unigram-scoring subtree (explode + model join) re-runs per
     // consumer (the q_sim_sparse featurize-recompute lesson). At 100 TB
     // this is "write the scores once, rank from the table".
-    val scored = graft.TempTables.cached(s, s"ppl_scored:$d")(
+    val scored = graft.TempTables.shared("ppl_scored",
       graft.Graft.unigramLogProb(docs, col("doc_id"), col("text"))
         .select(col("doc_id"), round(col("mean_nll"), 3).as("mean_nll"))
-        .join(docs.select(col("doc_id"), col("lang")), "doc_id"))
+        .join(docs.select(col("doc_id"), col("lang")), "doc_id"))()
     // groupedRankDesc ranks key DESC; negate for ascending-nll order
     val ranked = graft.Graft.groupedRankDesc(
         scored, col("lang"), -col("mean_nll"), col("doc_id"), buckets = 8)
@@ -2013,7 +1925,7 @@ object PipelineOps {
       .filter(graft.Graft.qualitySignals(col("text"), col("n_chars"))
                 .getField("quality_permille") >= 400)
       .select(col("doc_id"), col("lang"), size(toks).cast("long").as("n"))
-    // cached per (session, sfDir) (round 17): packChunks references
+    // shared per input: packChunks references
     // its input from FOUR subtrees (the auto-bucket count action, the
     // quantile bounds, the bucketed projection) plus the final lang
     // join below — an inline `capped` re-ran the dedup anti-join,
@@ -2021,8 +1933,11 @@ object PipelineOps {
     // every reference (~5× per invocation, the q_interleave-class
     // waste). Deterministic (seed 11); 24-byte rows; the 100 TB
     // shape is literally this: write the curated post-gate post-cap
-    // doc list once, hand it to the packer and the accountant.
-    val capped = graft.TempTables.cached(s, s"layout_capped:$d")(
+    // doc list once, hand it to the packer and the accountant. Keyed
+    // by `gated` with the sample's (n, seed) fixed here: the TopK
+    // sample aggregator is a fresh object per call, so a plan that
+    // contains it never compares equal to the previous call's.
+    val capped = graft.TempTables.shared("layout_capped", gated)(
       gated.join(
         graft.Graft.stratifiedSample(gated, col("lang"), col("doc_id"),
             n = 30, seed = 11L)
@@ -2425,7 +2340,7 @@ object PipelineOps {
     * bitmask cannot express: "these words, ADJACENT, in this order".
     * The phrase is self-derived for determinism — the corpus's most
     * frequent word bigram under the stated total order (count DESC,
-    * bigram ASC), computed once per (session, sfDir) into a shared
+    * bigram ASC), computed once per input into a shared
     * 1-row temp table — and matching runs the classic
     * positional-index join: postings (doc, pos, term) restrict to
     * the two phrase words by an equi-join against the broadcast
@@ -2450,17 +2365,17 @@ object PipelineOps {
 
   /** The shared 1-row (w1, w2) probe phrase — the corpus's most
     * frequent word bigram under the stated total order (count DESC,
-    * bigram ASC), computed once per (session, sfDir) and reused by
+    * bigram ASC), computed once per input and reused by
     * both positional-index probes ([[q_phrase_search]],
     * [[q_proximity_search]]). */
   private def phraseTop(s: SparkSession, d: String): DataFrame =
-    graft.TempTables.cached(s, s"phrase_top:$d")(
+    graft.TempTables.shared("phrase_top",
       Tables.documents(s, d)
         .select(explode(graft.functions.TokenNGrams.ngrams(toks, 2)).as("gram"))
         .groupBy("gram").agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("gram").asc).limit(1)
         .select(substring_index(col("gram"), " ", 1).as("w1"),
-                substring_index(col("gram"), " ", -1).as("w2")))
+                substring_index(col("gram"), " ", -1).as("w2")))()
 
   /** The shared positional-index probe behind q_phrase_search
     * (maxGap = 1, strict adjacency) and q_proximity_search
@@ -2526,19 +2441,14 @@ object PipelineOps {
     * share in integer permille. */
   def q_gramdf_merge(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    // both df sides read the SHARED per-sfDir doc-grams parquet,
-    // filtered by the split predicate (filter preserves the n-stamp
-    // metadata, so the handed-table validation still holds) — zero
-    // corpus-scale tokenize/explode passes in this query (review
-    // catch: the inline build paid two)
-    val shared = docGramsTable(s, d)
-    val dfBase = graft.Graft.gramDocFreq(
-        docs, col("doc_id"), col("text"),
-        docGrams = Some(shared.filter(col("doc_id") % 10 =!= 0)))
+    // both df sides aggregate slices of the ONE shared doc-grams
+    // parquet, filtered by the split predicate — zero corpus-scale
+    // tokenize/explode passes in this query (the inline build paid
+    // two)
+    val grams = graft.Graft.docGramArrays(docs, col("doc_id"), col("text"), n = 3)
+    val dfBase = graft.Graft.gramCounts(grams.filter(col("doc_id") % 10 =!= 0))
       .select(col("gram"), col("gdf").as("gdf_base"))
-    val dfBatch = graft.Graft.gramDocFreq(
-        docs, col("doc_id"), col("text"),
-        docGrams = Some(shared.filter(col("doc_id") % 10 === 0)))
+    val dfBatch = graft.Graft.gramCounts(grams.filter(col("doc_id") % 10 === 0))
       .select(col("gram"), col("gdf").as("gdf_batch"))
     dfBase.join(dfBatch, Seq("gram"), "full_outer")
       .agg(sum(when(col("gdf_base").isNotNull, 1L).otherwise(0L)).as("n_base_types"),
@@ -2701,18 +2611,10 @@ object PipelineOps {
     * q_bigram_ppl scores). Ties break on bigram text (rule O). Scale
     * shape: the facade's vocab-scale aggregates + a TakeOrdered —
     * the only corpus-scale work is the bigram explode. */
-  def q_kn_bigram(s: SparkSession, d: String): DataFrame = {
-    // the count table is materialized ONCE per (session, sfDir): the
-    // facade derives four model branches from it, and handing parquet
-    // (with real stats — the model tables then broadcast) replaces
-    // four corpus explodes with one priced build (see temp_builds)
-    val bc = graft.TempTables.cached(s, s"bigram_counts:$d")(
-      graft.Graft.bigramCounts(Tables.documents(s, d), col("text")))
-    graft.Graft.knBigramScores(Tables.documents(s, d), col("text"),
-        bigramCounts = Some(bc))
+  def q_kn_bigram(s: SparkSession, d: String): DataFrame =
+    graft.Graft.knBigramScores(Tables.documents(s, d), col("text"))
       .orderBy(col("c12").desc, col("bigram"))
       .limit(20)
-  }
 
   /** Pairwise source vocabulary overlap (round 11) — the corpus-
     * similarity signal a mixture designer reads next to

@@ -87,24 +87,11 @@ object TextOps {
     // MinHashSpec), hashed band-bucket candidate join (never
     // all-pairs), signatures re-attached to survivors only, set-level
     // pairs expanded back to doc level. Property-tested vs exact
-    // Jaccard in MinHashSpec; generality tested in GraftSpec.
-    // The groups (set-collapse) table is cached per (session, sfDir)
-    // (round 18 — the sortedGrams precedent): five plan branches
-    // consume it, and the inline form re-ran the corpus signature
-    // pass per branch (six graft_minhash_sig passes / 18 document
-    // scans in the executed plan, ~5.5 s steady at sf0.1).
+    // Jaccard in MinHashSpec; generality tested in GraftSpec. The
+    // set-collapse groups table is shared per input inside the facade.
     graft.Graft.nearDupPairsMinhash(Tables.documents(s, d),
-        col("doc_id"), col("text"), estPermille = 900,
-        groups = Some(minhashGroupsTable(s, d)))
+        col("doc_id"), col("text"), estPermille = 900)
       .orderBy("doc_a", "doc_b")
-
-  /** The per-sfDir cached [[graft.Graft.minhashGroups]] set-collapse
-    * table (rep, members, sig) — "write the signature table once,
-    * read it five times" (round 18). */
-  private def minhashGroupsTable(s: SparkSession, d: String): DataFrame =
-    graft.TempTables.cached(s, s"minhash_groups:$d")(
-      graft.Graft.minhashGroups(Tables.documents(s, d),
-        col("doc_id"), col("text")))
 
   /** Vector similarity top-k: cosine of every embedding vs the probe
     * (vec_id=0). Embeddings are unit-normalized (FIXTURES.md) so cosine
@@ -196,7 +183,7 @@ object TextOps {
       col("doc_id"), col("vec"), k = 20)
 
   /** The unit-normalized 64-dim tf-idf vector table (doc_id, vec),
-    * computed ONCE per (session, sfDir) and shared by [[q_sim_sparse]]
+    * computed ONCE per input corpus and shared by [[q_sim_sparse]]
     * (top-k cosine pairs) and [[PipelineOps.q_dedup_semantic]]
     * (threshold pairs + drop verdicts) — temp parquet
     * ([[graft.TempTables]]): DotTopKJoinExec evaluates its input once
@@ -205,11 +192,13 @@ object TextOps {
     * ~2·ceil(n/chunk) times; the parquet table reads back in
     * milliseconds and keeps stats for the kernel's size planning. The
     * warehouse shape at 100 TB: featurize once, write next to the
-    * corpus, hand to every vector consumer. */
-  private[queries] def tfidfTable(s: SparkSession, d: String): DataFrame =
-    graft.TempTables.cached(s, s"tfidf_sparse64:$d")(
-      graft.Graft.tfidfVectors(Tables.documents(s, d),
-          col("doc_id"), col("text"), vocabLimit = 64)
+    * corpus, hand to every vector consumer. Keyed by the documents
+    * read: tfidfVectors collects its vocabulary eagerly, so the build
+    * runs only on a miss. */
+  private[queries] def tfidfTable(s: SparkSession, d: String): DataFrame = {
+    val docs = Tables.documents(s, d)
+    graft.TempTables.shared("tfidf_sparse64", docs)(
+      graft.Graft.tfidfVectors(docs, col("doc_id"), col("text"), vocabLimit = 64)
         // ONE output file (round-13 verdict #5): the table is ~1.25 MB
         // at sf0.1 and the 32-file default write paid more in task
         // setup + commit protocol than in bytes (the #2 driver
@@ -223,6 +212,7 @@ object TextOps {
         // (this constant is the local-mode shim, same stance as
         // TempTables.PrefetchBoundBytes).
         .repartition(1))
+  }
 
   /** Shannon token entropy per source (added round 8): the
     * corpus-diversity metric — a source whose entropy collapses
@@ -369,13 +359,13 @@ object TextOps {
   def q_keyness(s: SparkSession, d: String): DataFrame = {
     // the (source, token) count table feeds FOUR branches (per-source
     // totals, per-token totals, the grand total, the scored join) —
-    // materialized once per (session, sfDir) so the corpus pays one
+    // shared per input so the corpus pays one
     // explode, not four (the q_kn_bigram bigram_counts lesson; the
     // table is vocab×sources-scale, i.e. tiny parquet with real stats)
-    val st = graft.TempTables.cached(s, s"src_tok_counts:$d")(
+    val st = graft.TempTables.shared("src_tok_counts",
       Tables.documents(s, d)
         .select(col("source"), explode(split(col("text"), " ")).as("token"))
-        .groupBy("source", "token").agg(count(lit(1)).as("tf")))
+        .groupBy("source", "token").agg(count(lit(1)).as("tf")))()
     val srcTot = st.groupBy("source").agg(sum("tf").as("src_tot"))
     val corpTok = st.groupBy("token").agg(sum("tf").as("ctf"))
     val grand = st.agg(sum("tf").as("grand"))

@@ -5,12 +5,11 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.Prop.propBoolean
 import graft.operators.ConnectedComponents
 
-/** Equivalence of the two distributed CC algorithms with each other
-  * and with a plain union-find ground truth, plus the round-bound
-  * property that justifies large-star/small-star at scale: logarithmic
-  * rounds on a high-diameter chain where min-label propagation needs
-  * diameter rounds (and now fails loudly instead of silently emitting
-  * unconverged labels). */
+/** Equivalence of both alternatingStar paths (the gated driver
+  * union-find and the distributed star loop) with a plain union-find
+  * ground truth, plus the round-bound property that justifies
+  * large-star/small-star at scale: logarithmic rounds on a
+  * high-diameter chain. */
 class ConnectedComponentsSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -32,7 +31,7 @@ class ConnectedComponentsSpec extends SparkSpecBase {
   private def labelsOf(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-  test("alternating-star == min-label == union-find on random graphs (ScalaCheck)") {
+  test("both alternating-star paths == union-find on random graphs") {
     val edgeGen: Gen[List[(Long, Long)]] = for {
       n <- Gen.chooseNum(2, 14)
       m <- Gen.chooseNum(1, 20)
@@ -52,8 +51,7 @@ class ConnectedComponentsSpec extends SparkSpecBase {
         // LocalMaxEdges) AND the distributed star loop (the default)
         labelsOf(ConnectedComponents.alternatingStar(df,
           localMaxEdges = ConnectedComponents.LocalMaxEdges)) == truth &&
-          labelsOf(ConnectedComponents.alternatingStar(df)) == truth &&
-          labelsOf(ConnectedComponents.minLabelPropagation(df, maxRounds = 30)) == truth
+          labelsOf(ConnectedComponents.alternatingStar(df)) == truth
       }
     }
     val res = SCTest.check(SCTest.Parameters.default
@@ -70,7 +68,6 @@ class ConnectedComponentsSpec extends SparkSpecBase {
     assert(labelsOf(ConnectedComponents.alternatingStar(edges,
       localMaxEdges = ConnectedComponents.LocalMaxEdges)) == expected)
     assert(labelsOf(ConnectedComponents.alternatingStar(edges)) == expected)
-    assert(labelsOf(ConnectedComponents.minLabelPropagation(edges)) == expected)
     // degenerate graph: nothing BUT self-loops still yields the full
     // node universe
     val only = Seq((5L, 5L), (9L, 9L)).toDF("u", "v")
@@ -78,7 +75,6 @@ class ConnectedComponentsSpec extends SparkSpecBase {
     assert(labelsOf(ConnectedComponents.alternatingStar(only,
       localMaxEdges = ConnectedComponents.LocalMaxEdges)) == exp2)
     assert(labelsOf(ConnectedComponents.alternatingStar(only)) == exp2)
-    assert(labelsOf(ConnectedComponents.minLabelPropagation(only)) == exp2)
   }
 
   test("union-find gate: at the gate takes the fast path, above it falls back") {
@@ -101,10 +97,5 @@ class ConnectedComponentsSpec extends SparkSpecBase {
       ConnectedComponents.alternatingStarWithRounds(chain, 50, localMaxEdges = 0)
     assert(labelsOf(labels) == (0L to 63L).map(_ -> 0L).toMap)
     assert(rounds <= 15, s"expected logarithmic rounds on the chain, got $rounds")
-    // min-label is O(diameter): an insufficient cap must throw, never
-    // silently return unconverged labels
-    intercept[IllegalArgumentException] {
-      ConnectedComponents.minLabelPropagation(chain, maxRounds = 10)
-    }
   }
 }

@@ -1688,48 +1688,6 @@ class GraftSpec extends SparkSpecBase {
       "h2 matches the chained construction — it adds no collision resistance")
   }
 
-  test("jaccardJoinPrefix / capped ngram: shared gramDf table is pair-identical") {
-    val docs = Tables.documents(spark, sf)
-    val df = Graft.gramDocFreq(docs, $"doc_id", $"text", n = 3)
-    val inlinePrefix = Graft.jaccardJoinPrefix(docs, $"doc_id", $"text", 700)
-    val sharedPrefix = Graft.jaccardJoinPrefix(docs, $"doc_id", $"text", 700,
-      gramDf = Some(df))
-    assert(inlinePrefix.count() > 0)
-    assert(rows(inlinePrefix.orderBy("doc_a", "doc_b")) ==
-           rows(sharedPrefix.orderBy("doc_a", "doc_b")))
-    val inlineCapped = Graft.nearDupPairsNgram(docs, $"doc_id", $"text",
-      maxGramDocFreq = 5)
-    val sharedCapped = Graft.nearDupPairsNgram(docs, $"doc_id", $"text",
-      maxGramDocFreq = 5, gramDf = Some(df))
-    assert(rows(inlineCapped.orderBy("doc_a", "doc_b")) ==
-           rows(sharedCapped.orderBy("doc_a", "doc_b")))
-  }
-
-  test("shared docGrams table: every consumer is result-identical to the inline pass") {
-    // the round-11 one-gram-explode sharing: a precomputed
-    // docGramArrays table handed to each facade must change NOTHING
-    // about results — only where the tokenize→n-gram pass runs
-    val docs = Tables.documents(spark, sf)
-    val dg = Graft.docGramArrays(docs, $"doc_id", $"text", n = 3)
-    val df = Graft.gramDocFreq(docs, $"doc_id", $"text", n = 3, docGrams = Some(dg))
-    assert(rows(df.orderBy("gram")) ==
-           rows(Graft.gramDocFreq(docs, $"doc_id", $"text", n = 3).orderBy("gram")))
-    def k(d: org.apache.spark.sql.DataFrame) = rows(d.orderBy("doc_a", "doc_b"))
-    assert(k(Graft.nearDupPairsNgram(docs, $"doc_id", $"text", docGrams = Some(dg))) ==
-           k(Graft.nearDupPairsNgram(docs, $"doc_id", $"text")))
-    assert(k(Graft.jaccardJoinPrefix(docs, $"doc_id", $"text", 700,
-             gramDf = Some(df), docGrams = Some(dg))) ==
-           k(Graft.jaccardJoinPrefix(docs, $"doc_id", $"text", 700)))
-    assert(k(Graft.nearDupPairsNgram(docs, $"doc_id", $"text", maxGramDocFreq = 5,
-             gramDf = Some(df), docGrams = Some(dg))) ==
-           k(Graft.nearDupPairsNgram(docs, $"doc_id", $"text", maxGramDocFreq = 5)))
-    assert(k(Graft.containmentPairsNgram(docs, $"doc_id", $"text", docGrams = Some(dg))) ==
-           k(Graft.containmentPairsNgram(docs, $"doc_id", $"text")))
-    assert(rows(Graft.ngramNovelty(docs, $"doc_id", $"text", 3,
-                  gramDf = Some(df), docGrams = Some(dg)).orderBy("doc_id")) ==
-           rows(Graft.ngramNovelty(docs, $"doc_id", $"text", 3).orderBy("doc_id")))
-  }
-
   test("piiSignals: hand-computed hits and redaction on crafted strings") {
     val rows = Seq(
       (1L, "hello bob.smith@mail.example.com and 555-0142 at 10.0.0.1 ok"),
@@ -2111,38 +2069,6 @@ class GraftSpec extends SparkSpecBase {
     assert(rows.map(_._4).toSeq == (1L to 8L).toSeq)
   }
 
-  test("handed gramDf/docGrams tables fail fast on a wrong schema") {
-    // a table built by a different facade (or for different columns)
-    // must be rejected at plan time, not silently drop grams through
-    // an inner join (round-10 ADVICE)
-    val docs = Tables.documents(spark, sf)
-    val wrong = docs.select($"doc_id", $"text")
-    val eGram = intercept[IllegalArgumentException] {
-      Graft.jaccardJoinPrefix(docs, $"doc_id", $"text", gramDf = Some(wrong))
-    }
-    assert(eGram.getMessage.contains("gramDf"))
-    val eDoc = intercept[IllegalArgumentException] {
-      Graft.nearDupPairsNgram(docs, $"doc_id", $"text", docGrams = Some(wrong))
-    }
-    assert(eDoc.getMessage.contains("docGrams"))
-    // the subtler hazard (round-11 review): the RIGHT table built for
-    // the WRONG n passes any name check — the metadata stamp rejects it
-    val g4 = Graft.docGramArrays(docs, $"doc_id", $"text", n = 4)
-    val eN = intercept[IllegalArgumentException] {
-      Graft.nearDupPairsNgram(docs, $"doc_id", $"text", n = 3, docGrams = Some(g4))
-    }
-    assert(eN.getMessage.contains("n=4") && eN.getMessage.contains("n=3"))
-    // and the stamp survives the temp-parquet round trip the shared
-    // tables actually take
-    val dir = java.nio.file.Files.createTempDirectory("nstamp").toString
-    Graft.docGramArrays(docs, $"doc_id", $"text", n = 3)
-      .write.mode("overwrite").parquet(dir)
-    val roundTripped = spark.read.parquet(dir)
-    assert(roundTripped.schema("ga").metadata.getLong("graft.ngram.n") == 3L)
-    assert(Graft.nearDupPairsNgram(docs, $"doc_id", $"text", n = 3,
-      docGrams = Some(roundTripped)).columns.nonEmpty)
-  }
-
   test("q_split_leakage conserves the pair graph and orders split pairs canonically") {
     val rows = queries.PipelineOps.q_split_leakage(spark, sf).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
@@ -2260,9 +2186,6 @@ class GraftSpec extends SparkSpecBase {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(got.toSeq == Seq((1L, 2L, 1L, 500L), (2L, 2L, 1L, 500L),
                             (3L, 1L, 1L, 1000L)))
-    val df = Graft.gramDocFreq(docs, $"doc_id", $"text", 3)
-    assert(rows(Graft.ngramNovelty(docs, $"doc_id", $"text", 3, Some(df)).orderBy("doc_id")) ==
-           rows(Graft.ngramNovelty(docs, $"doc_id", $"text", 3).orderBy("doc_id")))
   }
 
   test("spanContamination equals the brute-force span scan (property)") {

@@ -143,15 +143,14 @@ class PlanGuardSpec extends SparkSpecBase {
   // sanctioned use — TempTables scaladoc). q_pagerank/q_kcore/
   // q_shortest_path join their per-round rank/degree/frontier state
   // (≤|nodes| rows) against the parquet-backed edge table;
-  // q_ivf_build/q_sim_ivf join the ≤k-row checkpointed centroid
-  // table; q_pca_power's deflation joins the ≤dim-row component
+  // q_pca_power's deflation joins the ≤dim-row component
   // state. Anything ELSE joining an RDD-backed scan is the stats-loss
   // class that cost the dedup family its broadcasts (rounds 7-8).
   // round 14: q_communities joins its per-round ≤|nodes|-row label
   // state against the checkpointed adjacency — the same class
   private val allowedRddJoin = Set(
     "q_pagerank", "q_kcore", "q_shortest_path", "q_communities",
-    "q_ivf_build", "q_sim_ivf", "q_pca_power")
+    "q_pca_power")
 
   test("no join consumes an RDD-backed scan (stats-loss guard)") {
     // an RDD-backed side (LogicalRDD, e.g. from localCheckpoint)

@@ -1,15 +1,17 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
-/** The temp-parquet materialization utility that every shared-subtree
-  * cache in the engine rides on (pair graph, CC labels, co-purchase
-  * edges, tf-idf vectors, jaccard gram tables): build-once semantics,
-  * file-stats-backed reads, the concurrent-build no-leak contract
-  * (round-8 ADVICE), and the explicit anon sweep. */
+/** The build-once temp-parquet table that every shared intermediate in
+  * the engine rides on (gram tables, pair graph, CC labels, co-purchase
+  * edges, tf-idf vectors, trained models): keyed by the input plan and
+  * the input files, file-stats-backed reads, the concurrent-build
+  * no-leak contract, the build and first-read ledgers, and the
+  * one-build-per-intermediate sharing across the n-gram dedup queries. */
 class TempTablesSpec extends SparkSpecBase {
 
   private def tmpDirs(prefix: String): Set[String] = {
@@ -22,16 +24,33 @@ class TempTablesSpec extends SparkSpecBase {
     } finally s.close()
   }
 
+  /** Builds per ledger name that `body` added. */
+  private def buildsDuring(body: => Unit): Map[String, Long] = {
+    val before = TempTables.buildCosts
+    body
+    TempTables.buildCosts.collect {
+      case (k, (_, _, n)) if n != before.get(k).map(_._3).getOrElse(0L) =>
+        k -> (n - before.get(k).map(_._3).getOrElse(0L))
+    }
+  }
+
   test("cached: builds once per (session, key); reads are parquet-backed with real stats") {
     val builds = new AtomicInteger(0)
-    def get() = TempTables.cached(spark, "tts_spec_build_once") {
-      builds.incrementAndGet()
-      spark.range(100).toDF("id").withColumn("v", col("id") * 2)
+    // two separately constructed DataFrames with the same plan are one key
+    def get(): DataFrame = {
+      val key = spark.range(100).toDF("id").withColumn("v", col("id") * 2)
+      TempTables.shared("tts_spec_build_once", key) { builds.incrementAndGet(); key }
     }
     val a = get(); val b = get()
     assert(builds.get() == 1, "second call must reuse the written table")
     assert(rows(a.orderBy("id")) == rows(b.orderBy("id")))
     assert(a.count() == 100)
+    // a different plan is a different table
+    TempTables.shared("tts_spec_build_once",
+      spark.range(100).toDF("id").withColumn("v", col("id") * 3)) {
+      builds.incrementAndGet(); spark.range(1).toDF("id")
+    }
+    assert(builds.get() == 2, "a different input plan must build its own table")
     // the whole point vs localCheckpoint: the relation reports its
     // FILE size, not defaultSizeInBytes and not an estimate over the
     // origin plan — downstream joins can broadcast it
@@ -46,50 +65,56 @@ class TempTablesSpec extends SparkSpecBase {
     val builds = new AtomicInteger(0)
     val threads = (1 to 8).map { _ =>
       new Thread(() => {
-        TempTables.cached(spark, "tts_spec_race") {
+        val key = spark.range(10).toDF("race_id")
+        TempTables.shared("tts_spec_race", key) {
           builds.incrementAndGet()
           Thread.sleep(50) // widen the race window
-          spark.range(10).toDF("id")
+          key
         }.count()
       })
     }
     threads.foreach(_.start()); threads.foreach(_.join())
     val after = tmpDirs("graft_tt_")
     // racing builders may each run (build is outside any lock), but
-    // exactly one dir survives as the cache entry; every loser's copy
+    // exactly one dir survives as the shared entry; every loser's copy
     // is deleted on the spot rather than leaking until shutdown
     assert(builds.get() >= 1)
     assert((after -- before).size == 1,
       s"expected exactly one surviving dir, got ${(after -- before).size}")
   }
 
-  test("materialize: parquet-backed copy per call; sweepAnon bounds /tmp") {
-    val before = tmpDirs("graft_ttsspec_")
-    val df = TempTables.materialize(
-      spark.range(50).toDF("id"), "ttsspec")
-    assert(df.count() == 50)
-    assert(df.queryExecution.optimizedPlan.collectLeaves()
-      .forall(_.nodeName != "LogicalRDD"))
-    val created = tmpDirs("graft_ttsspec_") -- before
-    assert(created.size == 1)
-    TempTables.sweepAnon() // this spec holds no lazy readers — quiescent
-    assert(created.forall(p => !Files.exists(Paths.get(p))),
-      "sweepAnon must delete materialized dirs")
+  test("shared: an input rewritten in place under a live session rebuilds") {
+    val dir = Files.createTempDirectory("tts_rewrite").toString
+    spark.range(10).toDF("id").write.mode("overwrite").parquet(dir)
+    def derived(): DataFrame = spark.read.parquet(dir).select((col("id") * 2).as("v"))
+    val first = derived()
+    val builds = buildsDuring {
+      assert(TempTables.shared("tts_rewrite", first)().count() == 10)
+      spark.range(20).toDF("id").write.mode("overwrite").parquet(dir)
+      // the plans alone cannot tell the two reads apart: a file index
+      // compares by root path
+      val second = derived()
+      assert(first.queryExecution.analyzed.sameResult(second.queryExecution.analyzed))
+      assert(TempTables.shared("tts_rewrite", second)().count() == 20,
+        "a table derived from the old files was served after the rewrite")
+      // the unchanged input is a hit
+      assert(TempTables.shared("tts_rewrite", derived())().count() == 20)
+    }
+    assert(builds == Map("tts_rewrite" -> 2L))
   }
 
   test("build ledger records SELF time: nested child builds subtract from the parent") {
-    // round 12: a parent build that first-touches a child table runs
-    // the child inside its own timer; the ledger must charge the
-    // child's wall to the child row ONLY, so rows add up across a run
-    // (the r12 triple read ngram_pairs at 2×+ its own cost before
-    // this). The child sleeps measurably; the parent's self row must
-    // not include it.
-    def childBuild() = TempTables.cached(spark, "tts_ledger_child") {
-      Thread.sleep(600)
-      spark.range(10).toDF("id")
+    // a parent build that first-touches a child table runs the child
+    // inside its own timer; the ledger must charge the child's wall to
+    // the child row ONLY, so rows add up across a run. The child sleeps
+    // measurably; the parent's self row must not include it.
+    def childBuild() = {
+      val key = spark.range(10).toDF("child_id")
+      TempTables.shared("tts_ledger_child", key) { Thread.sleep(600); key }
     }
-    TempTables.cached(spark, "tts_ledger_parent") {
-      childBuild().withColumn("v", col("id") + 1)
+    val parentKey = spark.range(10).toDF("parent_id")
+    TempTables.shared("tts_ledger_parent", parentKey) {
+      childBuild().withColumn("v", col("child_id") + 1)
     }
     val costs = TempTables.buildCosts
     val (childSelf, _, childN) = costs("tts_ledger_child")
@@ -101,16 +126,44 @@ class TempTablesSpec extends SparkSpecBase {
   }
 
   test("first-read ledger: first access AFTER the building call records a row") {
-    val key = "tts_read_ledger"
-    TempTables.cached(spark, key)(spark.range(50).toDF("id"))
-    assert(!TempTables.firstReadCosts.contains(key),
+    val name = "tts_read_ledger"
+    val key = spark.range(50).toDF("read_id")
+    TempTables.shared(name, key)()
+    assert(!TempTables.firstReadCosts.contains(name),
       "the builder's own call must not record a read row")
-    TempTables.cached(spark, key)(sys.error("must not rebuild"))
-    val (sec, bytes) = TempTables.firstReadCosts(key)
+    TempTables.shared(name, key)(sys.error("must not rebuild"))
+    val (sec, bytes) = TempTables.firstReadCosts(name)
     assert(sec >= 0.0 && bytes > 0,
       s"first post-build access must stream and record the files, got ($sec, $bytes)")
-    // idempotent: later calls don't re-stream (one row per key)
-    TempTables.cached(spark, key)(sys.error("must not rebuild"))
-    assert(TempTables.firstReadCosts(key) == ((sec, bytes)))
+    // idempotent: later calls don't re-stream (one row per table)
+    TempTables.shared(name, key)(sys.error("must not rebuild"))
+    assert(TempTables.firstReadCosts(name) == ((sec, bytes)))
+  }
+
+  test("shared: the n-gram dedup queries build each gram intermediate once per session") {
+    val s: SparkSession = spark.newSession()
+    val qs = Seq("q_dedup_ngram", "q_dedup_ngram_capped", "q_jaccard_prefix",
+                 "q_dedup_contain", "q_gramdf_merge")
+    val builds = buildsDuring {
+      // twice: a second pass over the same input must be all hits
+      for (_ <- 1 to 2; q <- qs) SparkEntry.queries(q)(s, sf).count()
+    }
+    assert(builds == Map("doc_gram_arrays" -> 1L, "gram_doc_freq" -> 1L,
+      "rarity_gram_arrays" -> 1L, "capped_gram_sizes" -> 1L, "ngram_pairs" -> 1L),
+      s"each shared intermediate must build exactly once, got $builds")
+  }
+
+  test("shared: two direct jaccardJoinPrefix calls over separate reads share one build") {
+    val s: SparkSession = spark.newSession()
+    def pairs() = Graft.jaccardJoinPrefix(Tables.documents(s, sf), col("doc_id"), col("text"),
+      thresholdPermille = 700)
+    var first: Seq[Seq[Any]] = Nil
+    val builds = buildsDuring {
+      first = rows(pairs().orderBy("doc_a", "doc_b"))
+      assert(rows(pairs().orderBy("doc_a", "doc_b")) == first)
+    }
+    assert(first.nonEmpty)
+    assert(builds == Map("doc_gram_arrays" -> 1L, "gram_doc_freq" -> 1L,
+      "rarity_gram_arrays" -> 1L), s"got $builds")
   }
 }
