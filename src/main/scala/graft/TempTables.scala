@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.types.StructType
 
 import java.nio.file.{Files, Paths}
@@ -198,23 +197,6 @@ object TempTables {
     building.forEach(p => deleteRecursively(p))
   }))
 
-  /** The input-contents half of the key: (path, size, mtime) of every
-    * file each file-based relation in `plan` lists. Plan equality alone
-    * compares a file index by its ROOT paths, so a directory rewritten
-    * in place would otherwise still match a table built from the old
-    * files. */
-  private def inputFiles(plan: LogicalPlan): Seq[(String, Long, Long)] =
-    plan.collectWithSubqueries { case r: LogicalRelation => r.relation }
-      .flatMap {
-        case fs: HadoopFsRelation => fs.location match {
-          case idx: PartitioningAwareFileIndex =>
-            idx.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
-          case idx => idx.inputFiles.toSeq.map(p => (p, -1L, -1L))
-        }
-        case _ => Nil
-      }
-      .sorted
-
   /** Build-once shared table. The first call per key (see the object
     * scaladoc) runs `build`, writes the result to a temp parquet dir,
     * and every call — the first included — returns a fresh
@@ -232,8 +214,7 @@ object TempTables {
   def shared(name: String, key: DataFrame)(build: => DataFrame = key): DataFrame = {
     tables.keys.filter(_.session.sparkContext.isStopped).foreach(evict)
     val s = key.sparkSession
-    val plan = key.queryExecution.analyzed
-    val k = Key(s, name, plan.canonicalized, inputFiles(plan))
+    val k = Key(s, name, key.queryExecution.analyzed.canonicalized, Tables.inputFiles(key))
     tables.get(k) match {
       case Some(t) =>
         // first access AFTER the building call: one timed sequential
