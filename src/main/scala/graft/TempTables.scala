@@ -49,9 +49,9 @@ object TempTables {
   private final case class Key(session: SparkSession, name: String, plan: LogicalPlan,
                                files: Seq[(String, Long, Long)])
 
-  /** One built table and the schema its first read inferred — later
-    * reads declare it, so a hit runs no schema-inference job. `warmed`
-    * flips on the first post-build access. */
+  /** One built table and the schema of the DataFrame its build wrote —
+    * every read declares it, so no read runs a schema-inference job.
+    * `warmed` flips on the first post-build access. */
   private final class Table(val path: String, val schema: StructType) {
     val warmed = new AtomicBoolean(false)
   }
@@ -234,18 +234,18 @@ object TempTables {
         // leaking
         val p = Files.createTempDirectory("graft_tt_").toString
         building.add(p)
-        timedBuild(name, p) {
-          build.write.mode("overwrite").parquet(p)
+        val schema = timedBuild(name, p) {
+          val built = build
+          built.write.mode("overwrite").parquet(p)
+          built.schema
         }
-        val reader = s.read.parquet(p)
-        val owner = tables.putIfAbsent(k, new Table(p, reader.schema))
+        val mine = new Table(p, schema)
+        val t = tables.putIfAbsent(k, mine) match {
+          case None         => mine
+          case Some(winner) => deleteRecursively(p); winner
+        }
         building.remove(p)
-        owner match {
-          case None         => reader
-          case Some(winner) =>
-            deleteRecursively(p)
-            s.read.schema(winner.schema).parquet(winner.path)
-        }
+        s.read.schema(t.schema).parquet(t.path)
     }
   }
 }

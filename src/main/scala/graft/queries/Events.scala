@@ -28,7 +28,7 @@ object Events {
               col("event_type"), col("value"))
       .groupBy("hour_bucket", "event_type")
       .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-      .orderBy("hour_bucket", "event_type")
+      .coalesce(1).orderBy("hour_bucket", "event_type")
 
   /** Sliding 1h/15min window: each event maps to the 4 slide-aligned
     * windows containing it (explode of 4 offsets — the batch equivalent
@@ -42,7 +42,7 @@ object Events {
       .select(((col("slot") - col("k")) * US_PER_15MIN).as("win_start"), col("event_type"))
       .groupBy("win_start", "event_type")
       .agg(count(lit(1)).as("n"))
-      .orderBy("win_start", "event_type")
+      .coalesce(1).orderBy("win_start", "event_type")
 
   /** Session windows with a 30-min inactivity gap, per user: session
     * count + mean session length in seconds. The sessionization IS
@@ -52,7 +52,8 @@ object Events {
     * verifies the public API. */
   def q_session_window(s: SparkSession, d: String): DataFrame =
     graft.Graft.sessionize(
-        Tables.events(s, d).select(col("user_id"), col("event_id"), Tables.tsUs.as("us")),
+        Tables.events(s, d).repartitionByRange(col("user_id"))
+          .select(col("user_id"), col("event_id"), Tables.tsUs.as("us")),
         col("user_id"), col("us"), US_SESSION_GAP, Seq(col("event_id")))
       .groupBy("user_id", "session_id")
       .agg(((max("us") - min("us")) / lit(1000000.0)).as("len_sec"))
@@ -72,6 +73,7 @@ object Events {
     val w = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     Tables.events(s, d)
+      .repartitionByRange(col("user_id"))
       .select(col("user_id"), col("event_id"), col("event_type"), Tables.tsUs.as("us"))
       .select(col("user_id"), col("event_id"), col("event_type"), col("us"),
               max(when(col("event_type") === "click", col("us"))).over(w).as("last_click_us"))
@@ -175,7 +177,7 @@ object Events {
                 .otherwise(0).as("late"))
       .groupBy("event_type")
       .agg(sum("late").as("n_late"), count(lit(1)).as("n"))
-      .orderBy("event_type")
+      .coalesce(1).orderBy("event_type")
   }
 
   private val US_PER_DAY = 86400000000L
@@ -203,7 +205,7 @@ object Events {
         orderBy = Seq(col("us"), col("event_id")),
         steps = Seq("view", "click", "purchase"))
       .groupBy("stage").agg(count(lit(1)).as("n_sessions"))
-      .orderBy("stage")
+      .coalesce(1).orderBy("stage")
 
   /** Weekly cohort retention (added round 7): users bucketed by the
     * epoch-week of their FIRST activity (cohort), distinct actives
@@ -303,6 +305,7 @@ object Events {
   def q_scd2(s: SparkSession, d: String): DataFrame =
     graft.Graft.scd2Intervals(
         Tables.events(s, d).filter(col("event_type") === "purchase")
+          .repartitionByRange(col("user_id"))
           .select(col("user_id"), col("event_id"), col("value"), Tables.tsUs.as("us")),
         keyCols = Seq(col("user_id")), time = col("us"),
         tieBreak = Seq(col("event_id")))
@@ -347,14 +350,14 @@ object Events {
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_outliers"),
            round(max(abs(col("z"))), 2).as("max_z"))
-      .orderBy("event_type")
+      .coalesce(1).orderBy("event_type")
 
   def q_retention(s: SparkSession, d: String): DataFrame =
     graft.Graft.retentionTriangle(Tables.events(s, d),
         user = col("user_id"), time = Tables.tsUs, periodUnits = 7 * US_PER_DAY)
       .select(col("cohort").as("cohort_week"), col("offset").as("weeks_since"),
               col("n_users"))
-      .orderBy("cohort_week", "weeks_since")
+      .coalesce(1).orderBy("cohort_week", "weeks_since")
 
   /** Median/MAD robust outliers (added round 8): events whose value
     * deviates from their type's MEDIAN by more than 3 scaled median
@@ -388,7 +391,7 @@ object Events {
            round(max(col("ad") / col("mad")), 2).as("max_ratio"),
            round(min(col("med")), 2).as("median"),
            round(min(col("mad")), 2).as("mad_val"))
-      .orderBy("event_type")
+      .coalesce(1).orderBy("event_type")
   }
 
   /** Latest-row compaction (added round 8): the events change-log
@@ -435,7 +438,7 @@ object Events {
     graft.Graft.ewma(hourly, keys = Seq("event_type"), bucket = "hour",
         value = col("x"), alpha = 0.25)
       .select(col("event_type"), col("hour"), round(col("ewma"), 4).as("ewma"))
-      .orderBy("event_type", "hour")
+      .coalesce(1).orderBy("event_type", "hour")
   }
 
   /** Welch's t-test between every pair of event types (added round
@@ -454,7 +457,7 @@ object Events {
       .select(col("group_a").as("type_a"), col("group_b").as("type_b"),
               col("n_a"), col("n_b"),
               round(col("t"), 4).as("t"), round(col("dof"), 2).as("dof"))
-      .orderBy("type_a", "type_b")
+      .coalesce(1).orderBy("type_a", "type_b")
 
   /** χ² independence test (added round 9): is the event-type mix
     * independent of the weekday? ONE row — the χ² statistic over the

@@ -97,7 +97,7 @@ object HashOps {
            (round(stddev_pop("v"), 4) + 0.0).as("std_v"),
            (round(min("v"), 4) + 0.0).as("min_v"),
            (round(max("v"), 4) + 0.0).as("max_v"))
-      .orderBy("dim")
+      .coalesce(1).orderBy("dim")
 
   /** Int8 quantization-planning profile (round 11) — the table read
     * before serving or shipping an embedding corpus quantized to int8
@@ -143,7 +143,7 @@ object HashOps {
            sum(col("q")).as("sum_q"),
            sum(abs(col("q"))).as("sum_abs_q"),
            max(abs(col("q"))).as("max_abs_q"))
-      .orderBy("label")
+      .coalesce(1).orderBy("label")
 
   /** Sign-random-projection LSH approximate NN — the LSH sibling of
     * [[q_sim_ivf]]. The query IS [[graft.Graft.srpSearch]] applied to
@@ -196,7 +196,7 @@ object HashOps {
       .select(col("vec_id"), col("label"), col("embedding").cast("array<double>").as("v"))
     graft.Graft.ivfAssign(ivfModel(e), e, col("v"), "cell")
       .groupBy("cell").agg(count(lit(1)).as("n_members"))
-      .orderBy("cell")
+      .coalesce(1).orderBy("cell")
   }
 
   /** IVF-style approximate nearest neighbor with a TRAINED coarse

@@ -68,7 +68,7 @@ object MediaOps {
            sum(col("n_bytes")).as("total_bytes"),
            sum(col("frames_sampled")).as("total_frames"),
            sum(element_at(col("histogram"), 3)).as("sep_bytes"))
-      .orderBy("kind")
+      .coalesce(1).orderBy("kind")
   }
 
   /** REAL image decode as an oracle-checked query (round 10): every
@@ -357,7 +357,7 @@ object MediaOps {
       // contract must hold even for the degenerate (0, 0, 0) row
       .select(col("hamming"), coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
               coalesce(col("n_twin_pairs"), lit(0L)).as("n_twin_pairs"))
-      .orderBy("hamming")
+      .coalesce(1).orderBy("hamming")
   }
 
   /** PERCEPTUAL audio near-dup (round 14 — the round-13 verdict's #4):
@@ -440,7 +440,7 @@ object MediaOps {
     allPairs.join(twins, Seq("hamming"), "left")
       .select(col("hamming"), coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
               coalesce(col("n_twin_pairs"), lit(0L)).as("n_twin_pairs"))
-      .orderBy("hamming")
+      .coalesce(1).orderBy("hamming")
   }
 
   /** Exact media-asset dedup per kind — the content-addressed-storage
@@ -473,7 +473,7 @@ object MediaOps {
            (sum(col("cnt")) - count(lit(1))).as("dup_assets"),
            sum(col("bytes") * col("cnt")).as("bytes_total"),
            (sum(col("bytes") * col("cnt")) - sum(col("bytes"))).as("bytes_saved"))
-      .orderBy("kind")
+      .coalesce(1).orderBy("kind")
 
   /** VIDEO temporal fingerprint match (round 16 — the round-15
     * verdict's #3): [[q_media_phash]] hashes a GIF's temporally-

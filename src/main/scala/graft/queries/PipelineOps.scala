@@ -385,7 +385,7 @@ object PipelineOps {
              .as("n_roundtrip"))
       .withColumn("boiler_permille",
         expr("(html_chars - text_chars) * 1000 div html_chars"))
-      .orderBy("source")
+      .coalesce(1).orderBy("source")
   }
 
   /** Outlink extraction + host-graph accounting (round 15) — the
@@ -454,7 +454,7 @@ object PipelineOps {
            countDistinct(col("target")).as("n_target_domains"))
       .withColumn("external_permille",
         expr("n_external * 1000 div n_links"))
-      .orderBy("source")
+      .coalesce(1).orderBy("source")
   }
 
   /** Incoming anchor-text aggregation per target domain (round 16) —
@@ -502,6 +502,7 @@ object PipelineOps {
               regexp_extract(col("el"), ">([^<]*)<", 1).as("anchor"))
       .groupBy("target", "anchor").agg(count(lit(1)).as("n"))
     counts
+      .repartitionByRange(col("target"))
       .withColumn("rk", row_number().over(
         Window.partitionBy("target").orderBy(col("n").desc, col("anchor").asc)))
       .groupBy("target")
@@ -559,7 +560,7 @@ object PipelineOps {
              .as("n_frontier_domains"))
       .withColumn("frontier_permille",
                   expr("n_frontier_links * 1000 div n_links"))
-      .orderBy("source")
+      .coalesce(1).orderBy("source")
   }
 
   /** URL canonicalization accounting (round 15) — the
@@ -607,7 +608,7 @@ object PipelineOps {
              .as("n_roundtrip"),
            sum(length(col("url")) - length(col("canon"))).as("chars_saved"))
       .withColumn("changed_permille", expr("n_changed * 1000 div n_docs"))
-      .orderBy("source")
+      .coalesce(1).orderBy("source")
   }
 
   /** Canonical-URL dedup accounting (round 16) — the operation
@@ -665,7 +666,7 @@ object PipelineOps {
            sum(col("kept")).as("n_kept"),
            sum(lit(1L) - col("kept")).as("n_dropped"))
       .withColumn("drop_permille", expr("n_dropped * 1000 div n_docs"))
-      .orderBy("source")
+      .coalesce(1).orderBy("source")
   }
 
   /** Deterministic source-interleaved curriculum order (round 11) —
@@ -696,7 +697,7 @@ object PipelineOps {
   def q_mixture_weights(s: SparkSession, d: String): DataFrame =
     graft.Graft.mixtureWeights(Tables.documents(s, d),
         col("source"), size(toks))
-      .orderBy("group")
+      .coalesce(1).orderBy("group")
 
   /** Domain-level curation accounting (round 15) — the URL-curation
     * face of [[q_mixture_weights]] (round-14 verdict #9): every doc
@@ -725,6 +726,7 @@ object PipelineOps {
       .select(domain.as("domain"),
               (did % 13 === 0).cast("long").as("blocked"),
               col("doc_id"), size(toks).cast("long").as("t"))
+      .repartitionByRange(col("domain"))
       .withColumn("rk", row_number().over(
         Window.partitionBy("domain").orderBy("doc_id")))
     ranked.groupBy("domain")
@@ -748,7 +750,7 @@ object PipelineOps {
     * integers throughout (rule I). */
   def q_length_buckets(s: SparkSession, d: String): DataFrame =
     graft.Graft.lengthBuckets(Tables.documents(s, d), size(toks))
-      .orderBy("bucket")
+      .coalesce(1).orderBy("bucket")
 
   /** Per-source quality-gate calibration (round 11) — the table a
     * pipeline reads BEFORE turning a quality filter on:
@@ -795,7 +797,7 @@ object PipelineOps {
   def q_dedup_sweep(s: SparkSession, d: String): DataFrame =
     graft.Graft.nearDupBands(Tables.documents(s, d),
         col("doc_id"), col("text"), lowPermille = 700, bandPermille = 50, n = 3)
-      .orderBy("band_lo")
+      .coalesce(1).orderBy("band_lo")
 
   /** Gram document-frequency histogram (round 11) — the
     * boilerplate-tail profile: per power-of-two df bucket (the
@@ -815,7 +817,7 @@ object PipelineOps {
       .select(graft.Graft.pow2Bucket(col("gdf")).as("df_bucket"), col("gdf"))
       .groupBy("df_bucket")
       .agg(count(lit(1)).as("n_grams"), sum("gdf").as("total_df"))
-      .orderBy("df_bucket")
+      .coalesce(1).orderBy("df_bucket")
 
   /** Quality-aware near-dup representative selection (round 11) — the
     * production refinement of [[q_dedup_drop]]'s keep-min-id rule: per
@@ -998,7 +1000,7 @@ object PipelineOps {
   def q_vocab_coverage(s: SparkSession, d: String): DataFrame =
     graft.Graft.vocabCoverage(Tables.documents(s, d), col("text"),
         ks = Seq(4, 8, 16, 24, 32))
-      .orderBy("k")
+      .coalesce(1).orderBy("k")
 
   /** Deterministic train/valid/test split + cross-split LEAKAGE
     * report (round 10): docs split 80/10/10 by the suite's standard
@@ -1025,7 +1027,7 @@ object PipelineOps {
               greatest(col("sa"), col("sb")).as("split_b"))
       .groupBy("split_a", "split_b")
       .agg(count(lit(1)).as("n_pairs"))
-      .orderBy("split_a", "split_b")
+      .coalesce(1).orderBy("split_a", "split_b")
   }
 
   /** Vocabulary GROWTH curve (round 10) — Heaps'-law points without
@@ -1057,7 +1059,7 @@ object PipelineOps {
       .agg(sum(when(col("b") < col("s"), col("nd")).otherwise(0L)).as("n_docs"))
     docTot.join(types, "s").join(tokTot, "s")
       .select("s", "n_docs", "vocab_types", "total_tokens")
-      .orderBy("s")
+      .coalesce(1).orderBy("s")
   }
 
   /** Corpus bigram CONDITIONAL entropy per language (round 10) —
@@ -1087,7 +1089,7 @@ object PipelineOps {
            sum(col("n12")).as("total_bigrams"),
            round((sum(col("n12") * log(col("n1"))) - sum(col("n12") * log(col("n12"))))
                    / sum(col("n12")), 6).as("cond_entropy"))
-      .orderBy("lang")
+      .coalesce(1).orderBy("lang")
   }
 
   /** Per-document quality scoring: token count, mean token length
@@ -1170,7 +1172,7 @@ object PipelineOps {
               col("deflated_bytes"), col("ratio_permille"),
               col("min_doc_permille"), col("max_doc_permille"),
               col("n_template"))
-      .orderBy("source")
+      .coalesce(1).orderBy("source")
   }
 
   /** Flesch reading-ease profile per source (round 16) — the
@@ -1224,7 +1226,7 @@ object PipelineOps {
              .as("n_easy"),
            sum(when(col("fre_milli") < 30000L, 1L).otherwise(0L))
              .as("n_hard"))
-      .orderBy("source")
+      .coalesce(1).orderBy("source")
   }
 
   /** Code-vs-prose detector (round 16) — the mixture-curation gate
@@ -1276,7 +1278,7 @@ object PipelineOps {
       .select(col("source"), col("n_docs"), col("n_code"),
               col("code_permille"), col("n_light"),
               col("corpus_density_permille"), col("max_density_permille"))
-      .orderBy("source")
+      .coalesce(1).orderBy("source")
   }
 
   /** N-gram-profile language ID: build a top-10-token profile per
@@ -1295,7 +1297,7 @@ object PipelineOps {
       .agg(count(lit(1)).as("n_docs"))
       // nulls_last matches DuckDB's ASC default — a zero-overlap NULL
       // pred_lang row (facade keeps such docs) must sort identically
-      .orderBy(col("lang"), col("pred_lang").asc_nulls_last)
+      .coalesce(1).orderBy(col("lang"), col("pred_lang").asc_nulls_last)
 
   /** End-to-end training-data pipeline composition: exact dedup
     * (keep min doc_id per (lang, token-multiset)) → quality gate
@@ -1324,7 +1326,7 @@ object PipelineOps {
       .agg(count(lit(1)).as("n_kept"),
            sum("n_chars").as("total_chars"),
            sum("sw").as("budget_subwords"))
-      .orderBy("lang")
+      .coalesce(1).orderBy("lang")
   }
 
   /** Deterministic (reproducible) sampling — the data-selection op a
@@ -1342,7 +1344,7 @@ object PipelineOps {
       .groupBy("lang")
       .agg(count(lit(1)).as("n_sampled"),
            min("doc_id").as("min_id"), max("doc_id").as("max_id"))
-      .orderBy("lang")
+      .coalesce(1).orderBy("lang")
 
   /** Incremental dedup (added round 8): the odd-doc_id half of the
     * corpus arrives as a NEW batch and is probed against the standing
@@ -1388,7 +1390,7 @@ object PipelineOps {
       .agg(count(lit(1)).as("n_sampled"),
            min("doc_id").as("min_id"), max("doc_id").as("max_id"),
            round(sum("inv_p"), 2).as("est_total_docs"))
-      .orderBy("lang")
+      .coalesce(1).orderBy("lang")
 
   /** Exact-k weighted sample (added round 8): exactly 100 documents
     * drawn WITHOUT replacement with inclusion probability ∝ n_chars —
@@ -1554,7 +1556,7 @@ object PipelineOps {
               greatest(col("sa"), col("sb")).as("src_b"))
       .groupBy("src_a", "src_b")
       .agg(count(lit(1)).as("n_pairs"))
-      .orderBy("src_a", "src_b")
+      .coalesce(1).orderBy("src_a", "src_b")
   }
 
   /** Asymmetric containment near-dup: pairs where the SMALLER doc's
@@ -1643,7 +1645,7 @@ object PipelineOps {
       .agg(count(lit(1)).as("n_docs"),
            sum("kept").as("n_kept"),
            sum(when(col("kept") === 1, col("n_chars")).otherwise(0L)).as("kept_chars"))
-      .orderBy("source")
+      .coalesce(1).orderBy("source")
   }
 
   /** Benchmark decontamination: flag corpus documents whose word-3-gram
@@ -1778,7 +1780,7 @@ object PipelineOps {
     graft.Graft.stratifiedSample(Tables.documents(s, d),
         col("lang"), col("doc_id"), n = 40, seed = 7L)
       .select(col("stratum").as("lang"), col("id").as("doc_id"), col("pos"))
-      .orderBy("lang", "pos")
+      .coalesce(1).orderBy("lang", "pos")
 
   /** End-to-end near-dup REMOVAL — the stage [[q_dedup_cluster]]'s
     * labeling exists for: drop every clustered document except its
@@ -1800,7 +1802,7 @@ object PipelineOps {
       .agg(count(lit(1)).as("n_kept"),
            sum("doc_id").as("sum_kept_ids"),
            sum(col("n_chars").cast("long")).as("kept_chars"))
-      .orderBy("lang")
+      .coalesce(1).orderBy("lang")
   }
 
   /** The corpus dedup FUNNEL — the one-row report every dedup run
@@ -1954,7 +1956,7 @@ object PipelineOps {
            sum("n_tokens").as("tokens"),
            sum("n_chunks").as("chunk_spans"),
            max("end_chunk").as("last_chunk"))
-      .orderBy("lang")
+      .coalesce(1).orderBy("lang")
   }
 
   /** Token counting, three ways per source: whitespace split, a
@@ -1973,7 +1975,7 @@ object PipelineOps {
            sum(col("n_re").cast("long")).as("re_tokens"),
            sum("n_subword").as("subword_tokens"),
            countDistinct(col("text")).as("n_distinct_docs"))
-      .orderBy("source")
+      .coalesce(1).orderBy("source")
   }
 
   /** EXACT corpus heavy hitters — tokens with count > n/31 (k = 30
@@ -2019,7 +2021,7 @@ object PipelineOps {
              .as("dup_tokens"))
       .withColumn("dup_token_permille",
                   expr("dup_tokens * 1000L div total_tokens"))
-      .orderBy("source")
+      .coalesce(1).orderBy("source")
   }
 
   /** BPE merge-candidate table (round 11) — the first step of
@@ -2111,7 +2113,7 @@ object PipelineOps {
            sum("nt").as("n_bpe_tokens"))
       .withColumn("saved_permille",
                   expr("(n_char_syms - n_bpe_tokens) * 1000L div n_char_syms"))
-      .orderBy("source")
+      .coalesce(1).orderBy("source")
   }
 
   /** Tokenizer fertility per language (round 16) — the multilingual
@@ -2144,7 +2146,7 @@ object PipelineOps {
            sum("nt").as("n_bpe_tokens"))
       .withColumn("fertility_permille",
                   expr("n_bpe_tokens * 1000 div n_words"))
-      .orderBy("lang")
+      .coalesce(1).orderBy("lang")
   }
 
   /** Unicode-normalization accounting per source (round 11) — the
@@ -2170,7 +2172,7 @@ object PipelineOps {
         col("source"), injected)
       .select(col("group").as("source"), col("n_docs"),
               col("n_denorm"), col("chars_saved"))
-      .orderBy("source")
+      .coalesce(1).orderBy("source")
   }
 
   /** Encoding-damage audit (round 15) — the raw-zone stage BEFORE
@@ -2217,7 +2219,7 @@ object PipelineOps {
            sum(col("c")).as("control_hits"),
            sum(col("removed")).as("chars_removed"))
       .withColumn("damaged_permille", expr("n_damaged * 1000 div n_docs"))
-      .orderBy("source")
+      .coalesce(1).orderBy("source")
   }
 
   /** Shard-local dedup loss curve (round 11) — at 100 TB, running
@@ -2250,7 +2252,7 @@ object PipelineOps {
       .select(col("n_shards"), col("n_pairs"),
               (col("n_pairs") - col("n_local")).as("n_cross"),
               expr("(n_pairs - n_local) * 1000L div n_pairs").as("cross_permille"))
-      .orderBy("n_shards")
+      .coalesce(1).orderBy("n_shards")
   }
 
   /** SPAN-level shard-dedup loss curve (round 14 — the round-13
@@ -2310,7 +2312,7 @@ object PipelineOps {
               when(col("n_dup_spans") > 0,
                    expr("n_lost * 1000L div n_dup_spans"))
                 .otherwise(lit(0L)).as("lost_permille"))
-      .orderBy("n_shards")
+      .coalesce(1).orderBy("n_shards")
   }
 
   /** Conjunctive inverted-index search (round 11) — classic boolean
@@ -2409,7 +2411,7 @@ object PipelineOps {
       .groupBy("source", "w1", "w2")
       .agg(countDistinct(col("doc_id")).as("n_docs"),
            count(lit(1)).as("n_hits"))
-      .orderBy("source")
+      .coalesce(1).orderBy("source")
   }
 
   /** Ordered PROXIMITY search over the positional inverted index
@@ -2526,7 +2528,7 @@ object PipelineOps {
               col("n_unchanged"), col("tokens_added"),
               col("tokens_removed"), col("tokens_changed_delta"),
               col("net_token_delta"), col("churn_permille"))
-      .orderBy("source")
+      .coalesce(1).orderBy("source")
   }
 
   /** Snapshot edit-MAGNITUDE report (round 16) — the question
@@ -2578,7 +2580,7 @@ object PipelineOps {
            max(col("jacc")).as("max_jacc_permille"),
            sum(when(col("jacc") >= 900, 1L).otherwise(0L)).as("n_light"),
            sum(when(col("jacc") < 500, 1L).otherwise(0L)).as("n_heavy"))
-      .orderBy("source")
+      .coalesce(1).orderBy("source")
   }
 
   /** Duplication rate by quality band (round 11) — the cross-signal
@@ -2607,7 +2609,7 @@ object PipelineOps {
       .agg(count(lit(1)).as("n_docs"),
            sum(coalesce(col("is_dup"), lit(0L))).as("n_dup"))
       .withColumn("dup_permille", expr("n_dup * 1000L div n_docs"))
-      .orderBy("q_band")
+      .coalesce(1).orderBy("q_band")
   }
 
   /** Kneser–Ney bigram model head (round 11) — the classic n-gram LM
@@ -2658,7 +2660,7 @@ object PipelineOps {
               col("common"),
               expr("common * 1000 div (types_a + types_b - common)")
                 .as("jaccard_permille"))
-      .orderBy("src_a", "src_b")
+      .coalesce(1).orderBy("src_a", "src_b")
   }
 
   /** SEMANTIC split leakage (round 14) — [[q_split_leakage]]'s face
@@ -2690,7 +2692,7 @@ object PipelineOps {
       .groupBy("split_a", "split_b")
       .agg(count(lit(1)).as("n_pairs"),
            expr("sum(cp) div count(1)").as("mean_cos_permille"))
-      .orderBy("split_a", "split_b")
+      .coalesce(1).orderBy("split_a", "split_b")
   }
 
   /** Quality-classifier TRAINING (round 14) — the fastText/CCNet-style
@@ -2870,7 +2872,7 @@ object PipelineOps {
       .select(col("bin"), col("n"), col("mean_p_ppm"), col("frac_pos_ppm"),
               col("gap_ppm"), col("rel_ppm"), col("res_ppm"),
               col("brier_ppm"), col("uncertainty_ppm"))
-      .orderBy("bin")
+      .coalesce(1).orderBy("bin")
   }
 
   /** Unigram-LM tokenizer SEED table (round 14) — the candidate-piece
@@ -2939,7 +2941,7 @@ object PipelineOps {
            sum("nt").as("n_unigram_tokens"))
       .withColumn("saved_permille",
                   expr("(n_char_syms - n_unigram_tokens) * 1000L div n_char_syms"))
-      .orderBy("source")
+      .coalesce(1).orderBy("source")
   }
 
   /** Quality-score language-BIAS audit (round 14) — the evaluation
@@ -3125,6 +3127,7 @@ object PipelineOps {
              .as("cb"))
     val wAll = Window.partitionBy("src_a", "src_b")
     merged
+      .repartitionByRange(col("src_a"), col("src_b"))
       .withColumn("n_a", sum(col("ca")).over(wAll))
       .withColumn("n_b", sum(col("cb")).over(wAll))
       .withColumn("nb", count(lit(1)).over(wAll))
@@ -3163,6 +3166,7 @@ object PipelineOps {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.partitionBy("src_a", "src_b")
     merged
+      .repartitionByRange(col("src_a"), col("src_b"))
       .withColumn("cum_a", sum(col("ca")).over(wCum))
       .withColumn("cum_b", sum(col("cb")).over(wCum))
       .withColumn("n_a", sum(col("ca")).over(wAll))

@@ -13,7 +13,10 @@ import org.apache.spark.sql.expressions.Window
   * (d) aliases every output column identically to its oracle SQL
   * (rule N). Scale posture: no collect(), broadcast hints only on
   * dimension tables, aggregations rely on Catalyst's partial+final
-  * split, sorts that feed a LIMIT compile to TakeOrderedAndProject.
+  * split, sorts that feed a LIMIT compile to TakeOrderedAndProject,
+  * a sort over a bounded-domain aggregate runs in its one coalesced
+  * partition, and a sort led by the window keys reuses the window's
+  * range exchange (README, design notes).
   */
 object Relational {
 
@@ -67,7 +70,7 @@ object Relational {
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_orders"),
            sum(when(col("o_totalprice") > 100000, 1).otherwise(0)).as("n_big"))
-      .orderBy("o_orderpriority")
+      .coalesce(1).orderBy("o_orderpriority")
 
   // ---- §2.3 joins ---------------------------------------------------
 
@@ -82,7 +85,7 @@ object Relational {
       .groupBy("r_name")
       .agg(count(lit(1)).as("n_orders"),
            round(sum("o_totalprice"), 2).as("total_price"))
-      .orderBy("r_name")
+      .coalesce(1).orderBy("r_name")
 
   /** Large-large equi-join: MERGE hint pins sort-merge so the plan is
     * the one that survives a 100× scale-up (no accidental broadcast of
@@ -93,7 +96,7 @@ object Relational {
       .groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n_rows"),
            round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
-      .orderBy("o_orderstatus")
+      .coalesce(1).orderBy("o_orderstatus")
 
   /** TPC-H Q5 shape: 6-way star join, dims broadcast, facts joined
     * smallest-first; same-nation customer/supplier residual. */
@@ -111,7 +114,7 @@ object Relational {
             col("l_suppkey") === col("s_suppkey") && col("s_nationkey") === col("c_nationkey"))
       .groupBy("n_name")
       .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
-      .orderBy("n_name")
+      .coalesce(1).orderBy("n_name")
   }
 
   /** Left outer join + null-safe count (order-less customers kept). */
@@ -147,7 +150,7 @@ object Relational {
             col("l_partkey") === col("p_partkey") && col("l_quantity") > col("p_size"))
       .groupBy("p_brand")
       .agg(count(lit(1)).as("n_lines"))
-      .orderBy("p_brand")
+      .coalesce(1).orderBy("p_brand")
 
   /** Bloom-prefiltered semi join (added round 8): lineitem revenue per
     * high-balance supplier, the big side pre-filtered by a bloom
@@ -193,7 +196,7 @@ object Relational {
       .groupBy("p_brand")
       .agg(count(lit(1)).as("n_lines"),
            round(sum("l_quantity"), 2).as("sum_qty"))
-      .orderBy("p_brand")
+      .coalesce(1).orderBy("p_brand")
 
   // ---- §2.4 aggregations --------------------------------------------
 
@@ -209,7 +212,7 @@ object Relational {
            round(avg("l_quantity"), 2).as("avg_qty"),
            round(avg("l_extendedprice"), 2).as("avg_price"),
            count(lit(1)).as("count_order"))
-      .orderBy("l_returnflag", "l_linestatus")
+      .coalesce(1).orderBy("l_returnflag", "l_linestatus")
 
   /** Post-aggregation filter (HAVING). */
   def q_agg_having(s: SparkSession, d: String): DataFrame =
@@ -225,7 +228,7 @@ object Relational {
     Tables.orders(s, d)
       .groupBy("o_orderpriority")
       .agg(countDistinct("o_custkey").as("n_cust"))
-      .orderBy("o_orderpriority")
+      .coalesce(1).orderBy("o_orderpriority")
 
   /** HLL++ approximate distinct — sketch values are engine-specific, so
     * no oracle; unit-tested against exact ±5% (SURVEY §2.4). */
@@ -233,7 +236,7 @@ object Relational {
     Tables.events(s, d)
       .groupBy("event_type")
       .agg(approx_count_distinct("user_id").as("approx_users"))
-      .orderBy("event_type")
+      .coalesce(1).orderBy("event_type")
 
   /** Hierarchical grouping sets (ROLLUP) with a grouping_id bitmask.
     * Grouping-null keys are COALESCEd to sentinels so cross-engine
@@ -247,7 +250,7 @@ object Relational {
       .select(coalesce(col("o_year"), lit(-1)).as("o_year"),
               coalesce(col("o_orderpriority"), lit("ALL")).as("o_orderpriority"),
               col("n_orders"), col("total_price"), col("gid"))
-      .orderBy("gid", "o_year", "o_orderpriority")
+      .coalesce(1).orderBy("gid", "o_year", "o_orderpriority")
 
   /** CUBE over (year, priority): all four grouping sets, gid bitmask,
     * grouping-nulls coalesced to sentinels (same rules as q_rollup). */
@@ -260,7 +263,7 @@ object Relational {
       .select(coalesce(col("o_year"), lit(-1)).as("o_year"),
               coalesce(col("o_orderpriority"), lit("ALL")).as("o_orderpriority"),
               col("n_orders"), col("total_price"), col("gid"))
-      .orderBy("gid", "o_year", "o_orderpriority")
+      .coalesce(1).orderBy("gid", "o_year", "o_orderpriority")
 
   /** Explicit GROUPING SETS — the general form ROLLUP/CUBE compile to:
     * a custom set list ((year, priority), (priority), ()) that neither
@@ -283,7 +286,7 @@ object Relational {
       .select(coalesce(col("o_year"), lit(-1)).as("o_year"),
               coalesce(col("o_orderpriority"), lit("ALL")).as("o_orderpriority"),
               col("n_orders"), col("total_price"), col("gid"))
-      .orderBy("gid", "o_year", "o_orderpriority")
+      .coalesce(1).orderBy("gid", "o_year", "o_orderpriority")
   }
 
   /** Ordered string aggregation (LISTAGG ... WITHIN GROUP — SQL:2016,
@@ -297,7 +300,7 @@ object Relational {
       .groupBy("r_name")
       .agg(expr("listagg(n_name, ',') WITHIN GROUP (ORDER BY n_name)").as("nations"),
            count(lit(1)).as("n_nations"))
-      .orderBy("r_name")
+      .coalesce(1).orderBy("r_name")
 
   /** Exact interpolated percentiles (median + p90) per priority —
     * Spark `percentile` ≡ DuckDB `quantile_cont`. */
@@ -306,7 +309,7 @@ object Relational {
       .groupBy("o_orderpriority")
       .agg(round(expr("percentile(o_totalprice, 0.5)"), 2).as("median_price"),
            round(expr("percentile(o_totalprice, 0.9)"), 2).as("p90_price"))
-      .orderBy("o_orderpriority")
+      .coalesce(1).orderBy("o_orderpriority")
 
   /** Boolean & bitwise aggregate family (added round 9): per
     * priority — bool_and / bool_or over a price predicate and
@@ -325,7 +328,7 @@ object Relational {
            bit_and(col("o_custkey")).as("key_and"),
            bit_or(col("o_custkey")).as("key_or"),
            bit_xor(col("o_custkey")).as("key_xor"))
-      .orderBy("o_orderpriority")
+      .coalesce(1).orderBy("o_orderpriority")
 
   /** Statistical aggregates: stddev / variance / correlation /
     * covariance per returnflag (rounded — sums of products differ in
@@ -337,7 +340,7 @@ object Relational {
            round(var_samp(col("l_discount")), 6).as("var_disc"),
            round(corr(col("l_quantity"), col("l_extendedprice")), 4).as("corr_qty_price"),
            round(covar_samp(col("l_quantity"), col("l_discount")), 6).as("covar_qty_disc"))
-      .orderBy("l_returnflag")
+      .coalesce(1).orderBy("l_returnflag")
 
   /** Pearson correlation matrix (added round 9): all pairwise
     * correlations of the four lineitem measures in ONE scan — the
@@ -404,7 +407,7 @@ object Relational {
               coalesce(col("3-MEDIUM"), lit(0L)).as("n_medium"),
               coalesce(col("4-NOT SPECIFIED"), lit(0L)).as("n_notspec"),
               coalesce(col("5-LOW"), lit(0L)).as("n_low"))
-      .orderBy("o_year")
+      .coalesce(1).orderBy("o_year")
 
   /** UNPIVOT / melt (added round 8): per-returnflag sums of three
     * lineitem measures, melted wide→long via Spark's native
@@ -423,7 +426,7 @@ object Relational {
       .unpivot(Array(col("l_returnflag")),
                Array(col("quantity"), col("extendedprice"), col("discount")),
                "measure", "total")
-      .orderBy("l_returnflag", "measure")
+      .coalesce(1).orderBy("l_returnflag", "measure")
 
   /** Fixed-width histogram (added round 8): order totals binned at
     * $25k width — count + min/max per bin. The profiling aggregation
@@ -438,7 +441,7 @@ object Relational {
       .agg(count(lit(1)).as("n_orders"),
            round(min("o_totalprice"), 2).as("min_price"),
            round(max("o_totalprice"), 2).as("max_price"))
-      .orderBy("bin")
+      .coalesce(1).orderBy("bin")
 
   /** Equi-depth (equal-frequency) histogram (added round 8): order
     * totals cut into 8 buckets at the exact interpolated octile
@@ -468,7 +471,7 @@ object Relational {
       .agg(count(lit(1)).as("n_orders"),
            round(min("v"), 2).as("min_price"),
            round(max("v"), 2).as("max_price"))
-      .orderBy("bucket")
+      .coalesce(1).orderBy("bucket")
   }
 
   /** Portable table fingerprints (added round 8): an
@@ -527,6 +530,7 @@ object Relational {
   def q_above_avg(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy("o_custkey")
     Tables.orders(s, d)
+      .repartitionByRange(col("o_custkey"))
       .withColumn("avg_price", avg("o_totalprice").over(w))
       .filter(col("o_totalprice") > col("avg_price"))
       .groupBy("o_custkey")
@@ -565,6 +569,7 @@ object Relational {
     val w = Window.partitionBy("o_custkey")
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
     Tables.orders(s, d)
+      .repartitionByRange(col("o_custkey"))
       .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
               row_number().over(w).as("rn"))
       .filter(col("rn") <= 3)
@@ -585,6 +590,7 @@ object Relational {
     val tied = Window.partitionBy("o_custkey").orderBy(col("yr").desc)
     val total = Window.partitionBy("o_custkey").orderBy(col("yr").desc, col("o_orderkey"))
     Tables.orders(s, d)
+      .repartitionByRange(col("o_custkey"))
       .select(col("o_custkey"), col("o_orderkey"), year(col("o_orderdate")).as("yr"))
       .select(col("o_custkey"), col("o_orderkey"), col("yr"),
               rank().over(tied).as("rk"),
@@ -599,6 +605,7 @@ object Relational {
       .orderBy("o_orderdate", "o_orderkey")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     Tables.orders(s, d)
+      .repartitionByRange(col("o_custkey"))
       .select(col("o_custkey"), col("o_orderkey"),
               round(sum("o_totalprice").over(w), 2).as("run_sum"))
       .orderBy("o_custkey", "o_orderkey")
@@ -610,6 +617,7 @@ object Relational {
     val us = Tables.tsUs
     val w = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
     Tables.events(s, d)
+      .repartitionByRange(col("user_id"))
       .select(col("user_id"), col("event_id"), us.as("us"))
       .select(col("user_id"), col("event_id"),
               coalesce(col("us") - lag("us", 1).over(w), lit(-1L)).as("gap_us"))
@@ -621,6 +629,7 @@ object Relational {
     val w = Window.partitionBy("user_id").orderBy("us")
       .rangeBetween(-600000000L, 0L)
     Tables.events(s, d)
+      .repartitionByRange(col("user_id"))
       .select(col("user_id"), col("event_id"), Tables.tsUs.as("us"))
       .select(col("user_id"), col("event_id"),
               count(lit(1)).over(w).as("n_10min"))
@@ -638,6 +647,7 @@ object Relational {
     val w = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
     val wf = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     Tables.events(s, d)
+      .repartitionByRange(col("user_id"))
       .select(col("user_id"), col("event_id"), col("event_type"), Tables.tsUs.as("us"))
       .select(col("user_id"),
               first("event_type").over(wf).as("first_type"),
@@ -761,7 +771,7 @@ object Relational {
            sum(regexp_extract(col("c_name"), "Customer#([0-9]+)", 1)
                  .try_cast("long")).as("sum_ids"),
            min(regexp_replace(lower(col("c_mktsegment")), "[aeiou]", "_")).as("vowelless"))
-      .orderBy("c_mktsegment")
+      .coalesce(1).orderBy("c_mktsegment")
 
   /** year/quarter/date arithmetic; timestamps emitted as DATE (rule T). */
   def q_date_funcs(s: SparkSession, d: String): DataFrame =
@@ -774,7 +784,7 @@ object Relational {
            min("o_date").as("min_date"),
            max("o_date").as("max_date"),
            datediff(max("o_date"), min("o_date")).as("span_days"))
-      .orderBy("o_year", "o_quarter")
+      .coalesce(1).orderBy("o_year", "o_quarter")
 
   /** sqrt/ln/pow/mod/round over part pricing. */
   def q_math_funcs(s: SparkSession, d: String): DataFrame =
@@ -784,7 +794,7 @@ object Relational {
            round(avg(log(col("p_retailprice"))), 4).as("avg_ln"),
            sum(col("p_size") % 7).as("sum_mod"),
            round(pow(max(col("p_size")).cast("double"), 2.0), 1).as("max_pow_sz"))
-      .orderBy("p_brand")
+      .coalesce(1).orderBy("p_brand")
 
   /** JSON path extraction from the events.props string column. */
   def q_json_extract(s: SparkSession, d: String): DataFrame =
@@ -795,7 +805,7 @@ object Relational {
       .agg(count(lit(1)).as("n_events"),
            round(avg("k"), 3).as("avg_k"),
            max("k").as("max_k"))
-      .orderBy("event_type")
+      .coalesce(1).orderBy("event_type")
 
   /** Array build/size/distinct/sort/contains/slice/join over tokens. */
   def q_array_funcs(s: SparkSession, d: String): DataFrame = {

@@ -31,7 +31,7 @@ object TextOps {
            round(avg("n_chars"), 2).as("avg_chars"),
            countDistinct("source").as("n_sources"),
            sum(size(split(col("text"), " "))).as("total_tokens"))
-      .orderBy("lang")
+      .coalesce(1).orderBy("lang")
 
   /** TF-IDF: top-5 terms per language by summed tf·idf.
     * idf = ln(N/df) is constant per term, so the per-(lang,term) score
@@ -62,7 +62,7 @@ object TextOps {
       .agg(min("doc_id").as("keeper"))
       .groupBy("lang")
       .agg(count(lit(1)).as("n_unique"), sum("keeper").as("sum_keeper_ids"))
-      .orderBy("lang")
+      .coalesce(1).orderBy("lang")
 
   /** Near-duplicate candidate pairs via MinHash + LSH banding.
     * Pipeline: tokens → per-doc 64-perm MinHash signature (the
@@ -230,7 +230,7 @@ object TextOps {
         Seq("source"), col("tok"))
       .select(col("source"), col("n_items").as("n_tokens"), col("n_distinct"),
               round(col("entropy"), 6).as("entropy"))
-      .orderBy("source")
+      .coalesce(1).orderBy("source")
 
   /** Character-level Shannon entropy per source (round 16) — the
     * CODEC-layer diversity signal next to [[q_entropy]]'s token-level
@@ -258,7 +258,7 @@ object TextOps {
       .select(col("source"), col("n_items").as("n_chars_total"),
               col("n_distinct").as("n_distinct_chars"),
               round(col("entropy"), 6).as("entropy"))
-      .orderBy("source")
+      .coalesce(1).orderBy("source")
 
   /** Zipf's-law fit of the token frequency distribution (added
     * round 8): one row — type/token counts plus the slope and r² of
@@ -310,7 +310,7 @@ object TextOps {
         group = col("source"), item = col("tok"))
       .select(col("group_a").as("src_a"), col("group_b").as("src_b"),
               round(col("kl"), 6).as("kl"))
-      .orderBy("src_a", "src_b")
+      .coalesce(1).orderBy("src_a", "src_b")
 
   /** BM25 retrieval ranking (added round 9): top-20 documents for the
     * fixed query (hash, scan, dup) — two common terms and one rare
@@ -380,6 +380,7 @@ object TextOps {
                 .as("keyness_permille"))
     import org.apache.spark.sql.expressions.Window
     scored
+      .repartitionByRange(col("source"))
       .withColumn("rank", row_number().over(Window.partitionBy("source")
         .orderBy(col("keyness_permille").desc, col("token"))))
       .filter(col("rank") <= 3)
@@ -400,7 +401,7 @@ object TextOps {
       .groupBy("label")
       .agg(max("n").as("n_vecs"),
            round(sqrt(sum(col("ctr") * col("ctr"))), 3).as("centroid_norm"))
-      .orderBy("label")
+      .coalesce(1).orderBy("label")
 
   /** Hybrid retrieval by reciprocal-rank fusion (round 14) — the
     * standard way production search fuses a lexical ranker with a

@@ -57,8 +57,8 @@ class MultimodalSpec extends SparkSpecBase {
     val df = graft.queries.MediaOps.q_media_stats(spark, sf)
     val plan = df.queryExecution.executedPlan.toString
     // the extraction stage is map-side: scan → typed MapPartitions →
-    // partial agg; the ONLY exchanges are the 3-group final aggregate
-    // and the 3-row output sort
+    // partial agg; the ONLY exchange is the 3-group final aggregate
+    // (the 3-row output sort runs in its single partition)
     assert(plan.contains("MapPartitions"))
     assert("Exchange".r.findAllMatchIn(plan).size <= 2,
       s"extraction stage must not shuffle the payload:\n$plan")

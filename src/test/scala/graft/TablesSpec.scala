@@ -1,51 +1,16 @@
 package graft
 
 import graft.queries.PipelineOps
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 /** The input reader's infer-once schema cache and the input-file
   * fingerprint it shares with the driver-side model caches: a repeat
   * read runs no Spark job, a rewritten file is inferred again, every
   * read is a fresh relation, and each session infers for itself. */
 class TablesSpec extends SparkSpecBase {
-
-  /** Spark jobs the calling thread starts in `body`. The listener
-    * counts jobs of this thread's job group; a marker job in a second
-    * group, run after `body`, shows that the listener bus has
-    * delivered every earlier event. */
-  private def jobsDuring(s: SparkSession)(body: => Unit): Int = {
-    val sc = s.sparkContext
-    val group = s"tables-spec-${java.util.UUID.randomUUID}"
-    val marker = s"$group-marker"
-    val jobs = new AtomicInteger(0)
-    val delivered = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group`  => jobs.incrementAndGet()
-          case `marker` => delivered.countDown()
-          case _        =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      body
-      sc.setJobGroup(marker, marker)
-      sc.parallelize(Seq(1), 1).count()
-      assert(delivered.await(60, TimeUnit.SECONDS), "listener bus did not deliver the marker job")
-      jobs.get()
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   /** A private copy of one sf table, so its reads and rewrites touch
     * no other spec's cache entry. */

@@ -103,6 +103,27 @@ class TempTablesSpec extends SparkSpecBase {
     assert(builds == Map("tts_rewrite" -> 2L))
   }
 
+  test("shared: a fresh build's first read declares the built schema and runs no job") {
+    val key = spark.range(20).toDF("id")
+      .select(col("id"), (col("id") * 1.5).as("x"), col("id").cast("decimal(12,2)").as("dec"),
+              lit("2020-01-01 00:00:00").cast("timestamp_ntz").as("ts"),
+              array(col("id"), col("id") + 1).as("arr"),
+              struct(col("id").cast("string").as("s")).as("st"))
+    val plainWrite = jobsDuring(spark) {
+      key.write.mode("overwrite").parquet(Files.createTempDirectory("tts_plain").toString)
+    }
+    var read: DataFrame = null
+    val buildAndRead = jobsDuring(spark) {
+      assert(buildsDuring { read = TempTables.shared("tts_declared_schema", key)() } ==
+        Map("tts_declared_schema" -> 1L))
+    }
+    assert(buildAndRead == plainWrite,
+      s"the build writes in $plainWrite jobs; its read must add none, got $buildAndRead")
+    val path = Paths.get(read.inputFiles.head).getParent.toString
+    assert(read.schema == spark.read.parquet(path).schema)
+    assert(rows(read.orderBy("id")) == rows(key.orderBy("id")))
+  }
+
   test("build ledger records SELF time: nested child builds subtract from the parent") {
     // a parent build that first-touches a child table runs the child
     // inside its own timer; the ledger must charge the child's wall to
