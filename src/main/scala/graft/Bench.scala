@@ -1,29 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // Bound the driver's status-store bookkeeping (round 18, guide
-      // §5: the driver should do almost no data work). The
-      // AppStatusListener runs even with the UI off and retains up to
-      // 1000 jobs/stages/executions and 100k tasks by DEFAULT — after
-      // 213 sequential queries that is hundreds of MB of driver heap
-      // and measurable GC drag on the tail of the run (bench total
-      // ~199 → ~189 s, retimes uniformly lower on an A/B at equal
-      // weather). Measurement-neutral: nothing about what a query
-      // computes or how it is timed changes; at cluster scale the
-      // same bounds are standing long-running-app hygiene.
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "5000")
-      .config("spark.sql.ui.retainedExecutions", "20")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // Weather evidence (round-14 verdict #3): single readings are
     // unadjudicable without knowing what ELSE the machine was doing —
     // r14's 2.27× driver total and three anomalous retimes had no load
@@ -38,20 +17,9 @@ object Bench {
     // Warm the JVM/codegen/scheduler paths once so the first timed
     // query isn't charged for session warmup (it was ~4s of skew).
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    // a query that throws is still timed (its wall is part of the run)
-    // but is NAMED in `failed` and fails the process: a fast failure
-    // must never pass for a fast query
-    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    def timed(name: String)(run: => Any): Double = {
-      val t0 = System.nanoTime()
-      try run catch { case e: Throwable =>
-        failed += name
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
+    val run = new Harness.Runner(spark, "bench")
     val results = SparkEntry.queries.map { case (name, fn) =>
-      name -> timed(name)(fn(spark, sfDir).count())
+      name -> run.time(name)(fn(spark, sfDir).count())
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -70,10 +38,10 @@ object Bench {
     // per-table build ledger (round-10 verdict #2): the SELF seconds
     // (round 12: wall minus nested child builds, so rows add up) and
     // bytes each shared temp-parquet artifact cost THIS run, with the
-    // build COUNT n — cached tables build once (n=1: a first-touch
-    // figure, charged to whichever query touched the table first in
-    // declaration order); materialize-tagged tables rebuild per query
-    // invocation, so their seconds are n builds summed.
+    // build COUNT n — a shared table builds once per distinct input (a
+    // first-touch figure, charged to whichever query touched it first
+    // in declaration order), so n > 1 sums the builds of that many
+    // distinct inputs put through one builder.
     // top-10 by seconds so the compact line stays inside the 2,000-char
     // artifact-tail guarantee alongside slowest20
     val builds = TempTables.buildCosts.toSeq.sortBy(-_._2._1).take(10)
@@ -111,16 +79,16 @@ object Bench {
     // can escape steady-state evidence (r16's q_readability hole).
     val loadMid = loadavg(); val tsMid = epochSec()
     val retimes = results.toSeq.sortBy(-_._2).take(20).map { case (name, _) =>
-      name -> timed(name)(SparkEntry.queries(name)(spark, sfDir).count())
+      name -> run.time(name)(SparkEntry.queries(name)(spark, sfDir).count())
     }.map { case (k, v) => s"\"" + k + "\":" + math.round(v * 100) / 100.0 }
       .mkString("{", ",", "}")
     val loadEnd = loadavg(); val tsEnd = epochSec()
     val weather = s"""{"start":{"ts":$tsStart,"loadavg":$loadStart},""" +
       s""""pre_retime":{"ts":$tsMid,"loadavg":$loadMid},""" +
       s""""end":{"ts":$tsEnd,"loadavg":$loadEnd}}"""
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = run.failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     println(s"""{"metric":"total_compact","unit":"sec","sf":"$sfDir","n_queries":${results.size},"slowest20":$slowest,"temp_builds":$builds,"temp_reads":$reads,"retimes":$retimes,"weather":$weather,"failed":$failedJson,"value":$total}""")
     spark.stop()
-    if (failed.nonEmpty) sys.exit(1)
+    sys.exit(Harness.exitCode(run.failed))
   }
 }

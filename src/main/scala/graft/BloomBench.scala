@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Bloom-prefilter evidence harness: measures WHAT the sketch saves.
@@ -21,24 +20,10 @@ import org.apache.spark.sql.functions._
   * bench").
   */
 object BloomBench {
-
-  private final class ShuffleBytesListener extends org.apache.spark.scheduler.SparkListener {
-    @volatile var bytes: Long = 0L
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      if (te.taskMetrics != null && te.taskMetrics.shuffleWriteMetrics != null)
-        bytes += te.taskMetrics.shuffleWriteMetrics.bytesWritten
-  }
-
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Harness.cpus
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.autoBroadcastJoinThreshold", -1)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cpus, Map("spark.sql.autoBroadcastJoinThreshold" -> "-1"))
 
     val lineitem = Tables.lineitem(spark, sfDir)
     // ~25% of orders — selective enough that the prefilter matters,
@@ -58,31 +43,12 @@ object BloomBench {
         .groupBy("l_suppkey").agg(count(lit(1)).as("n"))
         .agg(sum("n")).head().getLong(0)
 
-    val listener = new ShuffleBytesListener
-    spark.sparkContext.addSparkListener(listener)
     plain() // warm codegen/page cache so run 1 isn't biased
-
-    val variants = Seq[(String, () => Long)]("plain_semi" -> plain _,
-                                             "bloom_prefiltered" -> bloomed _)
-    // interleaved round-robin, same shape as SkewBench.median3
-    val runs = (1 to 3).flatMap { _ =>
-      variants.map { case (label, f) =>
-        listener.bytes = 0L
-        val t0 = System.nanoTime()
-        val n = f()
-        val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(500) // drain TaskEnd events into the listener
-        (label, wall, listener.bytes, n)
-      }
-    }
-    val med = variants.map { case (label, _) =>
-      val mine = runs.filter(_._1 == label)
-      (label, mine.map(_._2).sorted.apply(1), mine.map(_._3).sorted.apply(1), mine.head._4)
-    }
-    require(med.map(_._4).distinct.size == 1,
+    val med = Harness.median3(spark, Seq("plain_semi" -> plain _, "bloom_prefiltered" -> bloomed _))
+    require(med.map(_._2.rows).distinct.size == 1,
       s"variants disagree on result rows: $med — the sketch must be result-preserving")
-    val js = med.map { case (k, sec, bytes, n) =>
-      s""""$k":{"sec":${math.round(sec * 1000) / 1000.0},"shuffle_bytes":$bytes,"rows":$n}"""
+    val js = med.map { case (k, r) =>
+      s""""$k":{"sec":${math.round(r.sec * 1000) / 1000.0},"shuffle_bytes":${r.shuffleBytes},"rows":${r.rows}}"""
     }.mkString("{", ",", "}")
     println(s"""{"bench":"bloom","cpus":$cpus,"sf":"$sfDir","results":$js}""")
     spark.stop()

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Plan-archive main: regenerates PLANS.md with the physical plan of
   * every declared query at the given sfDir (defaults to sf0.1 — the
@@ -16,15 +15,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plans")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val sb = new StringBuilder
     sb.append(s"# PLANS — physical plans of all ${SparkEntry.queries.size} queries at $sfDir\n\n")
     sb.append("Generated by `sbt \"runMain graft.Plans\"` (executedPlan, AQE initial). ")

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Round-18 measurement harness (guide §1: measure first): times the
   * named queries `reps` times each with the Bench methodology
@@ -17,27 +16,14 @@ import org.apache.spark.sql.SparkSession
 object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = args.collectFirst { case s if s.startsWith("--reps=") =>
       s.stripPrefix("--reps=").toInt }.getOrElse(3)
     val plansTo = args.collectFirst { case s if s.startsWith("--plans=") =>
       s.stripPrefix("--plans=") }
     val names = args.filterNot(_.startsWith("--")).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // bounded status-store retention — see Bench.scala
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "5000")
-      .config("spark.sql.ui.retainedExecutions", "20")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    // a throwing rep is still timed but named here and fails the
-    // process, so a fast failure never reads as a fast query
-    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    val run = new Harness.Runner(spark, "probe")
     val summaries = names.map { name =>
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query: $name (${SparkEntry.queries.size} known)"))
@@ -56,24 +42,11 @@ object Probe {
           txt.getBytes(StandardCharsets.UTF_8))
       }
       val times = (1 to reps).map { i =>
-        spark.sparkContext.setJobDescription(s"$name rep $i")
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).count() catch { case e: Throwable =>
-          failed += name
-          System.err.println(s"[probe] $name rep $i failed: ${e.getMessage}")
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
+        val dt = run.time(name, s"rep $i")(fn(spark, sfDir).count())
         println(f"[probe] $name%-28s rep $i%2d  $dt%8.3f s")
         dt
       }
-      spark.sparkContext.setJobDescription(s"$name noop")
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        failed += name
-        System.err.println(s"[probe] $name noop failed: ${e.getMessage}")
-      }
-      val noop = (System.nanoTime() - t0) / 1e9
+      val noop = run.time(name, "noop")(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
       println(f"[probe] $name%-28s noop    $noop%8.3f s")
       val sorted = times.sorted
       (name, sorted(sorted.size / 2), times.head, noop)
@@ -82,8 +55,8 @@ object Probe {
     summaries.foreach { case (n, med, first, noop) =>
       println(f"[probe] $n%-28s med $med%8.3f  first $first%8.3f  noop $noop%8.3f")
     }
-    println(s"[probe] failed: ${failed.mkString("[", ", ", "]")}")
+    println(s"[probe] failed: ${run.failed.mkString("[", ", ", "]")}")
     spark.stop()
-    if (failed.nonEmpty) sys.exit(1)
+    sys.exit(Harness.exitCode(run.failed))
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Skew-bench evidence harness: measures the hot-bucket guard of the
@@ -32,49 +31,8 @@ object SkewBench {
 
   private val Unguarded = 1 << 29
 
-  /** Longest single task observed between resets — the straggler
-    * metric. local[32] wall-clock hides hot-task serialization (a
-    * single local task still streams shuffle rows at memory speed, and
-    * the shared final-agg shuffle dominates either way); on a
-    * 1000-executor cluster the stage clock IS its slowest task, so the
-    * guard's claim is "max task time bounded", not "local wall-clock
-    * lower". */
-  private final class MaxTaskListener extends org.apache.spark.scheduler.SparkListener {
-    @volatile var maxMillis: Long = 0L
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      if (te.taskInfo != null) {
-        val d = te.taskInfo.duration
-        if (d > maxMillis) maxMillis = d
-      }
-  }
-
-  /** Times each labelled thunk 3 times, INTERLEAVED round-robin (a
-    * full round of all variants, three times over) so slow JVM/page-
-    * cache/GC drift lands on every variant equally instead of biasing
-    * whichever block ran last; returns per-label
-    * (median wall sec, median max-task sec, rows). */
-  private def median3(spark: SparkSession, variants: Seq[(String, () => Long)])
-      : Seq[(String, (Double, Double, Long))] = {
-    val listener = new MaxTaskListener
-    spark.sparkContext.addSparkListener(listener)
-    val runs = (1 to 3).flatMap { _ =>
-      variants.map { case (label, f) =>
-        listener.maxMillis = 0L
-        val t0 = System.nanoTime()
-        val n = f()
-        val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(500)   // let straggler TaskEnd events drain
-        (label, wall, listener.maxMillis / 1e3, n)
-      }
-    }
-    variants.map { case (label, _) =>
-      val mine = runs.filter(_._1 == label)
-      label -> (mine.map(_._2).sorted.apply(1), mine.map(_._3).sorted.apply(1), mine.head._4)
-    }
-  }
-
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Harness.cpus
     val dir = sys.env.getOrElse("SPARK_GRAFT_SKEW_DIR", "/tmp/graft_skew")
     // 256 shuffle partitions, NOT the Bench default of `cpus`: this
     // harness models a cluster, where partition-uniform stages (the
@@ -83,12 +41,7 @@ object SkewBench {
     // partitions the uniform agg is 6M rows/task and masks the hot
     // task; at 256 the uniform stages are bounded and what remains as
     // max-task is exactly the skew the guard exists to cut.
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", 256)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cpus, Map("spark.sql.shuffle.partitions" -> "256"))
     import spark.implicits._
 
     // stop-gram corpus: 24k docs, 20000 share the gram "h1 h2 h3"
@@ -243,14 +196,14 @@ object SkewBench {
     // labels containing "ngram" (for quick one-variant measurements)
     val picked = if (args.isEmpty) all
                  else all.filter { case (l, _) => args.exists(l.contains) }
-    val results = median3(spark, picked)
+    val results = Harness.median3(spark, picked)
 
     // guarded and unguarded plans must agree before timings mean anything
     val byLabel = results.toMap
     Seq("ngram", "jaccp", "minhash", "simhash", "srp_batch", "contain").foreach { fam =>
       (byLabel.get(s"${fam}_guarded"), byLabel.get(s"${fam}_unguarded")) match {
         case (Some(g), Some(u)) =>
-          require(g._3 == u._3, s"$fam pair counts diverged")
+          require(g.rows == u.rows, s"$fam pair counts diverged")
         case _ => ()
       }
     }
@@ -258,14 +211,14 @@ object SkewBench {
     // inverted-index path's on the same corpus and threshold
     (byLabel.get("ngram_guarded"), byLabel.get("jaccp_guarded")) match {
       case (Some(g), Some(p)) =>
-        require(g._3 == p._3,
-          s"prefix-filter pair count ${p._3} != inverted-index ${g._3}")
+        require(g.rows == p.rows,
+          s"prefix-filter pair count ${p.rows} != inverted-index ${g.rows}")
       case _ => ()
     }
 
-    val js = results.map { case (k, (sec, maxTask, n)) =>
-      s""""$k":{"sec":${math.round(sec * 1000) / 1000.0},""" +
-        s""""max_task_sec":${math.round(maxTask * 1000) / 1000.0},"rows":$n}"""
+    val js = results.map { case (k, r) =>
+      s""""$k":{"sec":${math.round(r.sec * 1000) / 1000.0},""" +
+        s""""max_task_sec":${math.round(r.maxTaskSec * 1000) / 1000.0},"rows":${r.rows}}"""
     }.mkString("{", ",", "}")
     println(s"""{"bench":"skew","cpus":$cpus,"results":$js}""")
     spark.stop()

@@ -34,7 +34,7 @@ import scala.util.Using
   * as the planner should choose. At cluster scale this is the
   * ordinary "write the shared table once, read it N times" pattern
   * (a real pipeline would point it at the warehouse instead of
-  * java.io.tmpdir). localCheckpoint remains correct ONLY for
+  * Spark's local dirs). localCheckpoint remains correct ONLY for
   * iterative-loop lineage truncation (pageRank/kcore/BFS/CC), where
   * the checkpointed side is metadata-scale and re-planned each round.
   *
@@ -197,6 +197,14 @@ object TempTables {
     building.forEach(p => deleteRecursively(p))
   }))
 
+  /** Where the `graft_tt_*` dirs go: the first of the session's Spark
+    * local dirs (`SPARK_LOCAL_DIRS`, else `spark.local.dir`, Spark's
+    * own precedence), the scratch space a deployment puts on its fast
+    * disks; None, meaning `java.io.tmpdir`, when neither is set. */
+  private def localDir(s: SparkSession): Option[java.nio.file.Path] =
+    sys.env.get("SPARK_LOCAL_DIRS").orElse(s.sparkContext.getConf.getOption("spark.local.dir"))
+      .flatMap(_.split(",").map(_.trim).find(_.nonEmpty)).map(Paths.get(_))
+
   /** Build-once shared table. The first call per key (see the object
     * scaladoc) runs `build`, writes the result to a temp parquet dir,
     * and every call — the first included — returns a fresh
@@ -232,7 +240,10 @@ object TempTables {
         // dir sits in `building` while unowned so a racing loser — or a
         // crash mid-build — still gets swept at shutdown instead of
         // leaking
-        val p = Files.createTempDirectory("graft_tt_").toString
+        val p = (localDir(s) match {
+          case Some(d) => Files.createTempDirectory(Files.createDirectories(d), "graft_tt_")
+          case None    => Files.createTempDirectory("graft_tt_")
+        }).toString
         building.add(p)
         val schema = timedBuild(name, p) {
           val built = build

@@ -7,26 +7,12 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // bounded status-store retention — see Bench.scala: the dump
-      // runs all 213 queries in one session and the default 1000-job/
-      // 100k-task bookkeeping is pure driver-heap drag on the tail
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "5000")
-      .config("spark.sql.ui.retainedExecutions", "20")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val failed = dump(spark, sfDir, outDir)
     println(s"[verify] ${SparkEntry.queries.size - failed.size}/${SparkEntry.queries.size} " +
       s"written; failed: ${failed.mkString("[", ", ", "]")}")
     spark.stop()
-    if (failed.nonEmpty) sys.exit(1)
+    sys.exit(Harness.exitCode(failed))
   }
 
   /** The dump body, callable from tests without stopping the session.
@@ -34,14 +20,9 @@ object Verify {
     * are missing). */
   def dump(spark: SparkSession, sfDir: String, outDir: String): Seq[String] = {
     new java.io.File(outDir).mkdirs()
-    val failed = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
-      try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        None
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        Some(name)
-      }
+    val run = new Harness.Runner(spark, "verify")
+    SparkEntry.queries.foreach { case (name, fn) =>
+      run.time(name)(fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -58,6 +39,6 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    failed
+    run.failed.toSeq
   }
 }

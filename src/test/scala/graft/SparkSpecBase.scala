@@ -8,20 +8,10 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 /** Shared local SparkSession for all suites (one forked test JVM, so
-  * one session serves every spec; mirrors the harness config —
-  * local[4], UTC, shuffle.partitions=4). */
+  * one session serves every spec): the harness session pinned to
+  * local[4], whatever SPARK_GRAFT_CPUS says. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Harness.session(cpus = 4)
   val sf0001 = "/root/testdata/sf0.001"
 }
 

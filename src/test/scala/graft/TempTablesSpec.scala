@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
 /** The build-once temp-parquet table that every shared intermediate in
@@ -14,9 +14,16 @@ import java.util.concurrent.atomic.AtomicInteger
   * one-build-per-intermediate sharing across the n-gram dedup queries. */
 class TempTablesSpec extends SparkSpecBase {
 
+  /** The dir TempTables builds under: the first configured Spark local
+    * dir (`SPARK_LOCAL_DIRS`, else `spark.local.dir`), else
+    * java.io.tmpdir. */
+  private def tableRoot: Path = Paths.get(sys.env.get("SPARK_LOCAL_DIRS")
+    .orElse(spark.sparkContext.getConf.getOption("spark.local.dir"))
+    .flatMap(_.split(",").map(_.trim).find(_.nonEmpty))
+    .getOrElse(System.getProperty("java.io.tmpdir")))
+
   private def tmpDirs(prefix: String): Set[String] = {
-    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
-    val s = Files.list(tmp)
+    val s = Files.list(tableRoot)
     try {
       val b = Set.newBuilder[String]
       s.forEach(p => if (p.getFileName.toString.startsWith(prefix)) b += p.toString)
@@ -81,6 +88,16 @@ class TempTablesSpec extends SparkSpecBase {
     assert(builds.get() >= 1)
     assert((after -- before).size == 1,
       s"expected exactly one surviving dir, got ${(after -- before).size}")
+  }
+
+  test("shared: a fresh table's files lie under the first Spark local dir") {
+    val t = TempTables.shared("tts_spec_local_dir", spark.range(7).toDF("local_id"))()
+    val files = t.inputFiles.toSeq.map(f => Paths.get(new java.net.URI(f)))
+    val root = tableRoot.toAbsolutePath.normalize
+    assert(files.nonEmpty)
+    assert(files.forall(f => f.startsWith(root) &&
+      root.relativize(f).getName(0).toString.startsWith("graft_tt_")),
+      s"table files $files are not in a graft_tt_ dir under $root")
   }
 
   test("shared: an input rewritten in place under a live session rebuilds") {
