@@ -4456,32 +4456,33 @@ object Graft {
     semanticVerdictsFromPairs(pairs, e.select(col("doc_id"), col("q")))
   }
 
-  /** The verdict aggregate shared by the exact and IVF semantic-dedup
-    * paths: orient each unordered pair both ways, join quality on both
-    * endpoints, and fold per document — n_dups = neighbor count,
-    * dropped = 1 iff any neighbor wins (quality DESC, id ASC).
-    * Both orientations come from ONE explode (a generator over a
-    * single evaluation of the pair subtree), not a unionAll of two
-    * selects — a union's branches each re-plan and re-execute the
-    * pair kernel, which is why the pre-round-17 form had to write the
-    * pair list to temp parquet first; the generator form needs
-    * neither the double evaluation nor the write. */
+  /** The verdicts of the exact and IVF semantic-dedup paths: orient
+    * each unordered pair both ways, join quality on both endpoints, and
+    * fold per document ([[dominanceVerdicts]]). Both orientations come
+    * from ONE explode, a generator over a single evaluation of the
+    * pair subtree: a unionAll of two selects would re-plan and
+    * re-execute the pair kernel once per branch. */
   private def semanticVerdictsFromPairs(pairs: DataFrame,
                                         qual: DataFrame): DataFrame = {
     val dir = pairs.select(explode(array(
         struct(col("vec_a").as("doc_id"), col("vec_b").as("nb")),
         struct(col("vec_b").as("doc_id"), col("vec_a").as("nb")))).as("__e"))
       .select(col("__e.doc_id").as("doc_id"), col("__e.nb").as("nb"))
-    dir.join(qual, "doc_id")
-      .join(qual.select(col("doc_id").as("nb"), col("q").as("nq")), "nb")
-      .groupBy("doc_id", "q")
+    dominanceVerdicts(dir.join(qual, "doc_id")
+      .join(qual.select(col("doc_id").as("nb"), col("q").as("nq")), "nb"))
+  }
+
+  /** One verdict row per document of its (doc_id, q, nb, nq) neighbor
+    * rows: n_dups = the neighbor count, dropped = 1 iff some neighbor
+    * dominates under the (quality DESC, id ASC) total order. */
+  private def dominanceVerdicts(neighbors: DataFrame): DataFrame =
+    neighbors.groupBy("doc_id", "q")
       .agg(count(lit(1)).as("n_dups"),
            max(when(col("nq") > col("q") ||
                     (col("nq") === col("q") && col("nb") < col("doc_id")),
                     1L).otherwise(0L)).as("dropped"))
       .select(col("doc_id"), col("q").as("quality"),
               col("n_dups"), col("dropped"))
-  }
 
   /** The 100 TB path of [[semanticDupVerdicts]] — SemDeDup proper:
     * k-means cluster the corpus ([[ivfTrain]] — deterministic id-hash
@@ -4504,11 +4505,9 @@ object Graft {
       s"tauPermille must be in [0, 1000], got $tauPermille")
     val e = vecs.select(id.cast("long").as("doc_id"), vec.as("v"),
                         quality.cast("long").as("q"))
-    // `centroids` = a STANDING pre-trained quantizer (the "persist
-    // the model table once" posture — nobody re-runs Lloyd per query
-    // at 100 TB; train once via [[ivfTrain]], persist, pass it to
-    // every consumer). None keeps the self-contained train-then-pair
-    // behavior for ad-hoc calls.
+    // `centroids` = a standing pre-trained quantizer (train once via
+    // [[ivfTrain]], persist, pass it to every consumer); None trains
+    // one for this call
     val cents = centroids.getOrElse(
       ivfTrain(e, col("doc_id"), col("v"), k, iters, sampleFraction))
     val cells = ivfAssign(cents, e.select(col("doc_id"), col("v")), col("v"))
@@ -4519,30 +4518,22 @@ object Graft {
               round(functions.GraftFunctions.dot(col("v_a"), col("v_b")), 3)
                 .as("cosine"))
       // integer-permille threshold, matching the exact kernel's
-      // math.round compare (round-12 review): `cosine * 1000 >= τ` on
-      // doubles loses exact-boundary pairs for some τ (0.29·1000 =
-      // 289.999…94 < 290), which would violate the "within-cell pairs
-      // are scored exactly" contract — recall loss must come ONLY
-      // from cell straddling. NO cast to long (review ×2): round()
-      // yields an exactly-integral double (< 2^53), so the double-int
-      // compare is exact, while an ANSI cast would throw on a NaN
-      // cosine (non-finite caller vectors) where the exact kernel
-      // silently excludes the pair.
+      // math.round compare: `cosine * 1000 >= τ` on doubles loses
+      // exact-boundary pairs for some τ (0.29·1000 = 289.999…94 <
+      // 290), and recall loss must come ONLY from cell straddling. No
+      // cast to long: round() yields an exactly-integral double
+      // (< 2^53), so the compare is exact, while an ANSI cast would
+      // throw on a NaN cosine where the exact kernel excludes the pair
       .filter(round(col("cosine") * 1000, 0) >= tauPermille)
-    // no temp-parquet round trip (round 17): semanticVerdictsFromPairs
-    // consumes the pair stream through ONE generator explode, so the
-    // cell-blocked scoring subtree executes exactly once per action
-    // with no pair-set write — at 100 TB that is a full pair-scale
-    // parquet write removed from every run
     semanticVerdictsFromPairs(scored, e.select(col("doc_id"), col("q")))
   }
 
-  /** INCREMENTAL semantic dedup (round 13 — the per-ingest face of
-    * [[semanticDupVerdictsIvf]], completing the family the way
-    * [[nearDupPairsNgramAgainst]]/[[nearDupPairsMinhashAgainst]]
-    * complete theirs): a NEW BATCH of vectors is screened against a
-    * STANDING corpus under a STANDING trained quantizer, without
-    * re-running Lloyd or re-pairing the corpus against itself. Both
+  /** INCREMENTAL semantic dedup, the per-ingest face of
+    * [[semanticDupVerdictsIvf]] (as [[nearDupPairsNgramAgainst]] and
+    * [[nearDupPairsMinhashAgainst]] are of theirs): a NEW BATCH of
+    * vectors is screened against a STANDING corpus under a STANDING
+    * trained quantizer, without re-running Lloyd or re-pairing the
+    * corpus against itself. Both
     * sides take their cell from the same broadcast `centroids` model
     * ([[ivfTrain]] output — the "persist the model table once"
     * posture), candidates meet ONLY within a cell via
@@ -4588,7 +4579,7 @@ object Graft {
       .select(col("cell"), col("doc_id"), col("bv"), col("q"))
     val cCells = ivfAssign(centroids, c, col("cv"))
       .select(col("cell"), col("nb"), col("cv"), col("nq"))
-    operators.SkewJoin
+    dominanceVerdicts(operators.SkewJoin
       .blockedBipartiteJoin(cCells, "nb", bCells, Seq("cell"), maxBucket)
       .filter(col("doc_id") =!= col("nb"))
       .select(col("doc_id"), col("q"), col("nb"), col("nq"),
@@ -4596,14 +4587,7 @@ object Graft {
                 .as("cosine"))
       // integer-permille compare on the exactly-integral rounded
       // double — the semanticDupVerdictsIvf boundary discipline
-      .filter(round(col("cosine") * 1000, 0) >= tauPermille)
-      .groupBy("doc_id", "q")
-      .agg(count(lit(1)).as("n_dups"),
-           max(when(col("nq") > col("q") ||
-                    (col("nq") === col("q") && col("nb") < col("doc_id")),
-                    1L).otherwise(0L)).as("dropped"))
-      .select(col("doc_id"), col("q").as("quality"),
-              col("n_dups"), col("dropped"))
+      .filter(round(col("cosine") * 1000, 0) >= tauPermille))
   }
 
   // ------------------------------------------------------------------
@@ -4686,27 +4670,11 @@ object Graft {
   }
 
   /** The centroid set folded into ONE row as an array<struct<cell,cv>>
-    * scalar — the broadcast shape nearest-centroid assignment wants:
-    * one row ships to every task and assignment becomes pure per-row
-    * arithmetic (no shuffle, no per-vector aggregate). */
+    * scalar `__cents`, the model [[functions.NearestCells]] ranks
+    * against: one row broadcasts to every task, so cell ranking is
+    * per-row arithmetic with no shuffle. */
   private def centroidArray(centroids: DataFrame): DataFrame =
     centroids.agg(collect_list(struct(col("cell"), col("cv"))).as("__cents"))
-
-  /** Row-local nearest-centroid id for vector `v` against the
-    * `__cents` scalar: array_min over (−dot, cell) structs = max
-    * affinity, ties to the smallest cell id — the same tie rule as a
-    * min_by aggregate, with zero shuffle. NULL on an empty centroid
-    * set or NULL vector. */
-  private def bestCell(v: Column): Column = bestCellIn(v, col("__cents"))
-
-  /** [[bestCell]] against an arbitrary centroid-array column — the
-    * shared argmax-dot kernel for both the broadcast-scalar form
-    * (query-time assignment) and the literal-embedded form (the
-    * training loop, where the k-row model lives on the driver). */
-  private def bestCellIn(v: Column, cents: Column): Column =
-    array_min(transform(cents,
-      c => struct(negate(functions.GraftFunctions.dot(v, c.getField("cv"))).as("na"),
-                  c.getField("cell").as("cell")))).getField("cell")
 
   /** Batch SRP kNN JOIN — for EVERY probe row, its `topk` nearest
     * corpus vectors among those within SRP-signature Hamming `radius`:
@@ -4828,24 +4796,21 @@ object Graft {
         "names (__-prefixed, probe_id); rename them before the call")
   }
 
-  /** Trains an IVF coarse quantizer over ANY (id, vec) DataFrame —
-    * TRAINING DECOUPLED FROM QUERYING: the returned (cell, cv)
-    * centroid DataFrame is a reusable model for any number of
-    * [[ivfSearch]] calls (persist or localCheckpoint it to train
-    * once). Initialization is Forgy on an opaque id hash (the k
-    * vectors with the smallest xxhash64(id) — deterministic,
-    * label-free); each of the `iters` Lloyd iterations is then ONE
-    * map-side-combinable job over the once-checkpointed training set:
-    * assignment is row-local argmax-dot against the LITERAL-embedded
-    * k-row model ([[bestCellIn]] — the model is bounded driver state,
-    * collected per round like logisticTrain's gradients, so no
-    * broadcast exchange and no per-round plan growth), recomputation a
-    * single `groupBy(cell).agg(`[[VecSum]]`)` element-wise mean.
-    * `sampleFraction` < 1 trains on a DETERMINISTIC id-hash sample —
-    * the at-100 TB posture, where centroid quality needs only a
-    * sample but assignment stays a single map-side pass over
-    * everything. Cells that lose all members are dropped (k may
-    * shrink). */
+  /** Trains an IVF coarse quantizer over ANY (id, vec) DataFrame. The
+    * returned (cell, cv) centroid DataFrame is a reusable model for any
+    * number of [[ivfAssign]] / [[ivfSearch]] calls (persist it to train
+    * once). Initialization is Forgy on an opaque id hash (the k vectors
+    * with the smallest xxhash64(id), which become the cell ids); each
+    * of the `iters` Lloyd iterations is ONE map-side-combinable job
+    * over the once-checkpointed training set: assignment ranks against
+    * the k-row model embedded as a literal
+    * ([[functions.NearestCells]]), recomputation is one
+    * `groupBy(cell).agg(`[[VecSum]]`)` element-wise mean. The model is
+    * bounded driver state, sorted by cell id, so the trajectory is
+    * deterministic up to float summation order. `sampleFraction` < 1
+    * trains on a deterministic id-hash sample; assignment stays one
+    * map-side pass over everything. Cells that lose all members are
+    * dropped (k may shrink). */
   def ivfTrain(vecs: DataFrame, id: Column, vec: Column, k: Int,
                iters: Int = 3, sampleFraction: Double = 1.0): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
@@ -4858,60 +4823,22 @@ object Graft {
       base.filter(pmod(col("__h"), lit(1000000L)) <
         math.round(sampleFraction * 1000000).toLong)
     else base
-    // plan-cut the training set ONCE before the loop (the
-    // topPrincipalComponent posture: one materialization for iters+1
-    // passes). Without it every Lloyd round's plan embeds the caller's
-    // full source subtree — and because each round also referenced the
-    // previous round's centroids through a broadcast, the rounds
-    // NESTED: round i's analysis re-optimized rounds 1..i-1's trees
-    // inside its broadcast subplan, the driver-side many-small-jobs
-    // amplification the CC loop graduated from (round-16 verdict #1;
-    // BENCH_r16 semivf_model_full 6.47 s SELF for a 16×64-double
-    // model). MEMORY_AND_DISK blocks, so an un-sampled train spills
-    // rather than OOMs; at real scale `sampleFraction` keeps this
-    // bounded — centroid quality needs only a sample.
+    // one materialization for the iters+1 passes: each round's plan
+    // reads the checkpoint, not the caller's source subtree
     val spark = vecs.sparkSession
     import spark.implicits._
     val train = if (iters > 0) raw.localCheckpoint() else raw
-    // The model is BOUNDED DRIVER STATE (k rows × dim doubles — the
-    // logisticTrain / topPrincipalComponent model-scalar pattern), so
-    // each Lloyd round collects the k updated centroids and embeds
-    // them as a LITERAL in the next round's row-local argmax: exactly
-    // ONE map-side-combinable job per round, no broadcast exchange, no
-    // per-round plan growth. Sorted by cell id so the literal — and
-    // with it the whole training trajectory — is deterministic up to
-    // float summation order.
-    // UNROLLED codegen argmax (round 18): the k centroids are embedded
-    // as k (−dot, cell) struct columns under ONE `least(...)` — every
-    // piece (DotProduct, struct compare, least) is whole-stage-codegen,
-    // where the previous array-literal + transform/array_min HOF form
-    // fell back to interpreted eval for the entire argmax subtree
-    // (HOFs are CodegenFallback) AND recompiled a fresh plan per
-    // round. Semantics are identical to array_min over the same
-    // structs: least() is the same TypeUtils struct ordering, there
-    // are no NULL operands (cents is non-empty, __v non-null), ties
-    // break to the smaller cell id via the second struct field.
-    def centsBest(v: Column, cents: Seq[(Long, Seq[Double])]): Column = {
-      val structs = cents.map { case (cell, cv) =>
-        struct(negate(functions.GraftFunctions.dot(v, typedLit(cv))).as("na"),
-               lit(cell).as("cell")) }
-      (if (structs.size == 1) structs.head else least(structs: _*))
-        .getField("cell")
-    }
     var cents: Seq[(Long, Seq[Double])] = train.orderBy("__h").limit(k)
       .select(col("__h").as("cell"), col("__v").as("cv"))
-      .collect().toSeq
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-      .sortBy(_._1)
+      .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
     for (_ <- 1 to iters if cents.nonEmpty) {
       cents = train
-        .select(centsBest(col("__v"), cents).as("cell"), col("__v"))
+        .select(functions.NearestCells.cells(col("__v"), typedLit(cents), 1).getItem(0).as("cell"),
+                col("__v"))
         .groupBy("cell")
         .agg(udaf(VecSum.agg).apply(col("__v")).as("sv"), count(lit(1)).as("n"))
         .select(col("cell"), transform(col("sv"), x => x / col("n")).as("cv"))
-        .collect().toSeq
-        .map(r => (r.getLong(0), r.getSeq[Double](1)))
-        .sortBy(_._1)
+        .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
     }
     cents.toDF("cell", "cv")
   }
@@ -4984,45 +4911,33 @@ object Graft {
       .withColumn("var_permille", lit(varPermille))
   }
 
-  /** Nearest-trained-centroid cell id for EVERY row of `vecs` — the
-    * assignment half of IVF as a standalone op: row-local argmax-dot
-    * against the broadcast centroid-array scalar, a pure map with zero
-    * shuffle at any corpus size. Appends `cellCol` (NULL on a NULL
-    * vector or an empty model). This is also the partition-key
-    * producer for cell-clustered layouts: `ivfAssign(...).write
-    * .partitionBy(cellCol)` materializes the inverted file itself. */
+  /** Nearest-centroid cell id for EVERY row of `vecs`, the assignment
+    * half of IVF as a standalone op: row-local
+    * [[functions.NearestCells]] against the broadcast centroid-array
+    * scalar, a pure map with no shuffle at any corpus size. Appends
+    * `cellCol`, NULL on a NULL vector or an empty model. This is also
+    * the partition key of a cell-clustered layout:
+    * `ivfAssign(...).write.partitionBy(cellCol)` materializes the
+    * inverted file itself. */
   def ivfAssign(centroids: DataFrame, vecs: DataFrame, vec: Column,
                 cellCol: String = "cell"): DataFrame =
-    vecs.withColumn("__v", vec)
-      .crossJoin(broadcast(centroidArray(centroids)))
-      .withColumn(cellCol, bestCell(col("__v")))
-      .drop("__v", "__cents")
-
-  /** The `nprobe` highest-affinity cells for vector `v` against the
-    * `__cents` scalar, as an array — row-local (sort the ≤ |cells|
-    * (−dot, cell) structs, slice, project the cell ids): the per-probe
-    * cell ranking of a BATCH kNN join needs no window and no
-    * shuffle. */
-  private def bestCells(v: Column, nprobe: Int): Column =
-    transform(
-      slice(array_sort(transform(col("__cents"),
-        c => struct(negate(functions.GraftFunctions.dot(v, c.getField("cv"))).as("na"),
-                    c.getField("cell").as("cell")))), 1, nprobe),
-      s => s.getField("cell"))
+    vecs.crossJoin(broadcast(centroidArray(centroids)))
+      .withColumn(cellCol, functions.NearestCells.cells(vec, col("__cents"), 1).getItem(0))
+      .drop("__cents")
 
   /** Batch IVF kNN JOIN — for EVERY probe row, its `topk` nearest
     * corpus vectors: the production shape of similarity search in a
     * training pipeline ("for each document, its k nearest"), where the
     * single-probe [[ivfSearch]] is the interactive case. Execution is
-    * the INVERTED-FILE EQUI-JOIN: corpus vectors get their cell by the
-    * row-local broadcast-array argmax (zero shuffle), each probe
-    * row-locally ranks cells and explodes to its `nprobe` best
-    * ([[bestCells]] — no window), and candidates meet in ONE shuffle
-    * equi-join on cell — work ∝ Σ probes×cell sizes, never
-    * probes×corpus. The per-probe top-k is the bounded [[TopK]]
-    * PARTIAL AGGREGATE (the [[knnJoinExact]] kernel): ≤ topk rows per
-    * probe leave each map task, so a hot probe never concentrates its
-    * candidate cells in one window-sort task; the caller's corpus
+    * the INVERTED-FILE EQUI-JOIN: corpus vectors take their cell from
+    * [[ivfAssign]], each probe explodes to its `nprobe` nearest cells
+    * ([[functions.NearestCells]], row-local, no window), and
+    * candidates meet in ONE shuffle equi-join on cell — work ∝ Σ
+    * probes×cell sizes, never probes×corpus. The per-probe top-k is
+    * the bounded [[TopK]] PARTIAL AGGREGATE (the [[knnJoinExact]]
+    * kernel): ≤ topk rows per probe leave each map task, so a hot
+    * probe never concentrates its candidate cells in one window-sort
+    * task; the caller's corpus
     * columns re-attach to the ≤ topk·|probes| survivors in one final
     * equi-join. Returns `probe_id` + vecs' columns + `score` by
     * (HALF_UP-3 rounded score DESC, id ASC) per probe; with nprobe >=
@@ -5041,14 +4956,13 @@ object Graft {
     require(topk > 0, s"topk must be positive, got $topk")
     require(maxBucket >= 2, s"maxBucket must be >= 2, got $maxBucket")
     requireNoReserved(vecs, "ivfSearchAll vecs")
-    val assigned = vecs.select(id.cast("long").as("__cid"), vec.as("__v"))
-      .filter(col("__cid").isNotNull)
-      .crossJoin(broadcast(centroidArray(centroids)))
-      .select(col("__cid"), col("__v"), bestCell(col("__v")).as("__cell"))
+    val assigned = ivfAssign(centroids,
+      vecs.select(id.cast("long").as("__cid"), vec.as("__v")).filter(col("__cid").isNotNull),
+      col("__v"), "__cell")
     val probed = probes.select(probeId.as("probe_id"), probeVec.as("__pv"))
       .crossJoin(broadcast(centroidArray(centroids)))
       .select(col("probe_id"), col("__pv"),
-              explode(bestCells(col("__pv"), nprobe)).as("__cell"))
+              explode(functions.NearestCells.cells(col("__pv"), col("__cents"), nprobe)).as("__cell"))
     val topAgg = udaf(TopK.agg(topk))
     // same small-probes-broadcast / corpus-scale-probes block-guard
     // trade as srpSearchAll: a hot IVF cell (imbalanced clustering)
@@ -5071,35 +4985,27 @@ object Graft {
       .select(col("probe_id") +: cols.map(col) :+ col("score"): _*)
   }
 
-  /** IVF approximate nearest neighbor: assign every vector to its
-    * nearest trained centroid (row-local argmax against the broadcast
-    * centroid-array scalar — a pure map, no shuffle), rank cells by
-    * probe affinity, search the best `nprobe` cells exhaustively —
-    * scan cost ~nprobe/k of brute force, and with nprobe >= |cells|
-    * the result IS the brute-force top-k. `centroids` comes from
-    * [[ivfTrain]] (train once, search many). Returns vecs' columns +
-    * `score` by (HALF_UP-3 rounded score DESC, id ASC); `probe` is
-    * single-row. */
+  /** IVF approximate nearest neighbor for a single-row `probe`: every
+    * vector takes its cell from [[ivfAssign]], the probe explodes to
+    * its `nprobe` nearest cells ([[functions.NearestCells]], the
+    * [[ivfSearchAll]] probe side), and those cells are searched
+    * exhaustively — scan cost ~nprobe/k of brute force, and with
+    * nprobe >= |cells| the result IS the brute-force top-k.
+    * `centroids` comes from [[ivfTrain]] (train once, search many).
+    * Returns vecs' columns + `score` by (HALF_UP-3 rounded score DESC,
+    * id ASC). */
   def ivfSearch(centroids: DataFrame, vecs: DataFrame, id: Column, vec: Column,
                 probe: DataFrame, probeVec: Column,
                 nprobe: Int = 3, topk: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(nprobe > 0, s"nprobe must be positive, got $nprobe")
     require(topk > 0, s"topk must be positive, got $topk")
     val cols = vecs.columns
-    val assigned = vecs.withColumn("__v", vec)
+    val assigned = ivfAssign(centroids, vecs.withColumn("__v", vec), col("__v"), "__cell")
+    val probed = probe.select(probeVec.as("__pv"))
       .crossJoin(broadcast(centroidArray(centroids)))
-      .withColumn("__cell", bestCell(col("__v")))
-    val pv = probe.select(probeVec.as("__pv"))
-    // rank the <= k cells by probe affinity (tiny global window)
-    val wCells = Window.orderBy(col("__affinity").desc, col("cell").asc)
-    val probed = centroids.crossJoin(broadcast(pv))
-      .select(col("cell"), functions.GraftFunctions.dot(col("cv"), col("__pv")).as("__affinity"))
-      .select(col("cell").as("__cell"), row_number().over(wCells).as("__rk"))
-      .filter(col("__rk") <= nprobe)
-      .select("__cell")
+      .select(col("__pv"),
+              explode(functions.NearestCells.cells(col("__pv"), col("__cents"), nprobe)).as("__cell"))
     assigned.join(broadcast(probed), "__cell")
-      .crossJoin(broadcast(pv))
       .select(cols.map(col) :+
         round(functions.GraftFunctions.dot(col("__v"), col("__pv")), 3).as("score"): _*)
       .orderBy(col("score").desc, id.asc)

@@ -1,13 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, DoubleType}
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** Native Catalyst dot-product over two array<double> columns — the
   * SURVEY §4.3 stretch goal: a codegen'd `Expression` replacing the
@@ -25,15 +23,8 @@ case class DotProduct(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_dot"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0.0
-    var i = 0
-    while (i < n) { acc += x.getDouble(i) * y.getDouble(i); i += 1 }
-    acc
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    DotProduct.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (x, y) => {
@@ -52,31 +43,28 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+object DotProduct {
+  /** The dot of `x` and `y` over their shorter length, summed in index
+    * order: the interpreted path, and the score [[NearestCells]] ranks
+    * by. The generated code above is the same loop. */
+  def dot(x: ArrayData, y: ArrayData): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var acc = 0.0
+    var i = 0
+    while (i < n) { acc += x.getDouble(i) * y.getDouble(i); i += 1 }
+    acc
+  }
+}
+
 object GraftFunctions {
   /** Column API for [[DotProduct]]. */
   def dot(a: Column, b: Column): Column =
     Bridge.column(DotProduct(Bridge.expression(a), Bridge.expression(b)))
 
-  private val info =
-    new ExpressionInfo(classOf[DotProduct].getName, "graft_dot")
-
   /** Runtime SQL registration: makes `graft_dot(a, b)` callable from
-    * `spark.sql` in harness-built sessions (which don't pass
-    * spark.sql.extensions). Idempotent. */
+    * `spark.sql` in this session. Idempotent. */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "graft_dot", (exprs: Seq[Expression]) => DotProduct(exprs.head, exprs(1)),
       "built-in")
-}
-
-/** `spark.sql.extensions`-style registration (the idiomatic deployment
-  * path: `--conf spark.sql.extensions=graft.functions.GraftSparkExtensions`). */
-class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => DotProduct(exprs.head, exprs(1))))
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-  }
 }

@@ -4,8 +4,8 @@ import graft.functions.{DotProduct, GraftFunctions}
 import org.apache.spark.sql.functions._
 
 /** Native DotProduct expression: correctness vs the higher-order-fn
-  * form, null handling, codegen (no interpreted fallback), and the two
-  * registration paths (§2.11/§4.3). */
+  * form, null handling, codegen (no interpreted fallback), and runtime
+  * SQL registration (§2.11/§4.3). */
 class DotProductSpec extends SparkSpecBase {
   import spark.implicits._
 

@@ -603,6 +603,15 @@ class GraftSpec extends SparkSpecBase {
     }
   }
 
+  test("ivfAssign: a NULL vector or an empty model gets a NULL cell") {
+    val vecs = Seq((1L, Some(Seq(0.0, 1.0))), (2L, None)).toDF("id", "v")
+    val model = Seq((3L, Seq(1.0, 0.0)), (7L, Seq(0.0, 1.0))).toDF("cell", "cv")
+    def cells(m: org.apache.spark.sql.DataFrame) =
+      rows(Graft.ivfAssign(m, vecs, $"v").select("id", "cell").orderBy("id"))
+    assert(cells(model) == Seq(Seq(1L, 7L), Seq(2L, null)))
+    assert(cells(model.limit(0)) == Seq(Seq(1L, null), Seq(2L, null)))
+  }
+
   test("ANN facades on empty inputs return empty, never fault") {
     val noVecs = Seq.empty[(Long, Array[Double])].toDF("id", "v")
     val probe = Tables.embeddings(spark, sf)

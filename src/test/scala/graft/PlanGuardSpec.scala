@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
@@ -124,7 +126,7 @@ class PlanGuardSpec extends SparkSpecBase {
   // q_pr_curve prefix-sums the ≤10-row score-decile table (the
   // q_quality_auc collapse — the corpus shrinks in a map-side
   // aggregate BEFORE any window)
-  private val allowedGlobalWindow = Set("q_topk_global", "q_sim_ivf",
+  private val allowedGlobalWindow = Set("q_topk_global",
     "q_hybrid_rrf", "q_quality_auc", "q_token_budget", "q_quality_eval",
     "q_pr_curve")
 
@@ -341,7 +343,12 @@ class PlanGuardSpec extends SparkSpecBase {
     // output sort as the one visible exchange)
     "q_media_audio_fp" -> 8,
     "q_span_shard_loss" -> 6,
-    "q_dedup_sorted" -> 1)
+    "q_dedup_sorted" -> 1,
+    // the IVF pair: the centroid-array aggregate's single-partition
+    // exchange (reused by q_sim_ivf's probe side) and q_ivf_build's
+    // per-cell count
+    "q_ivf_build" -> 2,
+    "q_sim_ivf" -> 1)
 
   /** The prepared plan (executedPlan with AQE off) of a declared query. */
   private def preparedPlan(name: String): SparkPlan = {
@@ -350,6 +357,17 @@ class PlanGuardSpec extends SparkSpecBase {
     spark.conf.set(key, "false")
     try SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan
     finally spark.conf.set(key, prev)
+  }
+
+  test("IVF plans rank cells in generated code: no interpreted expression") {
+    // aggregate functions (the VecSum / TopK Aggregators) are exempt:
+    // every ImperativeAggregate is a CodegenFallback
+    for (name <- Seq("q_ivf_build", "q_sim_ivf", "q_dedup_semantic_ivf", "q_dedup_semantic_inc")) {
+      val fallback = preparedPlan(name).flatMap(_.expressions.flatMap(_.collect {
+        case e: CodegenFallback if !e.isInstanceOf[AggregateFunction] => e
+      }))
+      assert(fallback.isEmpty, s"$name evaluates ${fallback.map(_.prettyName).distinct} interpreted")
+    }
   }
 
   test("q_vocab_overlap reads the corpus once — the distinct subtree is reused") {
