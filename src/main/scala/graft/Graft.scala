@@ -2668,13 +2668,7 @@ object Graft {
     * supply (PlanGuardSpec's stats-loss guard). At real cluster
     * scale the same write targets the warehouse. */
   def triangleStats(edges: DataFrame, maxBucket: Int = 4096): DataFrame = {
-    val e = TempTables.shared("tri_edges",
-      edges
-        .select(col(edges.columns(0)).cast("long").as("a"),
-                col(edges.columns(1)).cast("long").as("b"))
-        .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-        .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-        .distinct())()
+    val e = TempTables.shared("tri_edges", operators.Fixpoint.undirectedEdges(edges))()
     val deg = e.select(explode(array(col("a"), col("b"))).as("v"))
       .groupBy("v").agg(count(lit(1)).as("deg"))
     val oriented = e
@@ -2721,12 +2715,7 @@ object Graft {
   def pageRank(edges: DataFrame, iters: Int = 10, damping: Double = 0.85): DataFrame = {
     require(iters >= 1 && iters <= 100, s"iters must be in [1, 100], got $iters")
     require(damping > 0 && damping < 1, s"damping must be in (0, 1), got $damping")
-    val e = edges
-      .select(col(edges.columns(0)).cast("long").as("a"),
-              col(edges.columns(1)).cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-      .distinct()
+    val e = operators.Fixpoint.undirectedEdges(edges)
     val adj = e.select(col("a").as("src"), col("b").as("dst"))
       .union(e.select(col("b").as("src"), col("a").as("dst")))
     val outdeg = adj.groupBy("src").agg(count(lit(1)).as("outdeg"))
@@ -2755,60 +2744,33 @@ object Graft {
   /** The k-core of an undirected edge list (first two columns = long
     * endpoint ids): the maximal subgraph in which every node has
     * degree ≥ k, found by iterative peeling — drop nodes with degree
-    * < k, restrict edges to survivors, repeat until nothing changes
-    * (round 9). Returns (node, core_deg) with core_deg = the node's
-    * degree WITHIN the core (≥ k by construction); nodes peeled away
-    * do not appear. The classic graph-densification primitive: the
-    * 2-core strips pendant trees (leaving only cycles), higher k
-    * isolates genuinely dense regions — on the near-dup pair graph
-    * this separates "chained" duplicate clusters from tight cliques.
+    * < k, restrict edges to survivors, repeat until nothing changes.
+    * Returns (node, core_deg) with core_deg = the node's degree WITHIN
+    * the core (≥ k by construction); nodes peeled away do not appear.
+    * The 2-core strips pendant trees (leaving only cycles), higher k
+    * isolates dense regions — on the near-dup pair graph this
+    * separates chained duplicate clusters from tight cliques.
     *
-    * Distributed shape: each round is one degree aggregate
-    * (partial+final count keyed by node) plus two LEFT SEMI joins
-    * restricting the edge list — shuffle-bounded by |E|, shrinking
-    * every round. The driver loop reads only per-round convergence
-    * METADATA — the (count, xor-of-hash) edge-set signature
-    * [[connectedComponents]]' alternatingStar uses, same collision
-    * argument — never data; lineage is truncated per round with
-    * localCheckpoint (swap for reliable `checkpoint` on a DFS at
-    * cluster scale). Peeling depth is data-dependent but each round
-    * strictly removes ≥ 1 node until fixpoint; rounds cap loudly at
-    * `maxRounds` instead of returning an unconverged core. */
+    * Each peeling round is one degree aggregate plus two LEFT SEMI
+    * joins restricting the edge list, shuffle-bounded by |E| and
+    * shrinking every round. Rounds run on [[operators.Fixpoint.converge]]:
+    * it succeeds iff peeling stops changing the edge set within
+    * `maxRounds` rounds, and fails loudly otherwise. */
   def kcore(edges: DataFrame, k: Int, maxRounds: Int = 30): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val e0 = edges
-      .select(col(edges.columns(0)).cast("long").as("a"),
-              col(edges.columns(1)).cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-      .distinct()
-    def sig(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)), expr("bit_xor(xxhash64(a, b))")).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
     def degrees(e: DataFrame): DataFrame =
       e.select(explode(array(col("a"), col("b"))).as("v"))
         .groupBy("v").agg(count(lit(1)).as("deg"))
-    var e = e0.localCheckpoint()
-    var last = sig(e)
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < maxRounds) {
-      rounds += 1
-      val alive = degrees(e).filter(col("deg") >= k)
-      e = e
-        .join(alive.select(col("v").as("a")), Seq("a"), "left_semi")
-        .join(alive.select(col("v").as("b")), Seq("b"), "left_semi")
-        .select("a", "b")
-        .localCheckpoint()
-      val cur = sig(e)
-      converged = cur == last
-      last = cur
+    val (core, _) = operators.Fixpoint.converge(operators.Fixpoint.undirectedEdges(edges),
+        maxRounds, s"kcore(k=$k) did not converge in $maxRounds peeling rounds — raise maxRounds") {
+      (e, _) =>
+        val alive = degrees(e).filter(col("deg") >= k)
+        e.join(alive.select(col("v").as("a")), Seq("a"), "left_semi")
+          .join(alive.select(col("v").as("b")), Seq("b"), "left_semi")
+          .select("a", "b")
     }
-    require(converged,
-      s"kcore(k=$k) did not converge in $maxRounds peeling rounds — raise maxRounds")
-    degrees(e).select(col("v").as("node"), col("deg").as("core_deg"))
+    degrees(core).select(col("v").as("node"), col("deg").as("core_deg"))
   }
 
   /** Deterministic synchronous label propagation over an undirected
@@ -2832,12 +2794,7 @@ object Graft {
     * every 4 rounds (the pageRank cadence). */
   def labelPropagation(edges: DataFrame, rounds: Int = 5): DataFrame = {
     require(rounds >= 1 && rounds <= 50, s"rounds must be in [1, 50], got $rounds")
-    val e0 = edges
-      .select(col(edges.columns(0)).cast("long").as("a"),
-              col(edges.columns(1)).cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-      .distinct()
+    val e0 = operators.Fixpoint.undirectedEdges(edges)
     val adj = e0.select(col("a").as("src"), col("b").as("dst"))
       .union(e0.select(col("b").as("src"), col("a").as("dst")))
       .localCheckpoint()
@@ -2858,50 +2815,35 @@ object Graft {
   }
 
   /** Single-source shortest hop distances over an undirected edge
-    * list (round 9) — BFS by frontier expansion: (node, dist) for
-    * every node reachable from `source` within `maxDepth` hops,
-    * dist 0 at the source. The reachability/radius primitive
+    * list — BFS by frontier expansion: (node, dist) for every node
+    * reachable from `source`, dist 0 at the source (only the source
+    * when it has no edges). The reachability/radius primitive
     * ([[kcore]]'s traversal sibling; connected components answers
     * "same component?", this answers "how far?").
     *
-    * Distributed shape: each round joins the CURRENT FRONTIER onto
-    * the adjacency (shuffle ∝ frontier's incident edges, not |E|),
-    * anti-joins the visited set, and unions the new layer in —
-    * classic frontier BFS, O(eccentricity) rounds. The driver loop
-    * reads only one per-round emptiness flag; lineage truncates per
-    * round with localCheckpoint. Rounds past `maxDepth` fail LOUDLY
-    * (a silently-truncated distance table would be wrong, not
-    * partial): raise maxDepth for high-diameter graphs — each round
-    * is cheap, the cap exists to match a bounded SQL twin. */
+    * The state is the (node, dist) table. Round k joins its frontier
+    * (dist = k − 1) onto the adjacency — shuffle ∝ the frontier's
+    * incident edges, not |E| — anti-joins the visited set and adds
+    * the new layer at dist k. Rounds run on
+    * [[operators.Fixpoint.converge]] with a cap of `maxDepth + 1`: the
+    * call fails loudly iff some reachable node lies more than
+    * `maxDepth` hops away (a truncated distance table would be wrong,
+    * not partial). */
   def shortestPaths(edges: DataFrame, source: Long, maxDepth: Int = 20): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
-    val e = edges
-      .select(col(edges.columns(0)).cast("long").as("a"),
-              col(edges.columns(1)).cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-    val dir = e.union(e.select(col("b").as("a"), col("a").as("b")))
-      .distinct().localCheckpoint()
+    val e = operators.Fixpoint.undirectedEdges(edges)
+    val dir = e.union(e.select(col("b").as("a"), col("a").as("b"))).localCheckpoint()
     val spark = edges.sparkSession
     import spark.implicits._
-    var dist = Seq((source, 0)).toDF("node", "dist").localCheckpoint()
-    var frontier = dist
-    var depth = 0
-    var done = false
-    while (!done) {
-      depth += 1
-      val next = dir.join(frontier.select(col("node").as("a")), Seq("a"), "left_semi")
-        .select(col("b").as("node")).distinct()
-        .join(dist, Seq("node"), "left_anti")
-        .select(col("node"), lit(depth).as("dist"))
-        .localCheckpoint()
-      if (next.isEmpty) done = true
-      else {
-        require(depth <= maxDepth,
-          s"shortestPaths did not exhaust the component within maxDepth=$maxDepth " +
-            "hops — raise maxDepth")
-        dist = dist.union(next).localCheckpoint()
-        frontier = next
-      }
+    val (dist, _) = operators.Fixpoint.converge(Seq((source, 0)).toDF("node", "dist"),
+        maxDepth + 1,
+        s"shortestPaths did not exhaust the component within maxDepth=$maxDepth hops — raise maxDepth") {
+      (dist, k) =>
+        val frontier = dist.filter(col("dist") === k - 1).select(col("node").as("a"))
+        dist.union(dir.join(frontier, Seq("a"), "left_semi")
+          .select(col("b").as("node")).distinct()
+          .join(dist, Seq("node"), "left_anti")
+          .select(col("node"), lit(k).as("dist")))
     }
     dist
   }
@@ -4837,8 +4779,8 @@ object Graft {
                 col("__v"))
         .groupBy("cell")
         .agg(udaf(VecSum.agg).apply(col("__v")).as("sv"), count(lit(1)).as("n"))
-        .select(col("cell"), transform(col("sv"), x => x / col("n")).as("cv"))
-        .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
+        .as[(Long, Seq[Double], Long)].collect().toSeq
+        .map { case (cell, sv, n) => (cell, sv.map(_ / n.toDouble)) }.sortBy(_._1)
     }
     cents.toDF("cell", "cv")
   }

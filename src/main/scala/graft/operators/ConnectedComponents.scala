@@ -7,23 +7,21 @@ import org.apache.spark.sql.functions._
   * stage after pairwise near-dup detection (SURVEY.md §2.12).
   *
   * [[alternatingStar]]: the large-star/small-star algorithm (Kiveris
-  * et al., "Connected Components in MapReduce and Beyond"), a pure
-  * DataFrame loop whose driver reads only per-round convergence
-  * METADATA (a count/checksum row), never data. Large-star hooks every
-  * node's larger neighbors onto its minimum, small-star hooks the
-  * smaller ones; alternating rounds converge to a forest of stars
-  * centered at each component's minimum id in O(log n) rounds
-  * REGARDLESS of diameter — the 100 TB-safe shape. The loop is preceded
-  * by ONE min-label seed contraction (m(u) = min(N(u) ∪ {u}), iterate
-  * on (m(a), m(b))): near-clique dedup components collapse entirely in
-  * the seed pass, so the loop runs 1-2 rounds on the inter-clique
-  * residue instead of O(log n) rounds of ~6 shuffle stages each on the
-  * full graph.
+  * et al., "Connected Components in MapReduce and Beyond", SoCC 2014)
+  * as a pure DataFrame loop. Large-star hooks every node's larger
+  * neighbors onto its minimum, small-star hooks the smaller ones;
+  * alternating rounds reach a forest of stars centered at each
+  * component's minimum id in O(log n) rounds regardless of diameter.
+  * The loop runs on [[Fixpoint.converge]], so the driver reads only
+  * per-round signatures, never data, and the round cap fails loudly.
   *
-  * It fails loudly (require) instead of silently returning unconverged
-  * labels when the round cap is hit. Per-round lineage is truncated
-  * with localCheckpoint so plan depth stays O(1); at real cluster scale
-  * swap for reliable `checkpoint` on a DFS — identical shape.
+  * The loop is preceded by one min-label seed contraction
+  * (m(u) = min(N(u) ∪ {u}), then iterate on (m(a), m(b))). It
+  * preserves components (u—m(u) is an edge), and a component's
+  * minimum v has m(v) = v, so the contracted component's minimum is
+  * the original one. A near-clique contracts to one label in this
+  * pass, so on near-dup pair graphs the star loop only sees the
+  * inter-clique residue.
   *
   * Input: a DataFrame whose first two columns are the (long) endpoint
   * ids of an undirected edge. Output: (node, label) with label = the
@@ -34,39 +32,25 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  /** Edge-count gate for the driver union-find fast path of
-    * [[alternatingStar]]: at or below this many edges the whole
-    * labeling runs as ONE bounded `limit(gate+1).collect()` plus a
-    * driver union-find, instead of the multi-job star loop. Rationale
-    * (round 17, guide §1/§2): the star loop is the 100 TB-safe shape,
-    * but each round is ~6 shuffle stages and AQE materializes every
-    * exchange as its own driver job — measured 43 jobs / ~2.1 s warm
-    * for the 33-edge stitch graph and 9 jobs / ~1.0 s for the 256-edge
-    * ngram graph, pure scheduling latency on metadata-scale inputs.
-    * The collect is bounded DRIVER STATE by construction (≤ gate+1
-    * rows × 16 bytes ≈ 1 MB — the same bounded-collect contract as the
-    * vocab/model sites in Graft.scala): `limit` short-circuits, so an
-    * over-gate edge set costs one truncated pass and falls back to the
-    * distributed loop. Labels are identical by definition (component
-    * minimum, exact integer — no float anywhere), pinned against the
-    * loop path in ConnectedComponentsSpec.
+  /** Edge-count gate for the driver union-find path of
+    * [[alternatingStar]]: at or below this many edges the labeling is
+    * ONE bounded `limit(gate+1).collect()` (≤ gate+1 rows × 16 bytes
+    * ≈ 1 MB of driver state) plus a driver union-find, instead of the
+    * multi-job star loop. Labels are identical by definition
+    * (component minimum, exact integers), pinned against the loop in
+    * ConnectedComponentsSpec. An over-gate edge set costs one
+    * truncated pass and falls back to the loop.
     *
-    * OPT-IN since round 18 (round-17 ADVICE): the probe's
-    * `limit(gate+1).collect()` still evaluates the upstream plan, so
-    * on an expensive UNMATERIALIZED edge subtree (a pair-generation
-    * plan behind shuffles) an over-gate input pays one extra
-    * near-full evaluation before the loop runs. Callers that hand a
-    * materialized/stats-bearing edge table (all cached label builds
-    * do) pass this constant explicitly; the default is the
-    * probe-free distributed loop. */
+    * Opt-in: the probe evaluates the edge plan once, which on an
+    * unmaterialized pair-generation plan is a near-full extra pass.
+    * Callers that hand a materialized edge table pass this constant;
+    * the default (0) is the probe-free loop. */
   val LocalMaxEdges: Int = 1 << 16
 
   /** (node, label) via alternating large-star/small-star; O(log n)
-    * rounds on any graph shape. Edge sets at or below `localMaxEdges`
-    * take the bounded driver union-find fast path (see
-    * [[LocalMaxEdges]]); the probe is OPT-IN (default 0 = the
-    * distributed loop) because it evaluates the edge plan once —
-    * pass [[LocalMaxEdges]] when the edge table is materialized. */
+    * rounds on any graph shape, at most `maxRounds`. Edge sets at or
+    * below `localMaxEdges` take the driver union-find path (see
+    * [[LocalMaxEdges]]). */
   def alternatingStar(edges: DataFrame, maxRounds: Int = 50,
                       localMaxEdges: Int = 0): DataFrame =
     alternatingStarWithRounds(edges, maxRounds, localMaxEdges)._1
@@ -84,27 +68,6 @@ object ConnectedComponents {
     // are their own components (labeled via the final left join)
     val nodes = nodeUniverse(cast)
 
-    // SEED CONTRACTION (round-14 verdict #5): one min-label pass
-    // m(u) = min(N(u) ∪ {u}) BEFORE the star loop, then iterate on
-    // the contracted edge set (m(a), m(b)). Near-dup pair graphs are
-    // unions of near-cliques, and a clique contracts to a single
-    // label in this one pass — the star loop then runs 1-2 rounds on
-    // the tiny inter-clique residue instead of O(log n) rounds on
-    // the full graph (each round is ~6 shuffle stages, and the
-    // many-small-jobs loop is exactly what the driver's contention
-    // band amplified 10× in BENCH_r14's ngram_cc first-touch).
-    // Correctness: u—m(u) is an edge-path contraction, so components
-    // are preserved; the original component minimum v has m(v) = v
-    // (v is below all its neighbors), so the contracted component's
-    // min — which the star loop labels by — IS the original min.
-    // LAZY checkpoints throughout (round-15 verdict #1): an eager
-    // localCheckpoint is its own driver job, and the per-round sig()
-    // aggregate was ANOTHER — so every star round cost 2+ jobs, and
-    // the many-small-jobs shape is exactly what the driver's
-    // contention band amplified ~9× in BENCH_r15's ngram_cc
-    // first-touch (10.51 s vs 1.13-1.15 s builder-side, same HEAD).
-    // With eager = false the convergence signature both MATERIALIZES
-    // the checkpoint and reads the round's metadata in ONE job.
     val nbrsSeed = eRaw.union(eRaw.select(col("b").as("a"), col("a").as("b")))
     val seed = nbrsSeed.groupBy("a")
       .agg(least(col("a"), min(col("b"))).as("m"))
@@ -135,48 +98,9 @@ object ConnectedComponents {
         .union(m.select(col("u").as("a"), col("m").as("b")))
         .filter(col("a") =!= col("b")).distinct()
     }
-    // convergence metadata: one (count, xor-checksum) row per round
-    // (XOR, not SUM: order-free, merge-safe and can never overflow).
-    // A false convergence needs an xxhash64 multiset collision at
-    // EQUAL edge counts in consecutive rounds (~2^-64); the
-    // alternative — a full except() diff per round — costs two extra
-    // shuffles per round for protection against a probability far
-    // below hardware error rates.
-    def sig(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)), expr("bit_xor(xxhash64(a, b))")).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-
-    // One job materializes seed + e0 + the initial signature together.
-    var e = e0.localCheckpoint(eager = false)
-    var last = sig(e)
-    var converged = false
-    var rounds = 0
-    // TWO star rounds per driver action (round-15 verdict #1): the
-    // star fixpoint is stable (large/small-star are identity on a
-    // star forest), so overshooting past convergence inside a batch
-    // is a no-op on a residue-scale edge set — and it halves the
-    // job count of the loop. Convergence is still signature-equality
-    // across one batch; maxRounds still bounds STAR rounds, not
-    // batches. Each round gets its OWN lazy checkpoint: the plan is
-    // truncated to a LogicalRDD immediately (localCheckpoint cuts
-    // lineage at plan-construction time even with eager = false),
-    // while materialization still rides the batch's single sig()
-    // job. Without the mid-batch cut the outer round's plan embeds
-    // the inner round's subtree ~4× (each star references its input
-    // twice) — measured as a 2.5× warm regression on the
-    // metadata-scale q_stitch_repair graph, where planning cost
-    // dominates.
-    while (!converged && rounds < maxRounds) {
-      rounds += 2
-      e = smallStar(largeStar(e)).localCheckpoint(eager = false)
-      e = smallStar(largeStar(e)).localCheckpoint(eager = false)
-      val cur = sig(e)
-      converged = cur == last
-      last = cur
-    }
-    require(converged,
-      s"connected components (large/small-star) did not converge in $maxRounds rounds")
+    val (stars, rounds) = Fixpoint.converge(e0, maxRounds,
+        s"connected components (large/small-star) did not converge in $maxRounds rounds")(
+      (e, _) => smallStar(largeStar(e)))
     // stars over the CONTRACTED graph: every edge is (child,
     // root=component min). Compose node → seed m (self for nodes the
     // loop-free edge set never saw) → star label (self for contracted
@@ -185,7 +109,7 @@ object ConnectedComponents {
     val labels = nodes
       .join(seed.select(col("u").as("node"), col("m")), Seq("node"), "left")
       .select(col("node"), coalesce(col("m"), col("node")).as("m"))
-      .join(e.select(col("a").as("m"), col("b").as("label")), Seq("m"), "left")
+      .join(stars.select(col("a").as("m"), col("b").as("label")), Seq("m"), "left")
       .select(col("node"), coalesce(col("label"), col("m")).as("label"))
     (labels, rounds)
   }

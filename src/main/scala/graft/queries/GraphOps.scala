@@ -93,14 +93,6 @@ object GraphOps {
       .select(col("node").as("part"), round(col("rank"), 7).as("rank"))
       .orderBy("part")
 
-  /** Association rules over the order baskets (added round 8):
-    * support / confidence / lift for every part pair co-purchased in
-    * ≥ 2 distinct orders — the Agrawal–Srikant market-basket canon on
-    * the same birthday-bounded pair universe the graph queries mine.
-    * This query IS [[graft.Graft.basketRules]] applied to lineitem,
-    * so the oracle verifies the public API. All three measures are
-    * EXACT integer permille (floor `div` ≡ DuckDB `//` on the
-    * non-negative counts) — no float anywhere in the query. */
   /** Degree distribution of the co-purchase graph (added round 8):
     * per degree, how many nodes have it — the graph-health profile
     * (power-law tail check; the input a planner needs before picking
@@ -117,6 +109,14 @@ object GraphOps {
       .groupBy("deg").agg(count(lit(1)).as("n_nodes"))
       .orderBy("deg")
 
+  /** Association rules over the order baskets (added round 8):
+    * support / confidence / lift for every part pair co-purchased in
+    * ≥ 2 distinct orders — the Agrawal–Srikant market-basket canon on
+    * the same birthday-bounded pair universe the graph queries mine.
+    * This query IS [[graft.Graft.basketRules]] applied to lineitem,
+    * so the oracle verifies the public API. All three measures are
+    * EXACT integer permille (floor `div` ≡ DuckDB `//` on the
+    * non-negative counts) — no float anywhere in the query. */
   def q_basket_rules(s: SparkSession, d: String): DataFrame =
     graft.Graft.basketRules(Tables.lineitem(s, d),
         basket = col("l_orderkey"), item = col("l_partkey"), minBoth = 2L)
@@ -139,18 +139,6 @@ object GraphOps {
       .select(col("node").as("part"), col("core_deg"))
       .orderBy("part")
 
-  /** Single-source shortest paths (added round 9): hop distance from
-    * the smallest part in the co-purchase graph to every part
-    * reachable from it — the BFS/radius primitive (components answer
-    * "same cluster?", this answers "how far?"). This query IS
-    * [[graft.Graft.shortestPaths]] on the shared edge table, so the
-    * oracle verifies the public API against a bounded MONOTONE
-    * recursive CTE (BFS only ever ADDS (node, dist) facts, so —
-    * unlike q_kcore's peeling — a recursive UNION expresses it
-    * directly; the dist < 20 bound guarantees CTE termination on
-    * cycles and the facade requires exhaustion within the same 20
-    * loudly, so truncation can never silently diverge; MIN(dist) per
-    * node collapses the walk to BFS distances). */
   /** Community detection by synchronous label propagation (round
     * 14): per community after EXACTLY 5 rounds, its label (the id
     * every member adopted) and member count — the market-basket
@@ -168,6 +156,18 @@ object GraphOps {
       .agg(count(lit(1)).as("n_parts"))
       .orderBy("community")
 
+  /** Single-source shortest paths (added round 9): hop distance from
+    * the smallest part in the co-purchase graph to every part
+    * reachable from it — the BFS/radius primitive (components answer
+    * "same cluster?", this answers "how far?"). This query IS
+    * [[graft.Graft.shortestPaths]] on the shared edge table, so the
+    * oracle verifies the public API against a bounded MONOTONE
+    * recursive CTE (BFS only ever ADDS (node, dist) facts, so —
+    * unlike q_kcore's peeling — a recursive UNION expresses it
+    * directly; the dist < 20 bound guarantees CTE termination on
+    * cycles and the facade requires exhaustion within the same 20
+    * loudly, so truncation can never silently diverge; MIN(dist) per
+    * node collapses the walk to BFS distances). */
   def q_shortest_path(s: SparkSession, d: String): DataFrame = {
     val e = coPurchaseEdges(s, d)
     val srcRow = e.agg(min("a")).head

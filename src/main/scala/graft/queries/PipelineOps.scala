@@ -1672,12 +1672,10 @@ object PipelineOps {
     * connected components over the shared [[ngramPairGraph]] via
     * [[graft.operators.ConnectedComponents.alternatingStar]] — the
     * large-star/small-star algorithm, O(log n) rounds regardless of
-    * component diameter (min-label propagation, also available in the
-    * operator, is O(diameter) and degenerates on chains). The driver
-    * loop reads only a one-row convergence checksum per round and
-    * FAILS LOUDLY if the round cap is hit — an unconverged labeling
-    * can never be silently emitted. Emits (cluster_rep = min doc_id,
-    * size, member-id checksum). */
+    * component diameter. The driver reads only per-round convergence
+    * signatures and FAILS LOUDLY if the round cap is hit — an
+    * unconverged labeling can never be silently emitted. Emits
+    * (cluster_rep = min doc_id, size, member-id checksum). */
   def q_dedup_cluster(s: SparkSession, d: String): DataFrame = {
     ngramCcLabels(s, d)
       .groupBy("label").agg(count(lit(1)).as("size"), sum("node").as("member_id_sum"))

@@ -97,5 +97,13 @@ class ConnectedComponentsSpec extends SparkSpecBase {
       ConnectedComponents.alternatingStarWithRounds(chain, 50, localMaxEdges = 0)
     assert(labelsOf(labels) == (0L to 63L).map(_ -> 0L).toMap)
     assert(rounds <= 15, s"expected logarithmic rounds on the chain, got $rounds")
+    // warm job budget of the whole loop: construction plus a noop
+    // write, the fewest of three calls (AQE's re-planning order can
+    // add a job on a loaded machine)
+    val jobs = (1 to 3).map(_ => jobsDuring(spark) {
+      ConnectedComponents.alternatingStarWithRounds(chain, 50, localMaxEdges = 0)._1
+        .write.format("noop").mode("overwrite").save()
+    }).min
+    assert(jobs <= 73, s"the chain's star loop ran $jobs jobs")
   }
 }

@@ -2587,6 +2587,11 @@ class GraftSpec extends SparkSpecBase {
     val got = Graft.kcore(e, k = 2)
       .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.toSeq == Seq((1L, 2L), (2L, 2L), (3L, 2L)))
+    // the peel stops changing at round 3: a cap of 3 converges, 2 throws
+    assert(Graft.kcore(e, k = 2, maxRounds = 3).count() == 3)
+    intercept[IllegalArgumentException] {
+      Graft.kcore(e, k = 2, maxRounds = 2).collect()
+    }
   }
 
   test("kcore: 3-core strips a degree-2 appendage from a 4-clique; k above density empties") {
@@ -2598,6 +2603,8 @@ class GraftSpec extends SparkSpecBase {
     // a path has no 2-core: everything peels to empty (and converges)
     val path = Seq((1L, 2L), (2L, 3L)).toDF("a", "b")
     assert(Graft.kcore(path, k = 2).isEmpty)
+    // no edges at all: an empty core, not a convergence failure
+    assert(Graft.kcore(Seq.empty[(Long, Long)].toDF("a", "b"), k = 1).isEmpty)
   }
 
   test("labelPropagation: triangles collapse to min id; bipartite oscillation is the stated contract") {
@@ -2642,9 +2649,31 @@ class GraftSpec extends SparkSpecBase {
     // the 1-3 chord makes dist(3) = 1, so dist(4) = 2; 5/6 unreachable
     assert(got.toSeq == Seq((1L, 0), (2L, 1), (3L, 1), (4L, 2)))
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("a", "b")
+    // node 4 is 3 hops out: maxDepth = 3 reaches it, 2 throws
+    assert(Graft.shortestPaths(chain, source = 1L, maxDepth = 3).count() == 4)
     intercept[IllegalArgumentException] {
       Graft.shortestPaths(chain, source = 1L, maxDepth = 2).collect()
     }
+    // a source outside the graph reaches only itself
+    val alone = Graft.shortestPaths(chain, source = 9L)
+      .collect().map(r => (r.getLong(0), r.getInt(1)))
+    assert(alone.toSeq == Seq((9L, 0)))
+  }
+
+  test("q_kcore and q_shortest_path: warm job budgets at sf0.001") {
+    // construction plus a noop write, after a first call so shared
+    // table builds are not counted; the fewest of three calls, since
+    // AQE's re-planning order can add a job on a loaded machine
+    def warmJobs(q: String): Int = {
+      def run(): Unit = SparkEntry.queries(q)(spark, sf)
+        .write.format("noop").mode("overwrite").save()
+      run()
+      (1 to 3).map(_ => jobsDuring(spark)(run())).min
+    }
+    val kcore = warmJobs("q_kcore")
+    assert(kcore <= 11, s"q_kcore ran $kcore jobs")
+    val bfs = warmJobs("q_shortest_path")
+    assert(bfs <= 23, s"q_shortest_path ran $bfs jobs")
   }
 
   test("ewma: hand-computed recurrence per key; reserved output name throws") {
