@@ -2129,95 +2129,38 @@ object Graft {
   }
 
   /** EXACT dense global rank 1..n of ANY (key, tie) pair under
-    * (key DESC, tie ASC) total order — WITHOUT a single-partition
-    * window. Output: (key double, tie, rank long); `tie` must be
-    * unique per key for the order (hence the rank) to be total.
-    *
-    * The distributed two-pass scheme (the q_window_ntile /
-    * q_late_data pattern, here as a public facade): approx-quantile
-    * boundaries split the key range into `buckets` range buckets —
-    * any monotone split is exact because equal keys share a bucket —
-    * pass 1 computes per-bucket counts and an array-HOF exclusive
-    * prefix sum over the ≤`buckets`-row table, pass 2 ranks within
-    * each bucket under a PARTITIONED window and adds the bucket's
-    * offset. At 100 TB only `buckets` grows; no WindowExec ever sees
-    * more than one bucket. */
+    * (key DESC, tie ASC) total order, NULL keys last — WITHOUT a
+    * single-partition window: the [[operators.RangeScan]] two-pass
+    * scheme over `buckets` (≥ 2) range buckets. Output: (key double,
+    * tie, rank long); `tie` must be unique per key for the order (hence
+    * the rank) to be total. */
   def globalRankDesc(df: DataFrame, key: Column, tie: Column,
-                     buckets: Int = 32): DataFrame = {
-    require(buckets >= 2, s"buckets must be >= 2, got $buckets")
-    val base = df.select(key.cast("double").as("key"), tie.as("tie"))
-    val qs = (1 until buckets).map(_.toDouble / buckets)
-    val bounds = base.agg(
-      percentile_approx(col("key"), typedlit(qs), lit(1000)).as("bounds"))
-    // bucket 0 = highest keys … buckets-1 = lowest
-    val bucketed = base.crossJoin(broadcast(bounds))
-      .select(col("key"), col("tie"),
-              (lit(buckets - 1) -
-               size(filter(col("bounds"), b => col("key") > b))).as("bucket"))
-    val offsets = bucketed.groupBy("bucket").agg(count(lit(1)).as("cnt"))
-      .agg(array_sort(collect_list(struct(col("bucket"), col("cnt")))).as("arr"))
-      .select(explode(transform(col("arr"), (x, i) =>
-        struct(x.getField("bucket").as("bucket"),
-               aggregate(slice(col("arr"), lit(1), i), lit(0L),
-                         (a, y) => a + y.getField("cnt")).as("off")))).as("s"))
-      .select(col("s.bucket").as("bucket"), col("s.off").as("off"))
-    val wLocal = org.apache.spark.sql.expressions.Window.partitionBy("bucket")
-      .orderBy(col("key").desc, col("tie").asc)
-    bucketed.join(broadcast(offsets), "bucket")
-      .select(col("key"), col("tie"),
-              (col("off") + row_number().over(wLocal)).as("rank"))
-  }
+                     buckets: Int = 32): DataFrame =
+    rankDesc(df.select(key.cast("double").as("key"), tie.as("tie")), Nil, buckets)
 
   /** [[globalRankDesc]] PER GROUP: exact dense rank 1..n_g of (key,
-    * tie) under (key DESC, tie ASC) within each `group` — again with
-    * NO single-partition (or single-group-partition) window. Same
-    * two-pass scheme, with every stage keyed by group: per-group
-    * approx-quantile bounds split each group's key range into
-    * `buckets` range buckets, pass 1 counts per (group, bucket) and
-    * prefix-sums the ≤`buckets`-entry array PER GROUP with array HOFs,
-    * pass 2 ranks under a window partitioned by (group, bucket) and
-    * adds the group-local offset. A hot group degrades to `buckets`
-    * window partitions, never one — the per-lang/per-domain rank a
-    * stratified pipeline stage needs (CCNet buckets per language,
-    * per-domain quality tiers). `group` must be METADATA-SCALE (the
-    * bounds/offset tables carry ≤ |groups|·buckets rows and are
-    * broadcast); `tie` must be unique within a group for the order to
-    * be total. Output: (group, key double, tie, rank long).
-    *
-    * Deliberately NOT unified with [[globalRankDesc]] (= the
-    * constant-group case): the global form's 1-row bounds CROSS is a
-    * cheaper plan than an equi-join on a constant group key, and the
-    * global form's plan shape is pinned by several recorded
-    * benchmarks — the ~25 shared lines are the price of keeping both
-    * plans optimal. Changes to the scheme must be applied to BOTH. */
+    * tie) under (key DESC, tie ASC), NULL keys last, within each
+    * `group`; a NULL group is ranked as one group. A hot group degrades
+    * to `buckets` window partitions, never one — the per-lang/per-domain
+    * rank a stratified pipeline stage needs (CCNet buckets per
+    * language, per-domain quality tiers). `group` must be
+    * METADATA-SCALE (see [[operators.RangeScan]]); `tie` must be unique
+    * within a group for the order to be total. Output: (group, key
+    * double, tie, rank long). */
   def groupedRankDesc(df: DataFrame, group: Column, key: Column,
-                      tie: Column, buckets: Int = 32): DataFrame = {
+                      tie: Column, buckets: Int = 32): DataFrame =
+    rankDesc(df.select(group.as("group"), key.cast("double").as("key"), tie.as("tie")),
+             Seq("group"), buckets)
+
+  private def rankDesc(base: DataFrame, groups: Seq[String], buckets: Int): DataFrame = {
     require(buckets >= 2, s"buckets must be >= 2, got $buckets")
-    val base = df.select(group.as("group"), key.cast("double").as("key"),
-                         tie.as("tie"))
-    val qs = (1 until buckets).map(_.toDouble / buckets)
-    val bounds = base.groupBy("group").agg(
-      percentile_approx(col("key"), typedlit(qs), lit(1000)).as("bounds"))
-    // bucket 0 = highest keys in the group … buckets-1 = lowest
-    val bucketed = base.join(broadcast(bounds), "group")
-      .select(col("group"), col("key"), col("tie"),
-              (lit(buckets - 1) -
-               size(filter(col("bounds"), b => col("key") > b))).as("bucket"))
-    val offsets = bucketed.groupBy("group", "bucket")
-      .agg(count(lit(1)).as("cnt"))
-      .groupBy("group")
-      .agg(array_sort(collect_list(struct(col("bucket"), col("cnt")))).as("arr"))
-      .select(col("group"), explode(transform(col("arr"), (x, i) =>
-        struct(x.getField("bucket").as("bucket"),
-               aggregate(slice(col("arr"), lit(1), i), lit(0L),
-                         (a, y) => a + y.getField("cnt")).as("off")))).as("s"))
-      .select(col("group"), col("s.bucket").as("bucket"), col("s.off").as("off"))
-    val wLocal = org.apache.spark.sql.expressions.Window
-      .partitionBy("group", "bucket")
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy((groups :+ "__bucket").map(col): _*)
       .orderBy(col("key").desc, col("tie").asc)
-    bucketed.join(broadcast(offsets), Seq("group", "bucket"))
-      .select(col("group"), col("key"), col("tie"),
-              (col("off") + row_number().over(wLocal)).as("rank"))
+    operators.RangeScan(base, groups, col("key"), buckets, descending = true,
+                        count(lit(1)), lit(0L))(_ + _)
+      .select(groups.map(col) ++ Seq(col("key"), col("tie"),
+              (col("__prefix") + row_number().over(w)).as("rank")): _*)
   }
 
   /** Exact SUBSTRING-level (span) cross-document dedup accounting —
@@ -2835,6 +2778,9 @@ object Graft {
     val dir = e.union(e.select(col("b").as("a"), col("a").as("b"))).localCheckpoint()
     val spark = edges.sparkSession
     import spark.implicits._
+    // the union concatenates partitions; without the coalesce round k's
+    // state would carry k more partitions than it started with
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val (dist, _) = operators.Fixpoint.converge(Seq((source, 0)).toDF("node", "dist"),
         maxDepth + 1,
         s"shortestPaths did not exhaust the component within maxDepth=$maxDepth hops — raise maxDepth") {
@@ -2844,6 +2790,7 @@ object Graft {
           .select(col("b").as("node")).distinct()
           .join(dist, Seq("node"), "left_anti")
           .select(col("node"), lit(k).as("dist")))
+          .coalesce(partitions)
     }
     dist
   }
@@ -4992,12 +4939,9 @@ object Graft {
     * and cuts the token stream into fixed-`budget` context windows:
     * returns, per document, the first and last window it lands in
     * (documents straddle boundaries, as GPT-style packing allows).
-    * The exclusive token prefix sum is computed DISTRIBUTED, never as
-    * a single-partition window: approx-quantile bounds on the id
-    * split the keyspace into `buckets` order-consistent ranges,
-    * per-bucket windows run PARTITIONED, and the ≤`buckets`-row
-    * bucket-total table folds to exclusive offsets with array HOFs —
-    * at 100 TB only `buckets` grows. Returns (doc_id, n_tokens,
+    * The exclusive token prefix sum is the [[operators.RangeScan]]
+    * two-pass scheme over `buckets` (≥ 1) range buckets of the id,
+    * never a single-partition window. Returns (doc_id, n_tokens,
     * start_chunk, end_chunk, n_chunks), all LONG; a zero-token
     * document occupies the single window at its offset. The id is the
     * LAYOUT ORDER and must be unique: rows sharing an id have no
@@ -5022,39 +4966,14 @@ object Graft {
         val n = base.count()
         math.max(16, math.min(65536, ((n + 1999999L) / 2000000L).toInt))
       }
-    val qs = (1 until b).map(_.toDouble / b)
-    // accuracy must OUTRESOLVE the bucket count or adjacent bounds
-    // collapse and buckets merge — correctness survives (any monotone
-    // split is correct) but a merged mega-bucket re-creates the
-    // single-task window this scheme exists to avoid; 20× headroom,
-    // sketch stays O(accuracy) driver-side
-    val bounds =
-      if (qs.isEmpty) base.agg(typedlit(Seq.empty[Long]).as("__bounds"))
-      else base.agg(percentile_approx(col("doc_id"), typedlit(qs),
-                      lit(math.max(10000, 20 * b))).as("__bounds"))
-    // bucket = count of bounds strictly below the id: monotone in id,
-    // so the global order is the bucket concatenation (ties share a
-    // bucket; balance only affects speed, never the prefix)
-    val bucketed = base.crossJoin(broadcast(bounds))
-      .select(col("doc_id"), col("n_tokens"),
-              size(filter(col("__bounds"), b => col("doc_id") > b)).as("__bucket"))
-    val totals = bucketed.groupBy("__bucket").agg(sum("n_tokens").as("__tot"))
-    // exclusive prefix offsets over the <= buckets-row totals table,
-    // via the array-HOF fold (O(buckets²) on ~16 — trivial)
-    val offsets = totals
-      .agg(array_sort(collect_list(struct(col("__bucket"), col("__tot")))).as("__arr"))
-      .select(explode(transform(col("__arr"), (x, i) =>
-        struct(x.getField("__bucket").as("__bucket"),
-               aggregate(slice(col("__arr"), lit(1), i), lit(0L),
-                         (a, y) => a + y.getField("__tot")).as("__off")))).as("s"))
-      .select(col("s.__bucket").as("__bucket"), col("s.__off").as("__off"))
     val w = Window.partitionBy("__bucket").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, -1)
     val start = expr(s"__prefix div ${budget}L")
     val end = greatest(start, expr(s"(__prefix + n_tokens - 1) div ${budget}L"))
-    bucketed.join(broadcast(offsets), "__bucket")
+    operators.RangeScan(base, Nil, col("doc_id"), b, descending = false,
+                        sum("n_tokens"), lit(0L))(_ + _)
       .select(col("doc_id"), col("n_tokens"),
-              (col("__off") + coalesce(sum(col("n_tokens")).over(w), lit(0L)))
+              (col("__prefix") + coalesce(sum(col("n_tokens")).over(w), lit(0L)))
                 .as("__prefix"))
       .select(col("doc_id"), col("n_tokens"),
               start.as("start_chunk"), end.as("end_chunk"),

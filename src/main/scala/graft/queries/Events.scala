@@ -135,45 +135,20 @@ object Events {
   /** Late/out-of-order accounting: an event is "late" when its ts is
     * > 5 min older than the running max ts over all earlier arrivals
     * (arrival order = event_id). The batch analogue of rows a 5-min
-    * watermark would drop.
-    *
-    * The running max has globally-ordered semantics but is executed as
-    * the DISTRIBUTED two-pass prefix-max: approx-quantile boundaries of
-    * event_id split arrival order into B range buckets (any monotone
-    * split is exact — ties share a bucket); pass 1 takes each bucket's
-    * max(us) and an array-HOF prefix fold over the ≤B-row table
-    * derives every bucket's EXCLUSIVE prefix max; pass 2 computes the
-    * within-bucket running max under a PARTITIONED window and combines
-    * via greatest(local, prefix) — null-skipping, so the very first
-    * rows (empty prefix) stay "not late" exactly like the empty window
-    * frame. No single-partition WindowExec; at 100 TB only B grows. */
+    * watermark would drop. The running max is the
+    * [[graft.operators.RangeScan]] prefix max over 32 event_id buckets,
+    * combined with the within-bucket running max by the null-skipping
+    * greatest, so the first rows (empty prefix) stay "not late" exactly
+    * like the empty window frame. */
   def q_late_data(s: SparkSession, d: String): DataFrame = {
-    val buckets = 32
     val ev = Tables.events(s, d)
       .select(col("event_type"), col("event_id"), Tables.tsUs.as("us"))
-    val qs = (1 until buckets).map(_.toDouble / buckets)
-    val bounds = ev.agg(
-      percentile_approx(col("event_id"), typedlit(qs), lit(1000)).as("bounds"))
-    val bucketed = ev.crossJoin(broadcast(bounds))
-      .select(col("event_type"), col("event_id"), col("us"),
-              size(filter(col("bounds"), b => col("event_id") > b)).as("bucket"))
-    val bmax = bucketed.groupBy("bucket").agg(max("us").as("bmax"))
-    // exclusive prefix max over the ≤B-row table: fold it into ONE row
-    // and prefix-max with array HOFs (O(B²) on B≈32 — trivial); null
-    // start value keeps the first bucket's prefix NULL, like the empty
-    // window frame it replaces. No window, no extra join.
-    val prefix = bmax
-      .agg(array_sort(collect_list(struct(col("bucket"), col("bmax")))).as("arr"))
-      .select(explode(transform(col("arr"), (x, i) =>
-        struct(x.getField("bucket").as("bucket"),
-               aggregate(slice(col("arr"), lit(1), i), lit(null).cast("long"),
-                         (a, y) => greatest(a, y.getField("bmax"))).as("prefix_max")))).as("s"))
-      .select(col("s.bucket").as("bucket"), col("s.prefix_max").as("prefix_max"))
-    val wLocal = Window.partitionBy("bucket").orderBy("event_id")
+    val wLocal = Window.partitionBy("__bucket").orderBy("event_id")
       .rowsBetween(Window.unboundedPreceding, -1)
-    bucketed.join(broadcast(prefix), "bucket")
+    graft.operators.RangeScan(ev, Nil, col("event_id"), 32, descending = false,
+                              max("us"), lit(null).cast("long"))(greatest(_, _))
       .select(col("event_type"),
-              when(greatest(max("us").over(wLocal), col("prefix_max")) - col("us") > US_LATE, 1)
+              when(greatest(max("us").over(wLocal), col("__prefix")) - col("us") > US_LATE, 1)
                 .otherwise(0).as("late"))
       .groupBy("event_type")
       .agg(sum("late").as("n_late"), count(lit(1)).as("n"))

@@ -662,44 +662,13 @@ object Relational {
 
   /** Distribution window functions: ntile / percent_rank / cume_dist
     * over customers by account balance (unique (acctbal, custkey)
-    * order key → deterministic everywhere).
-    *
-    * Executed as the DISTRIBUTED two-pass global rank, not a
-    * single-partition `Window.orderBy`: (1) approx-quantile boundaries
-    * of c_acctbal split the key space into B order-consistent range
-    * buckets (any monotone split is correct — balance only affects
-    * speed, and equal balances always share a bucket so the global
-    * (acctbal DESC, custkey) order is the bucket concatenation);
-    * (2) per-bucket row_number under a PARTITIONED window + exclusive
-    * prefix counts from an array-HOF prefix fold over the ≤B-row
-    * counts table give the exact global rank; (3) ntile/percent_rank/
-    * cume_dist are pure arithmetic in (rank, n). No single-partition
-    * WindowExec anywhere — every per-row stage is parallel, and at
-    * 100 TB only B grows. */
+    * order key → deterministic everywhere). The global rank is the
+    * [[graft.operators.RangeScan]] prefix count over 16 balance
+    * buckets plus a per-bucket row_number, n its total; the three
+    * functions are pure arithmetic in (rank, n). */
   def q_window_ntile(s: SparkSession, d: String): DataFrame = {
-    val buckets = 16
     val cust = Tables.customer(s, d).select("c_custkey", "c_acctbal")
-    val qs = (1 until buckets).map(_.toDouble / buckets)
-    val bounds = cust.agg(
-      percentile_approx(col("c_acctbal"), typedlit(qs), lit(1000)).as("bounds"),
-      count(lit(1)).as("n_total"))
-    // bucket 0 = highest balances … B-1 = lowest (count of bounds below)
-    val bucketed = cust.crossJoin(broadcast(bounds))
-      .select(col("c_custkey"), col("c_acctbal"), col("n_total"),
-              (lit(buckets - 1) -
-               size(filter(col("bounds"), b => col("c_acctbal") > b))).as("bucket"))
-    val counts = bucketed.groupBy("bucket").agg(count(lit(1)).as("cnt"))
-    // exclusive prefix counts over the ≤B-row table: fold it into ONE
-    // row and prefix-sum with array HOFs (O(B²) on B≈16 — trivial);
-    // no window, no extra join, nothing single-partition but B rows
-    val offsets = counts
-      .agg(array_sort(collect_list(struct(col("bucket"), col("cnt")))).as("arr"))
-      .select(explode(transform(col("arr"), (x, i) =>
-        struct(x.getField("bucket").as("bucket"),
-               aggregate(slice(col("arr"), lit(1), i), lit(0L),
-                         (a, y) => a + y.getField("cnt")).as("off")))).as("s"))
-      .select(col("s.bucket").as("bucket"), col("s.off").as("off"))
-    val wLocal = Window.partitionBy("bucket")
+    val wLocal = Window.partitionBy("__bucket")
       .orderBy(col("c_acctbal").desc, col("c_custkey").asc)
     val n = col("n_total")
     val rk = col("rk")
@@ -709,10 +678,10 @@ object Relational {
     val bigSpan = (tileQ + lit(1)) * rem
     val quartile = when(rk <= bigSpan, ceil(rk / (tileQ + 1)))
       .otherwise(rem + ceil((rk - bigSpan) / tileQ))
-    bucketed
-      .join(broadcast(offsets), "bucket")
-      .select(col("c_custkey"), n,
-              (col("off") + row_number().over(wLocal)).as("rk"))
+    graft.operators.RangeScan(cust, Nil, col("c_acctbal"), 16, descending = true,
+                              count(lit(1)), lit(0L))(_ + _)
+      .select(col("c_custkey"), col("__total").as("n_total"),
+              (col("__prefix") + row_number().over(wLocal)).as("rk"))
       .select(col("c_custkey"),
               quartile.cast("int").as("quartile"),
               round(when(n === 1, lit(0.0))

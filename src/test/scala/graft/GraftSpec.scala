@@ -1452,13 +1452,17 @@ class GraftSpec extends SparkSpecBase {
       var x = seed; x ^= x << 13; x ^= x >>> 7; x ^= x << 17; x
     }
     // many duplicate keys: ranks must still be total via the tiebreak
-    val rows = (1L to 300L).map(i => (s"t$i", (math.abs(rng(i)) % 20).toDouble))
-    val expected = rows.sortBy { case (t, k) => (-k, t) }
-      .zipWithIndex.map { case ((t, _), i) => t -> (i + 1L) }.toMap
-    for (buckets <- Seq(2, 8, 32)) {
-      val got = Graft.globalRankDesc(rows.toDF("t", "k"), $"k", $"t", buckets)
+    val rows = (1L to 300L).map(i => (s"t$i", Option((math.abs(rng(i)) % 20).toDouble)))
+    // NULL keys rank last, in tie order
+    val nullKeys = (301L to 305L).map(i => (s"t$i", Option.empty[Double]))
+    val w = org.apache.spark.sql.expressions.Window.orderBy($"k".desc, $"t")
+    for (input <- Seq(rows, rows ++ nullKeys); buckets <- Seq(2, 8, 32)) {
+      val df = input.toDF("t", "k")
+      val expected = df.select($"t", row_number().over(w).cast("long"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val got = Graft.globalRankDesc(df, $"k", $"t", buckets)
         .collect().map(r => r.getString(1) -> r.getLong(2)).toMap
-      assert(got == expected, s"buckets=$buckets")
+      assert(got == expected, s"buckets=$buckets, ${input.size} rows")
     }
   }
 
@@ -1470,17 +1474,24 @@ class GraftSpec extends SparkSpecBase {
     // heavy duplicate keys: ranks must be total per group via the tie
     val rows = (1L to 400L).map { i =>
       val g = if (i <= 3) "tiny" else if (i <= 100) "mid" else "big"
-      (g, s"t$i", (math.abs(rng(i)) % 15).toDouble)
+      (g, s"t$i", Option((math.abs(rng(i)) % 15).toDouble))
     }
-    val expected = rows.groupBy(_._1).flatMap { case (g, rs) =>
-      rs.sortBy { case (_, t, k) => (-k, t) }.zipWithIndex
-        .map { case ((_, t, _), i) => (g, t) -> (i + 1L) }
+    // a NULL group is one group; NULL keys rank last within theirs,
+    // also in a group of NULL keys only
+    val nulls = (401L to 440L).map { i =>
+      val g = if (i <= 420) null else if (i <= 430) "mid" else "void"
+      val k = if (i % 3 == 0 || g == "void") None else Some((i % 7).toDouble)
+      (g, s"t$i", k)
     }
-    for (buckets <- Seq(2, 8, 32)) {
-      val got = Graft.groupedRankDesc(rows.toDF("g", "t", "k"),
-          $"g", $"k", $"t", buckets)
+    val w = org.apache.spark.sql.expressions.Window.partitionBy($"g")
+      .orderBy($"k".desc, $"t")
+    for (input <- Seq(rows, rows ++ nulls); buckets <- Seq(2, 8, 32)) {
+      val df = input.toDF("g", "t", "k")
+      val expected = df.select($"g", $"t", row_number().over(w).cast("long"))
+        .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+      val got = Graft.groupedRankDesc(df, $"g", $"k", $"t", buckets)
         .collect().map(r => (r.getString(0), r.getString(2)) -> r.getLong(3)).toMap
-      assert(got == expected, s"buckets=$buckets")
+      assert(got == expected, s"buckets=$buckets, ${input.size} rows")
     }
   }
 
@@ -2658,22 +2669,35 @@ class GraftSpec extends SparkSpecBase {
     val alone = Graft.shortestPaths(chain, source = 9L)
       .collect().map(r => (r.getLong(0), r.getInt(1)))
     assert(alone.toSeq == Seq((9L, 0)))
+    // the state keeps to the shuffle partitions however many rounds run
+    val long = (1L to 30L).map(i => (i, i + 1)).toDF("a", "b")
+    val far = Graft.shortestPaths(long, source = 1L, maxDepth = 30)
+    assert(far.count() == 31)
+    assert(far.rdd.getNumPartitions <= spark.conf.get("spark.sql.shuffle.partitions").toInt)
+  }
+
+  /** Jobs of construction plus a noop write, after a first call so
+    * shared table builds are not counted; the fewest of three calls,
+    * since AQE's re-planning order can add a job on a loaded machine. */
+  private def warmJobs(q: String): Int = {
+    def run(): Unit = SparkEntry.queries(q)(spark, sf)
+      .write.format("noop").mode("overwrite").save()
+    run()
+    (1 to 3).map(_ => jobsDuring(spark)(run())).min
   }
 
   test("q_kcore and q_shortest_path: warm job budgets at sf0.001") {
-    // construction plus a noop write, after a first call so shared
-    // table builds are not counted; the fewest of three calls, since
-    // AQE's re-planning order can add a job on a loaded machine
-    def warmJobs(q: String): Int = {
-      def run(): Unit = SparkEntry.queries(q)(spark, sf)
-        .write.format("noop").mode("overwrite").save()
-      run()
-      (1 to 3).map(_ => jobsDuring(spark)(run())).min
-    }
     val kcore = warmJobs("q_kcore")
     assert(kcore <= 11, s"q_kcore ran $kcore jobs")
     val bfs = warmJobs("q_shortest_path")
     assert(bfs <= 23, s"q_shortest_path ran $bfs jobs")
+  }
+
+  test("range-scan queries: warm job budgets at sf0.001") {
+    for ((q, budget) <- Seq("q_window_ntile" -> 9, "q_late_data" -> 8, "q_pack_chunks" -> 11)) {
+      val jobs = warmJobs(q)
+      assert(jobs <= budget, s"$q ran $jobs jobs")
+    }
   }
 
   test("ewma: hand-computed recurrence per key; reserved output name throws") {

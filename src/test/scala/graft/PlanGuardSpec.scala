@@ -9,9 +9,10 @@ import org.apache.spark.sql.execution.window.WindowExec
 
 /** Plan-shape regression guard across the ENTIRE query inventory:
   * plans every declared query (no execution) and rejects the shapes
-  * that would melt at scale. The allowlist mirrors PLANS.md's scale
-  * audit — a new query that sneaks in a cartesian product or an
-  * unreviewed nested-loop join fails here, not on the cluster. */
+  * that would melt at scale. The allowlists below are the one
+  * reviewed list of these shapes — a new query that sneaks in a
+  * cartesian product or an unreviewed nested-loop join fails here, not
+  * on the cluster. */
 class PlanGuardSpec extends SparkSpecBase {
 
   // reviewed: single-probe / tiny-build-side nested loops (linear) —
@@ -348,7 +349,13 @@ class PlanGuardSpec extends SparkSpecBase {
     // exchange (reused by q_sim_ivf's probe side) and q_ivf_build's
     // per-cell count
     "q_ivf_build" -> 2,
-    "q_sim_ivf" -> 1)
+    "q_sim_ivf" -> 1,
+    // the RangeScan sites: the bounds aggregate, the per-bucket
+    // aggregate, the prefix fold's single partition, the window's
+    // bucket partitioning and the output or group-by exchange
+    "q_window_ntile" -> 5,
+    "q_late_data" -> 5,
+    "q_pack_chunks" -> 5)
 
   /** The prepared plan (executedPlan with AQE off) of a declared query. */
   private def preparedPlan(name: String): SparkPlan = {
