@@ -1,7 +1,13 @@
 package graft.multimodal
 
+import java.awt.image.BufferedImage
+import java.io.ByteArrayInputStream
+import javax.imageio.ImageIO
+import javax.imageio.stream.MemoryCacheImageInputStream
+import javax.sound.sampled.{AudioFormat, AudioSystem}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Multimodal column plumbing (SURVEY.md §2.12): image/audio/video as
   * opaque BINARY columns with typed metadata, processed per-partition
@@ -63,11 +69,7 @@ object Multimodal {
 
   /** Declared header dimensions of a magic-gated payload (BMP:
     * little-endian ints at offsets 18/22; PNG: big-endian IHDR at
-    * 16/20), or None if the header is malformed. A codec allocates
-    * buffers from these DECLARED dims before reading a single pixel,
-    * so a corrupt header claiming a 757-megapixel image would OOM the
-    * task if handed to the reader unchecked — the bound belongs
-    * BEFORE the decode, where it costs eight byte reads. */
+    * 16/20), or None if the header is malformed. */
   private def declaredDims(p: Array[Byte]): Option[(Int, Int)] =
     try
       if (p(0) == 'B'.toByte) {
@@ -83,57 +85,64 @@ object Multimodal {
 
   private val MaxPixels = 1 << 24 // 16 MPix — far above any sane test payload
 
-  /** REAL image decode — pure JDK (`javax.imageio`, no external
-    * codec): parses the payload as an actual image (BMP/PNG —
-    * whatever the JDK registry reads) and histograms the DECODED
-    * PIXELS' luminance ((r+g+b)/3, 16 bins) — so the histogram sums
-    * to the pixel count, not the byte count, which is how a caller
-    * (and MultimodalSpec) can tell the real decode ran and not the
-    * byte-histogram stub. Returns None for payloads that are not a
-    * decodable image (wrong magic, implausible declared dimensions,
-    * truncated, corrupt — ANY reader failure, not just IOException:
-    * the JDK readers throw RuntimeExceptions on malformed headers) —
-    * the caller falls back to the stub, the production shape for a
-    * dirty corpus where a "jpg" column is 0.1% garbage. Reads through
-    * an explicit MemoryCacheImageInputStream: the default ImageIO
-    * path spools every InputStream to a disk-backed temp file, a
-    * per-row create/write/delete that has no business in a hot path
-    * whose source is already an in-memory byte array. */
-  def decodeImage(payload: Array[Byte]): Option[Array[Long]] =
-    if (!looksLikeImage(payload)) None
-    else if (!declaredDims(payload).exists { case (w, h) =>
-               w >= 1 && h >= 1 && w.toLong * h <= MaxPixels }) None
+  /** Luminance (r+g+b)/3 of a packed 0xRRGGBB pixel, 0..255. */
+  private def luminance(rgb: Int): Int =
+    (((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)) / 3
+
+  /** Count every pixel of `img` into the 16-bin luminance histogram. */
+  private def addLuminance(img: BufferedImage, hist: Array[Long]): Unit = {
+    var y = 0
+    while (y < img.getHeight) {
+      var x = 0
+      while (x < img.getWidth) { hist(luminance(img.getRGB(x, y)) >> 4) += 1L; x += 1 }
+      y += 1
+    }
+  }
+
+  /** The one still-image (BMP/PNG — whatever the JDK registry reads)
+    * decode: `f` of the decoded image, or None when the payload fails
+    * a gate or the codec.
+    *   - Magic bytes ([[looksLikeImage]]) before any registry scan.
+    *   - Declared dimensions at most [[MaxPixels]], read from the
+    *     header in eight byte reads: a codec allocates buffers from the
+    *     DECLARED dims before reading a single pixel, so a corrupt
+    *     header claiming a 757-megapixel image would OOM the task — and
+    *     `OutOfMemoryError` is not `NonFatal`.
+    *   - ANY codec failure is None, not just IOException: the JDK
+    *     readers throw RuntimeExceptions on malformed headers.
+    *   - Reads through an explicit MemoryCacheImageInputStream: the
+    *     default ImageIO path spools every InputStream to a disk-backed
+    *     temp file, a per-row create/write/delete that has no business
+    *     in a hot path whose source is already an in-memory array.
+    *   - Stream ownership: `ImageIO.read` over an ImageInputStream closes
+    *     the stream itself on success AND on reader throw, but NOT on the
+    *     null return (no registered reader claims the payload), so the
+    *     walker closes it on that branch only — a finally-close would
+    *     double-close the successful path (MemoryCacheImageInputStream
+    *     throws IOException("closed")) and turn every decode into None. */
+  private def stillImage[A](payload: Array[Byte])(f: BufferedImage => A): Option[A] =
+    if (!looksLikeImage(payload) || !declaredDims(payload).exists { case (w, h) =>
+          w >= 1 && h >= 1 && w.toLong * h <= MaxPixels }) None
     else
       try {
-        // ImageIO.read(ImageInputStream) closes the stream itself on
-        // success AND on reader throw — but NOT on the null return
-        // (no registered reader claims the payload), where the stream
-        // and its memory cache would otherwise sit until GC on a
-        // per-row hot path (round-10 ADVICE). Close it ourselves ONLY
-        // on that branch: a finally-close would double-close the
-        // successful path (MemoryCacheImageInputStream throws
-        // IOException("closed")) and turn every real decode into the
-        // stub fallback.
-        val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
-          new java.io.ByteArrayInputStream(payload))
-        val img = javax.imageio.ImageIO.read(iis)
-        if (img == null) { iis.close(); None }
-        else {
-          val hist = new Array[Long](16)
-          var y = 0
-          while (y < img.getHeight) {
-            var x = 0
-            while (x < img.getWidth) {
-              val rgb = img.getRGB(x, y)
-              val lum = (((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)) / 3
-              hist(lum >> 4) += 1L
-              x += 1
-            }
-            y += 1
-          }
-          Some(hist)
-        }
-      } catch { case scala.util.control.NonFatal(_) => None }
+        val iis = new MemoryCacheImageInputStream(new ByteArrayInputStream(payload))
+        val img = ImageIO.read(iis)
+        if (img == null) { iis.close(); None } else Some(f(img))
+      } catch { case NonFatal(_) => None }
+
+  /** REAL image decode — pure JDK (`javax.imageio`, no external
+    * codec): the 16-bin luminance ((r+g+b)/3) histogram of the DECODED
+    * PIXELS, so it sums to the pixel count, not the byte count — which
+    * is how a caller (and MultimodalSpec) can tell the real decode ran
+    * and not the byte-histogram stub. None for anything [[stillImage]]
+    * rejects; the caller falls back to the stub, the production shape
+    * for a dirty corpus where a "jpg" column is 0.1% garbage. */
+  def decodeImage(payload: Array[Byte]): Option[Array[Long]] =
+    stillImage(payload) { img =>
+      val hist = new Array[Long](16)
+      addLuminance(img, hist)
+      hist
+    }
 
   /** Deterministic 24-bit uncompressed BMP encoder (pure JDK, no
     * codec): `rgb` is row-major top-down 0xRRGGBB. Exists so tests
@@ -185,9 +194,8 @@ object Multimodal {
   /** Walks the RIFF chunk list to the `data` chunk and returns its
     * declared size, or None when the chunk structure is malformed —
     * a fixed offset-40 read would misparse standards-valid WAVs with
-    * an 18-byte fmt chunk or a LIST chunk before the data (review
-    * catch, round 11). Bounded to 16 chunks so a hostile chunk list
-    * cannot loop. */
+    * an 18-byte fmt chunk or a LIST chunk before the data. Bounded to
+    * 16 chunks so a hostile chunk list cannot loop. */
   private def riffDataSize(p: Array[Byte]): Option[Int] = {
     // LONG cursor: a hostile declared size near Int.MaxValue would
     // wrap an int cursor negative and index the array out of bounds
@@ -211,74 +219,72 @@ object Multimodal {
     None
   }
 
-  /** REAL audio decode — pure JDK (`javax.sound.sampled`, no external
-    * codec): parses the payload as a WAV, streams the decoded PCM
-    * frames, and histograms the SAMPLES (8-bit unsigned: sample value
-    * directly; 16-bit: the unsigned-shifted high byte) into 16 bins —
-    * so the histogram counts samples, not payload bytes, which is how
-    * a caller (and MultimodalSpec / the q_media_audio oracle) can
-    * tell the real decode ran and not the byte-histogram stub (the
-    * stub would also count the 44 RIFF header bytes). Returns None
-    * for anything that is not a decodable WAV — wrong magic, a
-    * malformed RIFF chunk list ([[riffDataSize]]), a declared data
-    * size exceeding the actual payload (the audio analogue of the
-    * dimension-bomb gate: a bounded chunk walk that runs BEFORE any
-    * provider touches the stream, and follows the real chunk
-    * structure so an 18-byte fmt or LIST chunk parses correctly),
-    * unsupported encodings, ANY reader failure — and the caller falls
-    * back to the stub, the dirty-corpus production shape. The read is
-    * stream-bounded: frames come off an AudioInputStream over the
-    * in-memory array, so a hostile header can never cause an
-    * allocation beyond the real payload. */
-  def decodeAudio(payload: Array[Byte]): Option[Array[Long]] =
+  /** The one WAV decode: streams the PCM samples of a WAV payload
+    * through `start(n)`, where n is the declared sample count, and
+    * returns n — or None when the payload fails a gate or the codec.
+    *   - Magic bytes ([[looksLikeWav]]) before any provider scan.
+    *   - [[riffDataSize]]: a bounded walk of the real chunk structure
+    *     to a data chunk whose declared size fits the payload, BEFORE
+    *     any provider touches the stream — the audio analogue of the
+    *     image dimension-bomb gate. n comes from that size, never from
+    *     buffering.
+    *   - PCM layout: only 8-bit unsigned and 16-bit signed
+    *     little-endian, the two layouts the sample conversion below
+    *     knows; anything else (a 24-bit stream, a PCM_UNSIGNED 16-bit
+    *     one) would be silently misread, so it is None.
+    *   - ANY codec failure is None; the stream is closed in `finally`.
+    * Samples are handed over centered on the signed 16-bit scale (an
+    * 8-bit sample is recentered and shifted left by 8), one
+    * `Long => Unit` call each — `Function1` is specialized for it, so
+    * no sample is boxed. The read is stream-bounded over the in-memory
+    * array, so a hostile header can never cause an allocation beyond
+    * the real payload. */
+  private def pcmSamples(payload: Array[Byte])(start: Long => Long => Unit): Option[Long] =
     if (!looksLikeWav(payload)) None
-    else {
-      // the declared-data-size bound is the audio analogue of the
-      // image dimension-bomb gate: it runs BEFORE any provider
-      // touches the stream, via a real chunk walk (size-vs-payload
-      // fit is checked at the data chunk's own offset)
-      if (riffDataSize(payload).isEmpty) None
-      else
+    else riffDataSize(payload).flatMap { dataBytes =>
+      try {
+        val ais = AudioSystem.getAudioInputStream(new ByteArrayInputStream(payload))
         try {
-          val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-            new java.io.ByteArrayInputStream(payload))
-          try {
-            val f = ais.getFormat
-            val bytesPerSample = f.getSampleSizeInBits / 8
-            // the sample conversion below hard-codes the two WAV PCM
-            // layouts (8-bit ⇒ unsigned, 16-bit ⇒ signed LE), so the
-            // gate must admit EXACTLY those pairs — admitting e.g. a
-            // PCM_UNSIGNED 16-bit stream would silently XOR its high
-            // byte into the wrong bin (review catch; unreachable via
-            // the JDK WaveFileReader today, rejected loudly anyway)
-            val unsigned8 = bytesPerSample == 1 &&
-              f.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_UNSIGNED
-            val signed16 = bytesPerSample == 2 &&
-              f.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED
-            if (!unsigned8 && !signed16) None
-            else {
-              val hist = new Array[Long](16)
-              val buf = new Array[Byte](4096 * bytesPerSample)
-              var n = ais.read(buf)
-              while (n > 0) {
-                var i = 0
-                while (i + bytesPerSample <= n) {
-                  // 8-bit WAV PCM is unsigned; 16-bit is signed
-                  // little-endian — shift its high byte to unsigned so
-                  // both land on the same 0..255 sample scale
-                  val v =
-                    if (bytesPerSample == 1) buf(i) & 0xff
-                    else (buf(i + 1) & 0xff) ^ 0x80
-                  hist(v >> 4) += 1L
-                  i += bytesPerSample
-                }
-                n = ais.read(buf)
+          val f = ais.getFormat
+          val width = f.getSampleSizeInBits / 8
+          val unsigned8 = width == 1 && f.getEncoding == AudioFormat.Encoding.PCM_UNSIGNED
+          val signed16 = width == 2 && f.getEncoding == AudioFormat.Encoding.PCM_SIGNED
+          if (!unsigned8 && !signed16) None
+          else {
+            val n = (dataBytes / width).toLong
+            val visit = start(n)
+            val buf = new Array[Byte](4096 * width)
+            var got = ais.read(buf)
+            while (got > 0) {
+              var i = 0
+              while (i + width <= got) {
+                visit(
+                  if (unsigned8) ((buf(i) & 0xff) - 128L) << 8
+                  else ((buf(i) & 0xff) | (buf(i + 1) << 8)).toLong)
+                i += width
               }
-              Some(hist)
+              got = ais.read(buf)
             }
-          } finally ais.close()
-        } catch { case scala.util.control.NonFatal(_) => None }
+            Some(n)
+          }
+        } finally ais.close()
+      } catch { case NonFatal(_) => None }
     }
+
+  /** REAL audio decode — pure JDK (`javax.sound.sampled`, no external
+    * codec): the 16-bin histogram of the decoded PCM SAMPLES on the
+    * unsigned 8-bit scale (8-bit: the sample value; 16-bit: the high
+    * byte shifted to unsigned), so it counts samples, not payload
+    * bytes — which is how a caller (and MultimodalSpec / the
+    * q_media_audio oracle) can tell the real decode ran and not the
+    * byte-histogram stub (the stub would also count the RIFF header).
+    * None for anything [[pcmSamples]] rejects; the caller falls back
+    * to the stub, the dirty-corpus production shape. */
+  def decodeAudio(payload: Array[Byte]): Option[Array[Long]] = {
+    val hist = new Array[Long](16)
+    pcmSamples(payload)(_ => v => hist((((v >> 8) + 128) >> 4).toInt) += 1L)
+      .map(_ => hist)
+  }
 
   /** Deterministic 8-bit unsigned PCM mono WAV encoder (pure JDK, no
     * codec): each input byte becomes one sample, value = the byte
@@ -316,44 +322,42 @@ object Multimodal {
       p(5) == 'a'.toByte
 
   /** Declared logical-screen dimensions of a magic-gated GIF
-    * (little-endian uint16 at offsets 6/8) — the video analogue of
-    * the image dimension-bomb gate: the bound runs on four byte
-    * reads, BEFORE the reader allocates a frame buffer. */
+    * (little-endian uint16 at offsets 6/8). */
   private def declaredGifDims(p: Array[Byte]): (Int, Int) =
     (((p(7) & 0xff) << 8) | (p(6) & 0xff), ((p(9) & 0xff) << 8) | (p(8) & 0xff))
 
   private val MaxFrames = 4096 // bounds the frame-count scan on hostile payloads
 
-  /** REAL video decode — pure JDK (`javax.imageio`'s GIF reader, no
-    * external codec): parses the payload as a multi-frame animated
-    * GIF, decodes every `stride`-th frame (keyframe-style sampling —
-    * the reader seeks past unsampled frames), and histograms the
-    * SAMPLED frames' pixel luminance ((r+g+b)/3, 16 bins). Returns
-    * (histogram, total frames in the container, frames sampled), or
-    * None for anything that is not a decodable multi-frame GIF —
-    * wrong magic, implausible declared screen dimensions, more than
-    * [[MaxFrames]] frames, truncated or corrupt frame data, ANY
-    * reader failure — and the caller falls back to the stub, the
-    * dirty-corpus production shape. The histogram counts PIXELS of
-    * sampled frames, not payload bytes, which is how a caller (and
-    * the q_media_video oracle) can tell the real frame decode ran:
-    * a byte histogram would count the GIF header, palette and LZW
-    * code stream. Unlike `ImageIO.read`, the reader API never closes
-    * the input stream itself, so the stream is closed in a plain
-    * `finally` — no branch-dependent ownership here. */
-  def decodeVideo(payload: Array[Byte], stride: Int): Option[(Array[Long], Int, Int)] =
+  /** The one multi-frame GIF decode: hands every `stride`-th frame
+    * (0, stride, 2·stride, …) to `visit` in order — keyframe-style
+    * sampling, the reader seeks past unsampled frames — and returns
+    * the container's frame count, or None when the payload fails a
+    * gate or the codec (then `visit` may have seen a prefix of the
+    * frames; callers discard what it built).
+    *   - `stride ≥ 1` and magic bytes ([[looksLikeGif]]).
+    *   - Declared logical-screen dimensions at most [[MaxPixels]], in
+    *     four byte reads BEFORE the reader allocates a frame buffer.
+    *   - 1 ≤ frame count ≤ [[MaxFrames]].
+    *   - Per-frame dimensions at most [[MaxPixels]] on every sampled
+    *     frame, before it decodes: a sub-frame's declared dims can
+    *     exceed the logical screen on a hostile payload.
+    *   - ANY codec failure is None.
+    *   - Stream ownership: unlike `ImageIO.read`, the reader API never
+    *     closes the input itself, so the reader is disposed and the
+    *     stream closed in a plain `finally` on every branch. */
+  private def gifFrames(payload: Array[Byte], stride: Int)(
+      visit: BufferedImage => Unit): Option[Int] =
     if (stride < 1 || !looksLikeGif(payload)) None
     else {
       val (w, h) = declaredGifDims(payload)
       if (w < 1 || h < 1 || w.toLong * h > MaxPixels) None
       else
         try {
-          val readers = javax.imageio.ImageIO.getImageReadersByFormatName("gif")
+          val readers = ImageIO.getImageReadersByFormatName("gif")
           if (!readers.hasNext) None
           else {
             val reader = readers.next()
-            val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
-              new java.io.ByteArrayInputStream(payload))
+            val iis = new MemoryCacheImageInputStream(new ByteArrayInputStream(payload))
             try {
               // seekForwardOnly = false: frame sampling needs random
               // access across the image sequence
@@ -361,42 +365,37 @@ object Multimodal {
               val nf = reader.getNumImages(true)
               if (nf < 1 || nf > MaxFrames) None
               else {
-                val hist = new Array[Long](16)
-                var sampled = 0
                 var i = 0
-                var ok = true
-                while (ok && i < nf) {
-                  // per-frame bound: a sub-frame's declared dims can
-                  // exceed the logical screen on a hostile payload
-                  if (reader.getWidth(i).toLong * reader.getHeight(i) > MaxPixels)
-                    ok = false
-                  else {
-                    val img = reader.read(i)
-                    var y = 0
-                    while (y < img.getHeight) {
-                      var x = 0
-                      while (x < img.getWidth) {
-                        val rgb = img.getRGB(x, y)
-                        val lum = (((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) +
-                          (rgb & 0xff)) / 3
-                        hist(lum >> 4) += 1L
-                        x += 1
-                      }
-                      y += 1
-                    }
-                    sampled += 1
-                    i += stride
-                  }
+                while (i < nf && reader.getWidth(i).toLong * reader.getHeight(i) <= MaxPixels) {
+                  visit(reader.read(i))
+                  i += stride
                 }
-                if (ok) Some((hist, nf, sampled)) else None
+                if (i >= nf) Some(nf) else None
               }
             } finally {
               reader.dispose()
               iis.close()
             }
           }
-        } catch { case scala.util.control.NonFatal(_) => None }
+        } catch { case NonFatal(_) => None }
     }
+
+  /** REAL video decode — pure JDK (`javax.imageio`'s GIF reader, no
+    * external codec): decodes every `stride`-th frame of a multi-frame
+    * animated GIF and histograms the SAMPLED frames' pixel luminance
+    * ((r+g+b)/3, 16 bins). Returns (histogram, total frames in the
+    * container, frames sampled), or None for anything [[gifFrames]]
+    * rejects; the caller falls back to the stub, the dirty-corpus
+    * production shape. The histogram counts PIXELS of sampled frames,
+    * not payload bytes, which is how a caller (and the q_media_video
+    * oracle) can tell the real frame decode ran: a byte histogram
+    * would count the GIF header, palette and LZW code stream. */
+  def decodeVideo(payload: Array[Byte], stride: Int): Option[(Array[Long], Int, Int)] = {
+    val hist = new Array[Long](16)
+    var sampled = 0
+    gifFrames(payload, stride) { img => addLuminance(img, hist); sampled += 1 }
+      .map(nf => (hist, nf, sampled))
+  }
 
   /** Deterministic multi-frame grayscale animated-GIF encoder (pure
     * JDK: `javax.imageio`'s GIF writer in sequence mode): each frame
@@ -457,7 +456,7 @@ object Multimodal {
     * empty; [[finishAverageHash]] scores empty cells 0 on every
     * variant, so they can never flip between an asset and its
     * re-encode). Luminance = (r+g+b)/3, the [[decodeImage]] scale. */
-  private def accumulateHashCells(img: java.awt.image.BufferedImage,
+  private def accumulateHashCells(img: BufferedImage,
                                   sum: Array[Long], cnt: Array[Long]): Unit = {
     val w = img.getWidth
     val h = img.getHeight
@@ -466,10 +465,8 @@ object Multimodal {
       val cy = y * 8 / h
       var x = 0
       while (x < w) {
-        val rgb = img.getRGB(x, y)
-        val lum = (((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)) / 3
         val c = cy * 8 + x * 8 / w
-        sum(c) += lum
+        sum(c) += luminance(img.getRGB(x, y))
         cnt(c) += 1
         x += 1
       }
@@ -518,10 +515,10 @@ object Multimodal {
     * box-averaged luminance cells against their own mean instead of
     * hashing bytes. Images (BMP/PNG) hash their full pixel grid;
     * multi-frame GIFs hash the TEMPORAL AVERAGE of every `stride`-th
-    * frame's cells (the keyframe-sampling shape of [[decodeVideo]],
-    * same magic-byte and dimension-bomb gates). Returns None for
-    * undecodable payloads — the q_media_dedup pipeline falls back to
-    * exact-digest identity for those, never a fake signature.
+    * frame's cells (the keyframe-sampling shape of [[decodeVideo]]).
+    * Returns None for undecodable payloads — the q_media_dedup
+    * pipeline falls back to exact-digest identity for those, never a
+    * fake signature.
     *
     * Pairing at corpus scale: feed the signatures to
     * [[graft.Graft.nearDupPairsHamming]] (16-bit band buckets +
@@ -529,79 +526,30 @@ object Multimodal {
     * machinery, which this signature deliberately shares its width
     * with). Row-local; the signature is 8 bytes however large the
     * asset. */
-  def perceptualHash(payload: Array[Byte], stride: Int = 1): Option[Long] =
-    if (looksLikeGif(payload)) {
-      val (w, h) = declaredGifDims(payload)
-      if (stride < 1 || w < 1 || h < 1 || w.toLong * h > MaxPixels) None
-      else
-        try {
-          val readers = javax.imageio.ImageIO.getImageReadersByFormatName("gif")
-          if (!readers.hasNext) None
-          else {
-            val reader = readers.next()
-            val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
-              new java.io.ByteArrayInputStream(payload))
-            try {
-              reader.setInput(iis, false, true)
-              val nf = reader.getNumImages(true)
-              if (nf < 1 || nf > MaxFrames) None
-              else {
-                val sum = new Array[Long](64)
-                val cnt = new Array[Long](64)
-                var i = 0
-                var ok = true
-                while (ok && i < nf) {
-                  if (reader.getWidth(i).toLong * reader.getHeight(i) > MaxPixels)
-                    ok = false
-                  else {
-                    accumulateHashCells(reader.read(i), sum, cnt)
-                    i += stride
-                  }
-                }
-                if (ok) Some(finishAverageHash(sum, cnt)) else None
-              }
-            } finally {
-              reader.dispose()
-              iis.close()
-            }
-          }
-        } catch { case scala.util.control.NonFatal(_) => None }
-    } else if (looksLikeImage(payload)) {
-      if (!declaredDims(payload).exists { case (w, h) =>
-            w >= 1 && h >= 1 && w.toLong * h <= MaxPixels }) None
-      else
-        try {
-          val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
-            new java.io.ByteArrayInputStream(payload))
-          val img = javax.imageio.ImageIO.read(iis)
-          if (img == null) { iis.close(); None }
-          else {
-            val sum = new Array[Long](64)
-            val cnt = new Array[Long](64)
-            accumulateHashCells(img, sum, cnt)
-            Some(finishAverageHash(sum, cnt))
-          }
-        } catch { case scala.util.control.NonFatal(_) => None }
-    } else None
+  def perceptualHash(payload: Array[Byte], stride: Int = 1): Option[Long] = {
+    val sum = new Array[Long](64)
+    val cnt = new Array[Long](64)
+    val decoded =
+      if (looksLikeGif(payload)) gifFrames(payload, stride)(accumulateHashCells(_, sum, cnt))
+      else stillImage(payload)(accumulateHashCells(_, sum, cnt))
+    decoded.map(_ => finishAverageHash(sum, cnt))
+  }
 
   /** Per-frame perceptual signature SEQUENCE of a decodable
-    * multi-frame GIF (round 16 — the round-15 verdict's #3): one
-    * 64-bit average hash PER FRAME, in frame order, instead of
-    * [[perceptualHash]]'s single temporal-average signature. The
-    * temporal average is order-invariant and mass-weighted, so a
-    * TRIMMED clip moves the whole signature (the near-dup is MISSED)
-    * and a REORDERED clip at sampling stride 1 leaves it bit-identical
-    * (the clips are indistinguishable) — per-frame signatures carry
-    * the sequence, so a banded (frame-hash, position-bucket)
-    * subsequence match catches both, the video face of
-    * [[audioFingerprint]]'s time-framed bands. Each frame's hash has
+    * multi-frame GIF: one 64-bit average hash PER FRAME, in frame
+    * order, instead of [[perceptualHash]]'s single temporal-average
+    * signature. The temporal average is order-invariant and
+    * mass-weighted, so a TRIMMED clip moves the whole signature (the
+    * near-dup is MISSED) and a REORDERED clip at sampling stride 1
+    * leaves it bit-identical (the clips are indistinguishable) —
+    * per-frame signatures carry the sequence, so a banded (frame-hash,
+    * position-bucket) subsequence match catches both, the video face
+    * of [[audioFingerprint]]'s time-framed bands. Each frame's hash has
     * the [[finishAverageHash]] exactness invariances (lossless
     * re-encode, uniform brightness shift, integer upscale →
-    * bit-identical per frame). Same gates as [[perceptualHash]]'s
-    * GIF path — magic bytes, dimension bomb, [[MaxFrames]],
-    * per-frame dims, any reader failure → None (the caller falls
-    * back to exact-digest identity). Row-local; the signature is
-    * 8 bytes/frame however large the frames. */
+    * bit-identical per frame). None for undecodable payloads (the
+    * caller falls back to exact-digest identity). Row-local; the
+    * signature is 8 bytes/frame however large the frames. */
   def videoFrameHashes(payload: Array[Byte]): Option[Array[Long]] =
     videoSignatures(payload).map(_._2)
 
@@ -613,57 +561,24 @@ object Multimodal {
     * pinned in MultimodalSpec — while the payload is parsed and every
     * frame decoded ONCE instead of twice (measured: the q_media_videofp
     * signature build is codec-bound, and the fused pass halves it). */
-  def videoSignatures(payload: Array[Byte]): Option[(Long, Array[Long])] =
-    if (!looksLikeGif(payload)) None
-    else {
-      val (w, h) = declaredGifDims(payload)
-      if (w < 1 || h < 1 || w.toLong * h > MaxPixels) None
-      else
-        try {
-          val readers = javax.imageio.ImageIO.getImageReadersByFormatName("gif")
-          if (!readers.hasNext) None
-          else {
-            val reader = readers.next()
-            val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
-              new java.io.ByteArrayInputStream(payload))
-            try {
-              reader.setInput(iis, false, true)
-              val nf = reader.getNumImages(true)
-              if (nf < 1 || nf > MaxFrames) None
-              else {
-                val out = new Array[Long](nf)
-                val gSum = new Array[Long](64)
-                val gCnt = new Array[Long](64)
-                var i = 0
-                var ok = true
-                while (ok && i < nf) {
-                  if (reader.getWidth(i).toLong * reader.getHeight(i) > MaxPixels)
-                    ok = false
-                  else {
-                    val sum = new Array[Long](64)
-                    val cnt = new Array[Long](64)
-                    accumulateHashCells(reader.read(i), sum, cnt)
-                    out(i) = finishAverageHash(sum, cnt)
-                    var c = 0
-                    while (c < 64) { gSum(c) += sum(c); gCnt(c) += cnt(c); c += 1 }
-                    i += 1
-                  }
-                }
-                if (ok) Some((finishAverageHash(gSum, gCnt), out)) else None
-              }
-            } finally {
-              reader.dispose()
-              iis.close()
-            }
-          }
-        } catch { case scala.util.control.NonFatal(_) => None }
-    }
+  def videoSignatures(payload: Array[Byte]): Option[(Long, Array[Long])] = {
+    val frameHashes = Array.newBuilder[Long]
+    val gSum = new Array[Long](64)
+    val gCnt = new Array[Long](64)
+    gifFrames(payload, 1) { img =>
+      val sum = new Array[Long](64)
+      val cnt = new Array[Long](64)
+      accumulateHashCells(img, sum, cnt)
+      frameHashes += finishAverageHash(sum, cnt)
+      var c = 0
+      while (c < 64) { gSum(c) += sum(c); gCnt(c) += cnt(c); c += 1 }
+    }.map(_ => (finishAverageHash(gSum, gCnt), frameHashes.result()))
+  }
 
-  /** PERCEPTUAL audio fingerprint (round 14 — the round-13 verdict's
-    * #4, extending the [[perceptualHash]] family to the WAV
-    * modality): a 64-bit spectral-energy-delta hash in the
-    * chromaprint SHAPE — the decoded PCM stream is cut into 8 equal
-    * TIME FRAMES, each frame's signal is measured through 8
+  /** PERCEPTUAL audio fingerprint, extending the [[perceptualHash]]
+    * family to the WAV modality: a 64-bit spectral-energy-delta hash
+    * in the chromaprint SHAPE — the decoded PCM stream is cut into 8
+    * equal TIME FRAMES, each frame's signal is measured through 8
     * DIFFERENCE-LAG BANDS (band b's energy = Σ (x_t − x_{t−(b+1)})²
     * over the frame — a crude comb filterbank: small lags respond to
     * high-frequency content, large lags to low), and bit (b·8 + f)
@@ -675,89 +590,57 @@ object Multimodal {
     * bit-identical (exactly when the gain is arithmetic-exact;
     * integer rounding of a real gain shift moves a few bits, which
     * the Hamming radius absorbs — the [[perceptualHash]] upscale
-    * stance). MD5 catches neither.
+    * stance); an 8-bit and a 16-bit copy of the same content match,
+    * since [[pcmSamples]] puts both on one scale. MD5 catches neither.
     *
-    * Streaming and allocation-bounded: samples come off the
-    * [[decodeAudio]] gate path (magic bytes + RIFF chunk walk before
-    * any provider touches the stream) and fold into the 8×8 cell
+    * Streaming and allocation-bounded: samples fold into the 8×8 cell
     * accumulators through an 8-sample ring buffer — no sample array
     * is ever materialized, so a multi-GB WAV fingerprints in O(1)
-    * memory. The frame partition needs the total sample count
-    * up-front; it comes from the RIFF data-chunk size the gate
-    * already parsed, never from buffering. Returns None for anything
-    * not a decodable 8/16-bit PCM WAV — the caller falls back to
+    * memory; the frame partition uses the declared sample count.
+    * Returns None for anything that is not a decodable 8/16-bit PCM
+    * WAV with at least one sample — the caller falls back to
     * exact-digest identity ([[perceptualHash]]'s contract).
     *
     * Pairing at corpus scale: [[graft.Graft.nearDupPairsHamming]] —
     * the same 16-bit band machinery as SimHash text and perceptual
     * image signatures, which this hash deliberately shares its
     * 64-bit width with. */
-  def audioFingerprint(payload: Array[Byte]): Option[Long] =
-    if (!looksLikeWav(payload)) None
-    else riffDataSize(payload) match {
-      case None => None
-      case Some(dataBytes) =>
-        try {
-          val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-            new java.io.ByteArrayInputStream(payload))
-          try {
-            val f = ais.getFormat
-            val bytesPerSample = f.getSampleSizeInBits / 8
-            val unsigned8 = bytesPerSample == 1 &&
-              f.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_UNSIGNED
-            val signed16 = bytesPerSample == 2 &&
-              f.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED
-            val nSamples = dataBytes / math.max(1, bytesPerSample)
-            if ((!unsigned8 && !signed16) || nSamples < 1) None
-            else {
-              // energy[f][b]: time frame f × lag band b; BigInt-free —
-              // (x_t − x_{t−k})² ≤ (2·32768)² and a frame holds <
-              // 2⁴⁵ samples before a Long could overflow
-              val energy = Array.ofDim[Long](8, 8)
-              val ring = new Array[Long](8) // last 8 centered samples
-              val buf = new Array[Byte](4096 * bytesPerSample)
-              var t = 0L
-              var n = ais.read(buf)
-              while (n > 0) {
-                var i = 0
-                while (i + bytesPerSample <= n) {
-                  // center both layouts at 0 so DC is the encoder's
-                  // midpoint, not a format artifact
-                  val v: Long =
-                    if (bytesPerSample == 1) (buf(i) & 0xff) - 128L
-                    else ((buf(i) & 0xff) | (buf(i + 1) << 8)).toLong
-                  val frame = math.min(7L, t * 8 / nSamples).toInt
-                  var b = 0
-                  while (b < 8) {
-                    val lag = b + 1
-                    if (t >= lag) {
-                      val d = v - ring(((t - lag) % 8).toInt)
-                      energy(frame)(b) += d * d
-                    }
-                    b += 1
-                  }
-                  ring((t % 8).toInt) = v
-                  t += 1
-                  i += bytesPerSample
-                }
-                n = ais.read(buf)
-              }
-              var sig = 0L
-              var b = 0
-              while (b < 8) {
-                var fr = 0
-                while (fr < 8) {
-                  if (energy(fr)(b) > energy((fr + 1) % 8)(b))
-                    sig |= 1L << (b * 8 + fr)
-                  fr += 1
-                }
-                b += 1
-              }
-              Some(sig)
-            }
-          } finally ais.close()
-        } catch { case scala.util.control.NonFatal(_) => None }
+  def audioFingerprint(payload: Array[Byte]): Option[Long] = {
+    // energy[f][b]: time frame f × lag band b; BigInt-free — a square
+    // (x_t − x_{t−k})² is at most 2³², so a Long overflows only past
+    // 2³¹ samples in one frame, and a RIFF data size (an Int) holds
+    // fewer than that
+    val energy = Array.ofDim[Long](8, 8)
+    val ring = new Array[Long](8) // last 8 samples
+    var t = 0L
+    pcmSamples(payload) { n => v =>
+      val frame = math.min(7L, t * 8 / n).toInt
+      var b = 0
+      while (b < 8) {
+        val lag = b + 1
+        if (t >= lag) {
+          val d = v - ring(((t - lag) % 8).toInt)
+          energy(frame)(b) += d * d
+        }
+        b += 1
+      }
+      ring((t % 8).toInt) = v
+      t += 1
+    }.filter(_ >= 1).map { _ =>
+      var sig = 0L
+      var b = 0
+      while (b < 8) {
+        var fr = 0
+        while (fr < 8) {
+          if (energy(fr)(b) > energy((fr + 1) % 8)(b))
+            sig |= 1L << (b * 8 + fr)
+          fr += 1
+        }
+        b += 1
+      }
+      sig
     }
+  }
 
   /** Frame sampling: treat the payload as fixed-size frames, keep every
     * `stride`-th — the shape of video keyframe extraction. */

@@ -39,6 +39,70 @@ object MediaOps {
               (col("doc_id") % 480).cast("int").as("height"),
               lit(16000).as("sample_rate"))
 
+  /** Gray 0xRRGGBB pixels, one per byte read unsigned — gray makes
+    * decoded luminance ≡ byte value, which the oracles count on. */
+  private def grayPixels(bytes: Array[Byte]): Array[Int] =
+    bytes.map { b => val v = b & 0xff; (v << 16) | (v << 8) | v }
+
+  /** A document's bytes packed into 64-byte frames (16×4 gray pixels
+    * each), the last frame padded with ASCII space (bin 2). */
+  private def frames64(bytes: Array[Byte]): IndexedSeq[Array[Byte]] =
+    (0 until (bytes.length + 63) / 64).map { i =>
+      val f = Array.fill[Byte](64)(0x20)
+      System.arraycopy(bytes, i * 64, f, 0, math.min(64, bytes.length - i * 64))
+      f
+    }
+
+  /** The near-dup report [[q_media_phash]] and [[q_media_audio_fp]]
+    * share, over a signature table of (asset_id, sig) whose assets
+    * come in (original 2·doc_id, twin 2·doc_id+1) pairs: one row per
+    * Hamming distance in 0..maxHamming that HAS pairs (hamming = 0
+    * always present via the global within-group aggregate). n_pairs
+    * counts ALL near-dup asset pairs: identical signatures collapse to
+    * one banding representative (the MinHash set-collapse discipline),
+    * representatives pair through [[graft.Graft.nearDupPairsHamming]],
+    * and group mass re-expands arithmetically — n·(n−1)/2 within a
+    * group, n_a·n_b across — so the quadratic pair list is never
+    * materialized. n_twin_pairs counts the (original, twin) pairs among
+    * them through a LINEAR id join, so recall is priced separately
+    * from pairing. */
+  private def hammingTwinReport(sigTable: DataFrame, groupsName: String,
+                                maxHamming: Int): DataFrame = {
+    // the group table is its own cached artifact: four plan branches
+    // consume it (banding reps, both pair-mass re-expansions, the
+    // within-group rollup), and at corpus scale recomputing the
+    // signature aggregate per branch is four shuffles where one table
+    // write does
+    val groups = graft.TempTables.shared(groupsName,
+      sigTable.groupBy("sig")
+        .agg(min(col("asset_id")).as("rep"), count(lit(1)).as("n")))()
+    val pairs = graft.Graft.nearDupPairsHamming(
+      groups, col("rep"), col("sig"), maxHamming = maxHamming)
+    val cross = pairs
+      .join(groups.select(col("rep").as("doc_a"), col("n").as("n_a")), "doc_a")
+      .join(groups.select(col("rep").as("doc_b"), col("n").as("n_b")), "doc_b")
+      .groupBy("hamming").agg(sum(col("n_a") * col("n_b")).as("n_pairs"))
+    val within = groups.agg(sum(expr("n * (n - 1) DIV 2")).as("n_pairs"))
+      .select(lit(0).as("hamming"), col("n_pairs"))
+    val allPairs = cross.unionByName(within)
+      .groupBy("hamming").agg(sum(col("n_pairs")).as("n_pairs"))
+    val twins = sigTable.filter(col("asset_id") % 2 === 0)
+      .select(expr("asset_id DIV 2").as("doc_id"), col("sig").as("sig_o"))
+      .join(sigTable.filter(col("asset_id") % 2 === 1)
+        .select(expr("asset_id DIV 2").as("doc_id"),
+                col("sig").as("sig_t")), "doc_id")
+      .select(expr("bit_count(sig_o ^ sig_t)").as("hamming"))
+      .filter(col("hamming") <= maxHamming)
+      .groupBy("hamming").agg(count(lit(1)).as("n_twin_pairs"))
+    allPairs.join(twins, Seq("hamming"), "left")
+      // n_pairs too: on an sfDir with zero eligible docs the global
+      // within-group sum is NULL, and the integer contract must hold
+      // even for the degenerate (0, 0, 0) row
+      .select(col("hamming"), coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
+              coalesce(col("n_twin_pairs"), lit(0L)).as("n_twin_pairs"))
+      .coalesce(1).orderBy("hamming")
+  }
+
   /** Per-kind media corpus profile: media count, total payload bytes,
     * total sampled frames (frameSize 64 / stride 4 — every 4th
     * 64-byte frame, the video-keyframe shape), and total bytes in
@@ -105,9 +169,8 @@ object MediaOps {
         .select(col("doc_id"), col("text"))).as[(Long, String)]
       .map { case (id, text) =>
         val bytes = text.getBytes("UTF-8")
-        val px = bytes.map { b => val v = b & 0xff; (v << 16) | (v << 8) | v }
         Multimodal.MediaRow(id, "image",
-          Multimodal.encodeBmp(bytes.length, 1, px), bytes.length, 1, 0)
+          Multimodal.encodeBmp(bytes.length, 1, grayPixels(bytes)), bytes.length, 1, 0)
       }
     val pixelSum = aggregate(col("histogram"), lit(0L), (a, x) => a + x)
     Multimodal.extractFeatures(media).toDF()
@@ -221,16 +284,8 @@ object MediaOps {
     // same heavy encode+decode mapper
     val media = graft.Graft.fanOutForCompute(media0).as[(Long, String)]
       .map { case (id, text) =>
-        val bytes = text.getBytes("UTF-8")
-        val nf = (bytes.length + 63) / 64
-        val frames = (0 until nf).map { i =>
-          val f = Array.fill[Byte](64)(0x20) // pad = ASCII space (bin 2)
-          System.arraycopy(bytes, i * 64, f, 0,
-            math.min(64, bytes.length - i * 64))
-          f
-        }
         Multimodal.MediaRow(id, "video",
-          Multimodal.encodeGifGray(16, 4, frames), 16, 4, 0)
+          Multimodal.encodeGifGray(16, 4, frames64(text.getBytes("UTF-8"))), 16, 4, 0)
       }
     val pixelSum = aggregate(col("histogram"), lit(0L), (a, x) => a + x)
     Multimodal.extractFeatures(media, frameSize = 64, stride = 2).toDF()
@@ -262,22 +317,13 @@ object MediaOps {
     * (asset 2·doc_id+1) — a pair no byte digest links (different
     * container, different bytes) that perceptual near-dup must.
     *
-    * Output, one row per Hamming distance in 0..2 that HAS pairs —
-    * the hamming = 0 row is always present (the global within-group
-    * aggregate emits it even when zero); a distance-1 or -2 row
-    * appears only when some pair sits at that distance, so the shape
-    * is 1–3 rows (round-13 ADVICE). Per row: `n_pairs` — ALL
-    * near-dup asset pairs at that distance (identical-signature
-    * groups collapse to one representative before banding, the
-    * MinHash set-collapse discipline, and group mass re-expands
-    * arithmetically: n·(n−1)/2 within a group, n_a·n_b across — the
-    * quadratic pair list is never materialized) — and `n_twin_pairs`,
-    * the (original, re-encode) pairs among them: the query's own
-    * measured recall of the perturbation it synthesized (a LINEAR
-    * id-join, so recall is priced separately from pairing). Oracle=no
-    * (JVM ImageIO decode — the q_dedup_simhash stance); MultimodalSpec
-    * pins banded-vs-brute-force equivalence, the invariances, and the
-    * twin recall floor.
+    * Output: [[hammingTwinReport]] at Hamming ≤ 2 (1–3 rows) —
+    * `n_pairs`, all near-dup asset pairs per distance, and
+    * `n_twin_pairs`, the (original, re-encode) pairs among them: the
+    * query's own measured recall of the perturbation it synthesized.
+    * Oracle=no (JVM ImageIO decode — the q_dedup_simhash stance);
+    * MultimodalSpec pins banded-vs-brute-force equivalence, the
+    * invariances, and the twin recall floor.
     *
     * Scale shape: one scan → row-local encode+decode+hash inside ONE
     * `mapPartitions` batch (payloads never shuffle; 8-byte signatures
@@ -305,8 +351,7 @@ object MediaOps {
         val h = (bytes.length + 15) / 16
         val grid = Array.fill[Byte](16 * h)(0x20) // pad = ASCII space
         System.arraycopy(bytes, 0, grid, 0, bytes.length)
-        val px = grid.map { b => val v = b & 0xff; (v << 16) | (v << 8) | v }
-        val bmp = Multimodal.encodeBmp(16, h, px)
+        val bmp = Multimodal.encodeBmp(16, h, grayPixels(grid))
         // the perturbed twin: same pixels +2 brightness, re-encoded
         // into a different container (identity-palette GIF) — escapes
         // MD5, must not escape the perceptual key. GIF stores dims as
@@ -323,41 +368,8 @@ object MediaOps {
           gifSig.map(sig => (2 * docId + 1, sig))
       }
     }.toDF("asset_id", "sig")
-    val sigTable = graft.TempTables.shared("phash_sigs", sigs)()
-    // identical signatures collapse to one banding representative;
-    // group mass re-expands arithmetically below. The group table is
-    // its own cached artifact: four plan branches consume it (banding
-    // reps, both pair-mass re-expansions, the within-group rollup),
-    // and at corpus scale recomputing the signature aggregate per
-    // branch is four shuffles where one table write does
-    val groups = graft.TempTables.shared("phash_groups",
-      sigTable.groupBy("sig")
-        .agg(min(col("asset_id")).as("rep"), count(lit(1)).as("n")))()
-    val pairs = graft.Graft.nearDupPairsHamming(
-      groups, col("rep"), col("sig"), maxHamming = maxHamming)
-    val cross = pairs
-      .join(groups.select(col("rep").as("doc_a"), col("n").as("n_a")), "doc_a")
-      .join(groups.select(col("rep").as("doc_b"), col("n").as("n_b")), "doc_b")
-      .groupBy("hamming").agg(sum(col("n_a") * col("n_b")).as("n_pairs"))
-    val within = groups.agg(sum(expr("n * (n - 1) DIV 2")).as("n_pairs"))
-      .select(lit(0).as("hamming"), col("n_pairs"))
-    val allPairs = cross.unionByName(within)
-      .groupBy("hamming").agg(sum(col("n_pairs")).as("n_pairs"))
-    val twins = sigTable.filter(col("asset_id") % 2 === 0)
-      .select(expr("asset_id DIV 2").as("doc_id"), col("sig").as("sig_o"))
-      .join(sigTable.filter(col("asset_id") % 2 === 1)
-        .select(expr("asset_id DIV 2").as("doc_id"),
-                col("sig").as("sig_t")), "doc_id")
-      .select(expr("bit_count(sig_o ^ sig_t)").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .groupBy("hamming").agg(count(lit(1)).as("n_twin_pairs"))
-    allPairs.join(twins, Seq("hamming"), "left")
-      // n_pairs too (review catch): on an sfDir with zero eligible
-      // docs the global within-group sum is NULL, and the integer
-      // contract must hold even for the degenerate (0, 0, 0) row
-      .select(col("hamming"), coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
-              coalesce(col("n_twin_pairs"), lit(0L)).as("n_twin_pairs"))
-      .coalesce(1).orderBy("hamming")
+    hammingTwinReport(graft.TempTables.shared("phash_sigs", sigs)(),
+      "phash_groups", maxHamming)
   }
 
   /** PERCEPTUAL audio near-dup (round 14 — the round-13 verdict's #4):
@@ -380,13 +392,10 @@ object MediaOps {
     * perturbation the Hamming radius exists to absorb, and the
     * query's n_twin_pairs row measures that recall directly.
     *
-    * Output and scale shape: identical to [[q_media_phash]] — one row
-    * per Hamming distance in 0..3 that HAS pairs (hamming = 0 always
-    * present via the global within-group aggregate; 1–4 rows total):
-    * n_pairs from signature-group collapse + banded rep pairing with
-    * arithmetic mass re-expansion, n_twin_pairs from a LINEAR id
-    * join. Payloads never shuffle; 8-byte signatures do; at 100 TB
-    * the fingerprint computes in the ingest mapper. Oracle = no
+    * Output and scale shape: identical to [[q_media_phash]] —
+    * [[hammingTwinReport]] at Hamming ≤ 3 (1–4 rows). Payloads never
+    * shuffle; 8-byte signatures do; at 100 TB the fingerprint
+    * computes in the ingest mapper. Oracle = no
     * (javax.sound decode — the q_media_phash stance); MultimodalSpec
     * pins the invariances, banded-vs-brute equivalence and the twin
     * recall floor. */
@@ -415,32 +424,8 @@ object MediaOps {
           Multimodal.audioFingerprint(twin).map(sig => (2 * docId + 1, sig))
       }
     }.toDF("asset_id", "sig")
-    val sigTable = graft.TempTables.shared("afp_sigs", sigs)()
-    val groups = graft.TempTables.shared("afp_groups",
-      sigTable.groupBy("sig")
-        .agg(min(col("asset_id")).as("rep"), count(lit(1)).as("n")))()
-    val pairs = graft.Graft.nearDupPairsHamming(
-      groups, col("rep"), col("sig"), maxHamming = maxHamming)
-    val cross = pairs
-      .join(groups.select(col("rep").as("doc_a"), col("n").as("n_a")), "doc_a")
-      .join(groups.select(col("rep").as("doc_b"), col("n").as("n_b")), "doc_b")
-      .groupBy("hamming").agg(sum(col("n_a") * col("n_b")).as("n_pairs"))
-    val within = groups.agg(sum(expr("n * (n - 1) DIV 2")).as("n_pairs"))
-      .select(lit(0).as("hamming"), col("n_pairs"))
-    val allPairs = cross.unionByName(within)
-      .groupBy("hamming").agg(sum(col("n_pairs")).as("n_pairs"))
-    val twins = sigTable.filter(col("asset_id") % 2 === 0)
-      .select(expr("asset_id DIV 2").as("doc_id"), col("sig").as("sig_o"))
-      .join(sigTable.filter(col("asset_id") % 2 === 1)
-        .select(expr("asset_id DIV 2").as("doc_id"),
-                col("sig").as("sig_t")), "doc_id")
-      .select(expr("bit_count(sig_o ^ sig_t)").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .groupBy("hamming").agg(count(lit(1)).as("n_twin_pairs"))
-    allPairs.join(twins, Seq("hamming"), "left")
-      .select(col("hamming"), coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
-              coalesce(col("n_twin_pairs"), lit(0L)).as("n_twin_pairs"))
-      .coalesce(1).orderBy("hamming")
+    hammingTwinReport(graft.TempTables.shared("afp_sigs", sigs)(),
+      "afp_groups", maxHamming)
   }
 
   /** Exact media-asset dedup per kind — the content-addressed-storage
@@ -523,14 +508,7 @@ object MediaOps {
           .select(col("doc_id"), col("text"))).as[(Long, String)]
         .mapPartitions { rows =>
           rows.flatMap { case (docId, text) =>
-            val bytes = text.getBytes("UTF-8")
-            val nf = (bytes.length + 63) / 64
-            val frames = (0 until nf).map { i =>
-              val f = Array.fill[Byte](64)(0x20)
-              System.arraycopy(bytes, i * 64, f, 0,
-                math.min(64, bytes.length - i * 64))
-              f
-            }
+            val frames = frames64(text.getBytes("UTF-8"))
             val variants = Seq(
               3 * docId     -> frames,
               3 * docId + 1 -> frames.drop(1), // trimmed

@@ -582,20 +582,29 @@ class MultimodalSpec extends SparkSpecBase {
     out.foreach(r => assert(r.getAs[Int]("hamming") <= 2))
   }
 
+  /** Hand-built mono PCM WAV header + `data` bytes at any bit depth. */
+  private def wavBits(bits: Int, data: Array[Byte], rate: Int = 8000): Array[Byte] = {
+    val align = bits / 8
+    val b = java.nio.ByteBuffer.allocate(44 + data.length)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    b.put("RIFF".getBytes("US-ASCII")).putInt(36 + data.length)
+      .put("WAVE".getBytes("US-ASCII"))
+      .put("fmt ".getBytes("US-ASCII")).putInt(16)
+      .putShort(1).putShort(1).putInt(rate).putInt(rate * align)
+      .putShort(align.toShort).putShort(bits.toShort)
+      .put("data".getBytes("US-ASCII")).putInt(data.length)
+      .put(data)
+    b.array()
+  }
+
   /** Minimal hand-built 16-bit signed LE PCM mono WAV — encodeWav
     * only writes the 8-bit layout, and the fingerprint's bit-depth
     * invariance needs the other decode branch exercised. */
   private def wav16(samples: Array[Short], rate: Int): Array[Byte] = {
-    val buf = java.nio.ByteBuffer.allocate(44 + samples.length * 2)
+    val data = java.nio.ByteBuffer.allocate(samples.length * 2)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    buf.put("RIFF".getBytes("US-ASCII")).putInt(36 + samples.length * 2)
-    buf.put("WAVE".getBytes("US-ASCII"))
-    buf.put("fmt ".getBytes("US-ASCII")).putInt(16)
-    buf.putShort(1).putShort(1).putInt(rate).putInt(rate * 2)
-    buf.putShort(2).putShort(16)
-    buf.put("data".getBytes("US-ASCII")).putInt(samples.length * 2)
-    samples.foreach(buf.putShort)
-    buf.array()
+    samples.foreach(data.putShort)
+    wavBits(16, data.array(), rate)
   }
 
   test("audioFingerprint: gain, DC, sample-rate and bit-depth invariant") {
@@ -739,5 +748,180 @@ class MultimodalSpec extends SparkSpecBase {
     val media = Multimodal.mediaFromDocuments(spark, sf)
     val plan = media.select("media_id", "kind").queryExecution.sparkPlan.toString
     assert(!plan.contains("payload"), s"payload not pruned:\n$plan")
+  }
+
+  // ------------------------------------------------------------------
+  // Every gate of every container, through every decoder that reads it
+  // ------------------------------------------------------------------
+
+  /** Offset of a GIF's first block: past the header and logical
+    * screen (13 bytes) and the global color table if flagged. */
+  private def gifBlocksAt(gif: Array[Byte]): Int = {
+    val flags = gif(10) & 0xff
+    13 + (if ((flags & 0x80) != 0) 3 * (1 << ((flags & 7) + 1)) else 0)
+  }
+
+  /** Offset of the first image descriptor (0x2C) of a GIF, past any
+    * extension blocks (introducer, label, sub-blocks to a 0). */
+  private def firstImageDescriptor(gif: Array[Byte]): Int = {
+    var pos = gifBlocksAt(gif)
+    while (gif(pos) == 0x21) {
+      pos += 2
+      while (gif(pos) != 0) pos += (gif(pos) & 0xff) + 1
+      pos += 1
+    }
+    assert(gif(pos) == 0x2c, s"no image descriptor at $pos")
+    pos
+  }
+
+  test("every decoder against every gate of its container") {
+    def le16(p: Array[Byte], at: Int, v: Int): Unit = {
+      p(at) = (v & 0xff).toByte; p(at + 1) = ((v >> 8) & 0xff).toByte
+    }
+    val frame = Array.tabulate[Byte](64)(i => (i * 5).toByte)
+    val gif = Multimodal.encodeGifGray(16, 4, Seq(frame, frame.reverse))
+    def gifDecoders(p: Array[Byte]) = Seq(
+      "decodeVideo" -> Multimodal.decodeVideo(p, 1),
+      "perceptualHash" -> Multimodal.perceptualHash(p),
+      "videoSignatures" -> Multimodal.videoSignatures(p))
+    gifDecoders(gif).foreach { case (n, r) => assert(r.isDefined, n) }
+    def rejected(what: String, results: Seq[(String, Option[Any])]): Unit =
+      results.foreach { case (n, r) => assert(r.isEmpty, s"$n accepted $what") }
+
+    // GIF: sampling stride below 1
+    rejected("stride 0", Seq("decodeVideo" -> Multimodal.decodeVideo(gif, 0),
+                             "perceptualHash" -> Multimodal.perceptualHash(gif, 0)))
+    // GIF: a 65535×65535 logical screen
+    val screenBomb = gif.clone()
+    le16(screenBomb, 6, 0xffff); le16(screenBomb, 8, 0xffff)
+    rejected("a screen bomb", gifDecoders(screenBomb))
+    // GIF: a 16×4 screen whose first image descriptor declares an
+    // 8192×4096 frame — above MaxPixels yet small enough to allocate,
+    // so only the per-frame gate stands between it and a decode
+    val frameBomb = gif.clone()
+    val d = firstImageDescriptor(frameBomb)
+    le16(frameBomb, d + 5, 8192); le16(frameBomb, d + 7, 4096)
+    rejected("a frame bomb", gifDecoders(frameBomb))
+    // GIF: 4097 frames, one past MaxFrames — the one-frame container's
+    // frame blocks repeated before its trailer
+    val one = Multimodal.encodeGifGray(16, 4, Seq(frame))
+    assert(one.last == 0x3b)
+    val bodyAt = gifBlocksAt(one)
+    def frames(n: Int) = one.take(bodyAt) ++
+      Array.fill(n)(one.slice(bodyAt, one.length - 1)).flatten :+ 0x3b.toByte
+    assert(Multimodal.decodeVideo(frames(4096), 4096).map(_._2) == Some(4096))
+    rejected("4097 frames", gifDecoders(frames(4097)))
+
+    // still image: the 2G×2G BMP header and an allocatable PNG just
+    // past MaxPixels (4097×4096, one bit per pixel)
+    val bmpBomb = new Array[Byte](64)
+    bmpBomb(0) = 'B'; bmpBomb(1) = 'M'
+    java.nio.ByteBuffer.wrap(bmpBomb, 18, 8).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putInt(Int.MaxValue).putInt(Int.MaxValue)
+    val big = new java.awt.image.BufferedImage(4097, 4096,
+      java.awt.image.BufferedImage.TYPE_BYTE_BINARY)
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(big, "png", bos)
+    val pngBomb = bos.toByteArray
+    for (p <- Seq(bmpBomb, pngBomb))
+      rejected("a dimension bomb", Seq("decodeImage" -> Multimodal.decodeImage(p),
+                                       "perceptualHash" -> Multimodal.perceptualHash(p)))
+
+    // WAV: a data size past the payload, an unterminated chunk list,
+    // and a 24-bit layout the JDK reads but the sample conversion does
+    // not know
+    val wav = Multimodal.encodeWav(Array.tabulate[Byte](256)(i => (i * 37).toByte))
+    val sizeBomb = wav.clone()
+    java.nio.ByteBuffer.wrap(sizeBomb, 40, 4)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(Int.MaxValue)
+    val loop = wav.clone()
+    System.arraycopy("LIST".getBytes("US-ASCII"), 0, loop, 36, 4)
+    java.nio.ByteBuffer.wrap(loop, 40, 4)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(0)
+    val pcm24 = wavBits(24, Array.tabulate[Byte](3 * 200)(i => (i * 11).toByte))
+    val fmt24 = javax.sound.sampled.AudioSystem.getAudioInputStream(
+      new java.io.ByteArrayInputStream(pcm24)).getFormat
+    assert(fmt24.getSampleSizeInBits == 24, fmt24.toString)
+    for ((what, p) <- Seq("a data-size bomb" -> sizeBomb, "an unterminated chunk list" -> loop,
+                          "24-bit PCM" -> pcm24))
+      rejected(what, Seq("decodeAudio" -> Multimodal.decodeAudio(p),
+                         "audioFingerprint" -> Multimodal.audioFingerprint(p)))
+    assert(Multimodal.decodeAudio(wav).isDefined && Multimodal.audioFingerprint(wav).isDefined)
+  }
+
+  // ------------------------------------------------------------------
+  // Independent references for the three no-oracle media fingerprints
+  // ------------------------------------------------------------------
+
+  /** 8×8 average hash written from its definition over the gray bytes
+    * that were encoded (w×h row-major frames, summed over frames):
+    * pixel i lands in cell ((y·8)/h)·8 + (x·8)/w, and bit c is set iff
+    * the cell's mean exceeds the mean over all pixels. */
+  private def refAverageHash(w: Int, h: Int, frames: Seq[Array[Byte]]): Long = {
+    val cells = frames.flatMap(_.zipWithIndex.map { case (b, i) =>
+        ((i / w) * 8 / h * 8 + (i % w) * 8 / w) -> (b & 0xff).toLong })
+      .groupMapReduce(_._1)(c => (c._2, 1L)) { case ((s1, n1), (s2, n2)) => (s1 + s2, n1 + n2) }
+    val total = cells.values.map(_._1).sum
+    val n = cells.values.map(_._2).sum
+    cells.collect { case (c, (s, k)) if BigInt(s) * n > BigInt(total) * k => 1L << c }
+      .foldLeft(0L)(_ | _)
+  }
+
+  /** Lag-band audio fingerprint written from its definition over 8-bit
+    * unsigned sample bytes: sample t of n sits in time frame
+    * min(7, 8t/n); band b sums (x_t − x_{t−b−1})² over the frame; bit
+    * b·8+f is set iff frame f's band-b energy exceeds frame f+1's
+    * (mod 8). */
+  private def refAudioFingerprint(samples: Array[Byte]): Long = {
+    val x = samples.map(b => (b & 0xff) - 128L)
+    val e = Array.ofDim[Long](8, 8)
+    for (t <- x.indices; lag <- 1 to 8 if t >= lag) {
+      val dd = x(t) - x(t - lag)
+      e(math.min(7L, 8L * t / x.length).toInt)(lag - 1) += dd * dd
+    }
+    (for (b <- 0 until 8; f <- 0 until 8 if e(f)(b) > e((f + 1) % 8)(b))
+      yield 1L << (b * 8 + f)).foldLeft(0L)(_ | _)
+  }
+
+  test("media fingerprints equal independent references on every q_media_phash, q_media_videofp and q_media_audio_fp payload") {
+    // the three queries' payload recipes over the same documents, twins
+    // included; each fingerprint is checked bit for bit against its
+    // definition evaluated on the bytes that were encoded
+    val ascii = Tables.documents(spark, sf).select("text").collect()
+      .map(_.getString(0).getBytes("UTF-8"))
+      .filter(_.forall(_ >= 0))
+    // q_media_phash: a 16-wide gray BMP and its +2-brightness GIF twin
+    val phash = ascii.filter(_.length >= 16)
+    phash.foreach { bytes =>
+      val h = (bytes.length + 15) / 16
+      val grid = Array.fill[Byte](16 * h)(0x20)
+      System.arraycopy(bytes, 0, grid, 0, bytes.length)
+      val twin = grid.map(b => (b + 2).toByte)
+      assert(Multimodal.perceptualHash(bmpOf(grid, 16, h)) ==
+        Some(refAverageHash(16, h, Seq(grid))))
+      assert(Multimodal.perceptualHash(Multimodal.encodeGifGray(16, h, Seq(twin))) ==
+        Some(refAverageHash(16, h, Seq(twin))))
+    }
+    // q_media_videofp: 64-byte frames, the clip, its trim and its
+    // frame-0/1 swap; the temporal average and the per-frame hashes
+    val videofp = ascii.filter(b => b.length >= 192 && b.length <= 64 * 4096)
+    videofp.foreach { bytes =>
+      val frames = bytes.grouped(64).map(_.padTo(64, 0x20.toByte)).toSeq
+      for (fs <- Seq(frames, frames.drop(1), Seq(frames(1), frames(0)) ++ frames.drop(2))) {
+        val Some((avg, perFrame)) = Multimodal.videoSignatures(Multimodal.encodeGifGray(16, 4, fs))
+        assert(avg == refAverageHash(16, 4, fs))
+        assert(perFrame.toSeq == fs.map(f => refAverageHash(16, 4, Seq(f))))
+      }
+    }
+    // q_media_audio_fp: the 8-bit WAV and its half-gain 22050 Hz twin
+    val audio = ascii.filter(_.length >= 64)
+    audio.foreach { bytes =>
+      val half = bytes.map(b => (128 + ((b & 0xff) - 128) / 2).toByte)
+      assert(Multimodal.audioFingerprint(Multimodal.encodeWav(bytes, 16000)) ==
+        Some(refAudioFingerprint(bytes)))
+      assert(Multimodal.audioFingerprint(Multimodal.encodeWav(half, 22050)) ==
+        Some(refAudioFingerprint(half)))
+    }
+    assert(phash.nonEmpty && videofp.nonEmpty && audio.nonEmpty)
   }
 }
