@@ -2471,13 +2471,13 @@ object Graft {
     * stats.
     *
     * Scale shape: row-local distinct-gram explode with row-local
-    * sizes ([[sizedGrams]] uncapped — no per-doc aggregate), one join
+    * sizes ([[gramRows]] — no per-doc aggregate), one join
     * against the vocab-scale df table, one per-doc rollup. Never
     * all-pairs; the only corpus-scale shuffle is the per-doc rollup
     * on the doc id. */
   def ngramNovelty(docs: DataFrame, id: Column, text: Column, n: Int = 3): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
-    val grams = sizedGrams(docs, id, text, n, Int.MaxValue)
+    val grams = gramRows(docGramArrays(docs, id, text, n)).withColumnRenamed("na", "n_grams")
     // the df side joins by int64 fingerprint like every other
     // inverted-index consumer — the broadcast table shrinks and the
     // probe hashes a long, not a ~25-byte string
@@ -3104,16 +3104,14 @@ object Graft {
 
   /** Word-n-gram Jaccard near-dup pairs over ANY (id, text) DataFrame:
     * (doc_a, doc_b, jaccard rounded 3) for exact Jaccard ≥
-    * thresholdPermille/1000, doc_a < doc_b, unordered. Inverted-index
-    * gram equi-join — never all-pairs — with the output-invariant
-    * integer size prune (J ≤ min/max ⇒ prune 1000·min < p·max at the
-    * join) and the exact integer threshold c·(1000+p) ≥ p·(na+nb).
-    * Work ∝ Σ gram-bucket², bounded by gram selectivity — and a gram
-    * bucket larger than `maxBucket` docs (a stop-gram at scale) is
-    * BLOCK-DECOMPOSED by [[operators.SkewJoin.blockedSelfPairs]], so
-    * per-task input stays bounded while the pair set is exactly
-    * preserved. Docs shorter than n tokens have no n-gram and never
-    * pair.
+    * thresholdPermille/1000, doc_a < doc_b, unordered. The count path of
+    * [[operators.GramPairs]] over the full inverted gram index — never
+    * all-pairs — with the output-invariant integer size prune and the
+    * exact integer threshold. Work ∝ Σ gram-bucket², bounded by gram
+    * selectivity, and a gram bucket larger than `maxBucket` docs (a
+    * stop-gram at scale) is block-decomposed, so per-task input stays
+    * bounded while the pair set is exactly preserved. Docs shorter than
+    * n tokens have no n-gram and never pair.
     *
     * `maxGramDocFreq` (default off) is the LOSSY stop-gram cap the
     * 100 TB path wants (the CCNet/RefinedWeb trade): grams appearing
@@ -3135,37 +3133,25 @@ object Graft {
                         thresholdPermille: Int = 800, n: Int = 3,
                         maxBucket: Int = 1024,
                         maxGramDocFreq: Int = Int.MaxValue): DataFrame = {
-    require(thresholdPermille > 0 && thresholdPermille <= 1000,
-      s"thresholdPermille must be in (0, 1000], got $thresholdPermille")
-    require(n >= 1, s"n must be >= 1, got $n")
     require(maxGramDocFreq >= 1, s"maxGramDocFreq must be >= 1, got $maxGramDocFreq")
-    ngramCandidatePairs(docs, id, text, thresholdPermille, n, maxBucket, maxGramDocFreq)
-      .select(col("doc_a"), col("doc_b"),
-              round(col("common") / (col("na") + col("nb") - col("common")), 3).as("jaccard"))
+    val m = operators.GramPairs.Jaccard(thresholdPermille)
+    m.report(ngramCountPairs(docs, id, text, m, n, maxBucket, maxGramDocFreq))
   }
 
-  /** The ONE candidate-pair enumeration shared by [[nearDupPairsNgram]]
-    * and [[nearDupBands]]: blocked inverted-index self-join over
-    * [[sizedGrams]], the output-invariant integer size prune, the
-    * per-pair common count, and the exact integer threshold
-    * `common·(1000+p) ≥ p·(na+nb)` ⇔ J ≥ p/1000. Returns (doc_a,
-    * doc_b, na, nb, common) — callers derive their own Jaccard form.
-    * Extracted so a future tightening of the prune or the threshold
-    * algebra cannot drift between the two facades (their outputs are
-    * contractually tied: the sweep's ≥ 800 rollup must equal the 0.8
-    * pair count, pinned in PipelineSpec). */
-  private def ngramCandidatePairs(docs: DataFrame, id: Column, text: Column,
-                                  p: Int, n: Int, maxBucket: Int,
-                                  maxGramDocFreq: Int = Int.MaxValue): DataFrame = {
-    val sized = sizedGrams(docs, id, text, n, maxGramDocFreq)
-    operators.SkewJoin.blockedSelfPairs(sized, Seq("gf"), "doc_id", maxBucket,
-        Option.when(maxGramDocFreq == Int.MaxValue)(gramFpDocFreq(docs, id, text, n)))
-      .select(col("doc_id_a").as("doc_a"), col("n_grams_a").as("na"),
-              col("doc_id_b").as("doc_b"), col("n_grams_b").as("nb"))
-      .filter(col("na") * 1000 >= col("nb") * p && col("nb") * 1000 >= col("na") * p)
-      .groupBy("doc_a", "doc_b", "na", "nb")
-      .agg(count(lit(1)).as("common"))
-      .filter(col("common") * (1000 + p) >= (col("na") + col("nb")) * p)
+  /** The self face of the count path, shared by [[nearDupPairsNgram]],
+    * [[nearDupBands]] and [[containmentPairsNgram]]'s capped branch:
+    * (doc_a, doc_b, na, nb, common) over the shared gram tables. The
+    * sweep's ≥ 800 rollup must equal the 0.8 pair count (pinned in
+    * PipelineSpec), which holds because both run this one path. */
+  private def ngramCountPairs(docs: DataFrame, id: Column, text: Column,
+                              m: operators.GramPairs.Measure, n: Int, maxBucket: Int,
+                              maxGramDocFreq: Int = Int.MaxValue): DataFrame = {
+    val rows = gramRows(docGramArrays(docs, id, text, n))
+    if (maxGramDocFreq == Int.MaxValue)
+      operators.GramPairs.countPairs(rows, None, m, maxBucket, Some(gramFpDocFreq(docs, id, text, n)))
+    else
+      operators.GramPairs.countPairs(
+        cappedRows(rows, stopGrams(docs, id, text, n, maxGramDocFreq)), None, m, maxBucket)
   }
 
   /** Near-dup threshold SWEEP — the tuning table read before anyone
@@ -3190,11 +3176,8 @@ object Graft {
     * absolute multiples of the width; a misaligned cut would truncate
     * and mislabel its lowest band — rejected loudly, review catch).
     *
-    * Scale shape: identical to [[nearDupPairsNgram]] — the shared
-    * [[docGramArrays]] table, row-local sizes, blocked inverted-index
-    * join (never all-pairs), the output-invariant size prune at the
-    * LOW threshold, one count aggregate — plus a ≤ (1000−low)/band +1
-    * row metadata rollup. */
+    * Scale shape: [[nearDupPairsNgram]]'s count path at the LOW
+    * threshold, plus a ≤ (1000−low)/band + 1 row metadata rollup. */
   def nearDupBands(docs: DataFrame, id: Column, text: Column,
                    lowPermille: Int = 700, bandPermille: Int = 50,
                    n: Int = 3, maxBucket: Int = 1024): DataFrame = {
@@ -3208,8 +3191,7 @@ object Graft {
     // half the band's range missing) — reject instead of under-count
     require(lowPermille % bandPermille == 0,
       s"lowPermille must be a multiple of bandPermille, got $lowPermille % $bandPermille")
-    require(n >= 1, s"n must be >= 1, got $n")
-    ngramCandidatePairs(docs, id, text, lowPermille, n, maxBucket)
+    ngramCountPairs(docs, id, text, operators.GramPairs.Jaccard(lowPermille), n, maxBucket)
       .select(expr("common * 1000 div (na + nb - common)").as("jp"))
       .select((col("jp") - (col("jp") % bandPermille)).as("band_lo"))
       .groupBy("band_lo")
@@ -3237,44 +3219,30 @@ object Graft {
     * available by handing n-gram arrays to the set facades. */
   private def gramFp(gram: Column): Column = xxhash64(gram)
 
-  /** The (doc_id, n_grams, gf) exploded-and-sized inverted-index
-    * input shared by [[nearDupPairsNgram]] and
-    * [[containmentPairsNgram]] — `gf` the int64 [[gramFp]]
-    * fingerprint (round 13: gram text never enters the candidate
-    * exchanges). UNCAPPED, `n_grams` is ROW-LOCAL —
-    * size(array_distinct(ngrams)) computed before the explode, so the
-    * per-doc sizes need NO aggregate and NO join at all (the previous
-    * shape group-by-counted the exploded grams and broadcast-joined a
-    * one-row-per-doc table back — a per-doc-scale broadcast that
-    * could not fit at 100 TB). With the lossy stop-gram cap engaged
-    * the post-drop sizes genuinely require a recount — the shared
-    * [[cappedGramSizes]] table — and the hot list is the shared
-    * [[gramDocFreq]] table above the cap. */
-  private def sizedGrams(docs: DataFrame, id: Column, text: Column, n: Int,
-                         maxGramDocFreq: Int): DataFrame =
-    if (maxGramDocFreq == Int.MaxValue)
-      docGramArrays(docs, id, text, n)
-        .select(col("doc_id"), col("na").as("n_grams"), explode(col("ga")).as("gram"))
-        .select(col("doc_id"), col("n_grams"), gramFp(col("gram")).as("gf"))
-    else
-      cappedGrams(docs, id, text, n, maxGramDocFreq)
-        .join(cappedGramSizes(docs, id, text, n, maxGramDocFreq), "doc_id")
-        .select("doc_id", "n_grams", "gf")
+  /** One (doc_id, na, gf) row per distinct gram of a (doc_id, na, ga)
+    * gram-set table: a side of the [[operators.GramPairs]] pipeline.
+    * `na` is row-local (the size of the distinct-gram array before the
+    * explode), so no per-doc aggregate or per-doc-scale join sizes it. */
+  private def gramRows(sets: DataFrame): DataFrame =
+    sets.select(col("doc_id"), col("na"), explode(col("ga")).as("gram"))
+      .select(col("doc_id"), col("na"), gramFp(col("gram")).as("gf"))
 
-  /** (doc_id, gf) of every distinct gram whose corpus document
-    * frequency is at most `maxGramDocFreq` — the gram universe of the
-    * LOSSY stop-gram path: the shared [[gramDocFreq]] rows above the
-    * cap leave through a broadcast anti-join. */
-  private def cappedGrams(docs: DataFrame, id: Column, text: Column, n: Int,
-                          maxGramDocFreq: Int): DataFrame = {
-    val hot = gramDocFreq(docs, id, text, n)
-      .filter(col("gdf") > maxGramDocFreq)
-      .select(gramFp(col("gram")).as("gf"))
-    docGramArrays(docs, id, text, n)
-      .select(col("doc_id"), explode(col("ga")).as("gram"))
-      .select(col("doc_id"), gramFp(col("gram")).as("gf"))
-      .join(broadcast(hot), Seq("gf"), "left_anti")
+  /** The capped recount of both n-gram faces: a side's rows without the
+    * `hot` (gf) grams, each doc re-sized over the grams it keeps. The
+    * post-cap sizes genuinely need an aggregate; it round-trips through
+    * the shared capped_gram_sizes table, so a join broadcasts it only
+    * if it really is small. */
+  private def cappedRows(rows: DataFrame, hot: DataFrame): DataFrame = {
+    val kept = keptGrams(rows, hot)
+    kept.join(keptGramSizes(kept), "doc_id").select(col("doc_id"), col("n_grams").as("na"), col("gf"))
   }
+
+  private def keptGrams(rows: DataFrame, hot: DataFrame): DataFrame =
+    rows.select("doc_id", "gf").join(broadcast(hot), Seq("gf"), "left_anti")
+
+  private def keptGramSizes(kept: DataFrame): DataFrame =
+    TempTables.shared("capped_gram_sizes",
+      kept.groupBy("doc_id").agg(count(lit(1)).as("n_grams")))()
 
   /** The shared [[gramDocFreq]] table keyed by [[gramFp]]: (gf, gdf).
     * It is also the skew guard's per-bucket size table for an UNCAPPED
@@ -3288,17 +3256,38 @@ object Graft {
   private def gramFpDocFreq(docs: DataFrame, id: Column, text: Column, n: Int): DataFrame =
     gramDocFreq(docs, id, text, n).select(gramFp(col("gram")).as("gf"), col("gdf"))
 
-  /** The post-cap per-doc distinct-gram recount (doc_id, n_grams) the
-    * LOSSY stop-gram path joins back — a deterministic function of
-    * (docs, n, maxGramDocFreq), shared per input like the tables it
-    * is counted from. */
+  /** The post-cap per-doc distinct-gram recount (doc_id, n_grams) of
+    * the self face: every gram whose corpus document frequency exceeds
+    * `maxGramDocFreq` dropped. A deterministic function of (docs, n,
+    * maxGramDocFreq), shared per input like the tables it is counted
+    * from. */
   def cappedGramSizes(docs: DataFrame, id: Column, text: Column, n: Int,
                       maxGramDocFreq: Int): DataFrame = {
     require(maxGramDocFreq != Int.MaxValue,
       "cappedGramSizes is the lossy-cap recount — with the cap off, sizes are row-local")
-    TempTables.shared("capped_gram_sizes",
-      cappedGrams(docs, id, text, n, maxGramDocFreq)
-        .groupBy("doc_id").agg(count(lit(1)).as("n_grams")))()
+    keptGramSizes(keptGrams(gramRows(docGramArrays(docs, id, text, n)),
+                            stopGrams(docs, id, text, n, maxGramDocFreq)))
+  }
+
+  /** (gf) of every gram in more than `maxGramDocFreq` documents, read
+    * from the shared [[gramDocFreq]] table: the self face's hot list. */
+  private def stopGrams(docs: DataFrame, id: Column, text: Column, n: Int,
+                        maxGramDocFreq: Int): DataFrame =
+    gramDocFreq(docs, id, text, n).filter(col("gdf") > maxGramDocFreq)
+      .select(gramFp(col("gram")).as("gf"))
+
+  /** (doc_id, na = |set|, ga = the distinct word-n-grams) per document
+    * with at least n tokens: the one gram-set expression of the n-gram
+    * family. Docs shorter than n tokens carry no row ("no n-gram →
+    * never pairs / never counted"). */
+  private def gramSets(docs: DataFrame, id: Column, text: Column, n: Int): DataFrame = {
+    require(n >= 1, s"n must be >= 1, got $n")
+    val t = split(text, " ")
+    docs.select(id.cast("long").as("doc_id"), t.as("t"))
+      .filter(size(col("t")) >= n)
+      .select(col("doc_id"),
+              array_distinct(functions.TokenNGrams.ngrams(col("t"), n)).as("ga"))
+      .select(col("doc_id"), size(col("ga")).cast("long").as("na"), col("ga"))
   }
 
   /** The per-document distinct word-n-gram ARRAY table
@@ -3307,18 +3296,9 @@ object Graft {
     * from, a [[TempTables.shared]] table: every gram-family facade
     * over the same (docs, n) — [[gramDocFreq]], [[rarityGramArrays]],
     * the pair, containment and novelty facades — explodes this one
-    * parquet column instead of re-running the corpus-scale pass. Docs
-    * shorter than n tokens carry no row — the shared contract ("no
-    * n-gram → never pairs / never counted"). */
+    * parquet column instead of re-running the corpus-scale pass. */
   def docGramArrays(docs: DataFrame, id: Column, text: Column, n: Int = 3): DataFrame = {
-    require(n >= 1, s"n must be >= 1, got $n")
-    val t = split(text, " ")
-    TempTables.shared("doc_gram_arrays",
-      docs.select(id.cast("long").as("doc_id"), t.as("t"))
-        .filter(size(col("t")) >= n)
-        .select(col("doc_id"),
-                array_distinct(functions.TokenNGrams.ngrams(col("t"), n)).as("ga"))
-        .select(col("doc_id"), size(col("ga")).cast("long").as("na"), col("ga")))()
+    TempTables.shared("doc_gram_arrays", gramSets(docs, id, text, n))()
   }
 
   /** Per-gram document frequency (gram, gdf) over the distinct
@@ -3328,7 +3308,6 @@ object Graft {
     * bucket sizes). A [[TempTables.shared]] table aggregated from the
     * shared [[docGramArrays]]; output is vocab-scale metadata. */
   def gramDocFreq(docs: DataFrame, id: Column, text: Column, n: Int = 3): DataFrame = {
-    require(n >= 1, s"n must be >= 1, got $n")
     TempTables.shared("gram_doc_freq", gramCounts(docGramArrays(docs, id, text, n)))()
   }
 
@@ -3365,12 +3344,16 @@ object Graft {
     * quote/wrapper/boilerplate-page detector a corpus pipeline runs
     * NEXT TO [[nearDupPairsNgram]], not instead of it.
     *
-    * Same inverted-index candidate join (docs sharing ≥ 1 word-n-gram,
-    * [[operators.SkewJoin.blockedSelfPairs]] hot-gram guard, never
-    * all-pairs) — but deliberately WITHOUT the Jaccard size-ratio
-    * prune: the asymmetric pairs that prune exists to discard are
-    * exactly this operator's positives. Work stays ∝ Σ bucket²,
-    * bounded by gram selectivity. A dense MUTUAL-containment cluster
+    * The [[operators.GramPairs]] pipeline under the containment
+    * measure: blocked inverted-index candidates (never all-pairs) with
+    * no size-ratio prune, since the asymmetric pairs that prune exists
+    * to discard are exactly this operator's positives. Uncapped, it
+    * runs the prefix path with every gram indexed: the positional
+    * bound cuts collisions before the candidate distinct (measured at
+    * sf0.1, t = 0.8: 1,265,779 collisions → 152,982 → 148,647 pairs to
+    * verify). The lossy `maxGramDocFreq` cap changes the gram universe
+    * and takes the count path. Work stays ∝ Σ bucket². A dense
+    * MUTUAL-containment cluster
     * (boilerplate: every pair a true positive) makes the OUTPUT
     * itself Θ(hot²) — no exact guard can beat work that IS the
     * output, as the skew bench measures (max task equal guarded vs
@@ -3385,61 +3368,16 @@ object Graft {
                             thresholdPermille: Int = 800, n: Int = 3,
                             maxBucket: Int = 1024,
                             maxGramDocFreq: Int = Int.MaxValue): DataFrame = {
-    require(thresholdPermille > 0 && thresholdPermille <= 1000,
-      s"thresholdPermille must be in (0, 1000], got $thresholdPermille")
-    require(n >= 1, s"n must be >= 1, got $n")
     require(maxGramDocFreq >= 1, s"maxGramDocFreq must be >= 1, got $maxGramDocFreq")
-    val p = thresholdPermille
-    if (maxGramDocFreq == Int.MaxValue) {
-      // POSITIONAL path: containment admits no two-sided PREFIX (a
-      // doc's required overlap ⌈p·min/1000⌉ can be as low as 1
-      // against a tiny partner, so every gram must stay indexed) —
-      // but it DOES admit the per-collision positional bound: with
-      // both docs sorted by the one shared rarity order of the
-      // [[rarityGramArrays]] table, all common grams of a pair sit
-      // at ranks ≥ (i, j) of its FIRST collision, so
-      // common ≤ min(na−i, nb−j)+1 — a collision whose bound cannot
-      // reach ⌈p·min(na,nb)/1000⌉ is dropped BEFORE the candidate
-      // distinct, and exactness holds because the first collision
-      // of every qualifying pair passes (its bound ≥ common ≥ the
-      // requirement — EXISTS semantics). Measured at sf0.1, t = 0.8:
-      // 1,265,779 collisions → 152,982 post-filter → 148,647 pairs
-      // to verify (an 8.3× cut in what the distinct exchange
-      // carries). Survivors verify exactly via array_intersect on
-      // the same table. Exact-only: the lossy stop-gram cap changes
-      // the gram universe and takes the counting path below. The
-      // shared gram-df table is also the skew guard's bucket-size
-      // source, as in [[nearDupPairsNgram]].
-      val sd = rarityGramArrays(docs, id, text, n)
-      val pos = sd.select(col("doc_id"), col("na").cast("long").as("n_grams"),
-          posexplode(col("gs")).as(Seq("pos", "gf")))
-        .select(col("doc_id"), col("n_grams"),
-                (col("pos") + 1).as("pos"), col("gf"))
-      operators.SkewJoin.blockedSelfPairs(pos, Seq("gf"), "doc_id", maxBucket,
-                                          Some(gramFpDocFreq(docs, id, text, n)))
-        .select(col("doc_id_a").as("doc_a"), col("n_grams_a").as("na"), col("pos_a"),
-                col("doc_id_b").as("doc_b"), col("n_grams_b").as("nb"), col("pos_b"))
-        .filter((least(col("na") - col("pos_a"), col("nb") - col("pos_b")) + 1) * 1000
-                  >= least(col("na"), col("nb")) * p)
-        .select(col("doc_a"), col("na"), col("doc_b"), col("nb"))
-        .distinct()
-        .join(sd.select(col("doc_id").as("doc_a"), col("gs").as("ga")), "doc_a")
-        .join(sd.select(col("doc_id").as("doc_b"), col("gs").as("gb")), "doc_b")
-        .withColumn("common", size(array_intersect(col("ga"), col("gb"))).cast("long"))
-        .filter(col("common") * 1000 >= least(col("na"), col("nb")) * p)
-        .select(col("doc_a"), col("doc_b"), col("na"), col("nb"), col("common"),
-                expr("common * 1000L div least(na, nb)").as("containment_permille"))
-    } else {
-      val sized = sizedGrams(docs, id, text, n, maxGramDocFreq)
-      operators.SkewJoin.blockedSelfPairs(sized, Seq("gf"), "doc_id", maxBucket)
-        .select(col("doc_id_a").as("doc_a"), col("n_grams_a").as("na"),
-                col("doc_id_b").as("doc_b"), col("n_grams_b").as("nb"))
-        .groupBy("doc_a", "doc_b", "na", "nb")
-        .agg(count(lit(1)).as("common"))
-        .filter(col("common") * 1000 >= least(col("na"), col("nb")) * p)
-        .select(col("doc_a"), col("doc_b"), col("na"), col("nb"), col("common"),
-                expr("common * 1000L div least(na, nb)").as("containment_permille"))
-    }
+    val m = operators.GramPairs.Containment(thresholdPermille)
+    m.report(
+      if (maxGramDocFreq == Int.MaxValue)
+        // long sizes, as the count path's: they are output columns; the
+        // full-array index makes the gram-df table the bucket sizes
+        operators.GramPairs.prefixPairs(
+          rarityGramArrays(docs, id, text, n).withColumn("na", col("na").cast("long")),
+          None, m, maxBucket, Some(gramFpDocFreq(docs, id, text, n)))
+      else ngramCountPairs(docs, id, text, m, n, maxBucket, maxGramDocFreq))
   }
 
   /** The ranked+tokenized projection [[sortedNeighborPairs]]
@@ -3512,64 +3450,29 @@ object Graft {
     * batch for a fixed index. Output: (doc_a = corpus id,
     * doc_b = new id, jaccard rounded 3).
     *
-    * Same exactness machinery as the self-join form: distinct-gram
-    * inverted index, two-sided integer size prune (implied by the
-    * final threshold — drops candidates early, changes nothing),
-    * exact Jaccard from the common-gram count. The candidate join is
-    * [[operators.SkewJoin.blockedBipartiteJoin]] — a hot gram's
-    * corpus bucket is block-decomposed and the new-batch rows
-    * replicated across blocks, so per-task input stays bounded.
-    * `maxGramDocFreq` (default off) is the lossy stop-gram cap; the
-    * CORPUS side defines the hot-gram list (the index is built once)
-    * and both sides drop the same grams, keeping Jaccard symmetric. */
+    * The same [[operators.GramPairs]] count path as the self-join,
+    * with the bipartite candidate kernel. Uncapped, both sides are lazy
+    * projections of the caller's DataFrames. `maxGramDocFreq` (default
+    * off) is the lossy stop-gram cap; the CORPUS side defines the
+    * hot-gram list (the index is built once) and both sides drop the
+    * same grams, keeping Jaccard symmetric; each side's recount then
+    * round-trips through a capped_gram_sizes table. */
   def nearDupPairsNgramAgainst(corpus: DataFrame, corpusId: Column, corpusText: Column,
                                newDocs: DataFrame, newId: Column, newText: Column,
                                thresholdPermille: Int = 800, n: Int = 3,
                                maxBucket: Int = 1024,
                                maxGramDocFreq: Int = Int.MaxValue): DataFrame = {
-    require(thresholdPermille > 0 && thresholdPermille <= 1000,
-      s"thresholdPermille must be in (0, 1000], got $thresholdPermille")
-    require(n >= 1, s"n must be >= 1, got $n")
     require(maxGramDocFreq >= 1, s"maxGramDocFreq must be >= 1, got $maxGramDocFreq")
-    val p = thresholdPermille
-    // per-side sizes are ROW-LOCAL (size of the distinct-gram array
-    // before the explode) — no per-doc aggregate, no per-doc-scale
-    // broadcast join (which could not fit at 100 TB); only the capped
-    // path genuinely recounts, through a parquet round-trip so the
-    // planner broadcasts the recount only if it truly is small
-    def gramsOf(df: DataFrame, id: Column, text: Column,
-                idName: String, szName: String): DataFrame = {
-      val t = split(text, " ")
-      df.select(id.cast("long").as(idName), t.as("t"))
-        .filter(size(col("t")) >= n)
-        .select(col(idName),
-                array_distinct(functions.TokenNGrams.ngrams(col("t"), n)).as("ga"))
-        .select(col(idName), size(col("ga")).cast("long").as(szName),
-                explode(col("ga")).as("gram"))
-        .select(col(idName), col(szName), gramFp(col("gram")).as("gf"))
-    }
-    val cg0 = gramsOf(corpus, corpusId, corpusText, "doc_a", "na")
-    val ng0 = gramsOf(newDocs, newId, newText, "doc_b", "nb")
-    val (cSized, nSized) =
-      if (maxGramDocFreq == Int.MaxValue) (cg0, ng0)
+    val m = operators.GramPairs.Jaccard(thresholdPermille)
+    val c = gramRows(gramSets(corpus, corpusId, corpusText, n))
+    val b = gramRows(gramSets(newDocs, newId, newText, n))
+    val (cs, bs) =
+      if (maxGramDocFreq == Int.MaxValue) (c, b)
       else {
-        val hot = cg0.groupBy("gf").agg(count(lit(1)).as("__df"))
-          .filter(col("__df") > maxGramDocFreq).select("gf")
-        def recount(df: DataFrame, idName: String, szName: String) = {
-          val kept = df.drop(szName).join(broadcast(hot), Seq("gf"), "left_anti")
-          val sizes = TempTables.shared("capped_gram_sizes",
-            kept.groupBy(idName).agg(count(lit(1)).as(szName)))()
-          kept.join(sizes, idName).select(idName, szName, "gf")
-        }
-        (recount(cg0, "doc_a", "na"), recount(ng0, "doc_b", "nb"))
+        val hot = hotKeys(c, Seq("gf"), maxGramDocFreq)
+        (cappedRows(c, hot), cappedRows(b, hot))
       }
-    operators.SkewJoin.blockedBipartiteJoin(cSized, "doc_a", nSized, Seq("gf"), maxBucket)
-      .filter(col("na") * 1000 >= col("nb") * p && col("nb") * 1000 >= col("na") * p)
-      .groupBy("doc_a", "doc_b", "na", "nb")
-      .agg(count(lit(1)).as("common"))
-      .filter(col("common") * (1000 + p) >= (col("na") + col("nb")) * p)
-      .select(col("doc_a"), col("doc_b"),
-              round(col("common") / (col("na") + col("nb") - col("common")), 3).as("jaccard"))
+    m.report(operators.GramPairs.countPairs(cs, Some(bs), m, maxBucket))
   }
 
   /** EXACT prefix-filtered Jaccard self-join (the AllPairs / PPJoin
@@ -3577,69 +3480,23 @@ object Graft {
     * WWW'08): same output contract as [[nearDupPairsNgram]] —
     * (doc_a, doc_b, jaccard rounded 3) for exact word-n-gram Jaccard
     * ≥ thresholdPermille/1000, doc_a < doc_b — but candidates come
-    * from a PREFIX inverted index, not the full one. Rank every gram
-    * by global rarity (document frequency asc, gram asc — one total
-    * order both docs agree on); a doc of n grams indexes only its
-    * `n - ceil(t·n) + 1` RAREST grams. Two sets with Jaccard ≥ t
-    * overlap in ≥ ceil(t·max(n_a, n_b)) grams, so their prefixes must
-    * share at least one — every qualifying pair survives (exactness
-    * is a theorem, not a tuning choice), unlike the lossy
-    * `maxGramDocFreq` stop-gram cap.
+    * from a PREFIX inverted index over the shared [[rarityGramArrays]]
+    * table: the prefix path of [[operators.GramPairs]], whose prefix
+    * theorem and positional bound make it exact at any threshold,
+    * unlike the lossy `maxGramDocFreq` stop-gram cap.
     *
     * Why this is the 100 TB shape: the index shrinks to the
     * ~(1−t) rarest fraction of each doc, and candidate work
     * Σ bucket² shrinks doubly — fewer entries AND the surviving
     * buckets are the rarest grams by construction. True stop-grams
     * (the Σ bucket² killers) sort LAST in rarity order and never
-    * enter a prefix at any realistic t. Candidate generation still
-    * runs under [[operators.SkewJoin.blockedSelfPairs]], so even a
-    * rare-gram bucket stays bounded per task. Survivors are verified
-    * exactly: one distinct over candidate pairs, two equi-joins onto
-    * the per-doc gram arrays, `array_intersect` for the true overlap
-    * — work ∝ candidates, not corpus². Docs shorter than n tokens
+    * enter a prefix at any realistic t. Docs shorter than n tokens
     * have no n-gram and never pair. */
   def jaccardJoinPrefix(docs: DataFrame, id: Column, text: Column,
                         thresholdPermille: Int = 800, n: Int = 3,
                         maxBucket: Int = 1024): DataFrame = {
-    require(thresholdPermille > 0 && thresholdPermille <= 1000,
-      s"thresholdPermille must be in (0, 1000], got $thresholdPermille")
-    require(n >= 1, s"n must be >= 1, got $n")
-    val p = thresholdPermille
-    // the index and both verify joins read the shared
-    // [[rarityGramArrays]] table — zero corpus passes per call once
-    // (docs, n) has been seen
-    val sortedDocs = rarityGramArrays(docs, id, text, n)
-      .withColumn("prefix", slice(col("gs"), lit(1), prefixLen(p)))
-    // posexplode: `pos`+1 is the gram's 1-based rank in the doc's
-    // rarity order — the payload of the POSITIONAL filter below
-    val prefix = sortedDocs.select(col("doc_id"), col("na"),
-        posexplode(col("prefix")).as(Seq("pos", "gf")))
-      .select(col("doc_id"), col("na"), (col("pos") + 1).as("pos"), col("gf"))
-    val cand = operators.SkewJoin.blockedSelfPairs(prefix, Seq("gf"), "doc_id", maxBucket)
-      .select(col("doc_id_a").as("doc_a"), col("na_a").as("na"), col("pos_a"),
-              col("doc_id_b").as("doc_b"), col("na_b").as("nb"), col("pos_b"))
-      .filter(col("na") * 1000 >= col("nb") * p && col("nb") * 1000 >= col("na") * p)
-      // PPJoin POSITIONAL filter (Xiao et al., WWW'08; round 12) —
-      // exact, applied per collision BEFORE the distinct so the
-      // candidate shuffle carries only justifiable pairs: both docs
-      // sort grams in the SAME global rarity order, so all common
-      // grams of a pair sit at ranks ≥ (i, j) of its FIRST collision;
-      // overlap is then ≤ min(na−i, nb−j)+1, and a pair with Jaccard
-      // ≥ p/1000 needs overlap·(1000+p) ≥ p·(na+nb) — a collision
-      // whose bound cannot reach that is dropped, and exactness holds
-      // because the first collision of every qualifying pair passes
-      // (EXISTS semantics: filter rows, then distinct). All-integer.
-      .filter((least(col("na") - col("pos_a"), col("nb") - col("pos_b")) + 1)
-                * (1000 + p) >= (col("na") + col("nb")) * p)
-      .select(col("doc_a"), col("na"), col("doc_b"), col("nb"))
-      .distinct()
-    cand
-      .join(sortedDocs.select(col("doc_id").as("doc_a"), col("gs").as("ga")), "doc_a")
-      .join(sortedDocs.select(col("doc_id").as("doc_b"), col("gs").as("gb")), "doc_b")
-      .withColumn("common", size(array_intersect(col("ga"), col("gb"))).cast("long"))
-      .filter(col("common") * (1000 + p) >= (col("na") + col("nb")) * p)
-      .select(col("doc_a"), col("doc_b"),
-              round(col("common") / (col("na") + col("nb") - col("common")), 3).as("jaccard"))
+    val m = operators.GramPairs.Jaccard(thresholdPermille)
+    m.report(operators.GramPairs.prefixPairs(rarityGramArrays(docs, id, text, n), None, m, maxBucket))
   }
 
   /** The rarity-SORTED per-document gram-fingerprint table
@@ -3665,13 +3522,9 @@ object Graft {
     * [[docGramArrays]]; docs shorter than n tokens carry no row. */
   def rarityGramArrays(docs: DataFrame, id: Column, text: Column,
                        n: Int = 3): DataFrame = {
-    require(n >= 1, s"n must be >= 1, got $n")
-    val grams = docGramArrays(docs, id, text, n)
-      .select(col("doc_id"), explode(col("ga")).as("gram"))
-      .select(col("doc_id"), gramFp(col("gram")).as("gf"))
-    val rarity = gramFpDocFreq(docs, id, text, n)
+    val grams = gramRows(docGramArrays(docs, id, text, n)).select("doc_id", "gf")
     TempTables.shared("rarity_gram_arrays",
-      grams.join(rarity, "gf")
+      grams.join(gramFpDocFreq(docs, id, text, n), "gf")
         .groupBy("doc_id")
         .agg(array_sort(collect_list(struct(col("gdf"), col("gf")))).as("sg"))
         .select(col("doc_id"),
@@ -3679,103 +3532,50 @@ object Graft {
                 size(col("sg")).as("na")))()
   }
 
-  /** ONE definition of the AllPairs prefix length over a
-    * [[rarityGramArrays]] row — na − ceil(p·na/1000) + 1, as an
-    * expression over the table's `na` column — shared by the
-    * self-join index and the bipartite probe (review catch: the two
-    * faces must agree on the prefix or the first-common-gram lemma's
-    * "in BOTH prefixes" step silently breaks). */
-  private def prefixLen(p: Int): Column =
-    (col("na") - expr(s"(na * $p + 999) div 1000") + 1).cast("int")
-
   /** BIPARTITE prefix-filtered Jaccard join — [[jaccardJoinPrefix]]'s
     * incremental-ingest face and [[nearDupPairsNgramAgainst]]'s
-    * prefix-indexed upgrade (round-12 verdict #2): every (corpus doc,
-    * batch doc) pair with exact word-n-gram Jaccard ≥
-    * thresholdPermille/1000, candidates drawn from the PREFIX
-    * inverted index on BOTH sides. At 100 TB the standing corpus
-    * keeps its [[rarityGramArrays]] table warehouse-resident; a new
-    * crawl batch builds (or slices) its own rows of the SAME table
-    * and probes — work ∝ prefix-bucket products, linear in the batch
-    * for a fixed index, and the AllPairs prefix bound cuts both
-    * sides' index entries to the ~(1−t) rarest fraction (measured on
-    * the sf0.1 mod-2 documents split at t = 0.8: the full bipartite
-    * index yields 234,804 size-pruned collisions → 201,226 pairs to
-    * verify; the prefix index 22,943 collisions → 7,015 after the
-    * positional filter → 6,393 pairs — a 10× collision cut and a 31×
-    * verify cut).
+    * prefix-indexed upgrade: every (corpus doc, batch doc) pair with
+    * exact word-n-gram Jaccard ≥ thresholdPermille/1000, candidates
+    * drawn from the PREFIX inverted index on BOTH sides — the
+    * [[operators.GramPairs]] prefix path with the bipartite candidate
+    * kernel. At 100 TB the standing corpus keeps its
+    * [[rarityGramArrays]] table warehouse-resident; a new crawl batch
+    * builds (or slices) its own rows of the SAME table and probes —
+    * work ∝ prefix-bucket products, linear in the batch for a fixed
+    * index (measured on the sf0.1 mod-2 documents split at t = 0.8: the
+    * full bipartite index yields 234,804 size-pruned collisions →
+    * 201,226 pairs to verify; the prefix index 22,943 collisions →
+    * 7,015 after the positional filter → 6,393 pairs — a 10× collision
+    * cut and a 31× verify cut).
     *
     * PRECONDITION: both sides must be slices of ONE
-    * [[rarityGramArrays]] table — the same global rarity order (two
-    * independently-built tables rank by their own dfs and the prefix
-    * theorem silently breaks).
-    * Overlapping doc ids emit self-pairs (doc_a = doc_b, J = 1.0);
-    * hand DISJOINT slices, as an ingest pipeline naturally does.
-    *
-    * Exactness (first-common-gram argument; review catch — an
-    * earlier counting version of this paragraph was wrong): J ≥ t
-    * and o ≤ nb give o·(1+t) ≥ t·(na+nb) ≥ t·na + t·o, i.e.
-    * o ≥ ceil(t·na) (and symmetrically o ≥ ceil(t·nb)). Exactly
-    * ceil(t·na) − 1 grams of a lie AFTER its prefix in the shared
-    * order, so if a's FIRST common gram sat outside the prefix, ALL
-    * o common grams would — o ≤ ceil(t·na) − 1, contradiction. Hence
-    * the first common gram (the same gram on both sides, the order
-    * being shared) lies in BOTH prefixes — every qualifying pair
-    * collides.
-    * The PPJoin positional filter then bounds overlap per collision
-    * (≤ min(na−i, nb−j)+1, both sides sorted by the one shared
-    * order) before the distinct; survivors verify exactly via
-    * array_intersect on the two slices. The candidate join is
-    * [[operators.SkewJoin.blockedBipartiteJoin]] — a hot prefix
-    * bucket's corpus rows are block-decomposed and the batch rows
-    * replicated, so per-task input stays bounded. */
+    * [[rarityGramArrays]] table (the prefix theorem needs one rarity
+    * order). Overlapping doc ids emit self-pairs (doc_a = doc_b,
+    * J = 1.0); hand DISJOINT slices, as an ingest pipeline naturally
+    * does. */
   def jaccardPrefixAgainst(corpusSorted: DataFrame, batchSorted: DataFrame,
                            thresholdPermille: Int = 800,
                            maxBucket: Int = 1024): DataFrame = {
-    require(thresholdPermille > 0 && thresholdPermille <= 1000,
-      s"thresholdPermille must be in (0, 1000], got $thresholdPermille")
-    val p = thresholdPermille
-    def prefixOf(side: DataFrame, idName: String, szName: String,
-                 posName: String): DataFrame =
-      side.select(col("doc_id").as(idName), col("na").as(szName),
-          posexplode(slice(col("gs"), lit(1), prefixLen(p))).as(Seq(posName, "gf")))
-        .select(col(idName), col(szName), (col(posName) + 1).as(posName), col("gf"))
-    val cPrefix = prefixOf(corpusSorted, "doc_a", "na", "pos_a")
-    val bPrefix = prefixOf(batchSorted, "doc_b", "nb", "pos_b")
-    operators.SkewJoin.blockedBipartiteJoin(cPrefix, "doc_a", bPrefix,
-                                            Seq("gf"), maxBucket)
-      .filter(col("na") * 1000 >= col("nb") * p && col("nb") * 1000 >= col("na") * p)
-      // the same per-collision positional bound as the self-join form
-      // (see [[jaccardJoinPrefix]]): exact, because the FIRST
-      // collision of every qualifying pair passes it
-      .filter((least(col("na") - col("pos_a"), col("nb") - col("pos_b")) + 1)
-                * (1000 + p) >= (col("na") + col("nb")) * p)
-      .select(col("doc_a"), col("na"), col("doc_b"), col("nb"))
-      .distinct()
-      .join(corpusSorted.select(col("doc_id").as("doc_a"), col("gs").as("ga")), "doc_a")
-      .join(batchSorted.select(col("doc_id").as("doc_b"), col("gs").as("gb")), "doc_b")
-      .withColumn("common", size(array_intersect(col("ga"), col("gb"))).cast("long"))
-      .filter(col("common") * (1000 + p) >= (col("na") + col("nb")) * p)
-      .select(col("doc_a"), col("doc_b"),
-              round(col("common") / (col("na") + col("nb") - col("common")), 3).as("jaccard"))
+    val m = operators.GramPairs.Jaccard(thresholdPermille)
+    m.report(operators.GramPairs.prefixPairs(corpusSorted, Some(batchSorted), m, maxBucket))
   }
 
   /** Drops every `keyCols` bucket holding more than `cap` rows — the
     * LOSSY dense-band cap of the LSH candidate joins (the inverted
-    * index's stop-gram cap lives in [[sizedGrams]], which must also
-    * recount per-doc sizes after the drop and can reuse a shared
-    * [[gramDocFreq]] table). One map-side-combined count pass finds the hot keys;
-    * only keys ABOVE the cap ship (Zipf-bounded metadata) and the
-    * input streams out through a broadcast anti-join.
+    * index's stop-gram cap must also recount per-doc sizes after the
+    * drop: [[cappedRows]]). Only keys ABOVE the cap ship (Zipf-bounded
+    * metadata) and the input streams out through a broadcast anti-join.
     * `cap == Int.MaxValue` is the zero-cost identity. */
   private def dropHotBuckets(df: DataFrame, keyCols: Seq[String], cap: Int): DataFrame =
     if (cap == Int.MaxValue) df
-    else {
-      val hot = df.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__df"))
-        .filter(col("__df") > cap)
-        .select(keyCols.map(col): _*)
-      df.join(broadcast(hot), keyCols, "left_anti")
-    }
+    else df.join(broadcast(hotKeys(df, keyCols, cap)), keyCols, "left_anti")
+
+  /** The `keyCols` values of more than `cap` rows of `df`, found by one
+    * map-side-combined count pass. */
+  private def hotKeys(df: DataFrame, keyCols: Seq[String], cap: Int): DataFrame =
+    df.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__df"))
+      .filter(col("__df") > cap)
+      .select(keyCols.map(col): _*)
 
   /** The canonical-string blocking projection [[fuzzyDupPairs]]
     * self-joins: per doc the fixed-name working set (fz_p0.. =
@@ -3840,13 +3640,7 @@ object Graft {
   }
 
   /** The set-collapse GROUPS table [[nearDupPairsMinhash]] consumes —
-    * one row per DISTINCT token set: (rep = min doc_id, members = all
-    * doc_ids sharing the set, sig = the 64-permutation row-local
-    * [[functions.MinHashSig]] signature). The set-collapse key is the
-    * 128-bit [[spanHash]] pair of the canonical sorted-token string,
-    * hashed ROW-LOCALLY — the canonical text itself never shuffles;
-    * identical sets produce identical signatures by construction, so
-    * `first(sig)` per group is deterministic. fanOutForCompute before
+    * [[minhashGroupPlan]] over the corpus. fanOutForCompute before
     * the 64-permutation signature stage (guide §2.5): the sig is
     * ~NumPerms hashes per token and otherwise serializes on a
     * single-split local scan. A [[TempTables.shared]] table: five plan
@@ -3857,18 +3651,76 @@ object Graft {
     * sf0.1/local[32]). It is distinct-set-scale, so the parquet round
     * trip is metadata-sized and its file stats keep every downstream
     * join broadcast-able. */
-  def minhashGroups(docs: DataFrame, id: Column, text: Column): DataFrame = {
-    val base = fanOutForCompute(
-        docs.filter(text.isNotNull)
-          .select(id.cast("long").as("doc_id"),
-            array_sort(array_distinct(split(text, " "))).as("toks")))
-      .select(Seq(col("doc_id"), functions.MinHashSig.sig(col("toks")).as("sig")) ++
-              spanHash(array_join(col("toks"), " ")): _*)
+  def minhashGroups(docs: DataFrame, id: Column, text: Column): DataFrame =
     TempTables.shared("minhash_groups",
-      base.groupBy("h1", "h2")
-        .agg(min("doc_id").as("rep"), collect_list("doc_id").as("members"),
-             first("sig").as("sig"))
-        .select("rep", "members", "sig"))()
+      minhashGroupPlan(fanOutForCompute(tokenSets(docs, id, text))))()
+
+  /** (doc_id, toks = sorted distinct tokens) per row of non-NULL text
+    * (xxhash64 maps NULL input to its seed, so without the filter every
+    * null-text doc would share one collapse group and be reported as
+    * exact duplicates of each other). */
+  private def tokenSets(docs: DataFrame, id: Column, text: Column): DataFrame =
+    docs.filter(text.isNotNull)
+      .select(id.cast("long").as("doc_id"), array_sort(array_distinct(split(text, " "))).as("toks"))
+
+  /** One row per DISTINCT token set of a [[tokenSets]] table: (rep =
+    * min doc_id, members = all doc_ids sharing the set, sig = the
+    * 64-permutation row-local [[functions.MinHashSig]] signature). The
+    * set-collapse key is the 128-bit [[spanHash]] pair of the canonical
+    * sorted-token string, hashed ROW-LOCALLY — the canonical text
+    * itself never shuffles; identical sets produce identical signatures
+    * by construction, so `first(sig)` per group is deterministic. */
+  private def minhashGroupPlan(sets: DataFrame): DataFrame =
+    sets.select(Seq(col("doc_id"), functions.MinHashSig.sig(col("toks")).as("sig")) ++
+                spanHash(array_join(col("toks"), " ")): _*)
+      .groupBy("h1", "h2")
+      .agg(min("doc_id").as("rep"), collect_list("doc_id").as("members"),
+           first("sig").as("sig"))
+      .select("rep", "members", "sig")
+
+  /** The MinHash pair pipeline under both faces, over
+    * [[minhashGroupPlan]] tables: LSH band-bucket candidates on hashed
+    * band keys (never all-pairs), with `a`'s band buckets over
+    * `maxBandDocFreq` reps dropped; the kernel pairs `a` with itself
+    * ([[operators.SkewJoin.blockedSelfPairs]], rep_a < rep_b) or with
+    * `b` ([[operators.SkewJoin.blockedBipartiteJoin]], `a` the large
+    * side), block-decomposing band buckets over `maxBucket` reps; then
+    * signatures re-attach to surviving rep pairs only, the exact
+    * integer estimate filter matches·1000 ≥ p·NumPerms applies, and the
+    * rep pairs expand to doc pairs (da from a's members, db from b's).
+    * The band keys are one xxhash64(band, slice) for both faces, so a
+    * standing corpus index and a fresh batch agree on bucket identity.
+    *
+    * PLAIN equi-joins, no broadcast hints: the group tables are
+    * corpus-scale, and a forced broadcast is the could-not-fit-at-100TB
+    * shape; the surviving-pair side is pair-scale, so AQE broadcasts
+    * the other side when one truly is small. */
+  private def minhashPairs(a: DataFrame, b: Option[DataFrame], estPermille: Int,
+                           maxBucket: Int, maxBandDocFreq: Int): DataFrame = {
+    def bands(g: DataFrame): DataFrame =
+      g.select(col("rep"),
+          posexplode(transform(sequence(lit(0), lit(MinHash.NumBands - 1)),
+            i => slice(col("sig"), i * MinHash.RowsPerBand + 1, lit(MinHash.RowsPerBand)))))
+        .select(col("rep"), xxhash64(col("pos"), col("col")).as("bucket"))
+    val aBands = dropHotBuckets(bands(a), Seq("bucket"), maxBandDocFreq)
+    val repPairs = (b match {
+      case None => operators.SkewJoin.blockedSelfPairs(aBands, Seq("bucket"), "rep", maxBucket)
+      case Some(bg) =>
+        operators.SkewJoin.blockedBipartiteJoin(aBands.withColumnRenamed("rep", "rep_a"), "rep_a",
+          bands(bg).withColumnRenamed("rep", "rep_b"), Seq("bucket"), maxBucket)
+    }).select(col("rep_a"), col("rep_b")).distinct()
+    val bg = b.getOrElse(a)
+    val matches = functions.ArrayMatchCount.matchCount(col("sig_a"), col("sig_b"))
+    repPairs
+      .join(a.select(col("rep").as("rep_a"), col("sig").as("sig_a")), "rep_a")
+      .join(bg.select(col("rep").as("rep_b"), col("sig").as("sig_b")), "rep_b")
+      .filter(matches * 1000 >= lit(estPermille * MinHash.NumPerms))
+      .select(col("rep_a"), col("rep_b"),
+              round(matches.cast("double") / MinHash.NumPerms, 3).as("est_jaccard"))
+      .join(a.select(col("rep").as("rep_a"), col("members").as("ms_a")), "rep_a")
+      .join(bg.select(col("rep").as("rep_b"), col("members").as("ms_b")), "rep_b")
+      .select(explode(col("ms_a")).as("da"), col("ms_b"), col("est_jaccard"))
+      .select(col("da"), explode(col("ms_b")).as("db"), col("est_jaccard"))
   }
 
   /** MinHash/LSH near-dup pairs over ANY (id, text) DataFrame:
@@ -3877,24 +3729,13 @@ object Graft {
     * [[MinHash.NumPerms]] permutations), doc_a < doc_b, unordered.
     * Scale shape (the one the oracle-verified q_dedup_minhash runs):
     * identical token SETS collapse to one representative before
-    * anything quadratic, keyed by the 128-bit [[spanHash]] pair of
-    * the canonical sorted-token string (hashed row-locally — the
-    * canonical text never shuffles, and the within-group exact-dup
-    * pairs expand from the grouped member lists, so no corpus
-    * self-join on document text exists anywhere); one ROW-LOCAL
-    * signature per document via the native codegen'd
-    * [[functions.MinHashSig]] expression (bit-identical to the
-    * streaming [[MinHash]] Aggregator, which remains the
-    * token-at-a-time arrival variant), deduped per distinct set by
-    * `first`; LSH band-bucket
-    * candidate join on hashed band keys, never all-pairs, with band
-    * buckets larger than `maxBucket` BLOCK-DECOMPOSED
-    * ([[operators.SkewJoin.blockedSelfPairs]]) so a dense band at
-    * scale cannot serialize one quadratic task; signatures
-    * re-attached to surviving pairs only; set-level pairs expand back
-    * to doc-level pairs (within-group pairs are exact dups, est 1.0).
-    * The estimate filter is exact integer arithmetic:
-    * matches·1000 ≥ p·NumPerms.
+    * anything quadratic ([[minhashGroups]]), so no corpus self-join on
+    * document text exists anywhere; one ROW-LOCAL signature per
+    * document via the native codegen'd [[functions.MinHashSig]]
+    * expression (bit-identical to the streaming [[MinHash]]
+    * Aggregator, which remains the token-at-a-time arrival variant);
+    * the self face of [[minhashPairs]]; set-level pairs expand back to
+    * doc-level pairs (within-group pairs are exact dups, est 1.0).
     *
     * `maxBandDocFreq` (default off) is the LOSSY dense-band cap, the
     * band-join sibling of [[nearDupPairsNgram]]'s stop-gram cap: band
@@ -3906,10 +3747,8 @@ object Graft {
     * was dropped; a bucket that dense is boilerplate whose pairs the
     * downstream drop stage would collapse anyway. Opt-in, never a
     * silent default. Exact-dup pairs (identical token sets) bypass
-    * banding entirely and always survive. NULL-text rows are excluded
-    * (review catch: xxhash64 maps NULL input to its seed, so without
-    * the filter every null-text doc would share one collapse group
-    * and be reported as exact duplicates of each other). */
+    * banding entirely and always survive. NULL-text rows are
+    * excluded. */
   def nearDupPairsMinhash(docs: DataFrame, id: Column, text: Column,
                           estPermille: Int = 900,
                           maxBucket: Int = 1024,
@@ -3918,43 +3757,12 @@ object Graft {
       s"estPermille must be in (0, 1000], got $estPermille")
     require(maxBandDocFreq >= 1, s"maxBandDocFreq must be >= 1, got $maxBandDocFreq")
     val g = minhashGroups(docs, id, text)
-    val sigs = g.select(col("rep"), col("sig"))
-    val bandedAll = sigs.select(col("rep"),
-        posexplode(transform(sequence(lit(0), lit(MinHash.NumBands - 1)),
-          b => slice(col("sig"), b * MinHash.RowsPerBand + 1, lit(MinHash.RowsPerBand)))))
-      .select(col("rep"), xxhash64(col("pos"), col("col")).as("bucket"))
-    val banded = dropHotBuckets(bandedAll, Seq("bucket"), maxBandDocFreq)
-    val repPairs = operators.SkewJoin
-      .blockedSelfPairs(banded, Seq("bucket"), "rep", maxBucket)
-      .select(col("rep_a"), col("rep_b"))
-      .distinct()
-    // PLAIN equi-joins, no broadcast hints (round 12): sigs/members
-    // are one row per DISTINCT document set — corpus-scale tables —
-    // and a forced broadcast of either is exactly the
-    // could-not-fit-at-100TB shape the sizedGrams refactor removed.
-    // The surviving-pair side is pair-scale, so AQE's runtime
-    // re-plan broadcasts the RIGHT side when one truly is small;
-    // at scale both sides shuffle on rep, which is correct.
-    val matches = functions.ArrayMatchCount.matchCount(col("sig_a"), col("sig_b"))
-    val candRep = repPairs
-      .join(sigs.select(col("rep").as("rep_a"), col("sig").as("sig_a")), "rep_a")
-      .join(sigs.select(col("rep").as("rep_b"), col("sig").as("sig_b")), "rep_b")
-      .filter(matches * 1000 >= lit(estPermille * MinHash.NumPerms))
-      .select(col("rep_a"), col("rep_b"),
-              round(matches.cast("double") / MinHash.NumPerms, 3).as("est_jaccard"))
-    val members = g.select(col("rep"), col("members"))
-    val crossDocs = candRep
-      .join(members.select(col("rep").as("rep_a"), col("members").as("ms_a")), "rep_a")
-      .join(members.select(col("rep").as("rep_b"), col("members").as("ms_b")), "rep_b")
-      .select(explode(col("ms_a")).as("da"), col("ms_b"), col("est_jaccard"))
-      .select(col("da"), explode(col("ms_b")).as("db"), col("est_jaccard"))
+    val crossDocs = minhashPairs(g, None, estPermille, maxBucket, maxBandDocFreq)
       .select(least(col("da"), col("db")).as("doc_a"),
               greatest(col("da"), col("db")).as("doc_b"), col("est_jaccard"))
     // within-group exact-dup pairs from the ALREADY-grouped member
-    // lists — no second corpus self-join at all (the previous shape
-    // equi-joined base with base on the full fp string): an array
-    // self-product of each metadata-scale member list, filtered to
-    // the ordered half
+    // lists — no second corpus self-join at all: an array self-product
+    // of each metadata-scale member list, filtered to the ordered half
     val intraDocs = g.select(col("members"))
       .filter(size(col("members")) >= 2)
       .select(explode(col("members")).as("doc_a"), col("members"))
@@ -3964,7 +3772,7 @@ object Graft {
     crossDocs.union(intraDocs)
   }
 
-  /** INCREMENTAL MinHash probe (round 12) — the MinHash face of the
+  /** INCREMENTAL MinHash probe — the MinHash face of the
     * batch-vs-corpus ingest story [[nearDupPairsNgramAgainst]] covers
     * for the inverted index: every CROSS pair (batch doc, corpus doc)
     * whose estimated Jaccard reaches estPermille/1000, without ever
@@ -3973,29 +3781,26 @@ object Graft {
     * (signatures and band keys are row-local functions of each doc, so
     * the index appends per crawl without recompute — the same
     * mergeable-statistics posture as q_gramdf_merge); here both sides
-    * derive from their DataFrames so the equivalence is testable.
+    * derive from their DataFrames (no shared table) so the equivalence
+    * is testable.
     *
-    * Same machinery as [[nearDupPairsMinhash]], bipartite: per-side
-    * set-collapse on the 128-bit canonical hash (identical token sets
-    * share one signature row), row-local [[functions.MinHashSig]]
-    * signatures, 16 hashed band keys, candidate join via
-    * [[operators.SkewJoin.blockedBipartiteJoin]] (corpus = large side;
-    * a dense band splits into id-hash blocks and batch rows replicate
-    * across them, so one boilerplate band cannot serialize a task),
-    * exact integer threshold on re-attached signatures, member
-    * expansion back to doc level. `maxBandDocFreq` drops bands dense
-    * ON THE CORPUS SIDE before the join (the standing side is where
-    * boilerplate accumulates); opt-in, recall-lossy, like the self
-    * variant. With the cap off, output = [[nearDupPairsMinhash]] of
-    * (batch ∪ corpus) restricted to cross pairs — pinned in
-    * MinHashSpec. Returns (batch_id, corpus_id, est_jaccard).
+    * The bipartite face of [[minhashPairs]] (corpus = large side; a
+    * dense band splits into id-hash blocks and batch rows replicate
+    * across them, so one boilerplate band cannot serialize a task).
+    * `maxBandDocFreq` drops bands dense ON THE CORPUS SIDE before the
+    * join (the standing side is where boilerplate accumulates; a batch
+    * band colliding only there finds no partner); opt-in,
+    * recall-lossy, like the self variant. With the cap off, output =
+    * [[nearDupPairsMinhash]] of (batch ∪ corpus) restricted to cross
+    * pairs — pinned in MinHashSpec. Returns (batch_id, corpus_id,
+    * est_jaccard).
     *
-    * Id-overlap contract (round-12 ADVICE): the two sides are
-    * expected DISJOINT (an ingest probe's natural state). If a doc
-    * id appears on both sides it is the SAME document seen twice,
-    * and its degenerate (x, x) "cross pair" at est_jaccard 1.0 is
-    * filtered from the output rather than reported as a duplicate of
-    * itself; its genuine cross pairs with OTHER docs are unaffected. */
+    * Id-overlap contract: the two sides are expected DISJOINT (an
+    * ingest probe's natural state). If a doc id appears on both sides
+    * it is the SAME document seen twice, and its degenerate (x, x)
+    * "cross pair" at est_jaccard 1.0 is filtered from the output
+    * rather than reported as a duplicate of itself; its genuine cross
+    * pairs with OTHER docs are unaffected. */
   def nearDupPairsMinhashAgainst(batch: DataFrame, batchId: Column, batchText: Column,
                                  corpus: DataFrame, corpusId: Column, corpusText: Column,
                                  estPermille: Int = 900,
@@ -4004,58 +3809,10 @@ object Graft {
     require(estPermille > 0 && estPermille <= 1000,
       s"estPermille must be in (0, 1000], got $estPermille")
     require(maxBandDocFreq >= 1, s"maxBandDocFreq must be >= 1, got $maxBandDocFreq")
-    def groupsOf(df: DataFrame, id: Column, text: Column): DataFrame = {
-      val base = df.filter(text.isNotNull)
-        .select(id.cast("long").as("doc_id"),
-          array_sort(array_distinct(split(text, " "))).as("toks"))
-        .select(Seq(col("doc_id"), functions.MinHashSig.sig(col("toks")).as("sig")) ++
-                spanHash(array_join(col("toks"), " ")): _*)
-      base.groupBy("h1", "h2")
-        .agg(min("doc_id").as("rep"), collect_list("doc_id").as("members"),
-             first("sig").as("sig"))
-    }
-    // the band keys are the SAME xxhash64(pos, slice) as the self
-    // variant — a standing corpus index and a fresh batch agree on
-    // bucket identity by construction
-    def bandsOf(groups: DataFrame, repName: String): DataFrame =
-      groups.select(col("rep").as(repName),
-          posexplode(transform(sequence(lit(0), lit(MinHash.NumBands - 1)),
-            b => slice(col("sig"), b * MinHash.RowsPerBand + 1, lit(MinHash.RowsPerBand)))))
-        .select(col(repName), xxhash64(col("pos"), col("col")).as("bucket"))
-    val bGroups = groupsOf(batch, batchId, batchText)
-    val cGroups = groupsOf(corpus, corpusId, corpusText)
-    val cBandsAll = bandsOf(cGroups, "rep_c")
-    // cap on CORPUS-side density: bands the standing index already
-    // knows are boilerplate leave the candidate universe on BOTH
-    // sides (a batch band colliding only there finds no partner)
-    val hot =
-      if (maxBandDocFreq == Int.MaxValue) None
-      else Some(cBandsAll.groupBy("bucket").agg(count(lit(1)).as("__df"))
-        .filter(col("__df") > maxBandDocFreq).select("bucket"))
-    val cBands = hot.map(h => cBandsAll.join(broadcast(h), Seq("bucket"), "left_anti"))
-      .getOrElse(cBandsAll)
-    val bBands = {
-      val all = bandsOf(bGroups, "rep_b")
-      hot.map(h => all.join(broadcast(h), Seq("bucket"), "left_anti")).getOrElse(all)
-    }
-    val repPairs = operators.SkewJoin
-      .blockedBipartiteJoin(cBands, "rep_c", bBands, Seq("bucket"), maxBucket)
-      .select(col("rep_b"), col("rep_c"))
-      .distinct()
-    val matches = functions.ArrayMatchCount.matchCount(col("sig_b"), col("sig_c"))
-    val candRep = repPairs
-      .join(bGroups.select(col("rep").as("rep_b"), col("sig").as("sig_b"),
-                           col("members").as("ms_b")), "rep_b")
-      .join(cGroups.select(col("rep").as("rep_c"), col("sig").as("sig_c"),
-                           col("members").as("ms_c")), "rep_c")
-      .filter(matches * 1000 >= lit(estPermille * MinHash.NumPerms))
-      .select(col("ms_b"), col("ms_c"),
-              round(matches.cast("double") / MinHash.NumPerms, 3).as("est_jaccard"))
-    candRep
-      .select(explode(col("ms_b")).as("batch_id"), col("ms_c"), col("est_jaccard"))
-      .select(col("batch_id"), explode(col("ms_c")).as("corpus_id"), col("est_jaccard"))
-      // a doc present on both sides is the same document, not a dup
-      // of itself (see scaladoc id-overlap contract)
+    minhashPairs(minhashGroupPlan(tokenSets(corpus, corpusId, corpusText)),
+        Some(minhashGroupPlan(tokenSets(batch, batchId, batchText))),
+        estPermille, maxBucket, maxBandDocFreq)
+      .select(col("db").as("batch_id"), col("da").as("corpus_id"), col("est_jaccard"))
       .filter(col("batch_id") =!= col("corpus_id"))
   }
 
@@ -4071,13 +3828,8 @@ object Graft {
                     n: Int = 3, coveragePermille: Int = 500): DataFrame = {
     require(coveragePermille > 0 && coveragePermille <= 1000,
       s"coveragePermille must be in (0, 1000], got $coveragePermille")
-    def grams(df: DataFrame, id: Column, text: Column, idName: String): DataFrame = {
-      val t = split(text, " ")
-      df.select(id.cast("long").as(idName), t.as("t"))
-        .filter(size(col("t")) >= n)
-        .select(col(idName),
-                explode(array_distinct(functions.TokenNGrams.ngrams(col("t"), n))).as("gram"))
-    }
+    def grams(df: DataFrame, id: Column, text: Column, idName: String): DataFrame =
+      gramSets(df, id, text, n).select(col("doc_id").as(idName), explode(col("ga")).as("gram"))
     val evalGrams = grams(eval, evalId, evalText, "eval_id")
     val evalSizes = evalGrams.groupBy("eval_id").agg(count(lit(1)).as("n_eval"))
     grams(corpus, corpusId, corpusText, "doc_id")
@@ -4092,14 +3844,10 @@ object Graft {
   /** SimHash near-dup pairs over ANY (id, text) DataFrame:
     * (doc_a, doc_b, hamming) for Hamming distance ≤ maxHamming between
     * tf-weighted 64-bit SimHash fingerprints, doc_a < doc_b,
-    * unordered. Candidates come from [[SimHash.NumBands]] 16-bit band
-    * buckets, which have PERFECT recall only for maxHamming ≤
-    * NumBands-1 (pigeonhole) — larger radii are rejected rather than
-    * silently losing pairs. Band key and Hamming are pure built-ins
-    * (codegen-fused); rows stay two longs wide end-to-end. Band
-    * buckets larger than `maxBucket` docs are BLOCK-DECOMPOSED
-    * ([[operators.SkewJoin.blockedSelfPairs]]) so one dense 16-bit
-    * bucket at scale cannot serialize one quadratic task.
+    * unordered: [[nearDupPairsHamming]] over row-local signatures.
+    * Band buckets larger than `maxBucket` docs are block-decomposed, so
+    * one dense 16-bit bucket at scale cannot serialize one quadratic
+    * task.
     *
     * `maxBandDocFreq` (default off) is the LOSSY dense-band cap
     * ([[nearDupPairsMinhash]]'s sibling): band buckets holding more
@@ -4140,67 +3888,77 @@ object Graft {
       maxHamming, maxBucket, maxBandDocFreq)
   }
 
-  /** ONE definition of the 16-bit band-bucket rows both Hamming
-    * faces pair on — (idName, sigName, band, key) for every band of
-    * every signature — so the self-join and the bipartite probe can
-    * never drift on band width or key arithmetic (review catch:
-    * the recipe briefly existed twice). */
+  /** The 16-bit band-bucket rows of every signature: (doc_id+suffix,
+    * sig+suffix, band, key) for every band. */
   private def hammingBandRows(sigs: DataFrame, id: Column, sig: Column,
-                              idName: String, sigName: String): DataFrame =
+                              suffix: String): DataFrame = {
+    val (idName, sigName) = (s"doc_id$suffix", s"sig$suffix")
     sigs.select(id.cast("long").as(idName), sig.cast("long").as(sigName))
       .select(col(idName), col(sigName),
               explode(sequence(lit(0), lit(SimHash.NumBands - 1))).as("band"))
       .select(col(idName), col(sigName), col("band"),
               expr(s"shiftrightunsigned($sigName, band * ${SimHash.BandBits}) & 65535")
                 .as("key"))
+  }
+
+  /** The banded Hamming pair pipeline under both faces: band rows of
+    * side `a` (suffix "" when self, "_a" against `b`'s "_b"), `a`'s
+    * band buckets over `maxBandDocFreq` rows dropped, paired with
+    * themselves ([[operators.SkewJoin.blockedSelfPairs]]) or with `b`
+    * ([[operators.SkewJoin.blockedBipartiteJoin]], `a` the large side),
+    * band buckets over `maxBucket` rows block-decomposed; then the exact
+    * bit_count verify and one distinct over pairs that share several
+    * bands. Returns (doc_a, doc_b, hamming). Candidates come from
+    * [[SimHash.NumBands]] 16-bit band buckets, which have PERFECT recall
+    * only for maxHamming ≤ NumBands−1 (pigeonhole) — larger radii are
+    * rejected rather than silently losing pairs. */
+  private def hammingPairs(a: DataFrame, b: Option[DataFrame], maxHamming: Int,
+                           maxBucket: Int, maxBandDocFreq: Int): DataFrame = {
+    require(maxHamming >= 0 && maxHamming <= SimHash.NumBands - 1,
+      s"band LSH guarantees recall only for maxHamming <= ${SimHash.NumBands - 1}, " +
+        s"got $maxHamming")
+    require(maxBandDocFreq >= 1, s"maxBandDocFreq must be >= 1, got $maxBandDocFreq")
+    val keys = Seq("band", "key")
+    val aBands = dropHotBuckets(a, keys, maxBandDocFreq)
+    (b match {
+      case None     => operators.SkewJoin.blockedSelfPairs(aBands, keys, "doc_id", maxBucket)
+      case Some(bs) => operators.SkewJoin.blockedBipartiteJoin(aBands, "doc_id_a", bs, keys, maxBucket)
+    }).select(col("doc_id_a").as("doc_a"), col("doc_id_b").as("doc_b"),
+              expr("bit_count(sig_a ^ sig_b)").as("hamming"))
+      .filter(col("hamming") <= maxHamming)
+      .distinct()
+  }
 
   /** Banded Hamming pairing over PRECOMPUTED 64-bit signatures — the
     * candidate machinery of [[nearDupPairsSimhash]] factored out so
     * any 64-bit fingerprint family can ride it (SimHash text
     * fingerprints, [[graft.multimodal.Multimodal.perceptualHash]]
     * media fingerprints): (doc_a, doc_b, hamming) for Hamming
-    * distance ≤ maxHamming, doc_a < doc_b, unordered. Candidates come
-    * from [[SimHash.NumBands]] 16-bit band buckets — perfect recall
-    * for maxHamming ≤ NumBands−1 by pigeonhole, larger radii rejected
-    * loudly rather than silently lossy. Band key and Hamming are pure
-    * built-ins (codegen-fused); rows stay two longs wide end-to-end;
-    * buckets above `maxBucket` are block-decomposed
-    * ([[operators.SkewJoin.blockedSelfPairs]]) and `maxBandDocFreq`
-    * is the opt-in lossy dense-band cap, both exactly as documented
-    * on the SimHash face. Ids must be unique and long-castable. */
+    * distance ≤ maxHamming, doc_a < doc_b, unordered — the self face
+    * of [[hammingPairs]]. Band key and Hamming are pure built-ins
+    * (codegen-fused); rows stay two longs wide end-to-end;
+    * `maxBandDocFreq` is the opt-in lossy dense-band cap documented on
+    * the SimHash face. Ids must be unique and long-castable. */
   def nearDupPairsHamming(sigs: DataFrame, id: Column, sig: Column,
                           maxHamming: Int = 3,
                           maxBucket: Int = 1024,
-                          maxBandDocFreq: Int = Int.MaxValue): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= SimHash.NumBands - 1,
-      s"band LSH guarantees recall only for maxHamming <= ${SimHash.NumBands - 1}, " +
-        s"got $maxHamming")
-    require(maxBandDocFreq >= 1, s"maxBandDocFreq must be >= 1, got $maxBandDocFreq")
-    val bandedAll = hammingBandRows(sigs, id, sig, "doc_id", "sig")
-    val banded = dropHotBuckets(bandedAll, Seq("band", "key"), maxBandDocFreq)
-    operators.SkewJoin.blockedSelfPairs(banded, Seq("band", "key"), "doc_id", maxBucket)
-      .select(col("doc_id_a").as("doc_a"), col("doc_id_b").as("doc_b"),
-              expr("bit_count(sig_a ^ sig_b)").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-  }
+                          maxBandDocFreq: Int = Int.MaxValue): DataFrame =
+    hammingPairs(hammingBandRows(sigs, id, sig, ""), None, maxHamming, maxBucket, maxBandDocFreq)
 
-  /** INCREMENTAL banded Hamming probe (round 13) — the bipartite face
-    * of [[nearDupPairsHamming]], completing the fingerprint family
-    * the way [[nearDupPairsNgramAgainst]] / [[nearDupPairsMinhashAgainst]]
-    * / [[semanticDupVerdictsIvfAgainst]] complete theirs: a NEW BATCH
-    * of precomputed 64-bit signatures (SimHash text fingerprints,
+  /** INCREMENTAL banded Hamming probe — the bipartite face of
+    * [[hammingPairs]], completing the fingerprint family the way
+    * [[nearDupPairsNgramAgainst]] / [[nearDupPairsMinhashAgainst]] /
+    * [[semanticDupVerdictsIvfAgainst]] complete theirs: a NEW BATCH of
+    * precomputed 64-bit signatures (SimHash text fingerprints,
     * [[graft.multimodal.Multimodal.perceptualHash]] media
     * fingerprints) is screened against a STANDING signature corpus
-    * without re-pairing the corpus against itself. Candidates come
-    * from the same [[SimHash.NumBands]] 16-bit band buckets (perfect
-    * recall for maxHamming ≤ NumBands−1 by pigeonhole), met through
-    * [[operators.SkewJoin.blockedBipartiteJoin]] (corpus = large
-    * side — the standing side is where a dense band accumulates; a
-    * hot band splits into id-hash blocks and batch rows replicate
-    * across them), verified by exact bit_count. `maxBandDocFreq`
-    * drops bands dense ON THE CORPUS SIDE before the join (opt-in,
-    * recall-lossy — the [[nearDupPairsMinhashAgainst]] stance).
+    * without re-pairing the corpus against itself, and without writing
+    * a table for either side. The corpus is the large side — the
+    * standing side is where a dense band accumulates; a hot band splits
+    * into id-hash blocks and batch rows replicate across them.
+    * `maxBandDocFreq` drops bands dense ON THE CORPUS SIDE before the
+    * join (opt-in, recall-lossy — the [[nearDupPairsMinhashAgainst]]
+    * stance).
     *
     * Id-overlap contract (same stance): sides are expected DISJOINT;
     * an id on both sides is the same document seen twice and its
@@ -4213,23 +3971,11 @@ object Graft {
                                  corpus: DataFrame, corpusId: Column, corpusSig: Column,
                                  maxHamming: Int = 3,
                                  maxBucket: Int = 1024,
-                                 maxBandDocFreq: Int = Int.MaxValue): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= SimHash.NumBands - 1,
-      s"band LSH guarantees recall only for maxHamming <= ${SimHash.NumBands - 1}, " +
-        s"got $maxHamming")
-    require(maxBandDocFreq >= 1, s"maxBandDocFreq must be >= 1, got $maxBandDocFreq")
-    val cBands = dropHotBuckets(
-      hammingBandRows(corpus, corpusId, corpusSig, "corpus_id", "sig_c"),
-      Seq("band", "key"), maxBandDocFreq)
-    val bBands = hammingBandRows(batch, batchId, batchSig, "batch_id", "sig_b")
-    operators.SkewJoin
-      .blockedBipartiteJoin(cBands, "corpus_id", bBands, Seq("band", "key"), maxBucket)
-      .filter(col("batch_id") =!= col("corpus_id"))
-      .select(col("batch_id"), col("corpus_id"),
-              expr("bit_count(sig_b ^ sig_c)").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-  }
+                                 maxBandDocFreq: Int = Int.MaxValue): DataFrame =
+    hammingPairs(hammingBandRows(corpus, corpusId, corpusSig, "_a"),
+        Some(hammingBandRows(batch, batchId, batchSig, "_b")), maxHamming, maxBucket, maxBandDocFreq)
+      .filter(col("doc_a") =!= col("doc_b"))
+      .select(col("doc_b").as("batch_id"), col("doc_a").as("corpus_id"), col("hamming"))
 
   /** Exact global top-k most-similar vector pairs of ANY (id, vec)
     * DataFrame by (HALF_UP-3 rounded dot DESC, id_a, id_b) — executed
@@ -4811,7 +4557,11 @@ object Graft {
   def ivfAssign(centroids: DataFrame, vecs: DataFrame, vec: Column,
                 cellCol: String = "cell"): DataFrame =
     vecs.crossJoin(broadcast(centroidArray(centroids)))
-      .withColumn(cellCol, functions.NearestCells.cells(vec, col("__cents"), 1).getItem(0))
+      // a generator, not a projection: the not-null filter the optimizer
+      // infers from a join on the cell stays above it, where a projected
+      // cell would be pushed into the cross join's condition and ranked
+      // twice per row; outer keeps a NULL vector's row with a NULL cell
+      .withColumn(cellCol, explode_outer(functions.NearestCells.cells(vec, col("__cents"), 1)))
       .drop("__cents")
 
   /** Batch IVF kNN JOIN — for EVERY probe row, its `topk` nearest

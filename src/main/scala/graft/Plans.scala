@@ -17,7 +17,10 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = Harness.session()
+    // four cores, as the test session: the shuffle partition count in
+    // every Exchange follows the core count, and the archive must not
+    // follow the machine that regenerates it
+    val spark = Harness.session(cpus = 4)
     val sb = new StringBuilder
     sb.append(s"# PLANS — physical plans of all ${SparkEntry.queries.size} queries at $sfDir\n\n")
     sb.append("Generated by `sbt \"runMain graft.Plans\"` (executedPlan, AQE initial). ")

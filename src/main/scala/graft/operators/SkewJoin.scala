@@ -117,9 +117,8 @@ object SkewJoin {
     * row counts — schema exactly `bucketCols :+ <one numeric count
     * column>` — replacing the hot-bucket count pass with a read of an
     * already-materialized stats table (the write-the-df-table-once
-    * warehouse shape: Graft's `ngramCandidatePairs` and
-    * `containmentPairsNgram` hand the shared gram-df table here,
-    * removing one full corpus-scale aggregate from the pair-graph
+    * warehouse shape: the full-index n-gram self faces of
+    * [[GramPairs]] hand the shared gram-df table here, removing one full corpus-scale aggregate from the pair-graph
     * build). Counts drive DECOMPOSITION ONLY, never the pair set —
     * both join sides derive `__nblk` from the same broadcast row, so
     * an inaccurate count degrades task balance, not correctness

@@ -26,18 +26,14 @@ object PipelineOps {
     * this is "write the pair graph to a table once, read it twice" —
     * identical shape.
     *
-    * The build runs the EXACT AllPairs/PPJoin prefix+positional path
-    * ([[graft.Graft.jaccardJoinPrefix]]) over the shared rarity table
-    * instead of the full inverted-index join — each doc indexes only its
-    * `na − ceil(0.8·na) + 1` rarest grams (~the rarest fifth), the
-    * positional filter bounds overlap per collision BEFORE the
-    * distinct, and survivors verify row-locally via array_intersect
-    * on the stored arrays instead of a corpus-scale groupBy count.
-    * Output-identical by the prefix-filter theorem (exact at any t —
-    * the 10 consumers' oracles stay the brute-force SQL, blind to
-    * the pruning strategy); the bipartite face measured a 10×
-    * collision / 31× verify cut at this threshold family in r13. The
-    * full-inverted-index path stays live as
+    * The build runs the exact prefix path of
+    * [[graft.operators.GramPairs]] ([[graft.Graft.jaccardJoinPrefix]])
+    * over the shared rarity table instead of the full inverted-index
+    * join: each doc indexes only ~the rarest fifth of its grams and
+    * survivors verify row-locally instead of through a corpus-scale
+    * groupBy count. The 10 consumers' oracles stay the brute-force SQL,
+    * blind to the pruning strategy. The full-inverted-index count path
+    * stays live as
     * [[graft.Graft.nearDupPairsNgram]] (q_dedup_ngram_capped's lossy
     * cap and [[graft.Graft.nearDupBands]]' sweep genuinely need the
     * per-pair common COUNT over the whole gram universe).
@@ -104,11 +100,10 @@ object PipelineOps {
   /** EXACT prefix-filtered Jaccard pairs (AllPairs/PPJoin prefix
     * filter) at t = 0.7 over the word-3-gram sets:
     * [[graft.Graft.jaccardJoinPrefix]] applied to documents, so the
-    * oracle verifies the public API. Candidates come from the PREFIX
-    * inverted index — each doc indexes only its `n − ceil(0.7·n) + 1`
-    * globally-rarest grams — and exactness is the prefix-filter
-    * theorem, not a cap: the oracle is the plain brute-force n-gram
-    * Jaccard SQL, blind to the pruning strategy. The third face of
+    * oracle verifies the public API. Exactness is the prefix theorem
+    * of [[graft.operators.GramPairs]], not a cap: the oracle is the
+    * plain brute-force n-gram Jaccard SQL, blind to the pruning
+    * strategy. The third face of
     * the near-dup family: q_dedup_ngram = full inverted index (exact,
     * blocked), q_dedup_ngram_capped = lossy stop-gram cap,
     * q_jaccard_prefix = exact AND stop-gram-immune (frequent grams
@@ -1353,12 +1348,9 @@ object PipelineOps {
     * [[graft.Graft.jaccardPrefixAgainst]] — the bipartite PREFIX
     * probe — so the oracle verifies the public API: both sides are
     * mod-2 slices of the SHARED rarity-sorted parquet (one
-    * rarity order by construction, disjoint ids by the split), each
-    * side indexes only its (1−t) rarest-gram prefix, and the PPJoin
-    * positional filter prunes per collision before the distinct —
-    * work linear in the new batch for a fixed index, with the same
-    * ~an-order-of-magnitude candidate cut the self-join form gets
-    * over the full inverted index. The unfiltered-index twin
+    * rarity order by construction, disjoint ids by the split), as the
+    * prefix path of [[graft.operators.GramPairs]] requires; work is
+    * linear in the new batch for a fixed index. The unfiltered-index twin
     * ([[graft.Graft.nearDupPairsNgramAgainst]]) stays the facade for
     * one-off probes with no standing sorted table; equivalence of
     * the two is pinned in PipelineSpec. */

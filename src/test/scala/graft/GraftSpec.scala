@@ -1618,31 +1618,85 @@ class GraftSpec extends SparkSpecBase {
     def rng(seed: Long): Long = {
       var x = seed; x ^= x << 13; x ^= x >>> 7; x ^= x << 17; x
     }
-    // small vocab forces shared grams; mixed doc lengths force the
-    // asymmetric (short-in-long) regime the operator exists for
-    val vocab = (1 to 8).map("v" + _)
-    val docs = (1L to 30L).map { i =>
+    // every n-gram pair face against a plain-Scala scan over word-3-gram
+    // sets: self and …Against (even ids = corpus, odd ids = batch), the
+    // count path and the prefix path, capped and uncapped, with the
+    // skew guard engaged (maxBucket = 2) and not. A small vocabulary
+    // forces shared grams; mixed lengths force the asymmetric regime;
+    // one-token edits of earlier docs give pairs near every threshold;
+    // docs of 0–2 tokens have no gram and must never pair.
+    val vocab = (1 to 6).map("v" + _)
+    val random = (1L to 30L).map { i =>
       val len = 3 + (math.abs(rng(i)) % 20).toInt
-      val toks = (0 until len).map(j =>
-        vocab((math.abs(rng(i * 131 + j)) % vocab.size).toInt))
-      (i, toks.mkString(" "))
+      i -> (0 until len).map(j => vocab((math.abs(rng(i * 131 + j)) % vocab.size).toInt))
     }
-    def gramSet(text: String): Set[String] =
-      text.split(" ").sliding(3).map(_.mkString(" ")).toSet
-    val p = 700
-    val brute = (for {
-      (a, ta) <- docs; (b, tb) <- docs if a < b
-      ga = gramSet(ta); gb = gramSet(tb)
-      common = (ga & gb).size
-      if common * 1000 >= p * math.min(ga.size, gb.size)
-    } yield (a, b, ga.size.toLong, gb.size.toLong, common.toLong,
-             common * 1000L / math.min(ga.size, gb.size))).toSet
-    val got = Graft.containmentPairsNgram(docs.toDF("doc_id", "text"),
-        $"doc_id", $"text", thresholdPermille = p, n = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-                           r.getLong(3), r.getLong(4), r.getLong(5))).toSet
-    assert(got == brute, s"got ${got.size} vs brute ${brute.size}")
-    assert(brute.nonEmpty, "degenerate fixture: no containment pairs")
+    val edited = random.take(12).map { case (i, t) =>
+      val at = (math.abs(rng(i * 7)) % t.size).toInt
+      (i + 30) -> t.updated(at, vocab((math.abs(rng(i * 11)) % vocab.size).toInt))
+    }
+    val docs = (random ++ edited).map { case (i, t) => (i, t.mkString(" ")) } ++
+      Seq((43L, ""), (44L, "v1"), (45L, "v1 v2"))
+    val df = docs.toDF("doc_id", "text")
+    def grams(text: String): Set[String] = {
+      val t = text.split(" ")
+      if (t.length < 3) Set.empty else t.sliding(3).map(_.mkString(" ")).toSet
+    }
+    val gs = docs.map { case (i, t) => i -> grams(t) }.toMap
+    // (a, b, na, nb, common) over sets with the grams in `hot` dropped
+    def brute(pairs: Seq[(Long, Long)], hot: Set[String]): Seq[(Long, Long, Long, Long, Long)] =
+      for ((a, b) <- pairs; ga = gs(a) -- hot; gb = gs(b) -- hot; c = (ga & gb).size if c > 0)
+        yield (a, b, ga.size.toLong, gb.size.toLong, c.toLong)
+    def stop(ids: Iterable[Long], cap: Int): Set[String] =
+      ids.toSeq.flatMap(gs).groupBy(identity).collect { case (g, o) if o.size > cap => g }.toSet
+    def jaccard(a: Long, b: Long, na: Long, nb: Long, c: Long) =
+      (a, b, BigDecimal(c.toDouble / (na + nb - c)).setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    def jaccards(r: Seq[(Long, Long, Long, Long, Long)], p: Int) =
+      r.filter { case (_, _, na, nb, c) => c * (1000 + p) >= p * (na + nb) }.map((jaccard _).tupled).sorted
+    def jRows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+    val ids = docs.map(_._1)
+    val selfPairs = for (a <- ids; b <- ids if a < b) yield (a, b)
+    val crossPairs = for (a <- ids if a % 2 == 0; b <- ids if b % 2 == 1) yield (a, b)
+    val cap = 2
+    val (hotSelf, hotCorpus) = (stop(ids, cap), stop(ids.filter(_ % 2 == 0), cap))
+    assert(hotSelf.nonEmpty && hotCorpus.nonEmpty, "degenerate fixture: the cap never fires")
+    val sorted = Graft.rarityGramArrays(df, $"doc_id", $"text", n = 3)
+    val (p, contain) = (500, 700)
+    for (maxBucket <- Seq(2, 1 << 20); capped <- Seq(false, true)) {
+      val (mgdf, hs, hc) =
+        if (capped) (cap, hotSelf, hotCorpus) else (Int.MaxValue, Set.empty[String], Set.empty[String])
+      val setting = s"maxBucket=$maxBucket capped=$capped"
+      val self = jaccards(brute(selfPairs, hs), p)
+      val cross = jaccards(brute(crossPairs, hc), p)
+      assert(self.nonEmpty && cross.nonEmpty, s"$setting: degenerate fixture")
+      assert(jRows(Graft.nearDupPairsNgram(df, $"doc_id", $"text", p, 3, maxBucket, mgdf)) == self,
+        s"nearDupPairsNgram $setting")
+      assert(jRows(Graft.nearDupPairsNgramAgainst(df.filter($"doc_id" % 2 === 0), $"doc_id", $"text",
+          df.filter($"doc_id" % 2 === 1), $"doc_id", $"text", p, 3, maxBucket, mgdf)) == cross,
+        s"nearDupPairsNgramAgainst $setting")
+      val contained = brute(selfPairs, hs)
+        .filter { case (_, _, na, nb, c) => c * 1000 >= contain * math.min(na, nb) }
+        .map { case (a, b, na, nb, c) => (a, b, na, nb, c, c * 1000 / math.min(na, nb)) }.sorted
+      assert(contained.nonEmpty, s"$setting: degenerate fixture")
+      assert(Graft.containmentPairsNgram(df, $"doc_id", $"text", contain, 3, maxBucket, mgdf)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+                               r.getLong(3), r.getLong(4), r.getLong(5))).toSeq.sorted == contained,
+        s"containmentPairsNgram $setting")
+      if (!capped) {
+        assert(jRows(Graft.jaccardJoinPrefix(df, $"doc_id", $"text", p, 3, maxBucket)) == self,
+          s"jaccardJoinPrefix $setting")
+        assert(jRows(Graft.jaccardPrefixAgainst(sorted.filter($"doc_id" % 2 === 0),
+            sorted.filter($"doc_id" % 2 === 1), p, maxBucket)) == cross,
+          s"jaccardPrefixAgainst $setting")
+        val bands = brute(selfPairs, hs)
+          .collect { case (_, _, na, nb, c) if c * (1000 + p) >= p * (na + nb) =>
+            val jp = c * 1000 / (na + nb - c); jp - jp % 100 }
+          .groupBy(identity).map { case (b, o) => (b, o.size.toLong) }.toSeq.sorted
+        assert(Graft.nearDupBands(df, $"doc_id", $"text", p, 100, 3, maxBucket)
+            .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted == bands,
+          s"nearDupBands $setting")
+      }
+    }
   }
 
   test("duplicatedSpanStats equals the brute-force span scan (property)") {
@@ -2695,6 +2749,15 @@ class GraftSpec extends SparkSpecBase {
 
   test("range-scan queries: warm job budgets at sf0.001") {
     for ((q, budget) <- Seq("q_window_ntile" -> 9, "q_late_data" -> 8, "q_pack_chunks" -> 11)) {
+      val jobs = warmJobs(q)
+      assert(jobs <= budget, s"$q ran $jobs jobs")
+    }
+  }
+
+  test("near-dup pair queries: warm job budgets at sf0.001") {
+    for ((q, budget) <- Seq("q_jaccard_prefix" -> 10, "q_dedup_contain" -> 9,
+                            "q_dedup_incremental" -> 11, "q_dedup_ngram_capped" -> 12,
+                            "q_dedup_sweep" -> 7, "q_dedup_minhash" -> 12, "q_dedup_simhash" -> 11)) {
       val jobs = warmJobs(q)
       assert(jobs <= budget, s"$q ran $jobs jobs")
     }

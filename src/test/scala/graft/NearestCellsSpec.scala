@@ -78,7 +78,7 @@ class NearestCellsSpec extends SparkSpecBase {
     // the final adaptive plan of that run; "*(n)" prefixes mark
     // operators inside a WholeStageCodegen stage
     val plan = assigned.queryExecution.executedPlan.toString
-    assert("""\*\(\d+\) Project \[[^\n]*graft_nearest_cells""".r.findFirstIn(plan).isDefined,
+    assert("""\*\(\d+\) Generate [^\n]*graft_nearest_cells""".r.findFirstIn(plan).isDefined,
            s"graft_nearest_cells not inside a codegen stage:\n$plan")
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, GenerateExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.window.WindowExec
 
@@ -374,6 +374,18 @@ class PlanGuardSpec extends SparkSpecBase {
         case e: CodegenFallback if !e.isInstanceOf[AggregateFunction] => e
       }))
       assert(fallback.isEmpty, s"$name evaluates ${fallback.map(_.prettyName).distinct} interpreted")
+    }
+  }
+
+  test("IVF plans rank each corpus row once: one Generate per assignment, no pushed-down copy") {
+    for (name <- Seq("q_ivf_build", "q_sim_ivf", "q_dedup_semantic_ivf", "q_dedup_semantic_inc")) {
+      // every operator evaluating the nearest-cell ranking of ivfAssign
+      // (n = 1), once per occurrence
+      val ranking = preparedPlan(name).flatMap(p =>
+        p.expressions.flatMap(_.collect { case e: functions.NearestCells if e.n == 1 => p }))
+      assert(ranking.nonEmpty && ranking.forall(_.isInstanceOf[GenerateExec]) &&
+             ranking.distinct.size == ranking.size,
+        s"$name ranks corpus rows in ${ranking.map(_.nodeName)}")
     }
   }
 

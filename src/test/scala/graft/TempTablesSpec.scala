@@ -182,10 +182,15 @@ class TempTablesSpec extends SparkSpecBase {
     val s: SparkSession = spark.newSession()
     val qs = Seq("q_dedup_ngram", "q_dedup_ngram_capped", "q_jaccard_prefix",
                  "q_dedup_contain", "q_gramdf_merge")
+    var ngram = Map.empty[String, Long]
     val builds = buildsDuring {
+      ngram = buildsDuring(SparkEntry.queries("q_dedup_ngram")(s, sf).count())
       // twice: a second pass over the same input must be all hits
       for (_ <- 1 to 2; q <- qs) SparkEntry.queries(q)(s, sf).count()
     }
+    assert(ngram == Map("doc_gram_arrays" -> 1L, "gram_doc_freq" -> 1L,
+      "rarity_gram_arrays" -> 1L, "ngram_pairs" -> 1L),
+      s"q_dedup_ngram alone must make exactly its 4 builds, got $ngram")
     assert(builds == Map("doc_gram_arrays" -> 1L, "gram_doc_freq" -> 1L,
       "rarity_gram_arrays" -> 1L, "capped_gram_sizes" -> 1L, "ngram_pairs" -> 1L),
       s"each shared intermediate must build exactly once, got $builds")
