@@ -68,8 +68,8 @@ object Graft {
                outCol: String = "asof_time",
                direction: String = "backward",
                tolerance: Option[Long] = None): DataFrame =
-    plans.AsOfJoin.asof(left, right, leftKey, leftTime, rightKey, rightTime,
-                        outCol, direction, tolerance)
+    plans.AsOfJoin.asofMulti(left, right, Seq(leftKey), leftTime, Seq(rightKey), rightTime,
+                             outCol, direction, tolerance)
 
   /** Composite-key as-of join: like [[asofJoin]] but keyed on one OR
     * MORE columns per side ((user, device), (symbol, venue) …) — key

@@ -14,6 +14,10 @@ import java.nio.file.{Files, Paths}
   * windows) are PlanGuardSpec's allowlists.
   */
 object Plans {
+  /** A TempTables directory as a scan prints it: its name is random, so
+    * the archive masks it to keep two regenerations of one commit equal. */
+  private val tempTablePath = """file:\S*?graft_tt_\d+""".r
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("PLANS.md")
@@ -27,7 +31,8 @@ object Plans {
     sb.append("`*(n)` prefixes = whole-stage-codegen stages.\n\n")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val plan =
-        try fn(spark, sfDir).queryExecution.executedPlan.toString
+        try tempTablePath.replaceAllIn(
+          fn(spark, sfDir).queryExecution.executedPlan.toString, "<graft_tt>")
         catch { case e: Exception => s"ERROR: ${e.getMessage}" }
       sb.append(s"\n## $name\n\n```\n").append(plan.trim).append("\n```\n")
     }

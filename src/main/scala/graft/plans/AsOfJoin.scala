@@ -1,14 +1,12 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, BoundReference, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, EmptyBlock, ExprCode, JavaCode}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
-import org.apache.spark.sql.catalyst.util.TypeUtils
-import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.LongType
@@ -20,23 +18,23 @@ import org.apache.spark.sql.types.LongType
   * Semantics, per left row with key tuple k and time t:
   *  - direction = backward (default): append the greatest right `time`
   *    of the same key with rTime <= t (NULL if none) — "join each fact
-  *    to the latest earlier state". Equal times count as earlier; ANY
-  *    same-time right row matches regardless of arrival order (a RANGE
-  *    frame over time, not a ROWS frame — callers who need a
-  *    same-time tiebreak should pre-filter the right side).
+  *    to the latest earlier state".
   *  - direction = forward: the smallest right `time` with rTime >= t.
+  *  - RANGE ties: equal times count as a match in both directions, and
+  *    ANY same-time right row matches regardless of arrival order (a
+  *    RANGE frame over time, not a ROWS frame — callers who need a
+  *    same-time tiebreak should pre-filter the right side).
   *  - tolerance (optional, LongType time only): a match further than
   *    `tolerance` from t yields NULL instead — pandas merge_asof
   *    semantics: the nearest match is bounded, not replaced by an
-  *    older one.
-  * Rows with a NULL time or ANY NULL key component never match.
-  *
-  * Keys are COMPOSITE (one or more columns — real event data keys on
-  * (user, device) or (symbol, venue)) and, like the time, may be ANY
-  * orderable atomic type (string keys, timestamps, decimals …) —
-  * comparisons run through Catalyst's interpreted orderings; only
-  * `tolerance` is restricted to LongType times, where subtraction is
-  * well-defined.
+  *    older one. The distance is exact over the whole long range.
+  *  - NULL keys: a row with a NULL time or ANY NULL key component
+  *    never matches, and a right row of that kind is skipped.
+  *  - copy rule: the merge compares each side's (keys…, time) as one
+  *    projected UnsafeRow; the projection reuses its buffer on every
+  *    row, so the right row the backward merge keeps is a `copy()`.
+  * Keys are COMPOSITE (one or more columns — (user, device), (symbol,
+  * venue)) and, like the time, may be ANY orderable atomic type.
   *
   * Why a custom operator instead of the window-function composition
   * (queries.Events.q_asof_join): the window form must interleave BOTH
@@ -78,26 +76,10 @@ case class AsOfJoinExec(
     rightKeys: Seq[Attribute], rightTime: Attribute,
     forward: Boolean, tolerance: Option[Long],
     asofOut: Attribute,
-    left: SparkPlan, right: SparkPlan) extends BinaryExecNode with CodegenSupport {
+    left: SparkPlan, right: SparkPlan) extends BinaryExecNode {
 
   override def output: Seq[Attribute] = left.output :+ asofOut
   override def producedAttributes: AttributeSet = AttributeSet(asofOut)
-
-  private def isPrimitivePath: Boolean =
-    leftKeys.forall(_.dataType == LongType) && leftTime.dataType == LongType
-
-  /** Whole-stage codegen for the dominant all-long-keys/long-time
-    * path (any key arity) — the SortMergeJoin pattern: both sorted
-    * children enter as row iterators (codegen boundaries), the
-    * O(1)-state merge itself is generated Java fused with the PARENT
-    * stages, so rows flow to the consumer without per-operator
-    * materialization. The generic orderable-type path stays on the
-    * interpreted doExecute. */
-  override def supportCodegen: Boolean = isPrimitivePath
-
-  /** As in SortMergeJoinExec: the sink must copy appended rows (the
-    * default for 2-child nodes is unsupported). */
-  override def needCopyResult: Boolean = true
 
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
@@ -119,277 +101,62 @@ case class AsOfJoinExec(
   override def outputOrdering: Seq[SortOrder] =
     leftKeys.map(SortOrder(_, Ascending)) :+ SortOrder(leftTime, Ascending)
 
-  override def inputRDDs(): Seq[RDD[InternalRow]] =
-    left.execute() :: right.execute() :: Nil
-
-  protected override def doProduce(ctx: CodegenContext): String = {
-    // plan-time constants baked into the generated source
-    val nk = leftKeys.length
-    val lki = leftKeys.map(a => left.output.indexWhere(_.exprId == a.exprId))
-    val lti = left.output.indexWhere(_.exprId == leftTime.exprId)
-    val rki = rightKeys.map(a => right.output.indexWhere(_.exprId == a.exprId))
-    val rti = right.output.indexWhere(_.exprId == rightTime.exprId)
-    val tolV = tolerance.getOrElse(Long.MaxValue)
-    val numOutputRows = metricTerm(ctx, "numOutputRows")
-    val numMatched = metricTerm(ctx, "numMatched")
-
-    val leftInput = ctx.addMutableState("scala.collection.Iterator", "asofLeftInput",
-      v => s"$v = inputs[0];", forceInline = true)
-    val rightInput = ctx.addMutableState("scala.collection.Iterator", "asofRightInput",
-      v => s"$v = inputs[1];", forceInline = true)
-    val rKey = (0 until nk).map(i => ctx.addMutableState(CodeGenerator.JAVA_LONG, s"asofRKey$i"))
-    val rTime = ctx.addMutableState(CodeGenerator.JAVA_LONG, "asofRTime")
-    val haveR = ctx.addMutableState(CodeGenerator.JAVA_BOOLEAN, "asofHaveR")
-    val lastKey = (0 until nk).map(i => ctx.addMutableState(CodeGenerator.JAVA_LONG, s"asofLastKey$i"))
-    val lastTime = ctx.addMutableState(CodeGenerator.JAVA_LONG, "asofLastTime")
-    val haveLast = ctx.addMutableState(CodeGenerator.JAVA_BOOLEAN, "asofHaveLast")
-    val initialized = ctx.addMutableState(CodeGenerator.JAVA_BOOLEAN, "asofInit")
-    val leftRow = ctx.addMutableState("InternalRow", "asofLeftRow", forceInline = true)
-
-    val rKeyNullChecks = rki.map(i => s"!r.isNullAt($i)").mkString(" && ")
-    val rKeyReads = rKey.zip(rki).map { case (v, i) => s"$v = r.getLong($i);" }.mkString(" ")
-    val pullRight = ctx.addNewFunction("asofPullRight",
-      s"""
-         |private void asofPullRight() {
-         |  $haveR = false;
-         |  while (!$haveR && $rightInput.hasNext()) {
-         |    InternalRow r = (InternalRow) $rightInput.next();
-         |    if ($rKeyNullChecks && !r.isNullAt($rti)) {
-         |      $rKeyReads $rTime = r.getLong($rti); $haveR = true;
-         |    }
-         |  }
-         |}
-       """.stripMargin)
-
-    // left output columns read from the current left row
-    ctx.INPUT_ROW = leftRow
-    ctx.currentVars = null
-    val leftVars = left.output.zipWithIndex.map { case (a, i) =>
-      BoundReference(i, a.dataType, a.nullable).genCode(ctx)
-    }
-    val leftVarDecls = leftVars.map(_.code.toString).mkString("\n")
-    val leftVarsClean = leftVars.map(_.copy(code = EmptyBlock))
-
-    val matchIsNull = ctx.freshName("asofMatchIsNull")
-    val matchVal = ctx.freshName("asofMatchVal")
-    val matchVar = ExprCode(EmptyBlock,
-      JavaCode.isNullVariable(matchIsNull),
-      JavaCode.variable(matchVal, LongType))
-
-    val ks = (0 until nk).map(i => ctx.freshName(s"asofK$i"))
-    val t = ctx.freshName("asofT")
-    // lexicographic (keys…) compare of the tracked right/last key
-    // tuple against the current left tuple, unrolled per component
-    def cmpInto(cVar: String, keyVars: Seq[String]): String = {
-      val chain = keyVars.zip(ks).map { case (x, kv) =>
-        s"if ($x != $kv) { $cVar = ($x < $kv) ? -1 : 1; }"
-      }.mkString(" else ")
-      s"int $cVar = 0; $chain"
-    }
-    def eqExpr(keyVars: Seq[String]): String =
-      keyVars.zip(ks).map { case (x, kv) => s"$x == $kv" }.mkString(" && ")
-
-    val c = ctx.freshName("asofCmp")
-    val mergeStep =
-      if (forward) {
-        s"""
-           |while ($haveR) {
-           |  ${cmpInto(c, rKey)}
-           |  if (!($c < 0 || ($c == 0 && $rTime < $t))) break;
-           |  $pullRight();
-           |}
-           |if ($haveR && ${eqExpr(rKey)} && $rTime - $t <= ${tolV}L) {
-           |  $numMatched.add(1); $matchIsNull = false; $matchVal = $rTime;
-           |}
-         """.stripMargin
-      } else {
-        val saveLast = lastKey.zip(rKey).map { case (l, r) => s"$l = $r;" }.mkString(" ")
-        s"""
-           |while ($haveR) {
-           |  ${cmpInto(c, rKey)}
-           |  if (!($c < 0 || ($c == 0 && $rTime <= $t))) break;
-           |  $saveLast $lastTime = $rTime; $haveLast = true;
-           |  $pullRight();
-           |}
-           |if ($haveLast && ${eqExpr(lastKey)} && $t - $lastTime <= ${tolV}L) {
-           |  $numMatched.add(1); $matchIsNull = false; $matchVal = $lastTime;
-           |}
-         """.stripMargin
-      }
-
-    val leftNullChecks =
-      (lki.map(i => s"!$leftRow.isNullAt($i)") :+ s"!$leftRow.isNullAt($lti)")
-        .mkString(" && ")
-    val leftKeyReads = ks.zip(lki).map { case (kv, i) =>
-      s"long $kv = $leftRow.getLong($i);" }.mkString("\n")
-
-    s"""
-       |if (!$initialized) { $initialized = true; $pullRight(); }
-       |while ($leftInput.hasNext()) {
-       |  $leftRow = (InternalRow) $leftInput.next();
-       |  boolean $matchIsNull = true;
-       |  long $matchVal = -1L;
-       |  if ($leftNullChecks) {
-       |    $leftKeyReads
-       |    long $t = $leftRow.getLong($lti);
-       |    $mergeStep
-       |  }
-       |  $numOutputRows.add(1);
-       |  $leftVarDecls
-       |  ${consume(ctx, leftVarsClean :+ matchVar)}
-       |  if (shouldStop()) return;
-       |}
-     """.stripMargin
-  }
-
+  /** The one merge, for every key arity and orderable type: projected
+    * (keys…, time) rows compared in the children's sort order, as
+    * SortMergeJoinExec's scanner compares its key rows. */
   protected override def doExecute(): RDD[InternalRow] = {
-    val lki = leftKeys.map(a => left.output.indexWhere(_.exprId == a.exprId)).toArray
-    val lti = left.output.indexWhere(_.exprId == leftTime.exprId)
-    val rki = rightKeys.map(a => right.output.indexWhere(_.exprId == a.exprId)).toArray
-    val rti = right.output.indexWhere(_.exprId == rightTime.exprId)
-    val keyTypes = leftKeys.map(_.dataType).toArray
+    val nk = leftKeys.length
     val timeType = leftTime.dataType
     val fwd = forward
     val tol = tolerance
     val numOutputRows = longMetric("numOutputRows")
     val numMatched = longMetric("numMatched")
-    // Specialized primitive merge for the dominant case (one long id +
-    // epoch-µs times): no per-row boxing, no interpreted-ordering
-    // dispatch — the constant that matters over 10^12 rows. The
-    // generic path below handles every other key arity and orderable
-    // type.
-    if (keyTypes.length == 1 && keyTypes(0) == LongType && timeType == LongType) {
-      val lk0 = lki(0); val rk0 = rki(0)
-      left.execute().zipPartitions(right.execute(), preservesPartitioning = true) {
-        (lIter, rIter) =>
-          val proj = UnsafeProjection.create(output, output)
-          val joined = new JoinedRow
-          val matchRow = new GenericInternalRow(1)
-          val tolV = tol.getOrElse(Long.MaxValue)
-          var haveLast = false; var lastKey = 0L; var lastTime = 0L
-          var haveR = false; var rKey = 0L; var rTime = 0L
-          def pullRight(): Unit = {
-            haveR = false
-            while (!haveR && rIter.hasNext) {
-              val r = rIter.next()
-              if (!r.isNullAt(rk0) && !r.isNullAt(rti)) {
-                rKey = r.getLong(rk0); rTime = r.getLong(rti); haveR = true
-              }
-            }
+    left.execute().zipPartitions(right.execute(), preservesPartitioning = true) {
+      (lIter, rIter) =>
+        val lProj = UnsafeProjection.create(leftKeys :+ leftTime, left.output)
+        val rProj = UnsafeProjection.create(rightKeys :+ rightTime, right.output)
+        // (keys…, time) order of the sorted children, and (keys…) alone
+        val ord = RowOrdering.createNaturalAscendingOrdering(leftKeys.map(_.dataType) :+ timeType)
+        val keyOrd = RowOrdering.createNaturalAscendingOrdering(leftKeys.map(_.dataType))
+        val proj = UnsafeProjection.create(output, output)
+        val joined = new JoinedRow
+        val matchRow = new GenericInternalRow(1)
+        // lookahead: the next right row with no NULL key or time, null
+        // once the side is exhausted
+        var r: UnsafeRow = null
+        // backward only: the last right row the merge moved past
+        var last: UnsafeRow = null
+        def pullRight(): Unit = {
+          r = null
+          while (r == null && rIter.hasNext) {
+            val p = rProj(rIter.next())
+            if (!p.anyNull) r = p
           }
-          pullRight()
-          lIter.map { l =>
-            if (l.isNullAt(lk0) || l.isNullAt(lti)) {
-              matchRow.setNullAt(0)
+        }
+        // The true distance is non-negative in either direction, so the
+        // wrapped long difference read unsigned is exact.
+        def withinTol(hit: UnsafeRow, l: UnsafeRow): Boolean = tol.forall { t =>
+          val diff = if (fwd) hit.getLong(nk) - l.getLong(nk) else l.getLong(nk) - hit.getLong(nk)
+          java.lang.Long.compareUnsigned(diff, t) <= 0
+        }
+        pullRight()
+        lIter.map { lRow =>
+          val l = lProj(lRow)
+          val hit =
+            if (l.anyNull) null
+            else if (fwd) {
+              while (r != null && ord.compare(r, l) < 0) pullRight()
+              r
             } else {
-              val k = l.getLong(lk0); val t = l.getLong(lti)
-              if (fwd) {
-                while (haveR && (rKey < k || (rKey == k && rTime < t))) pullRight()
-                if (haveR && rKey == k && rTime - t <= tolV) {
-                  numMatched += 1; matchRow.update(0, rTime)
-                } else matchRow.setNullAt(0)
-              } else {
-                while (haveR && (rKey < k || (rKey == k && rTime <= t))) {
-                  lastKey = rKey; lastTime = rTime; haveLast = true
-                  pullRight()
-                }
-                if (haveLast && lastKey == k && t - lastTime <= tolV) {
-                  numMatched += 1; matchRow.update(0, lastTime)
-                } else matchRow.setNullAt(0)
-              }
+              while (r != null && ord.compare(r, l) <= 0) { last = r.copy(); pullRight() }
+              last
             }
-            numOutputRows += 1
-            proj(joined(l, matchRow))
-          }
-      }
-    } else {
-      val nk = keyTypes.length
-      left.execute().zipPartitions(right.execute(), preservesPartitioning = true) {
-        (lIter, rIter) =>
-          val keyOrds = keyTypes.map(TypeUtils.getInterpretedOrdering)
-          val timeOrd = TypeUtils.getInterpretedOrdering(timeType)
-          val proj = UnsafeProjection.create(output, output)
-          val joined = new JoinedRow
-          val matchRow = new GenericInternalRow(1)
-          def anyKeyNull(r: InternalRow, idx: Array[Int]): Boolean = {
-            var i = 0; var n = false
-            while (i < nk && !n) { n = r.isNullAt(idx(i)); i += 1 }
-            n
-          }
-          // Lexicographic key-tuple compare through the per-column
-          // interpreted orderings.
-          def cmpKeys(a: Array[Any], b: Array[Any]): Int = {
-            var i = 0; var c = 0
-            while (i < nk && c == 0) { c = keyOrds(i).compare(a(i), b(i)); i += 1 }
-            c
-          }
-          // O(1) merge state: the last consumed right (keys, time).
-          // Values retained across pullRight() calls MUST be copied:
-          // for buffer-backed types (strings, structs, arrays) get()
-          // returns a VIEW into the child row's buffer, and the sorted
-          // right child's spill reader reuses that buffer on loadNext —
-          // a retained view would be silently overwritten once the
-          // sort spills. InternalRow.copyValue clones buffer-backed
-          // values and passes primitives through.
-          var haveLast = false
-          var lastKey: Array[Any] = null; var lastTime: Any = null
-          // right-side lookahead
-          var haveR = false
-          var rKey: Array[Any] = null; var rTime: Any = null
-          def pullRight(): Unit = {
-            haveR = false
-            while (!haveR && rIter.hasNext) {
-              val r = rIter.next()
-              if (!anyKeyNull(r, rki) && !r.isNullAt(rti)) {
-                val ks = new Array[Any](nk)
-                var i = 0
-                while (i < nk) {
-                  ks(i) = InternalRow.copyValue(r.get(rki(i), keyTypes(i))); i += 1
-                }
-                rKey = ks
-                rTime = InternalRow.copyValue(r.get(rti, timeType))
-                haveR = true
-              }
-            }
-          }
-          def withinTol(a: Any, b: Any): Boolean = tol match {
-            case None => true
-            case Some(t) => math.abs(a.asInstanceOf[Long] - b.asInstanceOf[Long]) <= t
-          }
-          pullRight()
-          lIter.map { l =>
-            if (anyKeyNull(l, lki) || l.isNullAt(lti)) {
-              matchRow.setNullAt(0)
-            } else {
-              // left values are only compared within this row's turn,
-              // never retained — no copy needed
-              val k = new Array[Any](nk)
-              var i = 0
-              while (i < nk) { k(i) = l.get(lki(i), keyTypes(i)); i += 1 }
-              val t = l.get(lti, timeType)
-              if (fwd) {
-                // drop rights strictly before t (same key) or before k
-                while (haveR && (cmpKeys(rKey, k) < 0 ||
-                       (cmpKeys(rKey, k) == 0 && timeOrd.compare(rTime, t) < 0)))
-                  pullRight()
-                if (haveR && cmpKeys(rKey, k) == 0 && withinTol(rTime, t)) {
-                  numMatched += 1; matchRow.update(0, rTime)
-                } else matchRow.setNullAt(0)
-              } else {
-                while (haveR && (cmpKeys(rKey, k) < 0 ||
-                       (cmpKeys(rKey, k) == 0 && timeOrd.compare(rTime, t) <= 0))) {
-                  lastKey = rKey; lastTime = rTime; haveLast = true
-                  pullRight()
-                }
-                if (haveLast && cmpKeys(lastKey, k) == 0 && withinTol(t, lastTime)) {
-                  numMatched += 1; matchRow.update(0, lastTime)
-                } else matchRow.setNullAt(0)
-              }
-            }
-            numOutputRows += 1
-            proj(joined(l, matchRow))
-          }
-      }
+          if (hit != null && keyOrd.compare(hit, l) == 0 && withinTol(hit, l)) {
+            numMatched += 1; matchRow.update(0, hit.get(nk, timeType))
+          } else matchRow.setNullAt(0)
+          numOutputRows += 1
+          proj(joined(lRow, matchRow))
+        }
     }
   }
 
@@ -399,23 +166,13 @@ case class AsOfJoinExec(
 }
 
 object AsOfJoin {
-  /** Left as-of join: `left`'s rows plus column `outCol` = the nearest
-    * same-keyed right `rightTimeCol` at-or-before (backward, default)
-    * or at-or-after (forward) `leftTimeCol`, NULL if none (or if the
-    * nearest match exceeds `tolerance`, LongType times only). Key and
-    * time columns may be any orderable atomic type. */
-  def asof(leftDf: DataFrame, rightDf: DataFrame,
-           leftKeyCol: String, leftTimeCol: String,
-           rightKeyCol: String, rightTimeCol: String,
-           outCol: String = "asof_time",
-           direction: String = "backward",
-           tolerance: Option[Long] = None): DataFrame =
-    asofMulti(leftDf, rightDf, Seq(leftKeyCol), leftTimeCol,
-              Seq(rightKeyCol), rightTimeCol, outCol, direction, tolerance)
-
-  /** Composite-key as-of join: like [[asof]] but keyed on one OR MORE
-    * columns per side ((user, device), (symbol, venue) …) — key
-    * columns pair up positionally and may mix types. */
+  /** Left as-of join keyed on one OR MORE columns per side ((user,
+    * device), (symbol, venue) …): `left`'s rows plus column `outCol`
+    * = the nearest same-keyed right `rightTimeCol` at-or-before
+    * (backward, default) or at-or-after (forward) `leftTimeCol`, NULL
+    * if none (or if the nearest match exceeds `tolerance`, LongType
+    * times only). Key columns pair up positionally and may mix types;
+    * key and time columns may be any orderable atomic type. */
   def asofMulti(leftDf: DataFrame, rightDf: DataFrame,
                 leftKeyCols: Seq[String], leftTimeCol: String,
                 rightKeyCols: Seq[String], rightTimeCol: String,

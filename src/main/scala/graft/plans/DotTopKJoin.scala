@@ -16,7 +16,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   *
   * Semantics: for left rows (id_a, vec_a) and right rows (id_b, vec_b),
   * consider every pair with id_b > id_a; score = dot(vec_a, vec_b)
-  * rounded HALF_UP to 3 decimals. Two emission modes:
+  * over the shorter vector's length (graft_dot's score), rounded
+  * HALF_UP to 3 decimals. Two emission modes:
   *
   *  - TOP-K (`minScorePermille < 0`): emit a SUPERSET of the global
   *    top-k pairs under (score DESC, id_a ASC, id_b ASC) — each
@@ -124,72 +125,56 @@ case class DotTopKJoinExec(
         // consumer above may buffer rows
         proj(row).copy()
       }
+      // The pair scan of both modes for one left row: the dot summed
+      // in index order as graft_dot, the cheap reject against the
+      // mode's `floor`, and the exact rounding; each mode supplies only
+      // its accept step.
+      def scanPeers(l: InternalRow, floor: => Double)(accept: (Double, Long, Long) => Unit): Unit =
+        if (!l.isNullAt(lid) && !l.isNullAt(lvec)) {
+          val ida = l.getLong(lid)
+          val va = l.getArray(lvec).toDoubleArray()
+          var p = 0
+          while (p < m) {
+            val idb = ids(p)
+            if (idb > ida) {
+              numPairsScored += 1
+              val vb = vecs(p)
+              val n = math.min(va.length, vb.length)
+              var acc = 0.0; var i = 0
+              while (i < n) { acc += va(i) * vb(i); i += 1 }
+              if (acc >= floor - 5.1e-4)
+                accept(BigDecimal(acc).setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble, ida, idb)
+            }
+            p += 1
+          }
+        }
       if (tauPermille >= 0) {
         // THRESHOLD mode: stream matches per left row — exact pair
         // set, no heap, memory bounded by one row's matches
         val tau = tauPermille / 1000.0
-        val reject = tau - 5.1e-4
         iter.flatMap { l =>
-          if (l.isNullAt(lid) || l.isNullAt(lvec)) Iterator.empty
-          else {
-            val ida = l.getLong(lid)
-            val va = l.getArray(lvec).toDoubleArray()
-            val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-            var p = 0
-            while (p < m) {
-              val idb = ids(p)
-              if (idb > ida) {
-                numPairsScored += 1
-                val vb = vecs(p)
-                var acc = 0.0; var i = 0
-                while (i < va.length) { acc += va(i) * vb(i); i += 1 }
-                if (acc >= reject) {
-                  val rounded =
-                    BigDecimal(acc).setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble
-                  // integer-permille compare: `rounded >= tau` on
-                  // doubles would hinge on 0.9's binary representation
-                  if (math.round(rounded * 1000) >= tauPermille)
-                    out += emit(rounded, ida, idb)
-                }
-              }
-              p += 1
-            }
-            out.iterator
+          val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+          // integer-permille compare: `rounded >= tau` on doubles would
+          // hinge on 0.9's binary representation
+          scanPeers(l, tau) { (rounded, ida, idb) =>
+            if (math.round(rounded * 1000) >= tauPermille) out += emit(rounded, ida, idb)
           }
+          out.iterator
         }
       } else {
         // TOP-K mode: partition-local top-k heap ordered by the OUTPUT
         // contract key (rounded score DESC, id_a ASC, id_b ASC);
-        // head = worst kept.
+        // head = worst kept, the floor once the heap is full.
         val ord = Ordering.by[(Double, Long, Long), (Double, Long, Long)] {
           case (cos, ida, idb) => (-cos, ida, idb)
         }
         val best = scala.collection.mutable.PriorityQueue.empty[(Double, Long, Long)](ord)
         iter.foreach { l =>
-          if (!l.isNullAt(lid) && !l.isNullAt(lvec)) {
-            val ida = l.getLong(lid)
-            val va = l.getArray(lvec).toDoubleArray()
-            var p = 0
-            while (p < m) {
-              val idb = ids(p)
-              if (idb > ida) {
-                numPairsScored += 1
-                val vb = vecs(p)
-                var acc = 0.0; var i = 0
-                while (i < va.length) { acc += va(i) * vb(i); i += 1 }
-                // cheap-reject before the exact HALF_UP rounding: rounding
-                // moves a value by at most 0.0005, so a raw dot more than
-                // 0.00051 below the heap floor can never enter.
-                if (best.size < kk || acc >= best.head._1 - 5.1e-4) {
-                  val rounded =
-                    BigDecimal(acc).setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble
-                  val cand = (rounded, ida, idb)
-                  if (best.size < kk) best.enqueue(cand)
-                  else if (ord.lt(cand, best.head)) { best.dequeue(); best.enqueue(cand) }
-                }
-              }
-              p += 1
-            }
+          scanPeers(l, if (best.size < kk) Double.NegativeInfinity else best.head._1) {
+            (rounded, ida, idb) =>
+              val cand = (rounded, ida, idb)
+              if (best.size < kk) best.enqueue(cand)
+              else if (ord.lt(cand, best.head)) { best.dequeue(); best.enqueue(cand) }
           }
         }
         best.dequeueAll.iterator.map { t: (Double, Long, Long) =>

@@ -101,8 +101,8 @@ object Events {
       .select("user_id", "event_id", "us")
     val clicks = ev.filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("us").as("c_us"))
-    graft.plans.AsOfJoin.asof(errors, clicks, "user_id", "us", "c_user", "c_us",
-                              outCol = "last_click_us")
+    graft.Graft.asofJoin(errors, clicks, "user_id", "us", "c_user", "c_us",
+                         outCol = "last_click_us")
       .select(col("user_id"), col("event_id"),
               coalesce(col("us") - col("last_click_us"), lit(-1L)).as("gap_us"))
       .orderBy("user_id", "event_id")

@@ -338,6 +338,25 @@ class GraftSpec extends SparkSpecBase {
     assert(nExecs >= 3, s"expected >= 3 chunked execs under a 30 kB budget, got $nExecs")
   }
 
+  test("DotTopKJoin faces score ragged vectors over the shorter length, as graft_dot") {
+    // each higher id is shorter than some lower id it pairs with, so a
+    // scan over the probe's length would read past the peer's end
+    val vecs = Seq((1L, Seq(0.6, 0.8, 0.5, 0.1)), (2L, Seq(0.5, 0.7, 0.4)),
+                   (3L, Seq(0.9, 0.1)), (4L, Seq(0.3)), (5L, Seq(0.2, 0.9, 0.3)))
+      .toDF("id", "v")
+    val brute = vecs.as("a").join(vecs.as("b"), $"b.id" > $"a.id")
+      .select($"a.id".as("vec_a"), $"b.id".as("vec_b"),
+              round(Graft.dot($"a.v", $"b.v"), 3).as("cosine"))
+    val byScore = Seq($"cosine".desc, $"vec_a", $"vec_b")
+    assert(rows(Graft.topkCosinePairs(vecs, $"id", $"v", k = 4)) ==
+           rows(brute.orderBy(byScore: _*).limit(4)))
+    assert(rows(Graft.cosineThresholdPairs(vecs, $"id", $"v", 300).orderBy(byScore: _*)) ==
+           rows(brute.filter($"cosine" >= 0.3).orderBy(byScore: _*)))
+    val nDups = Graft.semanticDupVerdicts(vecs.withColumn("q", lit(1L)), $"id", $"v", $"q", 300)
+      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    assert(nDups == Map(1L -> 3L, 2L -> 3L, 3L -> 2L, 5L -> 2L))
+  }
+
   test("nearDupClusters/dropNearDups: composed dedup pipeline is total and consistent") {
     val docs = Tables.documents(spark, sf)
     val n = docs.count()

@@ -1,10 +1,11 @@
 package graft
 
-import graft.plans.{AsOfJoin, AsOfJoinExec}
+import graft.plans.AsOfJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import scala.reflect.runtime.universe.TypeTag
 
 /** Test-only leaf exec simulating a spill reader: every emitted row's
   * string column is a UTF8String VIEW over one shared byte buffer,
@@ -48,7 +49,7 @@ class PlansSpec extends SparkSpecBase {
   test("asof: latest at-or-before match, equal-ts counts, no-match null") {
     val l = leftDf((1L, 100L), (1L, 200L), (2L, 50L), (3L, 10L))
     val r = rightDf((1L, 90L), (1L, 150L), (1L, 201L), (2L, 50L), (9L, 1L))
-    val got = AsOfJoin.asof(l, r, "k", "t", "rk", "rt").collect()
+    val got = Graft.asofJoin(l, r, "k", "t", "rk", "rt").collect()
       .map(x => (x.getLong(0), x.getLong(1)) -> (if (x.isNullAt(2)) -1L else x.getLong(2)))
       .toMap
     assert(got((1L, 100L)) == 90L)   // 150/201 are later
@@ -61,7 +62,7 @@ class PlansSpec extends SparkSpecBase {
     // key 5's clicks must never leak into key 6 (same hash partition or not)
     val l = leftDf((5L, 10L), (6L, 10L))
     val r = rightDf((5L, 5L))
-    val got = AsOfJoin.asof(l, r, "k", "t", "rk", "rt").collect()
+    val got = Graft.asofJoin(l, r, "k", "t", "rk", "rt").collect()
       .map(x => x.getLong(0) -> (if (x.isNullAt(2)) -1L else x.getLong(2))).toMap
     assert(got(5L) == 5L && got(6L) == -1L)
   }
@@ -76,7 +77,7 @@ class PlansSpec extends SparkSpecBase {
   test("asof plan shape: AsOfJoinExec planned with one exchange per side") {
     val l = leftDf((1L to 100L).map(i => (i % 7, i)): _*)
     val r = rightDf((1L to 100L).map(i => (i % 7, i - 3)): _*)
-    val df = AsOfJoin.asof(l, r, "k", "t", "rk", "rt")
+    val df = Graft.asofJoin(l, r, "k", "t", "rk", "rt")
     df.collect() // materialize so AQE finalizes the plan
     val nodes = collectPlan(df.queryExecution.executedPlan)
     assert(nodes.exists(_.isInstanceOf[AsOfJoinExec]), "AsOfJoinExec not planned")
@@ -89,7 +90,7 @@ class PlansSpec extends SparkSpecBase {
       .toDF("k", "t")
     val r = Seq(("alpha", 90L), ("alpha", 150L), ("beta", 50L), ("delta", 1L))
       .toDF("rk", "rt")
-    val got = AsOfJoin.asof(l, r, "k", "t", "rk", "rt").collect()
+    val got = Graft.asofJoin(l, r, "k", "t", "rk", "rt").collect()
       .map(x => (x.getString(0), x.getLong(1)) -> (if (x.isNullAt(2)) -1L else x.getLong(2)))
       .toMap
     assert(got(("alpha", 100L)) == 90L)
@@ -101,7 +102,7 @@ class PlansSpec extends SparkSpecBase {
   test("asof: tolerance nulls too-distant matches instead of backing off") {
     val l = leftDf((1L, 100L), (1L, 200L), (1L, 300L))
     val r = rightDf((1L, 95L), (1L, 150L))
-    val got = AsOfJoin.asof(l, r, "k", "t", "rk", "rt", tolerance = Some(10L))
+    val got = Graft.asofJoin(l, r, "k", "t", "rk", "rt", tolerance = Some(10L))
       .collect()
       .map(x => x.getLong(1) -> (if (x.isNullAt(2)) -1L else x.getLong(2))).toMap
     assert(got(100L) == 95L)  // within 10
@@ -109,10 +110,23 @@ class PlansSpec extends SparkSpecBase {
     assert(got(300L) == -1L)
   }
 
+  test("asof: tolerance distance is exact at the ends of the long range") {
+    def asof(l: (Long, Long), r: (Long, Long), direction: String) = {
+      val x = Graft.asofJoin(leftDf(l), rightDf(r), "k", "t", "rk", "rt",
+        direction = direction, tolerance = Some(10L)).collect().head
+      if (x.isNullAt(2)) None else Some(x.getLong(2))
+    }
+    // the signed differences 0 - MinValue and MaxValue - (-1) wrap negative
+    assert(asof((1L, 0L), (1L, Long.MinValue), "backward").isEmpty)
+    assert(asof((1L, -1L), (1L, Long.MaxValue), "forward").isEmpty)
+    assert(asof((1L, Long.MinValue + 10), (1L, Long.MinValue), "backward").contains(Long.MinValue))
+    assert(asof((1L, Long.MaxValue - 10), (1L, Long.MaxValue), "forward").contains(Long.MaxValue))
+  }
+
   test("asof: forward direction takes the earliest at-or-after match") {
     val l = leftDf((1L, 100L), (1L, 150L), (2L, 10L))
     val r = rightDf((1L, 100L), (1L, 120L), (1L, 140L))
-    val got = AsOfJoin.asof(l, r, "k", "t", "rk", "rt", direction = "forward")
+    val got = Graft.asofJoin(l, r, "k", "t", "rk", "rt", direction = "forward")
       .collect()
       .map(x => (x.getLong(0), x.getLong(1)) -> (if (x.isNullAt(2)) -1L else x.getLong(2)))
       .toMap
@@ -126,7 +140,7 @@ class PlansSpec extends SparkSpecBase {
     // arrival-order sense; the operator still matches at equal time
     val l = leftDf((1L, 100L))
     val r = rightDf((1L, 100L), (1L, 100L))
-    val got = AsOfJoin.asof(l, r, "k", "t", "rk", "rt").collect()
+    val got = Graft.asofJoin(l, r, "k", "t", "rk", "rt").collect()
     assert(got.head.getLong(2) == 100L)
   }
 
@@ -149,45 +163,13 @@ class PlansSpec extends SparkSpecBase {
       val ls = rnd.shuffle((0L until 40L).map(i => (i % 5, rnd.nextInt(30).toLong))
         .distinct.toSeq)
       val rs = Seq.fill(30)((rnd.nextInt(6).toLong, rnd.nextInt(30).toLong))
-      val got = AsOfJoin.asof(leftDf(ls: _*), rightDf(rs: _*), "k", "t", "rk", "rt",
+      val got = Graft.asofJoin(leftDf(ls: _*), rightDf(rs: _*), "k", "t", "rk", "rt",
           direction = if (fwd) "forward" else "backward", tolerance = tol)
         .collect()
         .map(x => (x.getLong(0), x.getLong(1)) ->
           (if (x.isNullAt(2)) -1L else x.getLong(2))).toMap
       assert(got == reference(ls, rs, fwd, tol),
         s"trial=$trial fwd=$fwd tol=$tol")
-    }
-  }
-
-  test("asof long/long path fuses into whole-stage codegen; generic path stays interpreted") {
-    // fallback=false makes a Janino compile failure THROW instead of
-    // silently reverting to doExecute — so this test proves the
-    // generated merge actually compiles and runs
-    val saved = spark.conf.getOption("spark.sql.codegen.fallback")
-    try {
-      spark.conf.set("spark.sql.codegen.fallback", "false")
-      val l = leftDf((1L, 100L), (1L, 200L), (2L, 50L))
-      val r = rightDf((1L, 90L), (2L, 60L))
-      val df = AsOfJoin.asof(l, r, "k", "t", "rk", "rt")
-      val got = df.collect()
-        .map(x => (x.getLong(0), x.getLong(1)) -> (if (x.isNullAt(2)) -1L else x.getLong(2)))
-        .toMap
-      assert(got == Map((1L, 100L) -> 90L, (1L, 200L) -> 90L, (2L, 50L) -> -1L))
-      val fused = "\\*\\(\\d+\\) AsOfJoin".r
-        .findFirstIn(df.queryExecution.executedPlan.toString).isDefined
-      assert(fused, "long/long AsOfJoinExec must fuse into WholeStageCodegen:\n" +
-        df.queryExecution.executedPlan.toString)
-      // string keys: the interpreted generic path, never starred
-      val ls = Seq(("a", 100L)).toDF("k", "t")
-      val rs = Seq(("a", 90L)).toDF("rk", "rt")
-      val df2 = AsOfJoin.asof(ls, rs, "k", "t", "rk", "rt")
-      assert(df2.collect().head.getLong(2) == 90L)
-      val fused2 = "\\*\\(\\d+\\) AsOfJoin".r
-        .findFirstIn(df2.queryExecution.executedPlan.toString).isDefined
-      assert(!fused2, "generic-type AsOfJoinExec must stay on the interpreted path")
-    } finally {
-      saved.fold(spark.conf.unset("spark.sql.codegen.fallback"))(
-        spark.conf.set("spark.sql.codegen.fallback", _))
     }
   }
 
@@ -217,60 +199,31 @@ class PlansSpec extends SparkSpecBase {
   }
 
   test("asof composite keys: (string, long) tuple keys vs brute force") {
-    // (symbol, venue)-style two-column key, mixing types; brute-force
-    // in-Scala oracle over random data, both directions
-    def reference(ls: Seq[(String, Long, Long)], rs: Seq[(String, Long, Long)],
-                  fwd: Boolean): Map[(String, Long, Long), Long] =
-      ls.map { case (k1, k2, t) =>
+    // two-column tuple keys on random data, both directions, against a
+    // brute-force in-Scala oracle: (symbol, venue)-style keys mixing
+    // types, and all-long keys
+    def check[K: TypeTag](k1s: Seq[K], rnd: scala.util.Random,
+                          nl: Int, nr: Int, times: Int, fwd: Boolean): Unit = {
+      def draw() = (k1s(rnd.nextInt(k1s.size)), rnd.nextInt(2).toLong, rnd.nextInt(times).toLong)
+      val ls = (1 to nl).map(_ => draw()).distinct
+      val rs = (1 to nr).map(_ => draw())
+      val want = ls.map { case (k1, k2, t) =>
         val cand = rs.filter(r => r._1 == k1 && r._2 == k2 &&
           (if (fwd) r._3 >= t else r._3 <= t)).map(_._3)
-        (k1, k2, t) -> (if (cand.isEmpty) -1L else if (fwd) cand.min else cand.max)
+        ((k1: Any), k2, t) -> (if (cand.isEmpty) -1L else if (fwd) cand.min else cand.max)
       }.toMap
-    val rnd = new scala.util.Random(7)
-    val syms = Seq("aa", "bb", "cc")
-    for (fwd <- Seq(false, true)) {
-      val ls = (1 to 60).map(_ =>
-        (syms(rnd.nextInt(3)), rnd.nextInt(2).toLong, rnd.nextInt(40).toLong)).distinct
-      val rs = (1 to 50).map(_ =>
-        (syms(rnd.nextInt(3)), rnd.nextInt(2).toLong, rnd.nextInt(40).toLong))
-      val l = ls.toDF("sym", "venue", "t")
-      val r = rs.toDF("rsym", "rvenue", "rt")
-      val got = Graft.asofJoinMulti(l, r, Seq("sym", "venue"), "t",
-          Seq("rsym", "rvenue"), "rt",
+      val got = Graft.asofJoinMulti(ls.toDF("sym", "venue", "t"), rs.toDF("rsym", "rvenue", "rt"),
+          Seq("sym", "venue"), "t", Seq("rsym", "rvenue"), "rt",
           direction = if (fwd) "forward" else "backward")
         .collect()
-        .map(x => (x.getString(0), x.getLong(1), x.getLong(2)) ->
+        .map(x => (x.get(0), x.getLong(1), x.getLong(2)) ->
           (if (x.isNullAt(3)) -1L else x.getLong(3))).toMap
-      assert(got == reference(ls, rs, fwd), s"fwd=$fwd")
+      assert(got == want, s"keys=${k1s.head.getClass.getSimpleName} fwd=$fwd")
     }
-  }
-
-  test("asof composite all-long keys fuse into codegen and match brute force") {
-    val saved = spark.conf.getOption("spark.sql.codegen.fallback")
-    try {
-      spark.conf.set("spark.sql.codegen.fallback", "false")
-      val rnd = new scala.util.Random(11)
-      val ls = (1 to 50).map(_ =>
-        (rnd.nextInt(3).toLong, rnd.nextInt(2).toLong, rnd.nextInt(30).toLong)).distinct
-      val rs = (1 to 40).map(_ =>
-        (rnd.nextInt(3).toLong, rnd.nextInt(2).toLong, rnd.nextInt(30).toLong))
-      val df = AsOfJoin.asofMulti(ls.toDF("k1", "k2", "t"), rs.toDF("r1", "r2", "rt"),
-        Seq("k1", "k2"), "t", Seq("r1", "r2"), "rt")
-      val got = df.collect()
-        .map(x => (x.getLong(0), x.getLong(1), x.getLong(2)) ->
-          (if (x.isNullAt(3)) -1L else x.getLong(3))).toMap
-      val want = ls.map { case (k1, k2, t) =>
-        val cand = rs.filter(r => r._1 == k1 && r._2 == k2 && r._3 <= t).map(_._3)
-        (k1, k2, t) -> (if (cand.isEmpty) -1L else cand.max)
-      }.toMap
-      assert(got == want)
-      val fused = "\\*\\(\\d+\\) AsOfJoin".r
-        .findFirstIn(df.queryExecution.executedPlan.toString).isDefined
-      assert(fused, "all-long composite keys must fuse into WholeStageCodegen")
-    } finally {
-      saved.fold(spark.conf.unset("spark.sql.codegen.fallback"))(
-        spark.conf.set("spark.sql.codegen.fallback", _))
-    }
+    val strings = new scala.util.Random(7)
+    for (fwd <- Seq(false, true)) check(Seq("aa", "bb", "cc"), strings, 60, 50, 40, fwd)
+    val longs = new scala.util.Random(11)
+    for (fwd <- Seq(false, true)) check(Seq(0L, 1L, 2L), longs, 50, 40, 30, fwd)
   }
 
   test("asof composite keys: NULL in any key component never matches") {
@@ -279,7 +232,7 @@ class PlansSpec extends SparkSpecBase {
       .toDF("sym", "venue", "t")
     val r = Seq((Some("a"), Some(1L), 90L), (None, Some(1L), 80L))
       .toDF("rsym", "rvenue", "rt")
-    val got = AsOfJoin.asofMulti(l, r, Seq("sym", "venue"), "t",
+    val got = Graft.asofJoinMulti(l, r, Seq("sym", "venue"), "t",
         Seq("rsym", "rvenue"), "rt").collect()
       .map(x => (Option(x.getString(0)), if (x.isNullAt(1)) None else Some(x.getLong(1))) ->
         (if (x.isNullAt(3)) -1L else x.getLong(3))).toMap
@@ -291,10 +244,11 @@ class PlansSpec extends SparkSpecBase {
   test("asof composite keys: single-key result equals two-key result with constant key") {
     val l = leftDf((1L, 100L), (1L, 200L), (2L, 50L))
     val r = rightDf((1L, 90L), (2L, 60L))
-    val single = AsOfJoin.asof(l, r, "k", "t", "rk", "rt").collect()
+    val single = Graft.asofJoin(l, r, "k", "t", "rk", "rt").collect()
       .map(x => (x.getLong(0), x.getLong(1)) -> (if (x.isNullAt(2)) -1L else x.getLong(2)))
       .toMap
-    val two = AsOfJoin.asofMulti(
+    assert(single == Map((1L, 100L) -> 90L, (1L, 200L) -> 90L, (2L, 50L) -> -1L))
+    val two = Graft.asofJoinMulti(
         l.withColumn("c", lit("x")), r.withColumn("rc", lit("x")),
         Seq("c", "k"), "t", Seq("rc", "rk"), "rt").collect()
       .map(x => (x.getLong(0), x.getLong(1)) -> (if (x.isNullAt(3)) -1L else x.getLong(3)))
@@ -352,7 +306,7 @@ class PlansSpec extends SparkSpecBase {
 
     val l = leftDf((1L, 100L), (2L, 50L))
     val r = rightDf((1L, 90L))
-    val adf = AsOfJoin.asof(l, r, "k", "t", "rk", "rt")
+    val adf = Graft.asofJoin(l, r, "k", "t", "rk", "rt")
     adf.collect()
     val asof = collectPlan(adf.queryExecution.executedPlan)
       .collectFirst { case x: AsOfJoinExec => x }.get
